@@ -360,10 +360,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", ts.cast("timestamp_ntz"))
     per_session[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every lake table as a temp view so ``spark.sql`` corpora
-    (the analyst-SQL entry point, SURVEY §3.2) can run unchanged."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,7 +1,7 @@
 """Pipeline driver: materialize the model DAG in dependency order.
 
 Replaces the reference's Airflow→Snowflake→dbt chain (SURVEY §3.1) with one
-Spark job: bronze readers → staging views → silver tables → metric views.
+Spark job: bronze readers → staging → silver tables → metric views.
 The dbt view/table policy (dbt_project.yml:19-33) maps to: views = lazy
 DataFrames registered as temp views; tables = parquet materializations
 under a warehouse dir. Model dependency order is plain call order.
@@ -25,11 +25,26 @@ class PipelineResult:
         return self.models[name]
 
 
-# dbt materialization policy (dbt_project.yml:19-33): staging/metric = view,
-# dims/facts = table. Fact tables partition by season — the lake layout that
-# gives season-scoped queries partition pruning at 100 TB (mirrors the
-# reference's date=/market= identity partitions, SURVEY §4).
+# Table policy: model name -> partition columns. Every model listed here
+# is written once as parquet and re-read when the run has a warehouse;
+# every other model stays a lazy view. dbt (dbt_project.yml:19-33) makes
+# dims/facts tables and staging/metrics views. The four staging models
+# are tables here too, with no partitions: each feeds several tables
+# (stg_games alone feeds five), and as a view each consumer would
+# re-parse the bronze JSON and re-run the latest-snapshot dedup window.
+# Materializing them is dbt's materialized='table' escape hatch for hot
+# views; rows and the 230-check quality suite are unchanged (evidence:
+# BENCH_r13.json pipeline_scale_probe, dag_x10_sec / dag_x100_sec).
+# Without a warehouse (nhl_pipeline_e2e's single-action plan) every
+# model is a view and AQE reuses the shared subtrees. Fact tables
+# partition by season, the lake layout that gives season-scoped queries
+# partition pruning (mirrors the reference's date=/market= identity
+# partitions, SURVEY §4).
 TABLE_MODELS: dict[str, tuple[str, ...]] = {
+    "stg_games": (),
+    "stg_player_game_stats": (),
+    "stg_schedule_games": (),
+    "stg_odds_player_props": (),
     "dim_date": (),
     "dim_team": (),
     "dim_player": (),
@@ -38,29 +53,6 @@ TABLE_MODELS: dict[str, tuple[str, ...]] = {
     "fact_team_game_stats": ("season",),
     "fact_player_sog_props_v2": (),  # odds grain has no season column
 }
-
-# Materialize-once staging policy (r13, VERDICT r12 ask #6; guide §2.4).
-# The dbt reference declares staging models as VIEWS, and this runner
-# mirrored that literally: every consumer of a staging view re-executed
-# its whole subtree — the bronze JSON parse, the payload flatten, and the
-# latest-snapshot dedup WINDOW — once per downstream model action.
-# stg_games alone feeds five materialized models (dim_date, dim_team,
-# fact_game_results, fact_team_game_stats, fact_player_sog_props_v2), so
-# a warehouse build parsed and re-deduped the boxscore bronze five times.
-# When the run HAS a warehouse (warehouse_dir set — the only mode where
-# models execute more than once), staging models are now written once as
-# parquet tables and re-read, exactly like dbt's materialized='table'
-# escape hatch for hot views. Same rows, same values (measured: the
-# x100-lake DAG probe's model counts and the 233-check reference quality
-# suite are unchanged); the view policy still holds for the
-# warehouse-less path (nhl_pipeline_e2e's single-action plan, where AQE
-# reuse handles the shared subtrees and nothing executes twice).
-MATERIALIZE_ONCE_STAGING: tuple[str, ...] = (
-    "stg_games",
-    "stg_player_game_stats",
-    "stg_schedule_games",
-    "stg_odds_player_props",
-)
 
 # Multi-column file clustering for the analyst access pattern: the shot
 # worksheet's per-team recency queries filter (team_id, game_date)
@@ -86,14 +78,15 @@ def run_pipeline(
     """Execute the full model DAG from bronze snapshot DataFrames.
 
     bronze keys: game_boxscore, game_pbp, schedule, odds_player_props.
-    When warehouse_dir is set, table-policy models are written as parquet
-    and re-read (mirroring dbt `materialized='table'`); every model is also
-    registered as a temp view so the analyst SQL corpus (SURVEY §3.2) runs
-    via spark.sql unchanged.
+    When warehouse_dir is set, the TABLE_MODELS and ZORDER_MODELS models
+    are written as parquet (mode "overwrite", so a re-run into the same
+    warehouse replaces them) and re-read, mirroring dbt
+    `materialized='table'`; every model is also registered as a temp view
+    so the analyst SQL corpus (SURVEY §3.2) runs via spark.sql unchanged.
     """
-    # Shared-session hygiene (VERDICT r9 "what's wrong" #2): this runner
-    # executes 24+ models on one session — restore the default scan-split
-    # size so a lake query's tune_scan_splits can't leak into the DAG.
+    # Shared-session hygiene: this runner executes 24 models on one
+    # session, so restore the default scan-split size first; a lake
+    # query's tune_scan_splits must not leak into the DAG.
     from nhl_data_pipeline_spark.catalog import reset_scan_splits
 
     reset_scan_splits(spark)
@@ -123,12 +116,10 @@ def run_pipeline(
                 drop=["_zd_days"],
             )
             df = spark.read.parquet(path)
-        elif warehouse_dir and (
-            name in TABLE_MODELS or name in MATERIALIZE_ONCE_STAGING
-        ):
+        elif warehouse_dir and name in TABLE_MODELS:
             path = os.path.join(warehouse_dir, name)
             writer = df.write.mode("overwrite")
-            parts = TABLE_MODELS.get(name, ())
+            parts = TABLE_MODELS[name]
             if parts:
                 writer = writer.partitionBy(*parts)
             writer.parquet(path)

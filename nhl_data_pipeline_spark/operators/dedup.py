@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,37 +145,6 @@ def shingles(tokens_col: Column, n: int = 3) -> Column:
     return F.when(F.size(tokens_col) >= n, F.array_distinct(make)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def shingles_pandas(tokens_col: Column, n: int = 3) -> Column:
-    """Same distinct n-gram shingles as :func:`shingles`, Arrow-batched.
-
-    Spark's higher-order functions are interpreted per element (never
-    whole-stage-codegen'd): at sf0.1 the HOF build costs ~5 s vs ~2.5 s for
-    this vectorized-Python path — measured, not guessed. Semantics are
-    identical (first-occurrence-ordered distinct, empty array below n
-    tokens), so either form passes the same oracle; use this one in hot
-    paths, the JVM form where a Python worker round-trip is unwanted.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _shingle(toks: pd.Series) -> pd.Series:
-        def f(ts):
-            if ts is None or len(ts) < n:
-                return []
-            seen: set[str] = set()
-            out: list[str] = []
-            for i in range(len(ts) - (n - 1)):
-                s = " ".join(ts[i : i + n])
-                if s not in seen:
-                    seen.add(s)
-                    out.append(s)
-            return out
-
-        return toks.map(f)
-
-    return _shingle(tokens_col)
 
 
 def shingles_sql(toks_expr: str, n: int = 3) -> str:

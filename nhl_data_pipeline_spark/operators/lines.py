@@ -7,17 +7,17 @@ doc-granularity near-dup passes keep them all. Removing every line that
 occurs in ≥ `min_docs` distinct documents kills the boilerplate and keeps
 the prose.
 
-Scale shape (100 TB):
-1. explode docs to (doc_id, pos, line) — pure codegen, no Python;
-2. line frequency = one map-side-combinable groupBy on the line (carry an
-   xxhash64 of the line instead of the string to move 8-byte shuffle keys
-   when lines are long);
+Scale shape (100 TB), as built by :func:`strip_frequent_lines`:
+1. explode docs to (doc_id, line) and key each line by its xxhash64 — pure
+   codegen, no Python; the line strings die at the scan projection;
+2. line frequency = one map-side-combinable groupBy on the 8-byte hash;
 3. the frequent-line set is SMALL by construction (boilerplate ⇒ repeated
-   ⇒ few distinct strings), so it broadcast-anti-joins against the
-   exploded lines — the corpus-sized side never shuffles for the filter;
-4. reassembly is one groupBy(doc_id) with an order-restoring
-   sort_array(collect_list(struct(pos, line))) — the only corpus-sized
-   shuffle in the plan.
+   ⇒ few distinct lines), so it collapses to ONE row holding
+   ``collect_set(xxhash64)`` and is broadcast to every doc;
+4. each doc strips itself with a per-row array ``filter`` against that
+   set and re-concats its kept lines — order is preserved by
+   construction, there is no reassembly aggregate, and no corpus-sized
+   shuffle anywhere in the plan.
 
 Reference analog: the staging dedup of repeated payload snapshots
 (`dbt_nhl/models/staging/stg_games.sql:32` latest-snapshot ROW_NUMBER

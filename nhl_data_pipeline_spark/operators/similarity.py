@@ -279,38 +279,6 @@ def _plane_lit(plane: list[float]) -> str:
     return "array(" + ", ".join(f"{c:.1f}D" for c in plane) + ")"
 
 
-def hyperplane_bucket(vec_col: str, dim: int, planes: int = 8) -> Column:
-    """Random-hyperplane LSH bucket id: bit j = sign(dot(vec, plane_j)).
-
-    SQL text with UNIQUE lambda variables per plane — repeating
-    python-lambda higher-order functions inside one expression makes
-    Spark's sibling lambda variables collide and silently corrupt values.
-    Dots sum left-to-right in float64, bit-identical to the DuckDB form, so
-    bucket ids agree across engines even for near-zero dots.
-    """
-    terms = []
-    for j, plane in enumerate(hyperplanes(dim, planes)):
-        d = (
-            f"aggregate(zip_with({vec_col}, {_plane_lit(plane)},"
-            f" (x{j}, y{j}) -> CAST(x{j} AS DOUBLE) * y{j}),"
-            f" CAST(0.0 AS DOUBLE), (a{j}, v{j}) -> a{j} + v{j})"
-        )
-        terms.append(f"CASE WHEN {d} > 0.0D THEN {2 ** j}L ELSE 0L END")
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
-def hyperplane_bucket_sql(vec_expr: str, dim: int, planes: int = 8) -> str:
-    terms = []
-    for j, plane in enumerate(hyperplanes(dim, planes)):
-        lit = "[" + ", ".join(f"{c:.1f}" for c in plane) + "]"
-        d = (
-            f"list_sum(list_transform(list_zip({vec_expr}, {lit}),"
-            f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        )
-        terms.append(f"CASE WHEN {d} > 0.0 THEN CAST({2 ** j} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
-    return "(" + " + ".join(terms) + ")"
-
-
 def hyperplane_band_buckets(
     vec_col: str, dim: int, bands: int = 8, rows: int = 3
 ) -> Column:
@@ -320,7 +288,13 @@ def hyperplane_band_buckets(
     — near zero for moderate thresholds. Banding restores it the standard
     way: candidates agree on ANY band, recall 1 − (1 − p^rows)^bands
     (≈0.9 at cosine 0.4 with 8×3). Same construction as the MinHash LSH
-    banding; unique lambda variables per plane (sibling-lambda rule)."""
+    banding.
+
+    SQL text with UNIQUE lambda variables per plane: repeating
+    python-lambda higher-order functions inside one expression makes
+    Spark's sibling lambda variables collide and silently corrupt values.
+    Dots sum left-to-right in float64, bit-identical to the DuckDB form, so
+    bucket ids agree across engines even for near-zero dots."""
     all_planes = hyperplanes(dim, bands * rows)
     band_exprs = []
     for b in range(bands):

@@ -547,34 +547,15 @@ _K, _BANDS, _ROWS = 12, 4, 3
 _SIG_SQL = D.minhash_signature_sql("sh", _K)
 _BKEYS_SQL = D.lsh_band_keys_sql("sig", _BANDS, _ROWS)
 
-# Corpus-size gate for the benched minhash band-table persist (r13,
-# VERDICT r12 ask #1; same mechanism as operators/lm.py's gate). -1 =
-# persist at EVERY measured scale: the full-bench-sequence alternating
-# A/B at local[32] (tools/run_bench_arm.py, 3 legs/arm,
-# bench_logs/r13/minhash_ab_*.out) read persist medians 0.572/0.589/
-# 0.677 s vs recompute 1.032/0.741/0.965 — persist wins ~0.35 s and its
-# nine reps span only 0.53-0.70 (a 1.3× spread; no trace of the r12
-# driver's 1.29-8.10 s swing, which the same legs reproduced once in a
-# DIFFERENT query — jaccard wall 7.62 s at near-flat CPU 12.9 vs 9.9
-# CPU-s — pinning that class to environment stalls, not these persists).
-# Unlike jaccard's removed cache (the O(shingle-rows) exploded table),
-# the band table is 4 narrow rows per DOC; the recompute it saves is the
-# whole shingle-explode + 12-min-aggregate signature kernel, so the
-# trade stays persist-favored as the corpus grows (lm's gate measured
-# the same direction at sf10). The constant stays overridable so
-# tools/run_bench_arm.py can re-run the arms in any environment.
-_MINHASH_PERSIST_MIN_DOCS = -1
-
 
 def _minhash_lsh_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pure MinHash-LSH pair shape — what bench.py (and the recall
     probe in tests/test_scale_operators.py) times; the merged correctness
     query below adds the embedding-LSH branch."""
-    # Size-derived width (r9, VERDICT r8 ask #3): the band self-join ran
-    # at session width, putting minhash on the same per-task-state growth
-    # path the sf10 sweep burned jaccard with (raw exponent 0.89 / norm
-    # 1.01 at sf3→sf10 — exactly at the red line). Same 512 KiB/partition
-    # text budget as the jaccard plan: the dominant stage is the identical
+    # Size-derived width: at session width the band self-join's per-task
+    # state grows with the lake (sf3→sf10 exponent 0.89 raw / 1.01
+    # normalized, BENCH_r08_sf10_sweep.json). Same 512 KiB/partition text
+    # budget as the jaccard plan: the dominant stage is the identical
     # shingle explosion feeding the signature aggregate.
     from nhl_data_pipeline_spark.catalog import (
         TEXT_BYTES_PER_PARTITION,
@@ -588,23 +569,7 @@ def _minhash_lsh_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").repartition(
         width, F.col("doc_id")
     )
-    # Band-table persist, size-gate MECHANISM with the gate measured open
-    # at every scale (r13, VERDICT r12 ask #1 — see
-    # _MINHASH_PERSIST_MIN_DOCS's evidence note): the r12 driver
-    # regression's 1.29-8.10 s rep swing was re-litigated with the
-    # full-bench-sequence alternating A/B the verdict asked for, and the
-    # persists were ACQUITTED — the persist arm is both faster and
-    # tighter, and the swing class reproduced in a persist-free query at
-    # near-flat CPU (environment stalls). Gate rides the same memoized
-    # source row count as lm's (no new actions).
-    persist_bands = (
-        _corpus_doc_count(spark, sf_dir) > _MINHASH_PERSIST_MIN_DOCS
-    )
-    return minhash_band_pairs(
-        d,
-        width=width if width > par else None,
-        persist_bands=persist_bands,
-    )
+    return minhash_band_pairs(d, width=width if width > par else None)
 
 
 @query(
@@ -636,9 +601,9 @@ def _minhash_lsh_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=12) + LSH banding (4 bands × 3 rows) candidate pairs,
     union-tagged with the embedding-cosine near-dup pairs + hyperplane-LSH
-    flag (merged `embedding_neardup_pairs`, round-5 second rotation —
-    both are banded-LSH near-dup pair generators over different
-    modalities; bench.py still times the pure MinHash shape via bench_fn).
+    flag (merged `embedding_neardup_pairs` — both are banded-LSH near-dup
+    pair generators over different modalities; bench.py still times the
+    pure MinHash shape via bench_fn).
 
     'mh' branch: the n²-free near-dup path — docs meet only inside a band
     bucket, so join cost tracks true duplicate density. Band probability:
@@ -669,24 +634,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mh.unionByName(emb)
 
 
-def minhash_band_pairs(
-    d: DataFrame,
-    width: int | None = None,
-    *,
-    persist_bands: bool = True,
-) -> DataFrame:
+def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
     """Banded MinHash candidate pairs over any (doc_id, text) frame (the
     registered query's body; bench's skew probe reuses it on a
     boilerplate-heavy corpus to measure candidate precision).
 
-    ``width`` (r9): explicit partition count for the band self-join sides —
+    ``width``: explicit partition count for the band self-join sides —
     callers with a known source size pass catalog.shuffle_width_for so the
     join executes at a lake-proportional width instead of the session's
     fixed shuffle.partitions (REPARTITION_BY_NUM on the join keys satisfies
     the join's distribution, so EnsureRequirements plants nothing on top).
     Default None: no explicit side repartitions — the planner's choice
     (broadcast at fixture scale, planted session-width exchanges above)
-    is right for small callers and keeps the pinned pre-r9 fingerprints
+    is right for small callers and keeps the pinned fingerprints
     byte-identical."""
     # Signature via aggregation, not array HOFs: over the codegen-built
     # exploded shingle table, sig[i] is simply MIN(md5('<i>|' || s)) — k
@@ -704,13 +664,11 @@ def minhash_band_pairs(
     bands = D.lsh_band_table(
         d, n=3, k=_K, bands=_BANDS, rows=_ROWS, short_doc_fallback=False
     )
-    # ``persist_bands``: the band table feeds both self-join sides, but
-    # caching it is only worth it past a measured corpus-size crossover
-    # (guide §5; see _minhash_lsh_pure's gate). Default True preserves
-    # the historical shape for callers without a size signal (bench
-    # probes, ledger composition).
-    if persist_bands:
-        bands = bands.persist()
+    # The band table feeds both self-join sides, so it is always
+    # persisted: it is 4 narrow rows per doc, and the recompute it saves is
+    # the whole shingle-explode + signature aggregate. A persist/recompute
+    # A/B measured persist faster and tighter (bench_logs/r13/minhash_ab_*).
+    bands = bands.persist()
     a = bands.selectExpr("doc_id AS doc_a", "band_idx", "band_key")
     b = bands.selectExpr("doc_id AS doc_b", "band_idx", "band_key")
     if width is not None:
@@ -1211,9 +1169,8 @@ _BPE_MERGE_UNION = "\nUNION ALL\n".join(
 _BPE_MEMO: dict[tuple[str, int, int], list[tuple[str, str]]] = {}
 
 # Same identity-keyed memo for the corpus row count feeding the LM
-# model-size join gate (ngram_lm_quality) and the minhash band-table
-# persist gate — one column-pruned count per corpus, not one per plan
-# construction.
+# model-size join and persist gates (ngram_lm_quality) — one
+# column-pruned count per corpus, not one per plan construction.
 _DOC_COUNT_MEMO: dict[tuple[str, int, int], int] = {}
 
 

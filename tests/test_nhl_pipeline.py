@@ -29,9 +29,44 @@ def bronze(spark):
 
 
 @pytest.fixture(scope="session")
-def models(spark, bronze, tmp_path_factory):
+def warehouse(spark, bronze, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("warehouse"))
-    return run_pipeline(spark, bronze, warehouse_dir=wh).models
+    return wh, run_pipeline(spark, bronze, warehouse_dir=wh).models
+
+
+@pytest.fixture(scope="session")
+def models(warehouse):
+    return warehouse[1]
+
+
+def test_warehouse_layout(warehouse):
+    """Which models the warehouse run writes, and how each is laid out:
+    dims, facts and the four staging models as parquet tables, the
+    season-partitioned facts with season= directories, and the Hilbert
+    clustered shot facts unpartitioned. Metric models stay views."""
+    wh = Path(warehouse[0])
+    season_facts = {
+        "fact_game_results",
+        "fact_player_game_stats",
+        "fact_team_game_stats",
+    }
+    unpartitioned = {
+        "stg_games",
+        "stg_player_game_stats",
+        "stg_schedule_games",
+        "stg_odds_player_props",
+        "dim_date",
+        "dim_team",
+        "dim_player",
+        "fact_player_sog_props_v2",
+        "fact_shot_events",
+    }
+    assert {p.name for p in wh.iterdir()} == season_facts | unpartitioned
+    for name in season_facts:
+        parts = [p.name for p in (wh / name).iterdir() if p.is_dir()]
+        assert parts and all(p.startswith("season=") for p in parts), name
+    for name in unpartitioned:
+        assert not any(p.is_dir() for p in (wh / name).iterdir()), name
 
 
 def test_latest_snapshot_wins(spark, bronze, models):

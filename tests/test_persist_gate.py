@@ -8,13 +8,17 @@ tests pin the resulting policy:
 - lm: persists fire above PERSIST-gate scale (model_rows > 100_000) and
   stay out of the plan below it;
 - jaccard / contamination: no InMemoryRelation at any scale (persist
-  removed outright — recompute won at sf0.1, sf1 AND sf10).
+  removed outright — recompute won at sf0.1, sf1 AND sf10);
+- minhash: the band table persists at every scale, so building its plan
+  reads no corpus statistic and launches no Spark job.
 
 Value-parity of all touched queries is covered by test_parity.py (rows +
 hash against the DuckDB oracle); these tests pin only the plan policy.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from nhl_data_pipeline_spark.catalog import load_table
 from nhl_data_pipeline_spark.operators import lm as LM
@@ -51,4 +55,21 @@ def test_jaccard_and_contamination_have_no_cache(spark):
         fn = specs[name].bench_fn or specs[name].fn
         df = fn(spark, TEST_SF_DIR)
         assert _n_cached(df) == 0, name
+    spark.catalog.clearCache()
+
+
+def test_minhash_plan_build_runs_no_job(spark, monkeypatch):
+    from nhl_data_pipeline_spark.plans import q_text
+
+    q_text._minhash_lsh_pure(spark, TEST_SF_DIR)  # warm the catalog memos
+    monkeypatch.setattr(q_text, "_DOC_COUNT_MEMO", {})
+    sc = spark.sparkContext
+    group = f"minhash-plan-build-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = q_text._minhash_lsh_pure(spark, TEST_SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _n_cached(df) >= 1  # the band table is persisted
     spark.catalog.clearCache()
