@@ -1,23 +1,30 @@
 """Engine benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Output contract (round 6 — the r5 driver artifact was truncated because
-everything lived on one 2,935-char line and the driver keeps only a
-~2,000-char tail): each scale PROBE prints as its own earlier stdout line
-(`{"probe": "<name>", ...}`) AND the full probe set is written to
-``BENCH_probes.json`` next to this file; the compact headline JSON —
+Output contract: the calibration anchors, the per-query ``cpu_detail``
+block and each regression-gate probe print as their own earlier stdout
+lines (``{"probe": "<name>", ...}``); the compact headline JSON —
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"<name>": sec, ...}, "sf": <scale factor>}
 
-— is the FINAL stdout line (~700 chars), so the driver's tail always
-contains it. A probe that throws records {"error": ...} instead of
-killing the run; probes never touch the headline line.
+— is the FINAL stdout line, short enough that a ~2,000-char tail of the
+run always contains it. A probe that throws records {"error": ...}
+instead of killing the run; probes never touch the headline line.
 
 Each query is materialized through the noop sink (full computation incl.
 shuffles/windows, no driver collect). A warmup query first touches every
 input table so JIT/codegen and file-footer caching don't pollute the first
-measurement. Set SPARK_GRAFT_SKIP_PROBES=1 to run only the headline loop
-(fast local iteration).
+measurement.
+
+Probes (skip them with SPARK_GRAFT_SKIP_PROBES=1 for fast local
+iteration): ``dedup_scale_probe`` (near-dup crossover and recall),
+``pipeline_e2e_probe`` (CLI end to end + staging x100) and
+``pipeline_scale_probe`` (staging and DAG decade exponents, gated at the
+calibrated width). Results of the retired one-off probes are kept in
+``BENCH_probes.json``.
+
+Other knobs: SPARK_GRAFT_ONLY="q1,q2" benches a subset;
+SPARK_GRAFT_COUNTS=1 adds deterministic candidate-pair counts.
 """
 
 from __future__ import annotations
@@ -266,11 +273,10 @@ def _calibration_anchors(spark) -> dict[str, float]:
 def main() -> None:
     # UI on for bench runs (off everywhere else, session.py): the REST
     # status API is the source of the per-query executor-CPU totals that
-    # back every scale claim (VERDICT r9 ask #1). Launch-time conf —
-    # bench owns the first session in its process. Retention raised so
-    # marker-based deltas never lose an un-read stage; task rows capped
-    # (stage SUMMARIES carry the metrics this needs).
-    cpu_on = os.environ.get("SPARK_GRAFT_CPU", "1") == "1"
+    # back every scale claim. Launch-time conf — bench owns the first
+    # session in its process. Retention raised so marker-based deltas
+    # never lose an un-read stage; task rows capped (stage SUMMARIES
+    # carry the metrics this needs).
     spark = get_spark(
         "bench",
         extra_conf={
@@ -278,9 +284,7 @@ def main() -> None:
             "spark.ui.retainedStages": "50000",
             "spark.ui.retainedJobs": "50000",
             "spark.ui.retainedTasks": "100",
-        }
-        if cpu_on
-        else None,
+        },
     )
     meter = _StageMeter(spark)
     specs = {n: s for n, s in all_queries().items() if s.bench}
@@ -316,16 +320,14 @@ def main() -> None:
     print(json.dumps({"probe": "calibration_anchor", **anchors}))
     sys.stdout.flush()
     # Per-query measurement blocks: 2 warmup runs, then the MEDIAN of 3
-    # timed runs. Earlier rounds warmed every query once and then timed
-    # each once in sequence — but tools/bench_probe.py shows per-plan
-    # steady state needs consecutive executions of the SAME plan (HotSpot
-    # promotes the generated classes to C2 after enough invocations; a
-    # query timed 10 queries after its warmup reads ~2× its repeat-run
-    # time, and the number depended on loop ORDER). Blocked warmup + median
-    # makes each number the query's own steady state, independent of its
-    # neighbors. clearCache before every run: persisted intermediates are
-    # recomputed inside the measurement — only JIT/codegen state stays
-    # warm, never data.
+    # timed runs. Per-plan steady state needs consecutive executions of
+    # the SAME plan (HotSpot promotes the generated classes to C2 after
+    # enough invocations; a query timed 10 queries after its warmup reads
+    # ~2× its repeat-run time, and the number depends on loop ORDER).
+    # Blocked warmup + median makes each number the query's own steady
+    # state, independent of its neighbors. clearCache before every run:
+    # persisted intermediates are recomputed inside the measurement —
+    # only JIT/codegen state stays warm, never data.
     timings: dict[str, float] = {}
     # Per-rep times (r9, VERDICT ask #6): the headline keeps the median,
     # but the artifact now carries every timed rep — run-to-run spread is
@@ -419,40 +421,21 @@ def main() -> None:
         )
         sys.stdout.flush()
 
-    # Probes: each on its own EARLY stdout line + all collected into
-    # BENCH_probes.json. A probe failure is recorded, never fatal — the
-    # headline line below must always be the last thing on stdout.
-    probes: dict[str, dict] = {}
+    # Regression-gate probes, each on its own EARLY stdout line. A probe
+    # failure is recorded, never fatal — the headline line below must
+    # always be the last thing on stdout.
     if os.environ.get("SPARK_GRAFT_SKIP_PROBES") != "1":
         for pname, pfn in (
             ("dedup_scale_probe", _dedup_scale_probe),
-            ("ann_scale_probe", _ann_scale_probe),
-            ("bloom_prejoin_probe", _bloom_prejoin_probe),
-            ("cc_skew_probe", _cc_skew_probe),
-            ("skew_join_probe", _skew_join_probe),
-            ("streaming_throughput_probe", _streaming_throughput_probe),
-            ("partition_sizing_probe", _partition_sizing_probe),
             ("pipeline_e2e_probe", _pipeline_e2e_probe),
             ("pipeline_scale_probe", _pipeline_scale_probe),
         ):
             try:
-                probes[pname] = pfn(spark)
+                result = pfn(spark)
             except Exception as exc:  # noqa: BLE001
-                probes[pname] = {"error": repr(exc)[:400]}
-            print(json.dumps({"probe": pname, **probes[pname]}))
+                result = {"error": repr(exc)[:400]}
+            print(json.dumps({"probe": pname, **result}))
             sys.stdout.flush()
-        # File write only on explicit request (r10, VERDICT housekeeping):
-        # driver runs were rewriting this tracked file on every round,
-        # leaving the end-of-round tree dirty. The probe VALUES still hit
-        # stdout above either way.
-        if os.environ.get("SPARK_GRAFT_PROBES_OUT") == "1":
-            probe_path = Path(__file__).resolve().parent / "BENCH_probes.json"
-            probe_path.write_text(
-                json.dumps(
-                    {"sf": _sf_from_dir(SF_DIR), "probes": probes}, indent=1
-                )
-                + "\n"
-            )
 
     # Headline JSON: compact, LAST stdout line — the driver's artifact.
     print(
@@ -481,407 +464,6 @@ def _gate_calibrated(spark) -> bool:
     structural regression (r12's 8-core leg: staging 1.035 with the
     identical engine that reads 0.455 at 32)."""
     return spark.sparkContext.defaultParallelism >= 32
-
-
-def _parse_size_bytes(raw: str) -> int | None:
-    """First 'N unit' size in a metric display string, in bytes."""
-    import re as _re
-
-    m = _re.search(r"([\d.]+)\s*(B|KiB|MiB|GiB)", raw)
-    if not m:
-        return None
-    mult = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30}
-    return int(float(m.group(1)) * mult[m.group(2)])
-
-
-def _iter_exec_metrics(store, first_idx: int):
-    """Yield (metric_name, raw_display_string) for every metric of every
-    SQL execution from ``first_idx`` onward — the single status-store
-    walk shared by the shuffle and spill probes (the store is the UI's
-    source of truth; the AQE plan's node.metrics() reads zeros)."""
-    execs = store.executionsList()
-    for i in range(first_idx, execs.length()):
-        ex = execs.apply(i)
-        vals = store.executionMetrics(ex.executionId())
-        mdefs = ex.metrics()
-        for j in range(mdefs.length()):
-            md = mdefs.apply(j)
-            if vals.contains(md.accumulatorId()):
-                yield md.name(), str(vals.apply(md.accumulatorId()))
-
-
-def _query_shuffle_metrics(spark, run) -> dict[str, int]:
-    """Execute ``run()`` and return the MAX per-exchange shuffle records +
-    bytes written of the resulting SQL execution, read from Spark's
-    SQLAppStatusStore. Max-per-exchange isolates the dominant
-    (fact-side) exchange — the one the bloom filter is supposed to
-    shrink."""
-    import time as _t
-
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsList().length()
-    run()
-    _t.sleep(1.0)  # listener bus drain
-    records, bytes_ = 0, 0
-    for name, raw in _iter_exec_metrics(store, before):
-        if name == "shuffle records written":
-            records = max(records, int(raw.replace(",", "")))
-        elif name == "shuffle bytes written":
-            b = _parse_size_bytes(raw)
-            if b is not None:
-                bytes_ = max(bytes_, b)
-    return {"records": records, "bytes": bytes_}
-
-
-def _bloom_prejoin_probe(spark) -> dict:
-    """Measured exchange reduction from bloom join pre-pruning
-    (operators/bloom.py): a selective dim join at the bench SF with
-    broadcast DISABLED (the regime where the fact side genuinely
-    shuffles — the 100 TB shape). Records the fact-side exchange's
-    rows/bytes for the plain join vs the bloom-pruned join, plus the
-    filter's measured false-positive rate ε (surviving non-matches /
-    eligible non-matches)."""
-    from pyspark.sql import functions as F
-
-    from nhl_data_pipeline_spark.operators.bloom import bloom_prejoin
-
-    orders = load_table(spark, SF_DIR, "orders")
-    cust = load_table(spark, SF_DIR, "customer").filter(
-        F.col("c_nationkey") == 3
-    )
-
-    def joined(big):
-        return big.join(cust, big.o_custkey == cust.c_custkey).select(
-            "o_orderkey", "o_totalprice"
-        )
-
-    out: dict[str, float] = {}
-    rows_pre = orders.count()
-    true_rows = orders.join(
-        cust.select(F.col("c_custkey").alias("o_custkey")),
-        "o_custkey",
-        "left_semi",
-    ).count()
-    pruned = bloom_prejoin(orders, "o_custkey", cust, "c_custkey")
-    rows_post = pruned.count()
-    out["rows_pre"] = float(rows_pre)
-    out["rows_post"] = float(rows_post)
-    out["rows_true_match"] = float(true_rows)
-    denom = rows_pre - true_rows
-    out["epsilon_measured"] = (
-        round((rows_post - true_rows) / denom, 6) if denom else 0.0
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        for label, big in (("plain", orders), ("bloom", pruned)):
-            t0 = time.perf_counter()
-            m = _query_shuffle_metrics(
-                spark,
-                lambda: joined(big)
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
-            )
-            out[f"{label}_join_sec"] = round(time.perf_counter() - t0, 3)
-            out[f"{label}_exchange_records"] = float(m["records"])
-            out[f"{label}_exchange_bytes"] = float(m["bytes"])
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    return out
-
-
-def _cc_skew_probe(spark) -> dict:
-    """Adversarial-topology probe for the two connected-components
-    implementations (operators/cluster.py): a mega-component holding 50%
-    of all nodes behind one 100K-degree hub (per-round join skew), and
-    long chains (the O(diameter)-rounds regime where min-label
-    propagation degrades and large-star/small-star's O(log n) bound
-    matters). rounds = -1 marks a deliberate DNF at the stated cap.
-    Documented default: label-prop for near-dup graphs (shallow, dense —
-    hub-like), star for unknown/chain-heavy topology."""
-    from nhl_data_pipeline_spark.operators import cluster as CC
-
-    out: dict[str, float] = {}
-
-    def run(tag, edges, fn, expect_components, max_rounds):
-        stats: dict = {}
-        t0 = time.perf_counter()
-        try:
-            res = fn(edges, max_rounds=max_rounds, stats=stats)
-            n = res.select("component").distinct().count()
-            assert n == expect_components, (tag, n, expect_components)
-            out[f"{tag}_rounds"] = float(stats["rounds"])
-        except RuntimeError:
-            out[f"{tag}_rounds"] = -1.0  # DNF at the cap
-        out[f"{tag}_sec"] = round(time.perf_counter() - t0, 3)
-
-    # 50% of 200K nodes in ONE hub component (node 0 has degree 100K);
-    # the other 50% are 50K disjoint pairs -> 50_001 components.
-    hub = spark.range(1, 100_001).selectExpr(
-        "CAST(0 AS BIGINT) AS src", "id AS dst"
-    )
-    pairs = spark.range(100_001, 200_001, 2).selectExpr(
-        "id AS src", "id + 1 AS dst"
-    )
-    mega = hub.union(pairs)
-    run("hub100k_label_prop", mega, CC.connected_components, 50_001, 20)
-    run("hub100k_star", mega, CC.connected_components_star, 50_001, 30)
-
-    # Moderate chain: diameter 32 — label prop pays ~one round per hop.
-    chain32 = spark.range(32).selectExpr("id AS src", "id + 1 AS dst")
-    run("chain32_label_prop", chain32, CC.connected_components, 1, 40)
-    run("chain32_star", chain32, CC.connected_components_star, 1, 30)
-
-    # Pathological chain: diameter 4096. Label prop would need ~4K rounds
-    # — capped at 12 and recorded as DNF; star converges in O(log n).
-    chain4k = spark.range(4096).selectExpr("id AS src", "id + 1 AS dst")
-    run("chain4096_label_prop", chain4k, CC.connected_components, 1, 12)
-    run("chain4096_star", chain4k, CC.connected_components_star, 1, 30)
-    return out
-
-
-def _skew_join_probe(spark) -> dict:
-    """Planted join-key skew: a 20M-row fact whose key column sends 90%
-    of all rows to ONE key, equi-joined to a 20K-row dim that is forced
-    past the broadcast threshold — the regime where a plain sort-merge
-    join serializes behind one straggler partition. Four variants,
-    measured on identical inputs (result row count asserted equal):
-
-    - plain SMJ with AQE skew-split OFF: the straggler baseline;
-    - plain SMJ with AQE skew-split ON at DEFAULT thresholds (the
-      session default, session.py) — which never fires here, see the
-      compressed-size blind spot in the variant comment below;
-    - the same with a 1 MB skew threshold (thr1mb), where the runtime
-      split fires and the oversized partition is divided with the
-      matching dim rows replicated — zero code changes;
-    - operators/skew.salted_join (n_salts=32, one per core): the explicit
-      form for the plans AQE can't rewrite (skewed agg→join chains,
-      non-SMJ shapes) — replicates the WHOLE dim n_salts×;
-    - operators/skew.split_plan_join (hot key routed to the salted path,
-      tail joins plain): replicates only the hot dim rows.
-
-    The documented 100 TB default: leave AQE skew-join ON and reach for
-    salting only when the skew sits upstream of the join AQE sees.
-    Determinism: the hot/tail key split is xxhash64-derived, no rand().
-    """
-    from nhl_data_pipeline_spark.operators.skew import (
-        salted_join,
-        split_plan_join,
-    )
-
-    fact = spark.range(20_000_000).selectExpr(
-        "CASE WHEN pmod(xxhash64(id), 10) < 9 THEN CAST(0 AS BIGINT)"
-        "     ELSE pmod(xxhash64(id, 7), 20000) END AS k",
-        "id AS fact_id",
-    )
-    dim = spark.range(20_000).selectExpr(
-        "id AS k", "repeat('d', 64) AS payload"
-    )
-    out: dict[str, float] = {}
-    conf = spark.conf
-    prev_bc = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_skew = conf.get("spark.sql.adaptive.skewJoin.enabled")
-    # Same discipline as the headline loop: cache cleared (earlier probes
-    # persist frames; pinned storage turns this probe into a GC
-    # measurement), blocked warmup, median of 3 — one-shot timings of a
-    # 1-2 s join flip ordering between runs on this container.
-    spark.catalog.clearCache()
-    prev_thr = conf.get(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-    )
-    prev_adv = conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        counts = {}
-        # Why TWO AQE variants: skew detection reads COMPRESSED map
-        # output sizes, and a hot KEY is pathologically compressible —
-        # here the count() plan carries only the 8-byte join key, so the
-        # 18M-row hot partition LZ4s to a few MB and the 256 MB default
-        # threshold never classifies it as skewed (verified: no
-        # skew=true marker even with forceOptimizeSkewedJoin). The
-        # thr1mb variant drops the threshold (+ advisory split size) to
-        # 1 MB, the split fires (SortMergeJoin(skew=true) in the
-        # executed plan), and wall drops ~2.2x. Salting still wins: it
-        # balances at shuffle-WRITE time on ROW COUNT, which compression
-        # can't hide. Same probe-the-defaults discipline as
-        # operators/bloom.py's InjectRuntimeFilter notes.
-        for tag, skew_on, thr, join_fn in (
-            ("plain_smj_aqe_off", "false", None, lambda: fact.join(dim, "k")),
-            ("plain_smj_aqe_skew", "true", None, lambda: fact.join(dim, "k")),
-            (
-                "plain_smj_aqe_skew_thr1mb",
-                "true",
-                str(1 << 20),
-                lambda: fact.join(dim, "k"),
-            ),
-            (
-                "salted_join",
-                "false",
-                None,
-                lambda: salted_join(fact, dim, "k", n_salts=32),
-            ),
-            (
-                "split_plan_join",
-                "false",
-                None,
-                lambda: split_plan_join(
-                    fact, dim, "k", hot_keys=[0], n_salts=32
-                ),
-            ),
-        ):
-            conf.set("spark.sql.adaptive.skewJoin.enabled", skew_on)
-            conf.set(
-                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-                thr if thr else prev_thr,
-            )
-            conf.set(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                thr if thr else prev_adv,
-            )
-            runs = []
-            for i in range(4):
-                t0 = time.perf_counter()
-                counts[tag] = join_fn().count()
-                if i > 0:
-                    runs.append(time.perf_counter() - t0)
-            out[f"{tag}_sec"] = round(sorted(runs)[len(runs) // 2], 3)
-        assert len(set(counts.values())) == 1, counts  # identical results
-        out["join_rows"] = float(counts["plain_smj_aqe_off"])
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        conf.set("spark.sql.adaptive.skewJoin.enabled", prev_skew)
-        conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            prev_thr,
-        )
-        conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", prev_adv
-        )
-    return out
-
-
-def _partition_sizing_probe(spark) -> dict:
-    """Spill-aware shuffle-partition sizing, measured instead of
-    asserted: a ~5.8 GB global sort (48M rows × ~120 B) run with
-    shuffle.partitions=4 (≈1.5 GB raw per task — the UnsafeRow working
-    set far exceeds even the generous pool share 4 lone tasks get) vs
-    64 (≈90 MB per task). Reports wall plus the executed plan's summed
-    "spill size" metric from the SQL status store. Measured shape on
-    this container: BOTH configs spill at this heap, but the oversized
-    config spills roughly double the bytes and runs 2.5-4× slower — the
-    local-mode miniature of the 100 TB sizing rule the module docs
-    state everywhere (pick shuffle.partitions / maxPartitionBytes so a
-    partition working set fits executor memory). Note the pool is
-    divided among ACTIVE tasks: 4 partitions also means 4 lone tasks
-    with 28 idle cores, so the penalty is spill + lost parallelism
-    compounding. Median-of-3 with warmup, like every probe.
-    """
-    out: dict[str, float] = {}
-    spark.catalog.clearCache()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def spill_bytes_of_last_exec() -> int:
-        # summed "spill size" across the last execution's operators;
-        # display format "total (min, med, max ...)\n123.4 MiB (...)"
-        last = store.executionsList().length() - 1
-        return sum(
-            b
-            for name, raw in _iter_exec_metrics(store, last)
-            if name == "spill size"
-            and (b := _parse_size_bytes(raw)) is not None
-        )
-
-    base = spark.range(48_000_000).selectExpr(
-        "id", "repeat('x', 100) AS payload", "xxhash64(id) AS sortkey"
-    )
-    try:
-        for tag, nparts in (("p4_oversized", 4), ("p64_sized", 64)):
-            spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-            runs, spills = [], []
-            for i in range(4):
-                t0 = time.perf_counter()
-                base.orderBy("sortkey").write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                w = time.perf_counter() - t0
-                time.sleep(0.5)  # listener bus drain
-                if i > 0:
-                    runs.append(w)
-                    spills.append(spill_bytes_of_last_exec())
-            out[f"{tag}_sec"] = round(sorted(runs)[len(runs) // 2], 3)
-            out[f"{tag}_spill_bytes"] = float(
-                sorted(spills)[len(spills) // 2]
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
-
-
-def _streaming_throughput_probe(spark) -> dict:
-    """End-to-end micro-batch throughput for the two streaming state
-    shapes: the JVM windowed aggregate (tumbling_counts) and the
-    Python-stateful path (applyInPandasWithState sessionize) — the pair
-    brackets the engine's streaming cost spectrum. Each runs the full
-    sf0.1 events stream (250K rows) through an availableNow memory-sink
-    query; wall includes stream planning + state store + sink, and
-    engine_rows_per_sec is Spark's own processedRowsPerSecond from the
-    query progress log (input rows / batch duration, excluding
-    start/stop overhead). Single-file source → one micro-batch; the
-    multi-batch state path is covered by the checkpoint-resume and
-    bounded-backfill tests, this probe prices the steady-state work.
-    """
-    import uuid as _uuid
-
-    from nhl_data_pipeline_spark.streaming.events_stream import (
-        read_events_stream,
-        tumbling_counts,
-    )
-    from nhl_data_pipeline_spark.streaming.sessionize import sessionize
-
-    out: dict[str, float] = {}
-    # Earlier probes persist frames; a storage-pinned heap makes the
-    # Python-stateful path read 5-7x slower (measured: 35 s vs 5 s for
-    # the identical query) — this probe prices streaming, not GC debt.
-    spark.catalog.clearCache()
-    n_rows = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-    out["input_rows"] = float(n_rows)
-    for tag, build, mode in (
-        ("tumbling_agg", lambda ev: tumbling_counts(ev), "complete"),
-        ("sessionize_pandas_state", lambda ev: sessionize(ev), "append"),
-    ):
-        walls, best_rate = [], 0.0
-        for i in range(4):  # 1 warmup + 3 timed, median (headline rule)
-            name = f"tp_{_uuid.uuid4().hex[:8]}"
-            t0 = time.perf_counter()
-            q = (
-                build(read_events_stream(spark, SF_DIR))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = time.perf_counter() - t0
-            rates = [
-                p["processedRowsPerSecond"]
-                for p in (q.recentProgress or [])
-                if p.get("numInputRows", 0) > 0
-            ]
-            if i > 0:
-                walls.append(wall)
-                if rates:
-                    best_rate = max(best_rate, max(rates))
-            spark.catalog.dropTempView(name)
-        wall = sorted(walls)[len(walls) // 2]
-        out[f"{tag}_sec"] = round(wall, 3)
-        out[f"{tag}_wall_rows_per_sec"] = round(n_rows / wall, 1)
-        if best_rate:
-            out[f"{tag}_engine_rows_per_sec"] = round(best_rate, 1)
-    return out
 
 
 def _pipeline_e2e_probe(spark) -> dict:
@@ -1509,161 +1091,6 @@ def _dedup_scale_probe(spark) -> dict:
     sh.unpersist()
     out["sf1_50k"] = probe
     return out
-
-
-def _ann_scale_probe(spark) -> dict:
-    """Vector-search scale evidence, the ANN analog of the dedup probe.
-
-    The sf0.1 embeddings table is tiny (2K vectors), so the probe also
-    builds a 50×-replicated corpus (100K vectors; replica r>0 perturbs
-    every element deterministically so the copies are distinct points in
-    tight clusters — the natural-embedding regime, unlike the base
-    table's near-uniform synthetic vectors). At both scales:
-    - brute-force cosine top-10, JVM HOF form (exact baseline; x1 only at
-      the big scale's query load it would dominate the bench) and the
-      Arrow/numpy matmul form (the exact throughput path);
-    - IVF split into its true cost centers: TRAIN+ASSIGN (k-means fit +
-      corpus bucketing — at 100 TB this is WRITE-time partitioning, paid
-      once per ingest) vs SCORE (probes join + rank over nprobe/k of the
-      corpus — the recurring READ-side cost);
-    - IVF top-10 recall vs the exact baseline at nprobe=4 and 8.
-    Expected story, measured not asserted: recall on the near-uniform x1
-    vectors is poor (random points don't bucket — IVF presumes
-    clusterable data) and rises on the clustered x50 corpus; the scoring
-    side is the only cost that recurs per query batch.
-    """
-    import time as _t
-
-    from pyspark.sql import DataFrame as _DF
-    from pyspark.sql import functions as F
-
-    from nhl_data_pipeline_spark.operators.kmeans import kmeans
-    from nhl_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_numpy,
-        norm,
-    )
-    from nhl_data_pipeline_spark.operators.similarity import dot as _dot
-
-    n_queries, k = 16, 10
-    base = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    queries = base.filter(F.col("vec_id") < n_queries)
-
-    reps = [base]
-    for r in range(1, 50):
-        perturbed = F.transform(
-            F.col("embedding"),
-            lambda x, i: x + F.lit(float(r)) * 0.003 * ((i % 7).cast("float") - 3.0),
-        )
-        reps.append(
-            base.select(
-                (F.col("vec_id") + r * 10_000_000).alias("vec_id"),
-                perturbed.alias("embedding"),
-            )
-        )
-    big = reduce(_DF.unionAll, reps).repartition(
-        spark.sparkContext.defaultParallelism, F.col("vec_id")
-    )
-
-    def ivf_score(assigned, cents, nprobe):
-        from pyspark.sql.window import Window as W
-
-        from nhl_data_pipeline_spark.operators.kmeans import (
-            _lit_matrix,
-            _sq_dist,
-        )
-
-        qd = F.transform(_lit_matrix(cents), lambda c: _sq_dist(F.col("embedding"), c))
-        # probe slots via sorted (distance, index) STRUCTS, not
-        # array_position over raw distances: struct sort breaks distance
-        # ties on the index, so the nprobe slots are always DISTINCT
-        # clusters (array_position would resolve a tie to the first match
-        # twice -> duplicate probes and double-counted recall hits).
-        slots = F.slice(
-            F.array_sort(
-                F.transform(qd, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-            ),
-            1,
-            nprobe,
-        )
-        probes = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"),
-            norm(F.col("embedding")).alias("q_nrm"),
-            F.explode(slots).alias("_s"),
-        ).select(
-            "query_id",
-            "q_vec",
-            "q_nrm",
-            F.col("_s.i").cast("int").alias("cluster_id"),
-        )
-        cand = assigned.select(
-            "cluster_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_vec"),
-            norm(F.col("embedding")).alias("c_nrm"),
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            probes.join(cand, "cluster_id")
-            .withColumn(
-                "cosine",
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_nrm") * F.col("c_nrm")),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id")
-        )
-
-    out: dict[str, dict] = {}
-    for label, corpus in (("x1_2k", base), ("x50_100k", big)):
-        cands = corpus.filter(F.col("vec_id") >= n_queries)
-        block: dict[str, float] = {}
-
-        def timed(name: str, df) -> None:
-            t0 = _t.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            block[name] = round(_t.perf_counter() - t0, 3)
-
-        if label == "x1_2k":
-            timed("bruteforce_hof", cosine_topk(queries, cands, k))
-        timed("bruteforce_numpy", cosine_topk_numpy(queries, cands, k))
-
-        t0 = _t.perf_counter()
-        assigned, cents = kmeans(cands, 32, 2)
-        assigned = assigned.persist()
-        assigned.write.format("noop").mode("overwrite").save()
-        block["ivf_train_assign_writetime"] = round(_t.perf_counter() - t0, 3)
-        timed("ivf_score_readtime_nprobe4", ivf_score(assigned, cents, 4))
-
-        # recall baseline: the NUMPY exact top-k at BOTH scales (the HOF
-        # exact would re-run an 11 s+ scan at x50 just to re-derive the
-        # same set; numpy vs HOF can differ only on last-ulp rank-k ties,
-        # noise for a recall metric). Persisted: one computation serves
-        # both nprobe points.
-        exact = (
-            cosine_topk_numpy(queries, cands, k)
-            .select("query_id", "neighbor_id")
-            .persist()
-        )
-        n_exact = exact.count()
-        for nprobe in (4, 8):
-            n_hit = (
-                ivf_score(assigned, cents, nprobe)
-                .join(exact, ["query_id", "neighbor_id"], "left_semi")
-                .count()
-            )
-            block[f"ivf_recall_at_10_nprobe{nprobe}"] = (
-                round(n_hit / n_exact, 4) if n_exact else 1.0
-            )
-        exact.unpersist()
-        assigned.unpersist()
-        out[label] = block
-    return out
-
 
 
 if __name__ == "__main__":

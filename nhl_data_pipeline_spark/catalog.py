@@ -253,11 +253,11 @@ def reset_scan_splits(spark: SparkSession) -> None:
 # carries the distribution, so planting REPARTITION_BY_NUM on top would
 # RE-ADD the exchange the layout exists to remove. Session-scoped and
 # empty by default: the driver/bench/test paths never populate it, so
-# every pinned plan fingerprint and oracle run is untouched; the bucketed
-# counterfactual probe (tools/probe_bucketed_join.py) and cluster ingest
-# are the intended writers. This is the engine's "pay the shuffle once at
-# ingest" switch — the 100 TB answer to the single-disk exchange wait
-# measured in bench_logs/r11/probe_stage_{join_chain,topk}_sf100.out.
+# every pinned plan fingerprint and oracle run is untouched; cluster
+# ingest and `tools/capture_plans.py --bucketed` are the intended
+# writers. This is the engine's "pay the shuffle once at ingest" switch —
+# the 100 TB answer to the single-disk exchange wait measured in
+# bench_logs/r11/probe_stage_{join_chain,topk}_sf100.out.
 BUCKETED_LAYOUT: dict[str, tuple[str, tuple[str, ...]]] = {}
 
 

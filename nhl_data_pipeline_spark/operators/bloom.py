@@ -177,8 +177,7 @@ def bloom_prejoin(
     where non-matching big rows vanish anyway). Do NOT feed the pruned
     frame into a join that keeps unmatched big rows — big LEFT JOIN
     small would lose every null-extended row the pre-filter removed.
-    Same trap class as the join-type allowlists in operators/skew.py;
-    here the join happens outside this function, so the restriction is
+    The join happens outside this function, so the restriction is
     contractual rather than asserted."""
     bt = dict(big.dtypes)[big_key]
     st = dict(small.dtypes)[small_key]

@@ -20,30 +20,15 @@ Scale posture (100 TB):
   both partition on the node id, so AQE reuses the exchange where it can;
 - state per round is (node, label) longs — 16 bytes/node, never the docs;
 - lineage is truncated with localCheckpoint every round, otherwise the
-  iterative plan re-grows (and re-codegens) linearly in rounds;
-- for adversarial long-chain graphs switch to large-star/small-star
-  (same join primitive, O(log n) rounds guaranteed).
+  iterative plan re-grows (and re-codegens) linearly in rounds.
 
-Adversarial-topology numbers (bench.py::_cc_skew_probe, local[32]; the
-ROUNDS columns are deterministic, wall-clock varies ±30% across
-container reboots):
-
-  graph                              label-prop         star
-  hub: 50% of 200K nodes behind one
-  100K-degree hub (join skew)        1 round / 2.9 s    2 rounds / 6.6 s
-  chain, diameter 32                 32 rounds / 8.1 s  6 rounds / 3.5 s
-  chain, diameter 4096               DNF at 12-round cap 13 rounds / 7.2 s
-
-DEFAULT CHOICE, from the measurements: :func:`duplicate_clusters` keeps
-min-label propagation — near-dup pair graphs are hub-shaped and shallow
-(a dup cluster is ~one clique/star), exactly the regime where label-prop
-wins and the 100K-degree skew measurably does NOT hurt it (the min-agg
-combines map-side; no hot reducer). Reach for
-:func:`connected_components_star` when the topology is unknown or
-chain-heavy (web graphs, citation chains): its round count is bounded by
-O(log n) regardless of diameter, while label-prop pays one round per hop
-of eccentricity and never terminates inside any reasonable cap on long
-chains.
+Topology limit: rounds grow with diameter, so long chains (web graphs,
+citation chains) need one round per hop and hit ``max_rounds``. Near-dup
+pair graphs are hub-shaped and shallow, the regime where label
+propagation wins, and a 100K-degree hub does not hurt it (the min-agg
+combines map-side; no hot reducer). Measured on a 50%-of-200K-nodes hub
+(1 round) and on chains of diameter 32 (32 rounds) and 4096 (no
+convergence inside a 12-round cap): BENCH_probes.json::cc_skew_probe.
 """
 
 from __future__ import annotations
@@ -57,7 +42,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component =
     the minimum node id reachable from it. Deterministic for any input.
@@ -65,8 +49,7 @@ def connected_components(
     Driver-side convergence loop — legitimate here: each round is a fully
     distributed join+agg and only a single changed-row COUNT comes back to
     the driver. Raises if ``max_rounds`` is hit without convergence (a
-    silent partial closure would mislabel clusters). ``stats`` (optional
-    dict) receives {"rounds": n} — the skew probe in bench.py reads it.
+    silent partial closure would mislabel clusters).
     """
     # Symmetrize once; self-loops are harmless but add work — drop them.
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
@@ -86,9 +69,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    for rnd in range(1, max_rounds + 1):
-        if stats is not None:
-            stats["rounds"] = rnd
+    for _ in range(max_rounds):
         # label'(n) = min(label(n), min over neighbors m of label(m))
         nbr = (
             e.join(labels, e.b == labels.node)
@@ -116,7 +97,7 @@ def connected_components(
             return labels.select("node", F.col("label").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_rounds} rounds — "
-        "raise max_rounds or switch to large-star/small-star for this graph"
+        "raise max_rounds for this graph's diameter"
     )
 
 
@@ -145,89 +126,3 @@ def duplicate_clusters(
         )
     )
 
-
-def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col(src) != F.col(dst)
-    )
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """For every node u: connect each strictly-larger neighbor to
-    min(Γ(u) ∪ {u}). Emitted edges are always (bigger, smaller).
-
-    Γ is over the UNDIRECTED graph, so the (possibly small-star-oriented)
-    input is re-symmetrized first — grouping only by the stored edge
-    direction would hide a node's in-neighbors and disconnect components.
-    """
-    e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    mins = e.groupBy("a").agg(F.min("b").alias("mb"))
-    mins = mins.select("a", F.least("a", "mb").alias("m"))
-    return (
-        e.join(mins, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient edges (big, small); for every node u: connect u and each
-    smaller neighbor to the minimum of them all."""
-    o = e.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    mins = o.groupBy("a").agg(F.min("b").alias("m"))
-    return (
-        o.join(mins, "a")
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .union(mins.select("a", F.col("m").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 30,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Same (node, component) contract as :func:`connected_components`, via
-    alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm). Converges in O(log n) ROUNDS REGARDLESS OF DIAMETER, where
-    min-label propagation needs O(diameter) — this is the variant to reach
-    for on adversarial long-chain graphs (web graphs, citation chains);
-    label propagation stays cheaper per round on the shallow dense
-    clusters near-dup dedup produces.
-
-    Each round is two groupBy-min + join passes over the current edge set;
-    the edge set only shrinks (toward a star forest), and lineage is
-    truncated per round. Convergence = edge set fixed point (exact
-    subtract check, not a count heuristic).
-    """
-    e = _symmetrize(edges, src, dst).localCheckpoint(eager=True)
-    nodes = e.select("a").distinct()
-    for rnd in range(1, max_rounds + 1):
-        if stats is not None:
-            stats["rounds"] = rnd
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        stable = (
-            new_e.exceptAll(e).limit(1).count() == 0
-            and e.exceptAll(new_e).limit(1).count() == 0
-        )
-        e = new_e
-        if stable:
-            # Star forest: every non-root points at its component min.
-            comp = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
-            pointers = e.select(F.col("a").alias("ptr")).distinct()
-            roots = nodes.join(
-                pointers, nodes.a == pointers.ptr, "left_anti"
-            ).select(F.col("a").alias("node"), F.col("a").alias("component"))
-            return comp.union(roots)
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_rounds} rounds"
-    )

@@ -370,12 +370,12 @@ def lsh_band_table(
         base, tokens(F.col(text_col)), n, id_col=id_col
     )
     # The k seed-min aggregates and the band-key md5 array are rendered as
-    # SQL text (guide §4 driver boundary, r12 chatter pass): the per-seed
-    # Column build — min(md5(concat(lit, col))) × k plus bands × concat_ws
-    # — cost ~6 py4j round trips per node (~800 per call measured by
-    # probe_driver_build --mode chatter-attr); the rendered strings are
-    # parsed JVM-side in one trip each and the expression trees (and the
-    # pinned plan fingerprints) are identical.
+    # SQL text (driver boundary): the per-seed Column build —
+    # min(md5(concat(lit, col))) × k plus bands × concat_ws — cost ~6 py4j
+    # round trips per node (~800 per call,
+    # bench_logs/r12/probe_chatter_attr_wave0.json); the rendered strings
+    # are parsed JVM-side in one trip each and the expression trees (and
+    # the pinned plan fingerprints) are identical.
     sigs = sh.groupBy(id_col).agg(
         *[
             F.expr(f"min(md5(concat('{i}|', s)))").alias(f"h{i}")

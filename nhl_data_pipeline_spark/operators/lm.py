@@ -113,21 +113,21 @@ def ngram_lm_score(
         model_src = reference if reference is not None else docs
         model_rows = model_src.count()
     big_model = model_rows > 20_000
-    # SIZE-GATED persists (r12, tools/probe_persist_ab.py + the corrected
-    # sf10 legs in bench_logs/r12/persist_legs.log): the trigram explode
-    # feeds two consumers and the gram table three, and earlier rounds
-    # cached both unconditionally — but the InMemoryRelation build+read
-    # machinery costs ~10× the recompute it saves while the corpus is
-    # small (full-query executor CPU 11.7 vs 1.6 s at sf0.1; wall 4.80 vs
-    # 4.35 s at sf1; the cache knobs — compression off, 100K batches,
-    # MEMORY_ONLY — move it <30%, probe_cache_cost). The ordering flips at
-    # sf10 (500K docs: wall 10.75 persisted vs 17.86 recomputed, min over
-    # alternating fresh-JVM legs) where the duplicated corpus-scale
-    # groupBy outweighs the cache build. 100_000 splits the measured
-    # regimes (sf1 = 50K docs recompute-wins, sf10 = 500K persist-wins);
-    # the gate rides the same memoized source row count as the join
-    # strategy, so no extra action. MEMORY_AND_DISK spills rather than
-    # OOMs; at 100 TB you would materialize the gram table to the lake.
+    # SIZE-GATED persists: the trigram explode feeds two consumers and
+    # the gram table three, but the InMemoryRelation build+read machinery
+    # costs ~10× the recompute it saves while the corpus is small
+    # (full-query executor CPU 11.7 vs 1.6 s at sf0.1; wall 4.80 vs
+    # 4.35 s at sf1; compression off, 100K batches or MEMORY_ONLY move it
+    # <30%). The ordering flips at sf10 (500K docs: wall 10.75 persisted
+    # vs 17.86 recomputed, min over alternating fresh-JVM legs) where the
+    # duplicated corpus-scale groupBy outweighs the cache build. Evidence:
+    # bench_logs/r12/probe_persist_ab_sf01_v2.out (sf0.1),
+    # probe_persist_ab_sf1.out (sf1) and persist_legs.log (sf10).
+    # 100_000 splits the measured regimes (sf1 = 50K docs recompute-wins,
+    # sf10 = 500K persist-wins); the gate rides the same memoized source
+    # row count as the join strategy, so no extra action. MEMORY_AND_DISK
+    # spills rather than OOMs; at 100 TB you would materialize the gram
+    # table to the lake.
     persist_worthwhile = model_rows > 100_000
     tri_ref = _ngrams(
         reference if reference is not None else docs,

@@ -8,8 +8,9 @@ and engine-portable; no Python in the row loop.
 
 At 100 TB: the candidate side is bucketed/partitioned by centroid id, so an
 ANN query is a partition-pruned scan + top-k (TakeOrdered) — no global sort,
-no crossJoin of the full corpus. A Pandas-UDF (numpy matmul) variant is the
-throughput upgrade when k and batch are large; semantics identical.
+no crossJoin of the full corpus. The JVM form is the one exact top-k: a
+numpy-matmul top-k over Arrow batches measured slower at 2K vectors
+(BENCH_probes.json::ann_scale_probe).
 """
 
 from __future__ import annotations
@@ -117,59 +118,6 @@ def cosine_topk(
     )
 
 
-def cosine_topk_numpy(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Vectorized brute-force cosine top-k via Arrow-batched mapInPandas.
-
-    The throughput path for large k×corpus products: the (small) query set
-    is collected once and closed over as a normalized numpy matrix; each
-    candidate Arrow batch does one float64 matmul against it and emits its
-    local per-query top-k; a final window rank reduces locals to the global
-    top-k. Same contract as cosine_topk; float64 matmul accumulates in a
-    different order than the sequential JVM sum, so cosines can differ in
-    the last ulp — rankings agree except on exact ties.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec).collect()
-    q_ids = np.array([r[id_col] for r in q_rows])
-    q_mat = np.array([r[vec] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.array(list(pdf[vec]), dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_mat @ q_mat.T  # (batch, n_queries)
-            top = min(k, sims.shape[0])
-            idx = np.argpartition(-sims, top - 1, axis=0)[:top]  # per query
-            rows = {
-                "query_id": np.repeat(q_ids, top),
-                "neighbor_id": c_ids[idx].T.ravel(),
-                "cosine": np.take_along_axis(sims, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(rows)
-
-    local = candidates.select(id_col, vec).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
 def cosine_allpairs_numpy(
     df: DataFrame,
     threshold: float,
@@ -177,7 +125,7 @@ def cosine_allpairs_numpy(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold, vectorized AND bit-identical to
-    the sequential JVM fold (unlike the matmul top-k above).
+    the sequential JVM fold (a plain matmul is not).
 
     The JVM/DuckDB dot is `0.0 + a₀b₀ + a₁b₁ + …` left-to-right in float64;
     matmul/np.dot use SIMD pairwise summation, which differs in the last

@@ -459,16 +459,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").repartition(
         width, F.col("doc_id")
     )
-    # NOT persisted (r12 session 2): the shingle table feeds both join
-    # sides and was cached through r11, but the InMemoryRelation
-    # build+read machinery costs more than recomputing it at EVERY
-    # measured scale — tools/probe_persist_ab.py (alternating arms, one
-    # session): wall 1.79 → 1.33 s / CPU 17.6 → 12.5 at sf0.1, wall
-    # 2.32 → 1.87 / CPU 34.8 → 23.4 at sf1; alternating fresh-JVM legs
-    # at sf10 (bench_logs/r12/persist_sf10_ARM*_leg*.out, label
-    # correction in persist_legs.log): min-wall 16.62 persisted vs
-    # 12.07 recomputed (−27%). Unlike lm's trigram table the recompute
-    # here is bounded: the distinct-shingle aggregate's exchange subtree
+    # NOT persisted: the shingle table feeds both join sides, but the
+    # InMemoryRelation build+read machinery costs more than recomputing
+    # it at EVERY measured scale. Alternating arms in one session: wall
+    # 1.79 → 1.33 s / CPU 17.6 → 12.5 at sf0.1, wall 2.32 → 1.87 / CPU
+    # 34.8 → 23.4 at sf1 (bench_logs/r12/probe_persist_ab_sf01_v2.out,
+    # probe_persist_ab_sf1.out); alternating fresh-JVM legs at sf10:
+    # min-wall 16.62 persisted vs 12.07 recomputed, −27%
+    # (bench_logs/r12/persist_sf10_ARM*_leg*.out, label correction in
+    # persist_legs.log). Unlike lm's trigram table the recompute here is
+    # bounded: the distinct-shingle aggregate's exchange subtree
     # is byte-identical on both sides, and at 100 TB an in-executor-
     # memory copy of a corpus-scale table was never viable anyway — the
     # lake, not the block manager, is where a reused shingle table would
@@ -496,21 +496,19 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(width, F.col("s"))
         .hint("shuffle_hash")
     )
-    # Projections/filters as parsed SQL strings (r12 chatter pass — same
-    # expression trees, a fraction of the py4j round trips; probe:
-    # probe_driver_build --mode chatter-attr).
+    # Projections/filters as parsed SQL strings: same expression trees,
+    # a fraction of the py4j round trips
+    # (bench_logs/r12/probe_chatter_attr_wave0.json).
     pairs = a.join(b, ["s"]).filter(
         "doc_a < doc_b AND 4 * greatest(n_a, n_b) <= 5 * least(n_a, n_b)"
     )
-    # r11 (VERDICT r10 ask #1 — the REAL fifth-decade defect, found by
-    # per-stage spill attribution, bench_logs/r11/probe_stage_*.out):
-    # the self-join runs at `width`, but the pair COUNT aggregate that
-    # consumes it shuffled at the session width — at sf100 its final
-    # stage read 8.25 GB of pair rows in 32 tasks, held ~1.5 GB of hash
-    # state each, and spilled 48 GB memory / 8.7 GB disk: 1078 of the
-    # run's 3163 executor-CPU seconds, as much as the self-join stage
-    # itself. Post-fix the same stage reads 530 CPU-s with zero spill
-    # (probe_stage_detail_postfix.out). REPARTITION_BY_NUM on
+    # The pair COUNT aggregate runs at `width` too. At the session width
+    # its final stage at sf100 read 8.25 GB of pair rows in 32 tasks,
+    # held ~1.5 GB of hash state each, and spilled 48 GB memory / 8.7 GB
+    # disk: 1078 of the run's 3163 executor-CPU seconds, as much as the
+    # self-join stage itself; at `width` the same stage reads 530 CPU-s
+    # with zero spill (per-stage attribution in
+    # bench_logs/r11/probe_stage_detail_postfix.out). REPARTITION_BY_NUM on
     # (doc_a, doc_b) — a subset of the grouping keys, so it satisfies
     # the aggregate's ClusteredDistribution and no extra exchange is
     # planted — runs the aggregate at `width` too, holding per-task agg
@@ -636,8 +634,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
     """Banded MinHash candidate pairs over any (doc_id, text) frame (the
-    registered query's body; bench's skew probe reuses it on a
-    boilerplate-heavy corpus to measure candidate precision).
+    registered query's body; bench.py::_dedup_scale_probe reuses it in
+    its ``sf0.1_boiler3k`` block to measure candidate precision on a
+    boilerplate-heavy corpus, and in its ``sf1_50k`` block for time and
+    recall).
 
     ``width``: explicit partition count for the band self-join sides —
     callers with a known source size pass catalog.shuffle_width_for so the
@@ -1462,9 +1462,9 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )
-    # NOT persisted (r12 session 2, tools/probe_persist_ab.py): wall
-    # 2.33 → 1.86 s / CPU 21.5 → 15.6 at sf0.1 without the cache — the
-    # InMemoryRelation build costs more than recomputing the shared
+    # NOT persisted: wall 2.33 → 1.86 s / CPU 21.5 → 15.6 at sf0.1
+    # without the cache (bench_logs/r12/probe_persist_ab_sf01_extra.out)
+    # — the InMemoryRelation build costs more than recomputing the shared
     # shingle subtree, whose exchange runtime ReusedExchange dedupes.
     sh = D.exploded_distinct_shingles(
         d, X.tokens(F.col("text")), 4, hash_shingles=True

@@ -335,7 +335,7 @@ def topk_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))"
         ).alias("rev_d")
     )
-    # Layout note (r12 probes): under the bucketed layout this join runs
+    # Layout note: under the bucketed layout this join runs
     # with NO exchange on either side (per_order inherits lineitem's
     # bucketing through the aggregate; orders is bucketed on o_orderkey)
     # and the join sorts are small (1.2M narrow rows per task). A
@@ -345,7 +345,8 @@ def topk_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "Can't acquire 67108864 bytes to build hash relation" at sf100/128
     # buckets (bench_logs/r12/probe_bucketed_shj_topk_sf100.out.err).
     # SMJ degrades to disk instead of dying; the per-task memory knob is
-    # the BUCKET COUNT (see tools/probe_bucketed_join.py).
+    # the BUCKET COUNT (128 vs 256 buckets at sf100:
+    # bench_logs/r12/probe_bucketed{,256}_topk_sf100.out).
     return (
         per_order.join(
             o.select("o_orderkey", "o_custkey"),

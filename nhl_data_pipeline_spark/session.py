@@ -128,8 +128,8 @@ def cluster_conf(
     - ``spark.sql.shuffle.partitions`` = max(2 × total_cores,
       dataset_bytes / 128 MiB): partitions sized so a task's working set
       fits execution memory. The spill cliff is measured in
-      ``bench.py::_partition_sizing_probe`` — an oversized partition
-      spills ~2× the bytes and runs 2.5-4× slower; remember the pool
+      ``BENCH_probes.json::partition_sizing_probe`` — an oversized
+      partition spills ~2× the bytes and runs 2.5-4× slower; the pool
       divides among ACTIVE tasks, so under-partitioning ALSO idles
       cores. AQE coalesces the excess at runtime (its advisory size
       stays at the 64 MiB default). There is deliberately NO silent
@@ -140,13 +140,14 @@ def cluster_conf(
       explicitly accept a larger per-task working set.
     - ``spark.sql.files.maxPartitionBytes`` stays at 128 MiB — scan-side
       partitions follow the same fits-in-memory rule.
-    - AQE on, with skew-join splitting at DEFAULT thresholds. For
-      workloads whose hot join keys are low-entropy (compression hides
-      the skew from AQE's size-based detection), apply
-      :func:`compressed_skew_overrides` AROUND the affected join —
-      those two confs are deliberately NOT set fleet-wide here because
-      the 1 MiB advisory size would shred AQE coalescing for every
-      other shuffle.
+    - AQE on, with skew-join splitting at DEFAULT thresholds: the
+      runtime split is the one skew-join path. Detection reads
+      COMPRESSED map-output sizes, so a low-entropy hot key can hide
+      below the 256 MiB threshold; lowering threshold and advisory size
+      to 1 MiB around such a join makes the split fire
+      (BENCH_probes.json::skew_join_probe). Those confs are NOT set
+      fleet-wide: a 1 MiB advisory size would shred AQE coalescing for
+      every other shuffle.
     - Arrow + UTC + nanosAsLong: same correctness policy as local mode.
 
     Not set here: executor memory/GC (spark-submit's job — though the
@@ -191,28 +192,3 @@ def cluster_conf(
     }
     return conf
 
-
-def compressed_skew_overrides() -> dict[str, str]:
-    """The two confs that make AQE split a COMPRESSION-HIDDEN skewed
-    join, to be applied AROUND that join (set → run → restore), never
-    fleet-wide.
-
-    AQE skew detection reads compressed map-output sizes, and a hot join
-    KEY is pathologically compressible: in ``bench.py::_skew_join_probe``
-    an 18M-row hot partition LZ4s to a few MB, so the default 256 MiB
-    threshold never classifies it as skewed. BOTH confs are required —
-    measured: a 1 MiB threshold with the advisory size left at its
-    64 MiB default still produces no ``skew=true`` (the advisory is the
-    split TARGET, and no split exists below one target unit); threshold
-    + advisory at 1 MiB splits the straggler ~2.3×. The 1 MiB advisory
-    is exactly why this must stay query-scoped: globally it would shred
-    AQE coalescing for every other shuffle. For row-count skew that
-    compression hides entirely, use ``operators/skew.salted_join`` /
-    ``split_plan_join`` instead.
-    """
-    return {
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": str(
-            1 << 20
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(1 << 20),
-    }

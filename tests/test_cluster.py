@@ -58,35 +58,32 @@ def test_duplicate_clusters_keeper_and_sizes(spark):
     assert rows[20].is_keeper and rows[21].cluster_size == 2
 
 
-def _cc_sets(rows):
-    return {(r.node, r.component) for r in rows}
-
-
 def test_star_equals_label_prop_on_random_graph(spark):
+    # Seeded 60-node, 80-edge random graph checked against a union-find
+    # whose root is always the smaller id: component = min reachable node.
     import random
 
     rng = random.Random(42)
     edges = [
         (rng.randrange(60), rng.randrange(60)) for _ in range(80)
     ]
-    e = _edges(spark, [(a, b) for a, b in edges if a != b])
-    from nhl_data_pipeline_spark.operators.cluster import (
-        connected_components_star,
-    )
+    edges = [(a, b) for a, b in edges if a != b]
+    parent: dict[int, int] = {}
 
-    got_star = _cc_sets(connected_components_star(e).collect())
-    got_prop = _cc_sets(connected_components(e, max_rounds=60).collect())
-    assert got_star == got_prop
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
 
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(n, find(n)) for n in parent}
 
-def test_star_converges_on_long_chain_in_few_rounds(spark):
-    # Path 0-1-...-40: diameter 40. Star contraction must finish well
-    # inside 10 rounds (O(log n)); label propagation would need ~40.
-    from nhl_data_pipeline_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    e = _edges(spark, [(i, i + 1) for i in range(40)])
-    rows = connected_components_star(e, max_rounds=10).collect()
-    assert {r.component for r in rows} == {0}
-    assert {r.node for r in rows} == set(range(41))
+    e = _edges(spark, edges)
+    got = {
+        (r.node, r.component)
+        for r in connected_components(e, max_rounds=60).collect()
+    }
+    assert got == want

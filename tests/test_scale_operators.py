@@ -1,30 +1,12 @@
-"""Skew salting, approx distinct, vectorized ANN — the scale-path operators."""
+"""Scale-path operators: approx distinct, ANN, dedup, multimodal, intervals."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.catalog import load_table
-from nhl_data_pipeline_spark.operators.skew import salted_join, top_frequency_keys
-from nhl_data_pipeline_spark.operators.similarity import cosine_topk, cosine_topk_numpy
+from nhl_data_pipeline_spark.operators.similarity import cosine_topk
 from tests.conftest import TEST_SF_DIR
-
-
-def test_salted_join_equals_plain_join(spark):
-    li = load_table(spark, TEST_SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, TEST_SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = li.join(o, "l_orderkey").groupBy("l_orderkey").count()
-    salted = salted_join(li, o, "l_orderkey", n_salts=4).groupBy("l_orderkey").count()
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
-def test_top_frequency_keys(spark):
-    e = load_table(spark, TEST_SF_DIR, "events")
-    hot = top_frequency_keys(e, "event_type", min_count=1)
-    assert hot.count() == 5  # all five types at this scale
 
 
 def test_approx_count_distinct_close_to_exact(spark):
@@ -34,19 +16,6 @@ def test_approx_count_distinct_close_to_exact(spark):
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx"),
     ).first()
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.05
-
-
-def test_numpy_topk_matches_exact(spark):
-    e = load_table(spark, TEST_SF_DIR, "embeddings")
-    q = e.filter(F.col("vec_id") < 5)
-    c = e.filter(F.col("vec_id") >= 5)
-    exact = cosine_topk(q, c, 5)
-    fast = cosine_topk_numpy(q, c, 5)
-    ex = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in exact.collect()}
-    fs = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in fast.collect()}
-    assert set(ex) == set(fs)
-    for pair, cos in ex.items():
-        assert abs(cos - fs[pair]) < 1e-9
 
 
 def test_multimodal_feature_chain_into_ann(spark):
@@ -206,20 +175,6 @@ def test_minhash_lsh_empirical_recall_vs_exact(spark):
     assert len(exact) > 0
     recall = len(lsh & exact) / len(exact)
     assert recall >= 0.9, (recall, len(exact), len(lsh))
-
-
-def test_salted_join_rejects_right_outer(spark):
-    """Outer-on-the-small-side joins would emit unmatched small-side rows
-    n_salts times; the operator refuses them."""
-    import pytest as _pytest
-
-    li = load_table(spark, TEST_SF_DIR, "lineitem").select("l_orderkey")
-    o = load_table(spark, TEST_SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey")
-    )
-    for how in ("right", "full", "right_outer", "full_outer"):
-        with _pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(li, o, "l_orderkey", n_salts=4, how=how)
 
 
 def test_winnowing_guarantee_and_density(spark):
@@ -719,94 +674,6 @@ def test_neardup_ledger_short_doc_fallback(spark):
     assert entries.filter("band_idx = 0").count() == 1
 
 
-def test_split_plan_join_identity_and_routing(spark):
-    """split_plan_join == plain join row-for-row: inner + left (with a
-    planted NULL key, which must survive on the left's tail path), hot
-    set passed explicitly AND derived via min_count."""
-    from nhl_data_pipeline_spark.operators.skew import split_plan_join
-
-    big = spark.createDataFrame(
-        [(0, i) for i in range(500)]
-        + [(k, 1000 + k) for k in range(1, 40)]
-        + [(None, -1), (None, -2)],
-        "k: bigint, payload: int",
-    )
-    small = spark.createDataFrame(
-        [(k, f"d{k}") for k in range(0, 30)], "k: bigint, d: string"
-    )
-
-    def rows(df):
-        return sorted(
-            (tuple(r) for r in df.collect()),
-            key=lambda t: tuple((x is None, x) for x in t),
-        )
-
-    for how in ("inner", "left", "left_semi", "left_anti"):
-        plain = big.join(small, "k", how)
-        explicit = split_plan_join(
-            big, small, "k", hot_keys=[0], n_salts=4, how=how
-        )
-        derived = split_plan_join(
-            big, small, "k", min_count=100, n_salts=4, how=how
-        )
-        assert rows(explicit) == rows(plain), how
-        assert rows(derived) == rows(plain), how
-    # left keeps the null-key rows exactly once
-    left = split_plan_join(big, small, "k", hot_keys=[0], n_salts=4, how="left")
-    assert left.filter(F.col("k").isNull()).count() == 2
-    # empty hot set degrades to the plain join
-    assert rows(
-        split_plan_join(big, small, "k", hot_keys=[], how="inner")
-    ) == rows(big.join(small, "k"))
-
-
-def test_split_plan_join_null_hot_key(spark):
-    """NULL as the HOTTEST key (routine in skewed fact data): the derived
-    hot set contains None, which must be stripped — isin([..., None]) is
-    NULL for non-members and would silently drop the whole tail."""
-    from nhl_data_pipeline_spark.operators.skew import split_plan_join
-
-    big = spark.createDataFrame(
-        [(None, i) for i in range(300)] + [(k, k) for k in range(1, 30)],
-        "k: bigint, payload: int",
-    )
-    small = spark.createDataFrame(
-        [(k, f"d{k}") for k in range(0, 30)], "k: bigint, d: string"
-    )
-    for how in ("inner", "left"):
-        plain = sorted(
-            (tuple(r) for r in big.join(small, "k", how).collect()),
-            key=lambda t: tuple((x is None, x) for x in t),
-        )
-        got = sorted(
-            (
-                tuple(r)
-                for r in split_plan_join(
-                    big, small, "k", min_count=100, n_salts=4, how=how
-                ).collect()
-            ),
-            key=lambda t: tuple((x is None, x) for x in t),
-        )
-        assert got == plain, how
-        assert len(got) > 0
-
-
-def test_split_plan_join_guards(spark):
-    import pytest as _pytest
-
-    from nhl_data_pipeline_spark.operators.skew import split_plan_join
-
-    big = spark.createDataFrame([(1, 1)], "k: bigint, v: int")
-    small = spark.createDataFrame([(1, "a")], "k: bigint, d: string")
-    for how in ("right", "full", "cross"):
-        with _pytest.raises(ValueError, match="split_plan_join supports"):
-            split_plan_join(big, small, "k", hot_keys=[1], how=how)
-    with _pytest.raises(ValueError, match="exactly one"):
-        split_plan_join(big, small, "k")
-    with _pytest.raises(ValueError, match="exactly one"):
-        split_plan_join(big, small, "k", hot_keys=[1], min_count=5)
-
-
 def test_neardup_ledger_null_text_idempotent(spark):
     """A NULL-text doc must get a JOINABLE fallback band key (md5 of a
     NULL would never equi-match the ledger and the doc would be
@@ -832,66 +699,10 @@ def test_neardup_ledger_null_text_idempotent(spark):
     assert {r["doc_id"] for r in flagged2.collect()} == {1, 2, 3}
 
 
-try:
-    from hypothesis import given, settings, strategies as st
-
-    _KEY = st.one_of(st.none(), st.integers(min_value=0, max_value=6))
-
-    @settings(max_examples=4, deadline=None)
-    @given(
-        st.lists(_KEY, min_size=0, max_size=40),
-        st.lists(_KEY, min_size=0, max_size=8, unique=True),
-        st.sampled_from(["inner", "left", "left_semi", "left_anti"]),
-    )
-    def test_skew_joins_equal_plain_on_random_inputs(
-        spark, big_keys, hot, how
-    ):
-        """Generative identity for the whole skew-join family: random
-        key lists (with NULLs), random hot sets (possibly containing
-        None or keys absent from either side), every supported join
-        type — salted_join and split_plan_join must reproduce the plain
-        join row-for-row."""
-        from nhl_data_pipeline_spark.operators.skew import (
-            salted_join,
-            split_plan_join,
-        )
-
-        big = spark.createDataFrame(
-            [(k, i) for i, k in enumerate(big_keys)],
-            "k: bigint, payload: bigint",
-        )
-        small = spark.createDataFrame(
-            [(k, f"d{k}") for k in (0, 1, 2, 4)], "k: bigint, d: string"
-        )
-
-        def rows(df):
-            return sorted(
-                (tuple(r) for r in df.collect()),
-                key=lambda t: tuple((x is None, x) for x in t),
-            )
-
-        plain = rows(big.join(small, "k", how))
-        assert rows(salted_join(big, small, "k", n_salts=3, how=how)) == plain
-        assert (
-            rows(
-                split_plan_join(
-                    big, small, "k", hot_keys=hot, n_salts=3, how=how
-                )
-            )
-            == plain
-        )
-
-except ImportError:  # pragma: no cover - hypothesis is baked in
-    pass
-
-
 def test_cluster_conf_sizing_rules():
     import pytest as _pytest
 
-    from nhl_data_pipeline_spark.session import (
-        cluster_conf,
-        compressed_skew_overrides,
-    )
+    from nhl_data_pipeline_spark.session import cluster_conf
 
     # small data: parallelism floor (2x cores) wins
     c = cluster_conf(total_cores=400, dataset_bytes=10 << 30)
@@ -909,11 +720,3 @@ def test_cluster_conf_sizing_rules():
         cluster_conf(total_cores=4000, dataset_bytes=1 << 50)
     with _pytest.raises(ValueError):
         cluster_conf(total_cores=0, dataset_bytes=1)
-    # the compression-hidden-skew overrides carry BOTH required confs
-    # (measured: threshold alone never fires — the advisory is the
-    # split target), and are query-scoped by design
-    o = compressed_skew_overrides()
-    assert o[
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-    ] == str(1 << 20)
-    assert o["spark.sql.adaptive.advisoryPartitionSizeInBytes"] == str(1 << 20)

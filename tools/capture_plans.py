@@ -1,18 +1,18 @@
-"""Capture .explain("formatted") for benched queries into plans/r13/.
+"""Capture .explain("formatted") for benched queries into plans/<round>/.
 
-Round-12 deliverable: the judge reads plans/r13/<query>_{before,after}.txt
-to check plan-shape claims without running Spark.
+The before/after plan files let a reader check plan-shape claims without
+running Spark.
 
 Usage:
-    python tools/capture_r13_plans.py <suffix> [query ...]
+    python tools/capture_plans.py <round> <suffix> [--bucketed] [query ...]
 
-Writes plans/r13/<query>_<suffix>.txt at $SPARK_GRAFT_SF_DIR (default
-sf0.1 — the driver's bench scale, so the captured shapes are the benched
-shapes). With --bucketed, first materializes/registers the bucketed
+Writes plans/<round>/<query>_<suffix>.txt (e.g. ``r13`` and ``before``)
+at $SPARK_GRAFT_SF_DIR (default sf0.1 — the bench scale, so the captured
+shapes are the benched shapes); with no query names it captures every
+benched query. With --bucketed, first materializes/registers the bucketed
 lineitem/orders layout (sources/bucketed.ensure_bucketed_lake into
 /tmp/bucketed_lake_<sf>) and registers it in catalog.BUCKETED_LAYOUT, so
-the captured plans are the layout-aware counterfactual shapes measured at
-sf100 in bench_logs/r13/.
+the captured plans are the layout-aware shapes.
 """
 
 from __future__ import annotations
@@ -23,20 +23,21 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-OUT_DIR = Path(__file__).resolve().parent.parent / "plans" / "r13"
+PLANS_DIR = Path(__file__).resolve().parent.parent / "plans"
 
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--bucketed"]
     bucketed = "--bucketed" in sys.argv[1:]
-    suffix = args[0]
-    names = args[1:]
+    out_dir = PLANS_DIR / args[0]
+    suffix = args[1]
+    names = args[2:]
 
     from nhl_data_pipeline_spark.plans.registry import all_queries
     from nhl_data_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("capture_r13_plans", cpus=8)
+    spark = get_spark("capture_plans", cpus=8)
 
     if bucketed:
         from nhl_data_pipeline_spark import catalog
@@ -66,7 +67,7 @@ def main() -> None:
     specs = all_queries()
     if not names:
         names = [n for n, s in specs.items() if s.bench]
-    OUT_DIR.mkdir(parents=True, exist_ok=True)
+    out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
         spec = specs[name]
         fn = spec.bench_fn or spec.fn
@@ -74,7 +75,7 @@ def main() -> None:
         plan = jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        out = OUT_DIR / f"{name}_{suffix}.txt"
+        out = out_dir / f"{name}_{suffix}.txt"
         out.write_text(plan.rstrip() + "\n")
         print(f"wrote {out}")
 
