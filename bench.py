@@ -893,36 +893,24 @@ def _pipeline_scale_probe(spark) -> dict:
 
 
 def _dedup_scale_probe(spark) -> dict:
-    """Empirical crossover evidence for the near-dup family.
+    """Crossover and recall evidence for the near-dup family.
 
-    Two regimes, measured:
-    - Clean corpora (sf0.01/sf0.1 documents as-is): the naive all-shingle
-      join beats PPJoin at local scale (fewer stages, no doc-frequency
-      rank); MinHash-LSH is fastest at both SFs and is the sanctioned
-      default scale path.
-    - Hot-shingle skew ("boiler" rows: every doc shares a 60-token
+    The rule it measures: exact Jaccard runs the naive all-shingle join on
+    clean corpora and the same join behind ``drop_stop_shingles`` under
+    boilerplate skew; MinHash-LSH is the approximate path.
+    - Clean corpora (sf0.01 and SF_DIR documents as-is): the naive join
+      and MinHash-LSH, timed side by side.
+    - Hot-shingle skew (``sf0.1_boiler3k``: 3000 docs sharing a 60-token
       boilerplate suffix, the web-template regime): the naive join's
-      fan-out is quadratic in per-shingle frequency — measured 5.9 s at
-      2000 docs, 17.3 s at 3000, OOM at 5000 — while PPJoin's
-      rarest-prefix candidate generation skips the hot shingles entirely
-      (3.4-3.8 s flat, 7.8 s at the 5000 docs naive cannot finish).
-      PPJoin is the exact-verifier option for skewed corpora.
-    - MinHash-LSH on the same boiler corpus demonstrates the OTHER failure
-      mode: it finishes fast (the banded join moves only ids) but the
-      shared suffix dominates the signatures, so ~515k of the 4.5M
-      possible pairs (11%) become candidates — precision collapses and
-      the downstream exact verifier inherits a near-quadratic workload.
-      The probe records the candidate count so the regime split stays
-      honest: clean corpora → MinHash-LSH default; boilerplate-heavy →
-      strip boilerplate first (operators/lines.py), use PPJoin, or gate
-      the naive join behind drop_stop_shingles (measured on/off below:
-      17.0 s → 3.7 s at boiler3k, faster than PPJoin's 7.2 s).
-    - sf1-equivalent decade (50K docs, replica-salted ×10 — construction
-      details at the block below): all four paths one decade up, plus
-      QUALITY numbers — stop-cap recall vs the exact pair set (1.0 on
-      this corpus: the df>100 drop loses no true pair) and MinHash-LSH
-      candidate recall (0.9992), so the speed/recall trade is measured,
-      not asserted.
+      fan-out is quadratic in per-shingle frequency, and dropping shingles
+      with df > 100 restores clean-corpus speed. MinHash-LSH finishes
+      fast here but the shared suffix dominates the signatures, so its
+      candidate count is recorded: precision collapses and an exact
+      verifier would inherit a near-quadratic workload.
+    - One decade up (``sf1_50k``: 50K docs, replica-salted ×10 — see the
+      block below): the same three legs plus quality numbers, the
+      stop-cap's recall against the exact pair set and MinHash-LSH
+      candidate recall, so the speed/recall trade is measured.
     """
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
@@ -941,15 +929,6 @@ def _dedup_scale_probe(spark) -> dict:
     for sf_dir in ("/root/testdata/sf0.01", SF_DIR):
         probe: dict[str, float] = {}
         timed(probe, "ngram_jaccard_naive", qs["dedup_ngram_jaccard"].fn(spark, sf_dir))
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, F.col("doc_id")
-        )
-        shl = (
-            D.exploded_distinct_shingles(docs, X.tokens(F.col("text")), 3)
-            .groupBy("doc_id")
-            .agg(F.collect_list("s").alias("sh"))
-        )
-        timed(probe, "ngram_jaccard_ppjoin", D.prefix_filtered_jaccard_pairs(shl, 0.8))
         timed(probe, "minhash_lsh", qs["dedup_minhash_lsh"].bench_fn(spark, sf_dir))
         out[Path(sf_dir).name] = probe
 
@@ -974,7 +953,7 @@ def _dedup_scale_probe(spark) -> dict:
         )
 
     # Hot-shingle regime: 3000 sf0.1 docs + shared 60-token boilerplate.
-    # (3000, not 5000: the naive join OOMs at 5000 — see docstring.)
+    # (3000, not 5000: the naive join without the stop-cap OOMs at 5000.)
     boiler = " ".join(f"footer{i} legal{i} nav{i}" for i in range(20))
     docs = (
         load_table(spark, SF_DIR, "documents")
@@ -989,20 +968,13 @@ def _dedup_scale_probe(spark) -> dict:
     ).persist()
     timed(probe, "ngram_jaccard_naive", naive_pairs_of(sh))
     # Stop-shingle gate ON: drop shingles with df > 100 (the 58 boilerplate
-    # shingles have df = 3000) before the same join — the README's
-    # prescribed 100-TB skew mitigation, here actually measured.
+    # shingles have df = 3000) before the same join.
     timed(
         probe,
         "ngram_jaccard_naive_stopcap100",
         naive_pairs_of(D.drop_stop_shingles(sh, max_df=100)),
     )
     sh.unpersist()
-    shl = (
-        D.exploded_distinct_shingles(docs, X.tokens(F.col("text")), 3)
-        .groupBy("doc_id")
-        .agg(F.collect_list("s").alias("sh"))
-    )
-    timed(probe, "ngram_jaccard_ppjoin", D.prefix_filtered_jaccard_pairs(shl, 0.8))
     # LSH candidate precision in the skewed regime (see docstring): the
     # count is the story — timing alone would mislead, since the banded
     # join only moves ids.
@@ -1056,12 +1028,6 @@ def _dedup_scale_probe(spark) -> dict:
         naive_pairs_of(D.drop_stop_shingles(sh, max_df=100)),
     )
     sh.unpersist()
-    shl = (
-        D.exploded_distinct_shingles(big, X.tokens(F.col("text")), 3)
-        .groupBy("doc_id")
-        .agg(F.collect_list("s").alias("sh"))
-    )
-    timed(probe, "ngram_jaccard_ppjoin", D.prefix_filtered_jaccard_pairs(shl, 0.8))
     timed(probe, "minhash_lsh", minhash_band_pairs(big))
     # Quality metrics at the decade scale (not just wall-clock): the
     # stop-cap's semantic cost (pairs lost by treating hot shingles as

@@ -158,25 +158,10 @@ def shingles_sql(toks_expr: str, n: int = 3) -> str:
 # ---------------------------------------------------------------- minhash
 
 
-def minhash_signature(shingles_col: str, k: int = 12) -> Column:
-    """k-element MinHash signature: per seed, the lexicographic min of
-    md5('<seed>|' || shingle). String-min MinHash is engine-portable and
-    preserves the Jaccard-estimation property (any uniform hash works).
-
-    Built via F.expr with a UNIQUE lambda variable per seed: repeating
-    python-lambda higher-order functions inside one array() makes Spark's
-    sibling lambda variables collide and silently return wrong values
-    (caught by the sf0.1 oracle sweep — the per-seed mins weren't mins).
-    Takes a column NAME so the expression is plain SQL text.
-    """
-    mins = ", ".join(
-        f"array_min(transform({shingles_col}, s{i} -> md5(concat('{i}|', s{i}))))"
-        for i in range(k)
-    )
-    return F.expr(f"array({mins})")
-
-
 def minhash_signature_sql(shingles_expr: str, k: int = 12) -> str:
+    """DuckDB k-element MinHash signature: per seed, the lexicographic min
+    of md5('<seed>|' || shingle). String-min MinHash is engine-portable and
+    keeps the Jaccard-estimation property (any uniform hash works)."""
     mins = ", ".join(
         f"list_min(list_transform({shingles_expr}, s -> md5('{seed}|' || s)))"
         for seed in range(k)
@@ -218,8 +203,9 @@ def simhash(tokens_col: str, bits: int = 16) -> Column:
     Bit b of each token's md5 is nibble (hex char) b//4, bit b%4. Sum the
     ±1 contributions across tokens; bit is 1 where the sum is positive.
     Pure integer/string ops — identical in any engine. Built as SQL text
-    with unique lambda variables per bit (see minhash_signature for the
-    sibling-lambda collision this avoids).
+    with a unique lambda variable per bit: repeated Python-lambda
+    higher-order functions inside one expression make Spark's sibling
+    lambda variables collide and silently return wrong values.
     """
     terms = []
     for b in range(bits):
@@ -477,98 +463,6 @@ def neardup_against_ledger(
         flagged_ids.select(id_col), id_col, "left_anti"
     ).select("band_idx", "band_key", F.col(id_col).alias("owner_id"))
     return kept, flagged, new_entries
-
-
-def prefix_filtered_jaccard_pairs(
-    docs_with_shingles: DataFrame,
-    threshold: float = 0.8,
-    *,
-    hash_shingles: bool = True,
-) -> DataFrame:
-    """Exact Jaccard-threshold pairs via prefix filtering (PPJoin-style).
-
-    Input: (doc_id, sh array). A pair with J ≥ t must share at least one of
-    each side's ⌊(1-t)·n⌋+1 globally-rarest shingles, so candidate
-    generation joins only those prefixes (near-linear in corpus size),
-    then verification computes the true intersection with array_intersect.
-    Output is IDENTICAL to the all-shingles join.
-
-    Role in the dedup family (measured, bench.py::_dedup_scale_probe):
-    MinHash-LSH is the sanctioned approximate scale path — fastest on
-    clean corpora at every measured SF. This exact form is the verifier /
-    skew path: on clean low-skew corpora the naive all-shingle join beats
-    it locally (1.7 vs 2.5-3.1 s at sf0.1 — the doc-frequency rank stages
-    cost more than the fan-out they avoid), but naive fan-out is quadratic
-    in per-shingle frequency, so under hot-shingle skew (web-template
-    boilerplate: a shared 60-token suffix) the ordering inverts hard —
-    naive 5.9 s at 2000 docs, 17.3 s at 3000, OOM at 5000; PPJoin flat at
-    3.4-3.8 s and 7.8 s at the 5000 naive cannot finish. At 100 TB
-    boilerplate skew is the norm, so: LSH for candidates, PPJoin to verify
-    exactly (or naive gated behind a stop-shingle drop).
-
-    ``hash_shingles`` (default True) maps the shingle strings to xxhash64
-    longs once upfront: the df groupBy, the (df, s) rank sort, the prefix
-    self-join, and the array_intersect verify all move 8-byte longs
-    instead of ~25-byte strings — measured 2-4× end-to-end on the
-    50K-doc sf1 probe corpus (6.5-8.9 s vs 16.6+ s), pair set identical.
-    Same collision caveat as exploded_distinct_shingles: a 2⁻⁶⁴ birthday
-    collision could merge two shingles; pass False for the string-exact
-    audit form.
-    """
-    from pyspark.sql import Window as W
-
-    # Prefix length p = floor((1-t)·n)+1. Float (1-t) can land just BELOW
-    # the exact value (1-0.8 = 0.1999…96), shortening the prefix when
-    # (1-t)·n is integral and silently dropping pairs — add epsilon slack
-    # in the safe direction (a longer prefix only adds candidates; the
-    # verify stage keeps the output exact).
-    inv_keep = 1.0 - threshold
-    if hash_shingles:
-        docs_with_shingles = docs_with_shingles.select(
-            "doc_id", F.transform("sh", lambda s: F.xxhash64(s)).alias("sh")
-        )
-    shl = docs_with_shingles.select(
-        "doc_id", "sh", F.size("sh").cast("bigint").alias("n")
-    ).persist()
-    sh = shl.select("doc_id", "n", F.explode("sh").alias("s"))
-    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    pos_w = W.partitionBy("doc_id").orderBy("df", "s")
-    prefix = (
-        sh.join(dfreq, "s")
-        .withColumn("pos", F.row_number().over(pos_w))
-        .filter(
-            F.col("pos")
-            <= F.floor(F.lit(inv_keep) * F.col("n") + F.lit(1e-9)) + 1
-        )
-        .select("doc_id", "n", "s")
-    )
-    a = prefix.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "s")
-    b = prefix.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "s")
-    # length-ratio bound: J ≤ min/max ⟹ max·t ≤ min for qualifying pairs
-    ratio_ok = F.least("n_a", "n_b") >= F.lit(threshold) * F.greatest("n_a", "n_b")
-    cand = (
-        a.join(b, ["s"])
-        .filter((F.col("doc_a") < F.col("doc_b")) & ratio_ok)
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    va = shl.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"),
-                    F.col("n").alias("n_a"))
-    vb = shl.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"),
-                    F.col("n").alias("n_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
-    return (
-        cand.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 # ----------------------------------------------------------- winnowing

@@ -53,11 +53,6 @@ def snapshot_diff(
     return joined.select(id_col, status.alias("status"))
 
 
-def snapshot_diff_summary(diff: DataFrame) -> DataFrame:
-    """(status, n) — the one-line churn report."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
-
-
 def snapshot_diff_sql(
     *,
     old_table: str,

@@ -83,43 +83,17 @@ def _lit_matrix(centroids: Matrix) -> Column:
 
 
 def _sq_dist(vec: Column, centroid: Column) -> Column:
+    """Left-to-right float64 squared distance as interpreted HOFs. At this
+    engine's shapes (16 centroids × 64 dims, or 8×16×8 for PQ) the HOF
+    loop beats plain arithmetic over literal centroids: the expanded tree
+    overflows codegen into interpretation (pq_adc_topk 1.9 s vs 9.2 s,
+    kmeans assign 1.1 s vs 4.5 s at sf0.1)."""
     diff2 = F.zip_with(
         vec,
         centroid,
         lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
     )
     return F.aggregate(diff2, F.lit(0.0).cast("double"), lambda acc, v: acc + v)
-
-
-def _sq_dist_lit(vec: Column, centroid: list[float], offset: int = 0) -> Column:
-    """Same left-to-right float64 squared distance as :func:`_sq_dist`,
-    emitted as PLAIN arithmetic over a Python-literal centroid instead of
-    interpreted HOFs. Bit-identical (pinned in
-    tests/test_kmeans.py::test_dists_lit_bitwise_equals_hof_form): the
-    aggregate's fold starts at 0.0 and every term is ≥ +0.0, so
-    (0.0+t₁)+t₂+… ≡ t₁+t₂+…. ``offset`` indexes a subvector of ``vec``
-    directly (the PQ case) without a slice allocation.
-
-    MEASURED, and the HOF form won: at this engine's shapes (16
-    centroids × 64 dims, or 8×16×8 for PQ) the expanded tree is 1-2k
-    nodes and the argmin pattern duplicates it — codegen overflows into
-    fallback interpretation of the DEEP tree, which is slower than the
-    HOF loop (pq_adc_topk 1.9 s HOF vs 9.2 s expanded; kmeans assign
-    1.1 s vs 4.5 s, sf0.1). Kept as the documented alternative: for
-    SMALL centroid sets (≲ a few hundred expanded nodes) this form stays
-    inside whole-stage codegen and wins; the call sites use the HOF form
-    because our matrices are past that point."""
-    d = None
-    for i, cv in enumerate(centroid):
-        x = F.element_at(vec, offset + i + 1).cast("double") - F.lit(float(cv))
-        t = x * x
-        d = t if d is None else d + t
-    return d
-
-
-def _dists_lit(vec: Column, centroids: Matrix, offset: int = 0) -> Column:
-    """Array of per-centroid squared distances, all in plain codegen."""
-    return F.array(*[_sq_dist_lit(vec, c, offset) for c in centroids])
 
 
 def init_centroids(
@@ -606,93 +580,3 @@ def semantic_neardup_pairs_lsh_blocked(
         .mapInPandas(score_pairs, scored_schema)
     )
 
-
-def ivf_topk_trained(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_clusters: int,
-    n_iter: int = 5,
-    nprobe: int = 2,
-    *,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF ANN with LEARNED centroids: k-means-train the inverted file.
-
-    The registered `embedding_ann_ivf` query seeds its inverted file with
-    arbitrary corpus vectors (fine for an oracle-checked demonstration of
-    the probing plan); this is the production variant — Lloyd's iterations
-    place the centroids at density modes, which tightens the buckets and
-    raises recall at the same nprobe (asserted empirically in
-    tests/test_kmeans.py). Plan shape is identical to the registered
-    query: corpus partitioned by nearest centroid, each query explodes to
-    its nprobe nearest buckets, candidates equi-join on the bucket id —
-    never an all-pairs product.
-    """
-    assigned, cents = kmeans(df, n_clusters, n_iter, vec=vec, id_col=id_col)
-    cand = assigned.select(
-        "cluster_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec).alias("c_vec"),
-        norm(F.col(vec)).alias("c_nrm"),
-    )
-    qdists = F.transform(_lit_matrix(cents), lambda c: _sq_dist(F.col(vec), c))
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec).alias("q_vec"),
-            norm(F.col(vec)).alias("q_nrm"),
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        qdists, lambda d, i: F.struct(d.alias("d"), i.alias("c"))
-                    )
-                ),
-                1,
-                nprobe,
-            ).alias("_near"),
-        )
-        .select(
-            "query_id",
-            "q_vec",
-            "q_nrm",
-            F.explode(F.transform("_near", lambda s: s["c"])).alias("cluster_id"),
-        )
-    )
-    scored = (
-        cand.join(F.broadcast(probes), "cluster_id")
-        .withColumn(
-            "cosine",
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    threshold: float,
-    k: int,
-    n_iter: int = 5,
-    *,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Keep-lowest-id semantic dedup: drop the higher id of every pair."""
-    drop = (
-        semantic_neardup_pairs(
-            df, threshold, k, n_iter, vec=vec, id_col=id_col
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(drop, id_col, "left_anti")

@@ -43,25 +43,6 @@ def exploded_lines(
     )
 
 
-def frequent_lines(
-    lines: DataFrame, min_docs: int, *, id_col: str = "doc_id"
-) -> DataFrame:
-    """Lines occurring in ≥ min_docs distinct docs (the boilerplate set).
-
-    Blank/whitespace-only lines are excluded: nearly every multi-paragraph
-    document contains them, so they'd always cross the threshold and the
-    strip would collapse paragraph structure corpus-wide — whitespace is
-    not boilerplate."""
-    # Filters/aggregates as parsed SQL strings (r12 chatter pass): same
-    # expression trees, one py4j round trip each instead of one per node.
-    return (
-        lines.filter("length(trim(line)) > 0")
-        .groupBy("line")
-        .agg(F.expr(f"count(DISTINCT {id_col})").alias("n_docs"))
-        .filter(f"n_docs >= {int(min_docs)}")
-    )
-
-
 def strip_frequent_lines(
     docs: DataFrame,
     min_docs: int,
@@ -107,8 +88,10 @@ def strip_frequent_lines(
     (few distinct strings repeated many times) keeps it small here.
     """
     lines = exploded_lines(docs, id_col=id_col, text_col=text_col)
-    # Blank/whitespace-only lines excluded, as in frequent_lines: they
-    # would always cross the threshold and collapse paragraph structure.
+    # Blank/whitespace-only lines are excluded: nearly every
+    # multi-paragraph doc contains them, so they would always cross the
+    # threshold and the strip would collapse paragraph structure
+    # corpus-wide — whitespace is not boilerplate.
     boiler_set = (
         lines.filter("length(trim(line)) > 0")
         .select(F.col(id_col), F.xxhash64("line").alias("hl"))
@@ -186,19 +169,3 @@ def strip_frequent_lines_sql(
         FROM totals t LEFT JOIN rebuilt r USING ({id_col})
     """
 
-
-def line_profile(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-doc line stats: counts + how much of the doc is repeated lines.
-
-    (id, n_lines, n_unique_lines, dup_line_frac) — the Gopher-style
-    repeated-line signals at line grain, one scan + one groupBy."""
-    lines = exploded_lines(docs, id_col=id_col, text_col=text_col)
-    uniq = F.count_distinct(F.col("line"))
-    n = F.count(F.lit(1))
-    return lines.groupBy(id_col).agg(
-        n.alias("n_lines"),
-        uniq.alias("n_unique_lines"),
-        ((n - uniq).cast("double") / n).alias("dup_line_frac"),
-    )

@@ -160,71 +160,3 @@ def mixture_sample_sql(
         WHERE _rate >= 1.0 OR sample_key < {rate_to_threshold_sql('_rate')}
     """
 
-
-def train_val_test_split(
-    df: DataFrame,
-    val: float = 0.01,
-    test: float = 0.01,
-    *,
-    id_col: str = "doc_id",
-    salt: str = "split",
-) -> DataFrame:
-    """Deterministic, disjoint train/val/test assignment as a ``split``
-    column — the dataset-freeze step before training.
-
-    The same md5-threshold mechanism as :func:`mixture_sample`, salted so
-    the split is independent of any sampling decision made with the bare
-    key: a doc's fate is a pure function of (id, salt), so re-runs,
-    retries, late-arriving shards, and engines all agree, and adding new
-    docs never reassigns existing ones (the eternal-holdout property —
-    val/test stay uncontaminated as the corpus grows). Map-only, no
-    shuffle; thresholds are exact on the 16^8 key grid, so realized
-    fractions converge to the request with corpus size.
-    """
-    if val < 0 or test < 0 or val + test >= 1:
-        raise ValueError(f"invalid split fractions val={val} test={test}")
-    key = F.substring(
-        F.md5(F.concat(F.lit(salt + "|"), F.col(id_col).cast("string"))), 1, 8
-    )
-    v = F.conv(key, 16, 10).cast("bigint")
-    val_hi = int(val * 16**8)
-    test_hi = val_hi + int(test * 16**8)
-    return df.withColumn(
-        "split",
-        F.when(v < val_hi, "val")
-        .when(v < test_hi, "test")
-        .otherwise("train"),
-    )
-
-
-def train_val_test_split_sql(
-    table: str = "documents",
-    val: float = 0.01,
-    test: float = 0.01,
-    *,
-    id_col: str = "doc_id",
-    salt: str = "split",
-) -> str:
-    """DuckDB twin of :func:`train_val_test_split`."""
-    val_hi = int(val * 16**8)
-    test_hi = val_hi + int(test * 16**8)
-    # hex→int via the instr nibble trick (valid in BOTH DuckDB and Spark
-    # SQL — same device as classifier._hex6_int_sql); the md5 and the sum
-    # are computed ONCE per row in a subquery, not once per CASE arm.
-    v = " + ".join(
-        f"(instr('0123456789abcdef', substr(_h, {j + 1}, 1)) - 1)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-        SELECT * EXCLUDE (_h, _v), CASE WHEN _v < {val_hi} THEN 'val'
-                       WHEN _v < {test_hi} THEN 'test'
-                       ELSE 'train' END AS split
-        FROM (
-            SELECT *, ({v}) AS _v
-            FROM (
-                SELECT *, md5('{salt}|' || CAST({id_col} AS VARCHAR)) AS _h
-                FROM {table}
-            )
-        )
-    """

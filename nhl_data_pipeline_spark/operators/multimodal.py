@@ -2,10 +2,10 @@
 
 Image/audio/video travel as `binary` columns with a metadata struct
 (content type, byte length, source). Decode / feature-extraction stages run
-as Arrow-batched functions over `mapInPandas` — the Spark-side plumbing
-(schema contract, batch iteration, partition-parallelism) is real and
-tested; the actual codec calls are stubbed because the decode libraries
-(PIL/torchaudio/av) are not in this container.
+as Arrow-batched functions over `mapInPandas`. Decode is library-free and
+covers the uncompressed formats only (P6 PPM, 24-bit BMP, PCM-16 WAV);
+compressed codecs need a decode library (PIL/torchaudio/av) that the
+package does not depend on.
 
 At 100 TB: binary columns dominate bytes — keep them out of shuffles
 (extract features first, then drop the payload), size
@@ -74,26 +74,6 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "payload").mapInPandas(_featurize, FEATURE_SCHEMA)
 
 
-def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """STUB: compressed-image decode (PIL not available in this container).
-
-    The mapInPandas contract is identical to extract_features: binary in,
-    typed struct out (width/height/mode + pixel tensor). Raises until a
-    codec library is present. For the UNCOMPRESSED formats a decoder
-    needs no library for — P6 PPM and 24-bit BI_RGB BMP —
-    :func:`decode_image_raw` below is a REAL, tested decode path.
-    """
-    try:
-        import PIL  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "compressed-image decode requires PIL/pillow, not present in "
-            "this environment; decode_image_raw handles PPM/BMP today and "
-            "the plumbing contract is extract_features()"
-        ) from e
-    raise NotImplementedError("wire PIL decode here when available")
-
-
 DECODE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -112,8 +92,8 @@ def _decode_rgb(data: bytes):
 
     Both formats normalize to the same canonical tensor — RGB channel
     order, top-down row order — so the same image encoded either way
-    decodes bit-identically (tested). Raises ValueError on anything else
-    (compressed formats go through the PIL-gated :func:`decode_image`).
+    decodes bit-identically (tested). Raises ValueError on anything else,
+    compressed formats included.
     """
     import struct
 
@@ -181,9 +161,8 @@ def _decode_wav(data: bytes):
     at 16 bits, and de-interleaves the little-endian samples into a
     (frames, channels) int16 tensor — signedness included (a byte pair
     ≥ 0x8000 is a negative sample; tested explicitly, since ASCII-built
-    payloads never exercise it). Raises ValueError on anything else
-    (compressed codecs would go through an env-gated decode_audio the
-    way compressed images go through decode_image).
+    payloads never exercise it). Raises ValueError on anything else,
+    compressed codecs included.
     """
     import struct
 
@@ -263,9 +242,7 @@ def decode_audio_raw(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
 def decode_image_raw(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL image decode for the library-free formats (P6 PPM, 24-bit
-    BI_RGB BMP): binary in → typed decode struct out via Arrow batches —
-    the exact contract :func:`decode_image` fills in for compressed
-    formats once a codec library exists.
+    BI_RGB BMP): binary in → typed decode struct out via Arrow batches.
 
     Emits per image: format, dimensions, per-channel float64 means
     (deterministic: integer pixel sums divided once), and the md5 of the
@@ -301,107 +278,3 @@ def decode_image_raw(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     return df.select("doc_id", payload_col).mapInPandas(_dec, DECODE_SCHEMA)
 
-
-HISTOGRAM_DIM = 16
-
-HIST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def byte_histogram_features(df: DataFrame) -> DataFrame:
-    """Deterministic stand-in 'decoder': 16-bin byte histogram per payload,
-    L1-normalized, as array<float>.
-
-    This is the full multimodal feature-extraction shape — binary in, fixed
-    -dim embedding out via Arrow batches — with the codec swapped for a
-    dependency-free transform. The output column is contract-compatible
-    with operators.similarity (cosine_topk / neardup), so the
-    decode→featurize→dedup/ANN chain runs end to end today and a real
-    image/audio encoder drops in later.
-    """
-    import numpy as np
-
-    def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            embs = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=HISTOGRAM_DIM).astype("float64")
-                total = hist.sum()
-                embs.append((hist / total if total else hist).astype("float32").tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": embs})
-
-    return df.select("doc_id", "payload").mapInPandas(_featurize, HIST_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def frame_sample(
-    df: DataFrame, frame_bytes: int = 64, stride: int = 4
-) -> DataFrame:
-    """Video-style frame sampling plumbing: slice each payload into fixed
-    -size frames and keep every `stride`-th one, as (doc_id, frame_idx,
-    frame) rows via Arrow batches — the 1→N exploding mapInPandas shape a
-    real container demuxer (pyav/ffmpeg, absent here) drops into. The
-    fixed-size slicer is the deterministic stand-in codec, so tests can
-    assert exact frame counts and bytes.
-
-    Scale note: output multiplies rows — repartition AFTER sampling (by
-    doc_id for per-video ops, round-robin for encode fan-out) and bound
-    files with maxRecordsPerFile; never collect frames to the driver.
-    """
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(b)
-                n_frames = (len(data) + frame_bytes - 1) // frame_bytes
-                for i in range(0, n_frames, stride):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(data[i * frame_bytes : (i + 1) * frame_bytes])
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(_sample, FRAME_SCHEMA)
-
-
-def resize_payload(df: DataFrame, factor: int = 4) -> DataFrame:
-    """Resize plumbing: binary in → smaller binary out (every `factor`-th
-    byte — the deterministic stand-in for bilinear resize; PIL absent).
-    Keeps the metadata struct honest by rewriting n_bytes. Same contract a
-    real `Image.resize` implementation fills in.
-    """
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf["payload"].map(lambda b: bytes(b)[::factor])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": out,
-                    "n_bytes": out.map(len).astype("int64"),
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return df.select("doc_id", "payload").mapInPandas(_resize, schema)

@@ -141,29 +141,13 @@ def encode_numpy(
     return df.select(F.col(id_col), _enc(F.col(vec)).alias(out_col))
 
 
-def adc_scores(
-    codes: DataFrame,
-    query: list[float],
-    books: Codebooks,
-    *,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """(id, adc_dist): estimated squared-L2 distance query↔each coded row.
-
-    The m×k lookup table is computed driver-side in float64 and embedded
-    as literals; per row the scan does m element_at + adds. Lower = closer.
-    """
-    return codes.select(
-        F.col(id_col),
-        adc_dist_column(query, books, code_col=code_col).alias("adc_dist"),
-    )
-
-
 def adc_dist_column(
     query: list[float], books: Codebooks, *, code_col: str = "pq_code"
 ) -> Column:
-    """The ADC distance as a bare Column over an existing ``code_col`` —
+    """Estimated squared-L2 distance query↔each coded row (lower =
+    closer), as a bare Column over an existing ``code_col``. The m×k
+    lookup table is computed in Python float64 and embedded as literals;
+    per row the scan does m element_at + adds. A bare Column
     lets a caller append the score to the coded frame in the SAME
     projection (``coded.withColumn(..)``) instead of re-encoding and
     self-joining on the id (encode is the expensive stage; computing it

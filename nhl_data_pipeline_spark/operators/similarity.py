@@ -259,101 +259,6 @@ def hyperplane_band_buckets(
     return F.expr("array(" + ", ".join(band_exprs) + ")")
 
 
-def hyperplane_banded_numpy(
-    df: DataFrame,
-    dim: int,
-    bands: int = 8,
-    rows: int = 3,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-    passthrough: tuple[str, ...] = (),
-    bit_exact: bool = True,
-) -> DataFrame:
-    """(id, band_idx, bucket) rows — the exploded form of
-    :func:`hyperplane_band_buckets` — computed per Arrow batch with the
-    bit-exact per-dimension accumulation loop (see cosine_allpairs_numpy):
-    each plane dot is sequential float64 adds in index order, vectorized
-    across vectors, so the sign tests — and therefore every bucket id —
-    match the interpreted JVM fold and the DuckDB oracle exactly. Replaces
-    bands×rows interpreted aggregate/zip_with folds per vector. band_idx
-    is 0-based, matching posexplode over the array form.
-
-    Measured at sf0.1 the registered query keeps the array form: there the
-    candidate-pair join dominates (bucket occupancy at small corpus), so
-    swapping the bucketize stage is a wash warm and costs Python worker
-    startup cold. This form wins when bucketize itself is the bottleneck —
-    wide vectors, many planes, corpus ≫ bucket count.
-
-    ``passthrough`` columns (e.g. a kmeans cluster_id used as an extra
-    blocking conjunct) are replicated onto each of the row's `bands`
-    output rows Arrow-side — no join-back shuffle to re-attach them.
-    The output schema copies the input fields' Spark types.
-
-    ``bit_exact=False`` swaps the per-dimension sequential loop for one
-    BLAS matmul (v @ planesᵀ): ~64× less memory traffic at many planes
-    and multi-threaded. Summation ORDER differs, so a dot sitting within
-    float-epsilon of 0 can flip its sign bit vs the JVM/DuckDB fold —
-    use only where no oracle pins the bucket ids (e.g. the benched
-    kmeans×LSH scale form, whose recall is statistical, not pinned).
-
-    Note (r9): kmeans.semantic_neardup_pairs_lsh_blocked deliberately
-    does NOT compose from this function — it fuses centroid assignment
-    and bucketize into ONE Arrow stage (the r8 GC fix); composing here
-    would reintroduce the second Python stage plus a cluster_id
-    join-back. Both parameters are exercised directly by
-    tests/test_operator_equivalence.py::
-    test_hyperplane_banded_numpy_blas_and_passthrough.
-    """
-    import numpy as np
-    import pandas as pd
-
-    planes = np.array(hyperplanes(dim, bands * rows), dtype=np.float64)
-
-    extra_fields = (
-        "".join(
-            f", {f.name} {f.dataType.simpleString()}"
-            for f in df.select(*passthrough).schema.fields
-        )
-        if passthrough
-        else ""
-    )
-    out_schema = f"{id_col} long, band_idx int, bucket long{extra_fields}"
-
-    def bucketize(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            v = np.array(list(pdf[vec]), dtype=np.float64)
-            if bit_exact:
-                acc = np.zeros((v.shape[0], planes.shape[0]))
-                for k in range(dim):
-                    acc += v[:, k : k + 1] * planes[None, :, k]
-            else:
-                acc = v @ planes.T
-            bits = (acc > 0.0).astype(np.int64)
-            out_ids, out_band, out_bucket = [], [], []
-            for b in range(bands):
-                bucket = sum(bits[:, b * rows + r] << r for r in range(rows))
-                out_ids.append(ids)
-                out_band.append(np.full(ids.shape, b, dtype=np.int32))
-                out_bucket.append(bucket)
-            out = pd.DataFrame(
-                {
-                    id_col: np.concatenate(out_ids),
-                    "band_idx": np.concatenate(out_band),
-                    "bucket": np.concatenate(out_bucket),
-                }
-            )
-            for c in passthrough:
-                out[c] = np.tile(pdf[c].to_numpy(), bands)
-            yield out
-
-    return df.select(id_col, vec, *passthrough).mapInPandas(
-        bucketize, out_schema
-    )
-
-
 def hyperplane_band_buckets_sql(
     vec_expr: str, dim: int, bands: int = 8, rows: int = 3
 ) -> str:

@@ -14,8 +14,9 @@ UNION) — the sketch table is engine-portable because the hash rows are
 md5-prefix buckets ("row|token" → first 2 hex chars = 256 buckets), the
 same deterministic-hash idiom as the samplers, so the DuckDB twin builds
 the IDENTICAL sketch (asserted row-for-row in tests). Sketches from
-disjoint corpus shards merge by cell-wise addition (tested) — the
-property that makes the operator streaming/partition-friendly.
+disjoint corpus shards merge by cell-wise addition (a groupBy-sum over
+their union) — the property that makes the operator
+streaming/partition-friendly.
 """
 
 from __future__ import annotations
@@ -108,11 +109,3 @@ def cms_estimate(sketch: DataFrame, queries: DataFrame, *, token_col: str = "tok
         .agg(F.min(F.coalesce("n", F.lit(0))).alias("est"))
     )
 
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two sketches (disjoint-shard composability)."""
-    return (
-        a.unionAll(b)
-        .groupBy("row_i", "bucket")
-        .agg(F.sum("n").alias("n"))
-    )

@@ -6,8 +6,8 @@ repeated verbatim — quoted paragraphs, licence blocks, templated
 sections — inside otherwise-unique pages. The exact-substring pass
 (Lee et al. 2022, "Deduplicating Training Data Makes Language Models
 Better") finds every n-token window whose exact text occurs ≥
-``min_count`` times anywhere in the corpus, merges overlapping windows
-into maximal spans, and optionally strips them.
+``min_count`` times anywhere in the corpus and merges overlapping
+windows into maximal spans.
 
 The reference pipeline has no analog (its dedup surface is the
 snapshot-level ROW_NUMBER pattern, `dbt_nhl/models/staging/stg_games.sql:32`);
@@ -178,81 +178,3 @@ def duplicate_spans_sql(
         FROM sp GROUP BY {id_col}, span_id
     """
 
-
-def strip_duplicate_spans(
-    df: DataFrame,
-    n: int = 8,
-    min_count: int = 2,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, clean_text, n_tokens_removed): drop every duplicated span.
-
-    Removes ALL occurrences (Lee et al.'s cited setting; keep-one-copy
-    needs a global occurrence tie-break and buys little for training
-    data). Reconstruction is array-native: spans collect to a per-doc
-    struct array (docs have few spans), the token array is filtered by
-    index against it, and only the (id → spans) join shuffles — the
-    token filter itself is a map-side projection.
-    """
-    spans = duplicate_spans(
-        df, n, min_count, id_col=id_col, text_col=text_col
-    )
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
-    )
-    toks = tokens(F.col(text_col))
-    indexed = F.transform(
-        toks, lambda x, i: F.struct(x.alias("tok"), (i + 1).alias("idx"))
-    )
-    covered = lambda s: F.exists(  # noqa: E731
-        F.col("_spans"),
-        lambda sp: (s["idx"] >= sp["span_start"]) & (s["idx"] <= sp["span_end"]),
-    )
-    kept = F.filter(indexed, lambda s: ~covered(s))
-    out_text = F.concat_ws(" ", F.transform(kept, lambda s: s["tok"]))
-    n_tok = F.size(toks)
-    return (
-        df.join(per_doc, id_col, "left")
-        .withColumn("_spans", F.coalesce(
-            F.col("_spans"),
-            F.array().cast("array<struct<span_start:int,span_end:int>>"),
-        ))
-        .select(
-            F.col(id_col),
-            out_text.alias("clean_text"),
-            (n_tok - F.size(kept)).cast("int").alias("n_tokens_removed"),
-        )
-    )
-
-
-def strip_duplicate_spans_py(
-    rows: list[tuple], n: int = 8, min_count: int = 2
-) -> list[tuple]:
-    """Driver-local Python reference for :func:`strip_duplicate_spans`.
-
-    Parity target for tests (the BPE-trainer pattern,
-    operators/bpe.py): same whitespace split, same ≥min_count rule,
-    same remove-all-occurrences semantics, computed with dicts and
-    lists so the distributed path is checked against an independent
-    implementation, not itself.
-    """
-    import re
-
-    toked = [(i, re.split(r"\s+", t)) for i, t in rows]
-    counts: dict[tuple, int] = {}
-    for _, ts in toked:
-        for j in range(len(ts) - n + 1):
-            g = tuple(ts[j : j + n])
-            counts[g] = counts.get(g, 0) + 1
-    out = []
-    for i, ts in toked:
-        cov = [False] * len(ts)
-        for j in range(len(ts) - n + 1):
-            if counts.get(tuple(ts[j : j + n]), 0) >= min_count:
-                for k in range(j, j + n):
-                    cov[k] = True
-        kept = [t for t, c in zip(ts, cov) if not c]
-        out.append((i, " ".join(kept), sum(cov)))
-    return out

@@ -11,7 +11,6 @@ DuckDB SQL fragment builder (suffix ``_sql``) used by the oracle strings.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -52,18 +51,18 @@ def hits_in_tokens(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-# --- Spark-SQL string twins (r12, guide §5 driver cost) -----------------
+# --- Spark-SQL string forms (py4j cost) ----------------------------------
 #
 # Building these expressions through the Column API costs hundreds of py4j
 # round-trips EACH (measured: one hits_in_tokens 53, the lang-ID CASE
 # chain 766, the gopher battery 771 — at ~0.13 ms/trip that is most of
 # text_profile's 0.47 s plan-build time, re-paid inside every timed bench
-# rep). Each twin renders the SAME expression tree as its Column form to
-# one SQL string, which crosses the boundary in a single F.expr/selectExpr
-# call. They are generated from the same constants as the Column forms so
-# the policy (stopword lists, weights, thresholds) cannot diverge. Float
-# literals carry the D suffix: bare `0.4` parses as DECIMAL(1,1) in Spark
-# SQL, while the Column forms build double literals.
+# rep). Each form renders its expression to one SQL string, which
+# crosses the boundary in a single F.expr/selectExpr call. Where a Column
+# form exists too, both build the SAME expression tree from the same
+# constants, so the policy (stopword lists, weights, thresholds) cannot
+# diverge. Float literals carry the D suffix: bare `0.4` parses as
+# DECIMAL(1,1) in Spark SQL, while the Column forms build double literals.
 
 
 def _array_lit_spark_sql(words: tuple[str, ...]) -> str:
@@ -78,13 +77,13 @@ def hits_in_tokens_spark_sql(toks_sql: str, words: tuple[str, ...]) -> str:
 
 
 def lang_id_from_hits_spark_sql(hits_sql: dict[str, str]) -> str:
-    """One-round-trip twin of :func:`lang_id_from_hits`: the same
-    precedence logic (earlier langs win ties) AND the same NESTED CASE
-    nesting as the Column chain — a flat 5-branch CASE was tried first
-    and defeated the optimizer's ``CASE = 'en'`` simplification, leaving
-    all five branch conditions in curation_pipeline's pushed filter
-    (nested, the pushed predicate reduces to just the matched branch's
-    condition, as it did with the Column form)."""
+    """Argmax language from precomputed per-language hit counts, 'unknown'
+    when nothing matches; earlier langs win ties (the precedence of
+    :func:`lang_id_sql`). The CASE is NESTED, one branch per language: a
+    flat 5-branch CASE defeats the optimizer's ``CASE = 'en'``
+    simplification and leaves all five branch conditions in
+    curation_pipeline's pushed filter, while the nested form reduces the
+    pushed predicate to the matched branch's condition."""
     langs = list(LANG_STOPWORDS)
     expr = "'unknown'"
     for i in range(len(langs) - 1, -1, -1):
@@ -162,37 +161,6 @@ def stopword_hits_sql(text_expr: str, words: tuple[str, ...]) -> str:
     )
 
 
-def lang_id_from_hits(hits: dict[str, Column]) -> Column:
-    """Argmax language from precomputed per-language hit counts (CASE chain
-    over int columns — cheap; pair with a materialized hit-count projection
-    so tokenization runs once per row, not once per CASE branch)."""
-    langs = list(LANG_STOPWORDS)
-    expr = F.lit("unknown")
-    # Build from the last precedence upward so earlier langs win ties.
-    for i in range(len(langs) - 1, -1, -1):
-        lang = langs[i]
-        cond = hits[lang] > 0
-        for other in langs[i + 1 :]:
-            cond = cond & (hits[lang] >= hits[other])
-        for other in langs[:i]:
-            cond = cond & (hits[lang] > hits[other])
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def lang_id(col: Column | str) -> Column:
-    """Argmax language by stopword hits, fixed precedence on ties,
-    'unknown' when nothing matches. Analog of a production lang-ID stage;
-    same CASE chain is emitted to SQL by lang_id_sql().
-
-    NOTE: inlines stopword_hits per CASE branch (conditionals defeat
-    subexpression elimination, so `split` re-runs per branch) — fine for
-    composition; the profiling query uses lang_id_from_hits over a
-    materialized hit-count projection instead."""
-    hits = {lang: stopword_hits(col, ws) for lang, ws in LANG_STOPWORDS.items()}
-    return lang_id_from_hits(hits)
-
-
 def lang_id_sql(text_expr: str) -> str:
     hits = {
         lang: stopword_hits_sql(text_expr, ws) for lang, ws in LANG_STOPWORDS.items()
@@ -206,11 +174,6 @@ def lang_id_sql(text_expr: str) -> str:
         conds += [f"{hits[lang]} > {hits[o]}" for o in langs[:i]]
         sql = f"CASE WHEN {' AND '.join(conds)} THEN '{lang}' ELSE {sql} END"
     return sql
-
-
-def unique_ratio(col: Column | str) -> Column:
-    t = tokens(col)
-    return F.size(F.array_distinct(t)).cast("double") / F.size(t)
 
 
 def quality_from_counts(
@@ -263,26 +226,6 @@ def fingerprint_sql(text_expr: str) -> str:
     return f"md5(lower(trim(regexp_replace({text_expr}, '\\s+', ' ', 'g'))))"
 
 
-# GPT-2-style pre-tokenizer (simplified, ASCII classes): contractions,
-# space-prefixed letter runs, digit runs, punctuation runs. The real BPE
-# merge table is a model artifact; pre-tokenization is where the engine
-# work is — counts from this regex track BPE token counts closely enough
-# for length/cost accounting, entirely inside codegen.
-BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+"
-
-
-def tokens_bpe(col: Column | str) -> Column:
-    """BPE-ish pre-tokenization via regexp_extract_all — the swap-in
-    alternative to the whitespace :func:`tokens` for token-budget
-    accounting (sequence packing, cost estimates). JVM regex, no UDF."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(c, F.lit(BPE_PATTERN), F.lit(0))
-
-
-def token_count_bpe(col: Column | str) -> Column:
-    return F.size(tokens_bpe(col))
-
-
 def bigrams_of_tokens(t: Column) -> Column:
     """Token 2-grams from a pre-tokenized array — per-row HOF expression."""
     return F.transform(
@@ -297,90 +240,23 @@ def bigrams(col: Column | str) -> Column:
     return bigrams_of_tokens(tokens(col))
 
 
-def repetition_stats(col: Column | str) -> Column:
-    """Gopher-style repetition signals as one per-row fold:
-    ``struct(n_bigrams, top_bigram_n, dup_bigram_mass)``.
-
-    top_bigram_n = occurrences of the most frequent bigram; dup_bigram_mass
-    = total occurrences of bigrams appearing more than once. Computed by
-    sorting the row's bigram array and folding run lengths (O(n log n) per
-    row, JVM-side, no shuffle). Mirrors the "fraction of characters in the
-    most common n-gram" / "duplicated n-gram" removal rules of
-    Gopher/MassiveText-style curation (Rae et al. 2021 §A1.1), on token
-    counts. For corpora of very LONG documents, prefer the explode →
-    groupBy(doc_id, bigram) form (same results, linear per row, one
-    shuffle); this fold is the short-document fast path.
-    """
-    srt = F.array_sort(bigrams(col))
-    zero = F.lit(0).cast("long")
-
-    def step(acc: Column, x: Column) -> Column:
-        is_new = acc.prev.isNull() | (acc.prev != x)
-        run = F.when(is_new, F.lit(1).cast("long")).otherwise(acc.run + 1)
-        ended_dup = F.when(
-            (~acc.prev.isNull()) & (acc.prev != x) & (acc.run > 1), acc.run
-        ).otherwise(zero)
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc.best, run).alias("best"),
-            (acc.dup + ended_dup).alias("dup"),
-        )
-
-    fold = F.aggregate(
-        srt,
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            zero.alias("run"),
-            zero.alias("best"),
-            zero.alias("dup"),
-        ),
-        step,
-        lambda acc: F.struct(
-            F.size(srt).cast("long").alias("n_bigrams"),
-            acc.best.alias("top_bigram_n"),
-            (acc.dup + F.when(acc.run > 1, acc.run).otherwise(zero)).alias(
-                "dup_bigram_mass"
-            ),
-        ),
-    )
-    return fold
-
-
-def top_bigram_frac(col: Column | str) -> Column:
-    """Fraction of the row's bigrams taken by its single most frequent
-    bigram; 0.0 for rows with no bigrams. Gopher drops docs above ~0.2."""
-    s = repetition_stats(col)
-    return F.when(s.n_bigrams > 0, s.top_bigram_n / s.n_bigrams).otherwise(
-        F.lit(0.0)
-    )
-
-
-def dup_bigram_frac(col: Column | str) -> Column:
-    """Fraction of bigram occurrences belonging to bigrams seen more than
-    once in the row; 0.0 for rows with no bigrams."""
-    s = repetition_stats(col)
-    return F.when(s.n_bigrams > 0, s.dup_bigram_mass / s.n_bigrams).otherwise(
-        F.lit(0.0)
-    )
-
-
 def repetition_agg(df, id_col: str = "doc_id", text_col: str = "text",
                    tokens_col: str | None = None):
-    """Per-doc repetition aggregate WITHOUT zero-fill: docs whose text has
-    no bigrams are absent (left-join + coalesce at the call site, or use
-    :func:`repetition_stats_exploded` for the zero-filled contract).
+    """Gopher-style repetition signals per doc: (id, n_bigrams,
+    top_bigram_n, dup_bigram_mass). top_bigram_n = occurrences of the most
+    frequent bigram; dup_bigram_mass = total occurrences of bigrams seen
+    more than once (Rae et al. 2021 §A1.1, on token counts).
 
-    This codegen path beats the per-row fold by ~20× even on SHORT docs —
-    interpreted ``aggregate`` over a struct accumulator costs ~40 µs per
-    array element, while explode → two hash aggregates stays in whole-stage
-    codegen (measured at sf0.1: 10.7 s fold vs ~0.5 s exploded for 5000
-    ~50-token docs) — so it is the default engine path, not just the
-    long-document one.
+    No zero-fill: docs whose text has no bigrams are absent (left-join +
+    coalesce at the call site). Explode → two hash aggregates keyed
+    (doc_id[, bigram]) stays in whole-stage codegen at linear work per
+    row; an interpreted per-row ``aggregate`` fold over a struct
+    accumulator was ~20× slower even on short docs (10.7 s vs ~0.5 s for
+    5000 ~50-token docs at sf0.1).
     """
-    # tokens_col path: the bigram HOF as ONE expr string (r12 — the
-    # Column form costs ~870 py4j round-trips per build, see the
-    # *_spark_sql twins above). text_col path keeps the Column form: its
+    # tokens_col path: the bigram HOF as ONE expr string (the Column
+    # form costs ~870 py4j round-trips per build, see the *_spark_sql
+    # forms above). text_col path keeps the Column form: its
     # regex pattern would need escaping games inside a SQL literal.
     bg = (
         F.expr(bigrams_of_tokens_spark_sql(tokens_col))
@@ -392,40 +268,13 @@ def repetition_agg(df, id_col: str = "doc_id", text_col: str = "text",
         .groupBy(id_col, "bg")
         .agg(F.expr("count(1)").alias("c"))
     )
-    # Aggregates as parsed SQL strings (r12 chatter pass) — same trees.
+    # Aggregates as parsed SQL strings: one py4j trip each, same trees.
     return per_bg.groupBy(id_col).agg(
         F.expr("CAST(sum(c) AS BIGINT)").alias("n_bigrams"),
         F.expr("CAST(max(c) AS BIGINT)").alias("top_bigram_n"),
         F.expr(
             "CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT)"
         ).alias("dup_bigram_mass"),
-    )
-
-
-def repetition_stats_exploded(
-    df, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Distributed form of :func:`repetition_stats`: explode bigrams →
-    count per (doc, bigram) → re-aggregate per doc. Same results row-for-row
-    (pinned by tests/test_operator_equivalence.py) at linear work per row
-    however long the document, entirely in whole-stage codegen — see
-    :func:`repetition_agg` for the measured ~20× win over the fold. Two
-    shuffles, both keyed (doc_id[, bigram]), so hot documents spread across
-    partitions in the first aggregate.
-    """
-    agg = repetition_agg(df, id_col, text_col)
-    # docs with no bigrams vanish at the explode — restore them as zeros so
-    # the contract matches the per-row fold exactly
-    zero = F.lit(0).cast("long")
-    return (
-        df.select(id_col)
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bigrams", zero).alias("n_bigrams"),
-            F.coalesce("top_bigram_n", zero).alias("top_bigram_n"),
-            F.coalesce("dup_bigram_mass", zero).alias("dup_bigram_mass"),
-        )
     )
 
 
@@ -615,35 +464,3 @@ def gopher_flags_sql(text_expr: str) -> str:
         " pass_gopher := ({wc} AND {ml} AND {sy} AND {al} AND {st}))"
     ).format(wc=wc, ml=ml, sy=sy, al=al, st=st)
 
-
-def compression_ratio(col: Column | str) -> Column:
-    """zlib-compressibility quality signal: compressed_len / raw_len.
-
-    The Gopher/FineWeb-style repetition detector that n-gram ratios miss:
-    machine-generated or template text compresses far below prose (~0.3
-    vs ~0.6+), and boilerplate-stuffed pages sit in between. Low ratio ⇒
-    repetitive ⇒ usually drop or down-weight.
-
-    This is one of the few legitimately-Python operators in the engine:
-    there is no JVM-side zlib expression, so it runs as an Arrow-batched
-    pandas UDF (never row-at-a-time). Deterministic: zlib level 6 output
-    is stable for a given input across platforms/versions in practice,
-    and the TESTS pin parity against direct python zlib, not a stored
-    constant. Empty/NULL text → NULL (no signal, not 'perfectly
-    compressible').
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _ratio(texts: pd.Series) -> pd.Series:
-        import zlib
-
-        def f(t):
-            if t is None or len(t) == 0:
-                return None
-            raw = t.encode("utf-8")
-            return len(zlib.compress(raw, 6)) / len(raw)
-
-        return texts.map(f)
-
-    return _ratio(F.col(col) if isinstance(col, str) else col)

@@ -3,8 +3,9 @@
 Crawl pipelines dedup by URL before touching content: the same page is
 fetched via http/https, with/without default ports, fragments, tracking
 params, and trailing slashes. Canonicalize first, then the dedup is the
-same hash-agg shape as the content fingerprint (moves canonical-URL
-hashes, never payloads).
+same hash-agg shape as the content fingerprint
+(``dedup.exact_dedup_keep_min`` keyed on :func:`canonical_url`; it moves
+canonical URLs, never payloads).
 
 All transforms are single-pass regexp/string expressions kept inside the
 Java∩RE2 subset (no lookaround, numbered-group replacements only) so the
@@ -28,7 +29,7 @@ URL-keyed idempotence robust when upstreams vary formatting.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Tracking params to strip (whole param names only; non-capturing so the
@@ -95,18 +96,3 @@ def canonical_url_sql(expr: str) -> str:
     )
     return u
 
-
-def url_dedup(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """(canonical_url, keep_id, n_dups): keep the smallest id per canonical
-    URL — one hash-aggregate shuffle on the canonical string (or its
-    xxhash64 at scale), the exact-dedup shape."""
-    return (
-        df.select(F.col(id_col), canonical_url(url_col).alias("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
-    )

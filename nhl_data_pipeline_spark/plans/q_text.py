@@ -37,16 +37,16 @@ def _lang_quality_scored(
 ) -> DataFrame:
     """doc_id + lang_hat + quality via a single-tokenize projection.
 
-    Value-identical to ``X.lang_id`` / ``X.quality_score`` inlined, but
-    `split` runs once per row: the token array and per-language hit counts
-    materialize in their own projection (CollapseProject keeps it separate
-    — the array is non-cheap and multiply-referenced), and the CASE chain
-    compares precomputed ints.
+    Value-identical to the ``X.lang_id_sql`` / ``X.quality_score_sql``
+    oracle forms, but `split` runs once per row: the token array and
+    per-language hit counts materialize in their own projection
+    (CollapseProject keeps it separate — the array is non-cheap and
+    multiply-referenced), and the CASE chain compares precomputed ints.
 
     ``passthrough`` columns of ``d`` ride through the projections — so a
     caller that already holds side columns (curation_pipeline's
     ``n_removed``) doesn't need a second join back onto its own subtree
-    to recover them (r12: that join re-evaluated the whole
+    to recover them (that join re-evaluated the whole
     strip-frequent-lines branch a second time)."""
     # Expression trees as one-round-trip SQL strings (r12, guide §5 —
     # the Column-API forms cost ~2,000 py4j round-trips per build here;
@@ -102,11 +102,9 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-stopword mass + diversity) with its keep threshold, and the
     Gopher-style repetition signals (top-/duplicated-bigram fractions,
     computed on the exploded codegen aggregate — operators.text.
-    repetition_agg — and joined back per doc; the per-row fold form exists
-    for composition but loses ~20× to codegen here). The row signals share
-    the tokenization subtree; profiling a corpus is one scan plus one
-    doc_id-keyed aggregate however many signals ride along (formerly two
-    registered queries, text_token_stats + text_lang_quality)."""
+    repetition_agg — and joined back per doc). The row signals share the
+    tokenization subtree; profiling a corpus is one scan plus one
+    doc_id-keyed aggregate however many signals ride along."""
     # Hash-repartition by doc_id up front (parallelizes the single-file
     # read AND pre-satisfies the repetition groupBy + profile⋈repetition
     # join distributions): the one shuffle moves compact doc rows, not
@@ -512,15 +510,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_a, doc_b) — a subset of the grouping keys, so it satisfies
     # the aggregate's ClusteredDistribution and no extra exchange is
     # planted — runs the aggregate at `width` too, holding per-task agg
-    # state constant as the lake grows. Gate (r12, ADVICE r11): fire only
-    # when the repartition actually WIDENS the aggregate — i.e. width >
-    # the session's spark.sql.shuffle.partitions, which is what the
-    # unfixed aggregate would run at. (The r11 gate compared against
-    # defaultParallelism; under a cluster profile that sets
-    # shuffle.partitions above the core count, a width between the two
-    # would have NARROWED the aggregate and grown per-task hash state —
-    # the opposite of the fix's intent. Locally the two gates coincide,
-    # so small-SF plans and their pinned fingerprints are untouched.)
+    # state constant as the lake grows. Gate: fire only when the
+    # repartition actually WIDENS the aggregate — i.e. width > the
+    # session's spark.sql.shuffle.partitions, which is what the unfixed
+    # aggregate would run at. Comparing against defaultParallelism instead
+    # is wrong under session.cluster_conf, which sets shuffle.partitions
+    # to at least 2× the cores: a width between the two would NARROW the
+    # aggregate and grow per-task hash state. At local[n] the two values
+    # are equal.
     # The trade — the exchange moves un-combined pair rows (no map-side
     # partial agg) — is measured cheap: a (pair, shingle) row survives
     # partial agg unless the SAME pair shares MULTIPLE shingles hashed to
@@ -563,11 +560,14 @@ def _minhash_lsh_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = shuffle_width_for(
         spark, sf_dir, "documents", TEXT_BYTES_PER_PARTITION
     )
-    par = spark.sparkContext.defaultParallelism
     d = load_table(spark, sf_dir, "documents").repartition(
         width, F.col("doc_id")
     )
-    return minhash_band_pairs(d, width=width if width > par else None)
+    # Same gate as dedup_ngram_jaccard's pair aggregate: pin the band join
+    # at `width` only when that WIDENS it past the session shuffle width
+    # the planner would otherwise use.
+    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return minhash_band_pairs(d, width=width if width > session_width else None)
 
 
 @query(

@@ -61,35 +61,3 @@ def test_gopher_individual_rules(spark):
     assert not out[2]["symbol_ratio_ok"]
     assert not out[3]["alpha_frac_ok"] and not out[3]["stopwords_ok"]
     assert not out[4]["mean_word_len_ok"]
-
-
-def test_compression_ratio_matches_python_zlib(spark):
-    """Arrow-UDF compressibility signal: parity with direct python zlib,
-    repetitive text scores LOWER than prose, empty/NULL -> NULL."""
-    import zlib
-
-    from pyspark.sql import functions as F
-
-    from nhl_data_pipeline_spark.operators.text import compression_ratio
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog " * 3),
-        (2, "spam " * 200),  # highly repetitive
-        (3, "A varied sentence, with unusual words: quixotic zephyrs vex."),
-        (4, ""),
-        (5, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id: bigint, text: string")
-    got = {
-        r["doc_id"]: r["cr"]
-        for r in docs.select(
-            "doc_id", compression_ratio("text").alias("cr")
-        ).collect()
-    }
-    for doc_id, text in rows:
-        if not text:
-            assert got[doc_id] is None
-        else:
-            raw = text.encode()
-            assert got[doc_id] == len(zlib.compress(raw, 6)) / len(raw)
-    assert got[2] < got[1] < got[3]  # repetition compresses hardest

@@ -100,11 +100,6 @@ def test_semantic_neardup_subset_of_exact_and_finds_planted(spark, emb):
     planted = {(i, i + 100000) for i in range(5)}
     assert planted <= got
 
-    kept = KM.semantic_dedup(corpus, 0.999, 5, 3)
-    kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
-    assert {i + 100000 for i in range(5)}.isdisjoint(kept_ids)
-    assert set(range(5)) <= kept_ids  # keep-lowest-id survivors
-
 
 def test_lsh_blocked_scale_form_subset_and_recall(spark, emb):
     """The benched kmeans×LSH scale form (r8): every pair it emits is an
@@ -194,45 +189,6 @@ def test_tiled_pair_stage_is_bit_identical(spark, emb):
     assert n_rows == len(tiled)
 
 
-def test_trained_ivf_recall_beats_arbitrary_centroids(spark, emb):
-    """k-means-trained IVF must reach high recall@10 vs brute force, and
-    at least match the registered arbitrary-centroid IVF at the same
-    (n_clusters, nprobe)."""
-    from nhl_data_pipeline_spark.operators.similarity import cosine_topk
-
-    queries = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
-    corpus = emb.select("vec_id", "embedding")
-    k = 10
-
-    def topk_sets(df):
-        out: dict[int, set[int]] = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return out
-
-    exact = topk_sets(cosine_topk(queries, corpus, k))
-    trained = topk_sets(KM.ivf_topk_trained(corpus, queries, k, 8, 4, nprobe=2))
-
-    # arbitrary-centroid IVF at the same shape: centroids = 8 fixed rows
-    # (mirrors plans/q_similarity.embedding_ann_ivf's seeding)
-    recalls_trained = [
-        len(exact[q] & trained.get(q, set())) / k for q in exact
-    ]
-    assert min(recalls_trained) >= 0.5
-    assert sum(recalls_trained) / len(recalls_trained) >= 0.7
-
-    from nhl_data_pipeline_spark.plans.registry import all_queries
-
-    fixed = all_queries()["embedding_ann_ivf"].fn(spark, TEST_SF_DIR)
-    fixed_sets = topk_sets(fixed.filter(F.col("query_id") < 5))
-    if fixed_sets:  # same query ids → compare average recall
-        r_fixed = sum(
-            len(exact[q] & fixed_sets.get(q, set())) / k for q in exact
-        ) / len(exact)
-        r_trained = sum(recalls_trained) / len(recalls_trained)
-        assert r_trained >= r_fixed - 1e-9, (r_trained, r_fixed)
-
-
 def test_kmeans_degenerate_inputs(spark):
     """k larger than the row count and duplicate points (guaranteed empty
     clusters after the first update) must not error: empty clusters keep
@@ -267,31 +223,3 @@ def test_assign_is_codegen_only(spark, emb):
     )
     assert "BatchEvalPython" not in plan
     assert "Exchange" not in plan and "Join" not in plan
-
-
-def test_dists_lit_bitwise_equals_hof_form(spark):
-    """The plain-codegen distance array (_dists_lit) must be bit-identical
-    to the interpreted HOF reference form (transform + zip_with/aggregate
-    _sq_dist) — same element order, same fold order, same casts."""
-    import struct
-
-    from pyspark.sql import functions as F
-
-    from nhl_data_pipeline_spark.operators import kmeans as KM
-
-    df = spark.range(200).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(1, 8), "
-            "i -> CAST(sin(id * 31 + i) * 10 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    cents = [[(i * 7 + j) * 0.3125 - 1.5 for j in range(8)] for i in range(5)]
-    hof = F.transform(
-        KM._lit_matrix(cents), lambda c: KM._sq_dist(F.col("embedding"), c)
-    )
-    lit = KM._dists_lit(F.col("embedding"), cents)
-    rows = df.select(hof.alias("a"), lit.alias("b")).collect()
-    bits = lambda x: struct.pack("<d", x)  # noqa: E731
-    for r in rows:
-        assert [bits(v) for v in r["a"]] == [bits(v) for v in r["b"]]

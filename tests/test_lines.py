@@ -75,14 +75,6 @@ def test_strip_is_idempotent(spark, corpus):
     assert twice.filter(F.col("n_removed") != 0).count() == 0
 
 
-def test_line_profile(spark, corpus):
-    prof = {r["doc_id"]: r for r in L.line_profile(corpus).collect()}
-    assert prof[9]["n_lines"] == 3
-    assert prof[9]["n_unique_lines"] == 2
-    assert abs(prof[9]["dup_line_frac"] - 1 / 3) < 1e-12
-    assert prof[0]["dup_line_frac"] == 0.0
-
-
 def test_strip_lines_restores_minhash_precision(spark):
     """End-to-end composition behind the dedup-regime guidance: a shared
     boilerplate line makes unrelated docs collide in MinHash band buckets
@@ -154,11 +146,3 @@ try:
 
 except ImportError:  # pragma: no cover
     pass
-
-
-def test_frequent_lines_threshold(spark, corpus):
-    lines = L.exploded_lines(corpus)
-    freq = {r["line"]: r["n_docs"] for r in L.frequent_lines(lines, 2).collect()}
-    assert freq[BOILER] == 9 and freq[NAV] == 5
-    # within-doc duplicate counts ONCE (distinct docs)
-    assert "solo line" not in freq

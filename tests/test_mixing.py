@@ -122,60 +122,3 @@ def test_rate_threshold_edge_cases(spark):
     # lpad truncates '100000000' to 8 chars — this is why callers must
     # special-case rate >= 1 instead of comparing against this string
     assert row["one"] == "10000000"
-
-
-def test_train_val_test_split_deterministic_disjoint_twin(spark, duck):
-    """Split column matches the DuckDB twin row-for-row, fractions land
-    near the request, and the assignment is a pure function of (id, salt)
-    — repartitioning or adding rows never moves an existing doc."""
-    from nhl_data_pipeline_spark.operators.mixing import (
-        train_val_test_split,
-        train_val_test_split_sql,
-    )
-
-    docs = load_table(spark, TEST_SF_DIR, "documents")
-    got = {
-        r["doc_id"]: r["split"]
-        for r in train_val_test_split(docs, 0.1, 0.1).select(
-            "doc_id", "split"
-        ).collect()
-    }
-    want = dict(
-        duck.sql(
-            "SELECT doc_id, split FROM ("
-            + train_val_test_split_sql("documents", 0.1, 0.1)
-            + ")"
-        ).fetchall()
-    )
-    assert got == want
-    n = len(got)
-    for name, frac in (("val", 0.1), ("test", 0.1), ("train", 0.8)):
-        share = sum(1 for s in got.values() if s == name) / n
-        assert abs(share - frac) < 0.04, (name, share)
-
-    again = {
-        r["doc_id"]: r["split"]
-        for r in train_val_test_split(docs.repartition(17), 0.1, 0.1)
-        .select("doc_id", "split")
-        .collect()
-    }
-    assert again == got
-    # eternal holdout: the assignment of a SUBSET is the restriction of
-    # the full assignment (pure per-row function — growth can't reassign)
-    sub = {
-        r["doc_id"]: r["split"]
-        for r in train_val_test_split(
-            docs.filter("doc_id % 3 = 0"), 0.1, 0.1
-        ).select("doc_id", "split").collect()
-    }
-    assert all(got[k] == v for k, v in sub.items())
-
-
-def test_train_val_test_split_rejects_bad_fractions(spark):
-    import pytest
-
-    from nhl_data_pipeline_spark.operators.mixing import train_val_test_split
-
-    docs = load_table(spark, TEST_SF_DIR, "documents")
-    with pytest.raises(ValueError):
-        train_val_test_split(docs, 0.6, 0.5)

@@ -107,62 +107,6 @@ def test_cosine_allpairs_numpy_bit_equals_jvm_fold(spark):
         assert fast[k] == ref[k], (k, fast[k].hex(), ref[k].hex())
 
 
-def test_hyperplane_banded_numpy_equals_array_form(spark):
-    rng = random.Random(13)
-    dim = 16
-    df = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    fast = {
-        (r["vec_id"], r["band_idx"], r["bucket"])
-        for r in S.hyperplane_banded_numpy(df, dim, 4, 3).collect()
-    }
-    ref = {
-        (r["vec_id"], r["band_idx"], r["bucket"])
-        for r in df.withColumn(
-            "bkts", S.hyperplane_band_buckets("embedding", dim, 4, 3)
-        )
-        .select("vec_id", F.posexplode("bkts").alias("band_idx", "bucket"))
-        .collect()
-    }
-    assert fast == ref
-
-
-def test_hyperplane_banded_numpy_blas_and_passthrough(spark):
-    """The bit_exact=False BLAS branch and the passthrough columns (r9,
-    ADVICE r8: previously untested surface). Vectors are INTEGER-valued
-    and the planes are exactly ±1, so every plane dot is exact integer
-    arithmetic in float64 — summation ORDER cannot change a single bit,
-    and the BLAS matmul must reproduce the sequential fold's buckets
-    exactly. Passthrough columns must be replicated onto each of the
-    row's `bands` output rows without a join."""
-    rng = random.Random(29)
-    dim = 16
-    df = spark.createDataFrame(
-        [
-            (i, [float(rng.randint(-9, 9)) for _ in range(dim)], i % 3)
-            for i in range(40)
-        ],
-        "vec_id long, embedding array<float>, cluster_id int",
-    )
-    seq = {
-        (r["vec_id"], r["band_idx"], r["bucket"], r["cluster_id"])
-        for r in S.hyperplane_banded_numpy(
-            df, dim, 4, 3, passthrough=("cluster_id",)
-        ).collect()
-    }
-    blas = {
-        (r["vec_id"], r["band_idx"], r["bucket"], r["cluster_id"])
-        for r in S.hyperplane_banded_numpy(
-            df, dim, 4, 3, passthrough=("cluster_id",), bit_exact=False
-        ).collect()
-    }
-    assert seq == blas
-    assert len(seq) == 40 * 4  # every row fanned out to `bands` rows
-    assert {(v % 3) == c for v, _, _, c in seq} == {True}  # passthrough
-
-
 # ---------------------------------------------------------------------------
 # Repetition stats (Gopher-style) vs a Python brute force, and PII redaction
 # vs the literal-same-regex DuckDB oracle fragment.
@@ -191,8 +135,12 @@ def _brute_bigram_stats(text: str) -> tuple[int, int, int]:
 
 
 def test_repetition_stats_match_bruteforce(spark):
+    """repetition_agg from raw text and from a pre-split tokens column
+    both equal a Python brute force; docs with no bigrams produce no row."""
     from nhl_data_pipeline_spark.operators import text as X
 
+    rng = random.Random(11)
+    words = ["alpha", "beta", "gamma", "x", "y"]
     texts = [
         "a b a b c a b",
         "x",
@@ -202,24 +150,24 @@ def test_repetition_stats_match_bruteforce(spark):
         "a b a b a b a b",
         "one two one two three one two",
     ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
-    got = {
-        r["i"]: (r["n"], r["top"], r["dup"], r["tf"], r["df"])
-        for r in df.select(
-            "i",
-            X.repetition_stats("text").alias("s"),
-            X.top_bigram_frac("text").alias("tf"),
-            X.dup_bigram_frac("text").alias("df"),
-        )
-        .select("i", "s.n_bigrams", "s.top_bigram_n", "s.dup_bigram_mass", "tf", "df")
-        .toDF("i", "n", "top", "dup", "tf", "df")
-        .collect()
-    }
-    for i, t in enumerate(texts):
-        n, top, dup = _brute_bigram_stats(t)
-        exp_tf = top / n if n else 0.0
-        exp_df = dup / n if n else 0.0
-        assert got[i] == (n, top, dup, exp_tf, exp_df), (i, t, got[i])
+    for _ in range(40):
+        n = rng.choice([0, 1, 2, 5, 30, 120])
+        texts.append(" ".join(rng.choice(words) for _ in range(n)))
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    brute = {i: _brute_bigram_stats(t) for i, t in enumerate(texts)}
+    want = {i: s for i, s in brute.items() if s[0] > 0}
+    assert len(want) < len(brute)  # no-bigram docs are in the input
+
+    cols = ["doc_id", "n_bigrams", "top_bigram_n", "dup_bigram_mass"]
+
+    def stats(agg):
+        return {r[0]: tuple(r[1:]) for r in agg.select(*cols).collect()}
+
+    assert stats(X.repetition_agg(df)) == want
+    toks = df.select("doc_id", X.tokens("text").alias("toks"))
+    assert stats(X.repetition_agg(toks, tokens_col="toks")) == want
 
 
 def test_redact_pii_matches_duckdb_oracle(spark, duck):
@@ -254,26 +202,3 @@ def test_pii_hits_counts(spark):
     }
     assert got[0] == 1 and got[1] == 2 and got[2] == 3
     assert got[3] == 0 and got[4] == 3 and got[5] == 0
-
-
-def test_repetition_exploded_equals_fold(spark):
-    import random as _r
-
-    from nhl_data_pipeline_spark.operators import text as X
-
-    rng = _r.Random(11)
-    words = ["alpha", "beta", "gamma", "x", "y"]
-    texts = ["a b a b c a b", "x", "", "a a a a a a"]
-    for _ in range(40):
-        n = rng.choice([0, 1, 2, 5, 30, 120])
-        texts.append(" ".join(rng.choice(words) for _ in range(n)))
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    fold = df.select(
-        "doc_id", X.repetition_stats("text").alias("s")
-    ).select("doc_id", "s.n_bigrams", "s.top_bigram_n", "s.dup_bigram_mass")
-    exploded = X.repetition_stats_exploded(df)
-    a = {tuple(r) for r in fold.collect()}
-    b = {tuple(r) for r in exploded.collect()}
-    assert a == b

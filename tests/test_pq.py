@@ -77,7 +77,9 @@ def test_adc_approximates_exact_distances(spark, emb, books):
     codes = pq.encode(emb, books)
     got = {
         r["vec_id"]: r["adc_dist"]
-        for r in pq.adc_scores(codes, q, books).collect()
+        for r in codes.select(
+            "vec_id", pq.adc_dist_column(q, books).alias("adc_dist")
+        ).collect()
     }
 
     # (a) bitwise vs numpy re-computation of table + lookup
@@ -133,7 +135,9 @@ def test_adc_ranking_on_clustered_data(spark):
     q = mat64[0].tolist()
     got = {
         r["vec_id"]: r["adc_dist"]
-        for r in pq.adc_scores(codes, q, books).collect()
+        for r in codes.select(
+            "vec_id", pq.adc_dist_column(q, books).alias("adc_dist")
+        ).collect()
     }
     exact = ((mat64 - mat64[0]) ** 2).sum(axis=1)
     top_exact = set(int(i) for i in np.argsort(exact)[:10])
@@ -180,7 +184,11 @@ def test_full_ann_stack_ivf_pq_rerank(spark):
     books = pq.train_codebooks(df, M, K, ITERS)
     shortlist = {
         r["vec_id"]
-        for r in pq.adc_scores(pq.encode(cand, books), q_vec.tolist(), books)
+        for r in pq.encode(cand, books)
+        .select(
+            "vec_id",
+            pq.adc_dist_column(q_vec.tolist(), books).alias("adc_dist"),
+        )
         .orderBy("adc_dist")
         .limit(20)
         .collect()

@@ -1,11 +1,10 @@
-"""Scale-path operators: approx distinct, ANN, dedup, multimodal, intervals."""
+"""Scale-path operators: approx distinct, dedup, multimodal, intervals."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.catalog import load_table
-from nhl_data_pipeline_spark.operators.similarity import cosine_topk
 from tests.conftest import TEST_SF_DIR
 
 
@@ -16,48 +15,6 @@ def test_approx_count_distinct_close_to_exact(spark):
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx"),
     ).first()
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.05
-
-
-def test_multimodal_feature_chain_into_ann(spark):
-    """binary payload → byte-histogram features → cosine top-k, end to end."""
-    from nhl_data_pipeline_spark.operators.multimodal import (
-        attach_binary_payload,
-        byte_histogram_features,
-    )
-
-    docs = load_table(spark, TEST_SF_DIR, "documents")
-    feats = byte_histogram_features(attach_binary_payload(docs)).withColumnRenamed(
-        "doc_id", "vec_id"
-    )
-    q = feats.filter(F.col("vec_id") < 3)
-    c = feats.filter(F.col("vec_id") >= 3)
-    top = cosine_topk(q, c, 3).collect()
-    assert len(top) == 9  # 3 queries × top-3
-    assert all(0.0 <= r["cosine"] <= 1.0 + 1e-9 for r in top)  # histograms are nonneg
-    # deterministic across runs
-    again = cosine_topk(q, c, 3).collect()
-    assert top == again
-
-
-def test_prefix_filtered_jaccard_equals_naive(spark):
-    from nhl_data_pipeline_spark.operators.dedup import (
-        prefix_filtered_jaccard_pairs,
-        shingles,
-    )
-    from nhl_data_pipeline_spark.operators.text import tokens
-    from nhl_data_pipeline_spark.plans.registry import all_queries
-
-    docs = load_table(spark, TEST_SF_DIR, "documents")
-    shl = docs.select(
-        "doc_id", shingles(tokens(F.col("text")), 3).alias("sh")
-    ).filter(F.size("sh") > 0)
-    fast = {tuple(r) for r in prefix_filtered_jaccard_pairs(shl, 0.8).collect()}
-    naive = {
-        tuple(r)
-        for r in all_queries()["dedup_ngram_jaccard"].fn(spark, TEST_SF_DIR).collect()
-    }
-    assert fast == naive
-    assert len(fast) > 0
 
 
 def test_drop_stop_shingles(spark):
@@ -212,55 +169,6 @@ def test_winnowing_guarantee_and_density(spark):
     assert len(by_doc[1]) < full.count()
 
 
-def test_bpe_tokens_pretokenize(spark):
-    from nhl_data_pipeline_spark.operators.text import token_count_bpe, tokens_bpe
-
-    df = spark.createDataFrame(
-        [("I don't like 42 apples, really!",), ("",)], "text: string"
-    )
-    rows = df.select(
-        tokens_bpe("text").alias("t"), token_count_bpe("text").alias("n")
-    ).collect()
-    assert rows[0].t == [
-        "I", " don", "'t", " like", " 42", " apples", ",", " really", "!"
-    ]
-    assert rows[0].n == 9
-    assert rows[1].n == 0
-
-
-def test_multimodal_frame_sample_and_resize(spark):
-    from nhl_data_pipeline_spark.operators.multimodal import (
-        attach_binary_payload,
-        frame_sample,
-        resize_payload,
-    )
-
-    docs = load_table(spark, TEST_SF_DIR, "documents").limit(20)
-    mm = attach_binary_payload(docs)
-    sizes = {r.doc_id: r.n for r in mm.select(
-        "doc_id", F.length("payload").alias("n")).collect()}
-
-    frames = frame_sample(mm, frame_bytes=64, stride=4)
-    got = frames.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("k"), F.max("frame_idx").alias("mx")
-    ).collect()
-    assert len(got) == 20
-    for r in got:
-        n_frames = (sizes[r.doc_id] + 63) // 64
-        assert r.k == (n_frames + 3) // 4  # every 4th frame, frame 0 kept
-        assert r.mx % 4 == 0
-    # Frame bytes are exact slices: frame 0 of each doc is the payload head.
-    f0 = {r.doc_id: bytes(r.frame) for r in frames.filter(
-        F.col("frame_idx") == 0).collect()}
-    head = {r.doc_id: bytes(r.payload)[:64] for r in mm.collect()}
-    assert f0 == head
-
-    small = resize_payload(mm, factor=4)
-    for r in small.collect():
-        assert r.n_bytes == len(bytes(r.payload))
-        assert r.n_bytes == (sizes[r.doc_id] + 3) // 4
-
-
 def test_multimodal_decode_image_raw_ppm_bmp(spark):
     """The real (dependency-free) decode path: the SAME pixels encoded as
     P6 PPM and as padded bottom-up 24-bit BMP must decode to identical
@@ -309,7 +217,7 @@ def test_multimodal_decode_image_raw_ppm_bmp(spark):
         assert list(r.mean_rgb) == want_mean
         assert r.pixel_md5 == want_md5
 
-    # Unsupported magic raises (the PIL-gated decode_image path's job).
+    # Unsupported magic (compressed formats included) raises.
     import pytest as _pt
 
     bad = spark.createDataFrame(

@@ -206,6 +206,42 @@ def test_minhash_band_join_takes_explicit_width(spark):
     assert "REPARTITION_BY_NUM" not in p0
 
 
+def test_minhash_width_gate_compares_session_shuffle_width(spark, monkeypatch):
+    """The minhash band join is pinned at the text width only when that
+    WIDENS it past spark.sql.shuffle.partitions — the same gate as the
+    jaccard pair aggregate. Under a cluster profile shuffle partitions sit
+    above the core count, and a width between the two must not narrow
+    the join."""
+    import nhl_data_pipeline_spark.catalog as cat
+    from nhl_data_pipeline_spark.plans.q_text import _minhash_lsh_pure
+
+    par = spark.sparkContext.defaultParallelism
+
+    def band_repartitions(width: int) -> list[str]:
+        monkeypatch.setattr(cat, "shuffle_width_for", lambda *a, **k: width)
+        p = (
+            _minhash_lsh_pure(spark, TEST_SF_DIR)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        return [
+            ln for ln in p.splitlines()
+            if "RepartitionByExpression [band_idx" in ln
+        ]
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(4 * par))
+        # between the core count and the session width: no pin
+        assert band_repartitions(2 * par) == []
+        # past the session width: both join sides pinned at the width
+        wide = band_repartitions(8 * par)
+        assert len(wide) == 2 and all(f", {8 * par}" in ln for ln in wide)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 @pytest.mark.parametrize("qname", ["join_chain_revenue", "composite_key_join"])
 def test_fact_joins_stay_ungated_at_test_sf(spark, qname):
     """At fixture SF the width gate must NOT fire (width == parallelism):

@@ -58,19 +58,6 @@ def test_cms_estimates_bound_true_counts(spark):
     assert joined[top_est][0] >= 0.5 * joined[top_true][0]
 
 
-def test_cms_merge_equals_whole_corpus_build(spark):
-    docs = _docs(spark)
-    a = SK.cms_build(docs.filter(F.col("doc_id") % 2 == 0))
-    b = SK.cms_build(docs.filter(F.col("doc_id") % 2 == 1))
-    merged = {
-        (r["row_i"], r["bucket"]): r["n"] for r in SK.cms_merge(a, b).collect()
-    }
-    whole = {
-        (r["row_i"], r["bucket"]): r["n"] for r in SK.cms_build(docs).collect()
-    }
-    assert merged == whole
-
-
 def test_hll_count_distinct_within_rsd(spark):
     """Backs the A6 'HLL variant at scale' note: Spark's built-in
     approx_count_distinct (HLL++) lands within the configured rsd of the

@@ -1,4 +1,4 @@
-"""URL canonicalization vs its DuckDB twin + dedup semantics."""
+"""URL canonicalization vs its DuckDB twin + canonical-form cases."""
 
 from __future__ import annotations
 
@@ -137,19 +137,3 @@ try:
 
 except ImportError:  # pragma: no cover - hypothesis is in the baked env
     pass
-
-
-def test_url_dedup_keeps_min_id(spark):
-    variants = [
-        (0, "https://example.com/a?utm_source=x"),
-        (1, "HTTPS://EXAMPLE.com:443/a"),
-        (2, "https://example.com/a/"),
-        (3, "https://example.com/b"),
-    ]
-    df = spark.createDataFrame(variants, "doc_id long, url string")
-    got = {
-        r["canonical_url"]: (r["keep_id"], r["n_dups"])
-        for r in U.url_dedup(df).collect()
-    }
-    assert got["https://example.com/a"] == (0, 3)
-    assert got["https://example.com/b"] == (3, 1)
