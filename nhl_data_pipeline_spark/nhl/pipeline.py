@@ -1,25 +1,34 @@
-"""Pipeline driver: materialize the model DAG in dependency order.
+"""Pipeline driver: materialize the model DAG, independent models
+concurrently.
 
 Replaces the reference's Airflow→Snowflake→dbt chain (SURVEY §3.1) with one
 Spark job: bronze readers → staging → silver tables → metric views.
 The dbt view/table policy (dbt_project.yml:19-33) maps to: views = lazy
 DataFrames registered as temp views; tables = parquet materializations
-under a warehouse dir. Model dependency order is plain call order.
+under a warehouse dir. Each model is declared with its input models; like
+the reference's DAG (three bronze loads in parallel) and ``dbt build``
+(independent models at once), a model is built as soon as its inputs
+are, so independent table writes overlap (``session.run_concurrently``).
+The result keeps the declaration order.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.nhl import dims, facts, metrics, odds, staging
+from nhl_data_pipeline_spark.session import run_concurrently
+from nhl_data_pipeline_spark.sources.layout import write_zordered
 
 
 @dataclass
 class PipelineResult:
-    models: dict[str, DataFrame] = field(default_factory=dict)
+    models: dict[str, DataFrame]
 
     def __getitem__(self, name: str) -> DataFrame:
         return self.models[name]
@@ -83,6 +92,10 @@ def run_pipeline(
     warehouse replaces them) and re-read, mirroring dbt
     `materialized='table'`; every model is also registered as a temp view
     so the analyst SQL corpus (SURVEY §3.2) runs via spark.sql unchanged.
+    A model is built in a worker thread once its inputs are emitted; the
+    first builder or write error is re-raised. Without a warehouse every
+    model is a lazy view, so the run launches no write and the returned
+    plans are the same as a serial build's.
     """
     # Shared-session hygiene: this runner executes 24 models on one
     # session, so restore the default scan-split size first; a lake
@@ -90,14 +103,9 @@ def run_pipeline(
     from nhl_data_pipeline_spark.catalog import reset_scan_splits
 
     reset_scan_splits(spark)
-    r = PipelineResult()
 
     def emit(name: str, df: DataFrame) -> DataFrame:
         if warehouse_dir and name in ZORDER_MODELS:
-            from pyspark.sql import functions as F
-
-            from nhl_data_pipeline_spark.sources.layout import write_zordered
-
             spec = ZORDER_MODELS[name]
             path = os.path.join(warehouse_dir, name)
             staged = df.withColumn(
@@ -125,75 +133,136 @@ def run_pipeline(
             writer.parquet(path)
             df = spark.read.parquet(path)
         df.createOrReplaceTempView(name)
-        r.models[name] = df
         return df
 
-    # staging
-    stg_games = emit("stg_games", staging.stg_games(bronze["game_boxscore"]))
-    stg_pgs = emit(
-        "stg_player_game_stats", staging.stg_player_game_stats(bronze["game_boxscore"])
-    )
-    stg_sched = emit("stg_schedule_games", staging.stg_schedule_games(bronze["schedule"]))
-    stg_odds = emit(
-        "stg_odds_player_props", staging.stg_odds_player_props(bronze["odds_player_props"])
-    )
-
-    # dims (dim_date reads observed game dates for its is_game_day /
-    # games_on_date indicators — dim_date.sql:31-38 — and the injected
-    # as-of date for its relative flags)
-    dim_date = emit(
-        "dim_date",
-        dims.dim_date(
-            spark, game_dates=stg_games.select("game_date"), today=as_of
+    # The DAG, in declaration order: (model, builder, input models). A
+    # builder receives its inputs' emitted frames, in the listed order.
+    dag: list[tuple[str, Callable[..., DataFrame], tuple[str, ...]]] = [
+        # staging
+        ("stg_games", lambda: staging.stg_games(bronze["game_boxscore"]), ()),
+        (
+            "stg_player_game_stats",
+            lambda: staging.stg_player_game_stats(bronze["game_boxscore"]),
+            (),
         ),
+        (
+            "stg_schedule_games",
+            lambda: staging.stg_schedule_games(bronze["schedule"]),
+            (),
+        ),
+        (
+            "stg_odds_player_props",
+            lambda: staging.stg_odds_player_props(bronze["odds_player_props"]),
+            (),
+        ),
+        # dims (dim_date reads observed game dates for its is_game_day /
+        # games_on_date indicators — dim_date.sql:31-38 — and the
+        # injected as-of date for its relative flags)
+        (
+            "dim_date",
+            lambda g: dims.dim_date(
+                spark, game_dates=g.select("game_date"), today=as_of
+            ),
+            ("stg_games",),
+        ),
+        ("dim_team", dims.dim_team, ("stg_games",)),
+        (
+            "dim_player",
+            lambda pgs, t: dims.dim_player(pgs, today=as_of, dim_team=t),
+            ("stg_player_game_stats", "dim_team"),
+        ),
+        # facts
+        ("fact_game_results", facts.fact_game_results, ("stg_games",)),
+        (
+            "fact_player_game_stats",
+            facts.fact_player_game_stats,
+            ("stg_player_game_stats", "dim_player", "dim_team"),
+        ),
+        (
+            "fact_team_game_stats",
+            facts.fact_team_game_stats,
+            ("fact_player_game_stats", "stg_games"),
+        ),
+        (
+            "fact_shot_events",
+            lambda p: facts.fact_shot_events(bronze["game_pbp"], p),
+            ("dim_player",),
+        ),
+        # metrics
+        ("team_shot_metrics", metrics.team_shot_metrics, ("fact_team_game_stats",)),
+        (
+            "player_shot_metrics",
+            metrics.player_shot_metrics,
+            ("fact_player_game_stats",),
+        ),
+        (
+            "team_shots_against_by_position",
+            metrics.team_shots_against_by_position,
+            ("fact_player_game_stats", "fact_team_game_stats", "dim_team"),
+        ),
+        (
+            "team_shot_locations",
+            metrics.team_shot_locations,
+            ("fact_shot_events", "dim_team"),
+        ),
+        (
+            "player_shot_locations",
+            metrics.player_shot_locations,
+            ("fact_shot_events", "dim_team"),
+        ),
+        (
+            "bruins_next_opponent",
+            lambda s, t: metrics.bruins_next_opponent(s, t, today="2024-11-13"),
+            ("stg_schedule_games", "dim_team"),
+        ),
+        # Bruins-filtered Tableau extracts (bruins_*.sql — the Sheets row cap)
+        (
+            "bruins_team_shot_locations",
+            metrics.bruins_team_shot_locations,
+            ("team_shot_locations",),
+        ),
+        (
+            "bruins_player_shot_locations",
+            metrics.bruins_player_shot_locations,
+            ("player_shot_locations",),
+        ),
+        (
+            "bruins_shot_events",
+            metrics.bruins_shot_events,
+            ("fact_shot_events", "dim_team"),
+        ),
+        (
+            "bruins_opponent_shot_locations",
+            metrics.bruins_opponent_shot_locations,
+            ("team_shot_locations", "bruins_next_opponent"),
+        ),
+        # odds vertical
+        (
+            "stg_player_name_crosswalk",
+            odds.stg_player_name_crosswalk,
+            ("stg_odds_player_props", "dim_player"),
+        ),
+        (
+            "fact_player_sog_props_v2",
+            odds.fact_player_sog_props_v2,
+            (
+                "stg_odds_player_props", "stg_player_name_crosswalk",
+                "fact_player_game_stats", "stg_games",
+            ),
+        ),
+        (
+            "rpt_sog_props_performance",
+            odds.rpt_sog_props_performance,
+            ("fact_player_sog_props_v2",),
+        ),
+    ]
+    index = {name: i for i, (name, _, _) in enumerate(dag)}
+    frames = run_concurrently(
+        spark,
+        [
+            lambda *dfs, name=name, build=build: emit(name, build(*dfs))
+            for name, build, _ in dag
+        ],
+        [tuple(index[n] for n in inputs) for _, _, inputs in dag],
     )
-    dim_team = emit("dim_team", dims.dim_team(stg_games))
-    dim_player = emit(
-        "dim_player", dims.dim_player(stg_pgs, today=as_of, dim_team=dim_team)
-    )
-
-    # facts
-    fgr = emit("fact_game_results", facts.fact_game_results(stg_games))
-    fpgs = emit(
-        "fact_player_game_stats",
-        facts.fact_player_game_stats(stg_pgs, dim_player, dim_team),
-    )
-    ftgs = emit("fact_team_game_stats", facts.fact_team_game_stats(fpgs, stg_games))
-    fse = emit("fact_shot_events", facts.fact_shot_events(bronze["game_pbp"], dim_player))
-
-    # metrics
-    emit("team_shot_metrics", metrics.team_shot_metrics(ftgs))
-    emit("player_shot_metrics", metrics.player_shot_metrics(fpgs))
-    emit(
-        "team_shots_against_by_position",
-        metrics.team_shots_against_by_position(fpgs, ftgs, dim_team),
-    )
-    tsl = emit("team_shot_locations", metrics.team_shot_locations(fse, dim_team))
-    psl = emit("player_shot_locations", metrics.player_shot_locations(fse, dim_team))
-    bno = emit(
-        "bruins_next_opponent",
-        metrics.bruins_next_opponent(stg_sched, dim_team, today="2024-11-13"),
-    )
-
-    # Bruins-filtered Tableau extracts (bruins_*.sql — the Sheets row cap)
-    emit("bruins_team_shot_locations", metrics.bruins_team_shot_locations(tsl))
-    emit("bruins_player_shot_locations", metrics.bruins_player_shot_locations(psl))
-    emit("bruins_shot_events", metrics.bruins_shot_events(fse, dim_team))
-    emit(
-        "bruins_opponent_shot_locations",
-        metrics.bruins_opponent_shot_locations(tsl, bno),
-    )
-
-    # odds vertical
-    xw = emit(
-        "stg_player_name_crosswalk",
-        odds.stg_player_name_crosswalk(stg_odds, dim_player),
-    )
-    props = emit(
-        "fact_player_sog_props_v2",
-        odds.fact_player_sog_props_v2(stg_odds, xw, fpgs, stg_games),
-    )
-    emit("rpt_sog_props_performance", odds.rpt_sog_props_performance(props))
-
-    _ = dim_date, fgr  # registered views; referenced via SQL corpus
-    return r
+    return PipelineResult(dict(zip(index, frames)))

@@ -1,9 +1,12 @@
 """Declarative data-quality checks: the dbt schema-test semantics on Spark.
 
-unique / not_null / accepted_values / relationships (FK) /
-unique_combination_of_columns — the reference's 54-test suite
-(dbt_nhl/models/silver/schema.yml, strategy at .context/DECISIONS.md:355-396)
-expressed as data, run in one pass per table where possible.
+unique / not_null / accepted_values / accepted_range / relationships (FK)
+/ unique_combination_of_columns (dbt_nhl/models/silver/schema.yml,
+strategy at .context/DECISIONS.md:355-396), one Spark action per call
+(``not_null`` covers all its columns in one aggregate). They define the
+semantics: ``run_standard_suite`` runs on them, and the reference's full
+233-instance suite (``quality_suite.py``) fuses them into one action per
+model and is tested against them.
 """
 
 from __future__ import annotations

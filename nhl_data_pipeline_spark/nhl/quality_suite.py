@@ -11,7 +11,8 @@ reference's column names; where the engine's model spells a column
 differently (e.g. reference ``shots`` = engine ``shots_on_goal``), the
 per-model ``map`` translates — the asserted SEMANTICS are identical.
 
-Test kinds (dbt core + dbt_utils, silver/schema.yml):
+Test kinds (dbt core + dbt_utils, silver/schema.yml) and the quality.py
+primitive whose semantics each follows:
 - not_null / unique                     → quality.not_null / quality.unique
 - accepted_values                       → quality.accepted_values
 - relationships (FK, 15 instances)      → quality.relationships
@@ -25,24 +26,22 @@ Consciously skipped (recorded, not silently dropped): the three
 v2 model (the reference itself superseded v1; the v1 fuzzy OR-LIKE join
 survives as the `fuzzy_or_like_join` registered operator).
 
-Scale note: every check is one aggregate / anti-join over the model —
-each compiles to a single pushed-down scan with map-side combine, so the
-whole 230-check suite is a bounded number of small Spark jobs, not a
-per-row framework.
+Scale note: one Spark action per SUITE model, never one per check. At
+the daily run's size each action is bound by per-job latency, not by
+rows, so the 230 checks cost 17 fused aggregates (see ``_model_checks``),
+which run concurrently; a view model is computed once for its own
+checks instead of once per check. The ``quality.py`` primitives keep the
+one-check-per-action form and are the oracle the fused suite is tested
+against.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from nhl_data_pipeline_spark.nhl.quality import (
-    CheckResult,
-    accepted_range,
-    accepted_values,
-    not_null,
-    relationships,
-    unique,
-)
+from nhl_data_pipeline_spark.nhl.quality import CheckResult
+from nhl_data_pipeline_spark.session import run_concurrently
 
 POSITION_CODES_ALL = ["C", "LW", "RW", "L", "R", "D", "G"]  # silver:108
 POSITION_CODES_SKATERS = ["C", "LW", "RW", "L", "R", "D"]  # silver (fpgs)
@@ -161,8 +160,7 @@ SUITE: dict[str, dict] = {
         ],
     },
     "fact_team_game_stats": {
-        # (r7: the shots_for->shots_on_goal rename map is gone — the
-        # engine model now carries the reference's column name directly.)
+        # no "map": the engine model carries the reference's column names
         "not_null": [
             "game_id", "team_id", "date_key", "opponent_team_id",
             "season", "game_type", "home_away", "goals_for",
@@ -295,48 +293,100 @@ def _frame(
     return models[model]
 
 
+def _model_checks(
+    model: str, spec: dict, df: DataFrame, models: dict[str, DataFrame]
+) -> list[CheckResult]:
+    """Every check of one SUITE entry from ONE Spark action.
+
+    Row checks (not_null, accepted_values, accepted_range) are
+    ``count(when(<failing condition>))`` columns of one aggregate. Each
+    relationship left-joins the parent's DISTINCT key set with a hit
+    flag (the parent side is distinct, so no child row multiplies); its
+    orphans are the non-null child keys with no hit. A unique key set
+    turns the aggregate into an inner ``groupBy(keys)`` carrying the other
+    counts, and the outer aggregate sums them and counts the groups with
+    more than one row (NULL keys form a group, as in ``quality.unique``).
+    Names, counts and order equal the ``quality.py`` primitives'.
+    """
+    m = spec.get("map", {})
+    col = lambda c: m.get(c, c)  # noqa: E731
+    keys = spec.get("unique", []) + spec.get("unique_combination", [])
+    if len(keys) > 1:
+        raise ValueError(f"{model}: one unique key set per model, got {keys}")
+    # (check name, failing-row condition); None marks the unique check.
+    checks: list[tuple[str, Column | None]] = [
+        (f"not_null({c})", F.col(col(c)).isNull())
+        for c in spec.get("not_null", [])
+    ]
+    checks += [(f"unique({', '.join(map(col, ks))})", None) for ks in keys]
+    for ref_c, values in spec.get("accepted_values", {}).items():
+        v = F.col(col(ref_c))
+        checks.append(
+            (f"accepted_values({ref_c})", ~v.isin(values) & v.isNotNull())
+        )
+    for ref_c, lo, hi, inclusive in spec.get("accepted_range", []):
+        v = F.col(col(ref_c))
+        bad = (v < lo) | (v > hi) if inclusive else (v <= lo) | (v >= hi)
+        checks.append(
+            (f"accepted_range({col(ref_c)},[{lo},{hi}])", v.isNotNull() & bad)
+        )
+    for i, (ref_c, parent, parent_col) in enumerate(
+        spec.get("relationships", [])
+    ):
+        key, hit = f"_rel{i}_key", f"_rel{i}_hit"
+        parent_keys = (
+            models[parent]
+            .select(F.col(parent_col).alias(key), F.lit(True).alias(hit))
+            .distinct()
+        )
+        df = df.join(parent_keys, F.col(col(ref_c)) == F.col(key), "left")
+        checks.append(
+            (
+                f"relationships({ref_c}→{parent}.{parent_col})",
+                F.col(col(ref_c)).isNotNull() & F.col(hit).isNull(),
+            )
+        )
+    counts = {
+        f"_c{i}": F.count(F.when(cond, 1))
+        for i, (_, cond) in enumerate(checks)
+        if cond is not None
+    }
+    if keys:
+        groups = df.groupBy(*map(col, keys[0])).agg(
+            F.count(F.lit(1)).alias("_n"),
+            *[c.alias(a) for a, c in counts.items()],
+        )
+        row = groups.agg(
+            *[
+                F.count(F.when(F.col("_n") > 1, 1))
+                if cond is None
+                else F.coalesce(F.sum(f"_c{i}"), F.lit(0))
+                for i, (_, cond) in enumerate(checks)
+            ]
+        ).first()
+    else:
+        row = df.agg(*counts.values()).first()
+    return [
+        CheckResult(model, name, n == 0, n)
+        for (name, _), n in zip(checks, row)
+    ]
+
+
 def run_reference_suite(
     models: dict[str, DataFrame],
     bronze: dict[str, DataFrame] | None = None,
 ) -> list[CheckResult]:
-    """Every runnable reference test instance, as CheckResults."""
-    out: list[CheckResult] = []
-    for model, spec in SUITE.items():
-        if spec.get("source", "").startswith("bronze:") and bronze is None:
-            continue
-        df = _frame(model, spec, models, bronze)
-        m = spec.get("map", {})
-        col = lambda c: m.get(c, c)  # noqa: E731
-        nn = [col(c) for c in spec.get("not_null", [])]
-        if nn:
-            results = not_null(df, model, *nn)
-            # report under the REFERENCE column name so counts line up
-            for ref_c, r in zip(spec.get("not_null", []), results):
-                out.append(
-                    CheckResult(model, f"not_null({ref_c})", r.passed, r.failing_rows)
-                )
-        for cols in spec.get("unique", []):
-            out.append(unique(df, model, *[col(c) for c in cols]))
-        for cols in spec.get("unique_combination", []):
-            out.append(unique(df, model, *[col(c) for c in cols]))
-        for ref_c, values in spec.get("accepted_values", {}).items():
-            r = accepted_values(df, model, col(ref_c), values)
-            out.append(
-                CheckResult(model, f"accepted_values({ref_c})", r.passed, r.failing_rows)
-            )
-        for ref_c, lo, hi, inclusive in spec.get("accepted_range", []):
-            out.append(accepted_range(df, model, col(ref_c), lo, hi, inclusive))
-        for ref_c, parent, parent_col in spec.get("relationships", []):
-            r = relationships(df, model, col(ref_c), models[parent], parent_col)
-            out.append(
-                CheckResult(
-                    model,
-                    f"relationships({ref_c}→{parent}.{parent_col})",
-                    r.passed,
-                    r.failing_rows,
-                )
-            )
-    return out
+    """Every runnable reference test instance, as CheckResults: one Spark
+    action per SUITE model, the models' actions run concurrently."""
+    tasks = [
+        lambda model=model, spec=spec: _model_checks(
+            model, spec, _frame(model, spec, models, bronze), models
+        )
+        for model, spec in SUITE.items()
+        if bronze is not None or not spec.get("source", "").startswith("bronze:")
+    ]
+    spark = next(iter(models.values())).sparkSession
+    return [r for rs in run_concurrently(spark, tasks) for r in rs]
 
 
 def suite_counts() -> dict[str, int]:

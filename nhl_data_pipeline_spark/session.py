@@ -11,7 +11,11 @@ historical default of 200.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -112,6 +116,52 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(
+    spark: SparkSession,
+    tasks: Sequence[Callable[..., Any]],
+    inputs: Sequence[Sequence[int]] | None = None,
+) -> list[Any]:
+    """Run independent Spark actions from driver threads; results in
+    submission order.
+
+    Small jobs are bound by per-job scheduling latency, not by cores, so
+    a daily run of a few hundred small actions goes as fast as it can
+    overlap them. ``inputs[i]`` lists earlier task indexes whose results
+    are passed to task ``i`` as positional arguments; the task waits on
+    them. Tasks start in FIFO order and may only wait on tasks submitted
+    before them, so every task it waits on has already started and the
+    pool cannot deadlock. The pool is ``min(len(tasks),
+    defaultParallelism)`` wide, and each task inherits the caller's job
+    group, local properties and tags. The first exception, in submission
+    order among the tasks that failed, is re-raised once the running
+    tasks end; tasks that had not started are cancelled.
+    """
+    if not tasks:
+        return []
+    inputs = inputs if inputs is not None else [()] * len(tasks)
+    for i, deps in enumerate(inputs):
+        if any(not 0 <= j < i for j in deps):
+            raise ValueError(f"task {i} may only wait on earlier tasks: {deps}")
+    futures: list[Future] = []
+
+    def call(fn: Callable[..., Any], deps: Sequence[int]) -> Any:
+        return fn(*[futures[j].result() for j in deps])
+
+    target = inheritable_thread_target(spark)(call)
+    width = min(len(tasks), spark.sparkContext.defaultParallelism)
+    pool = ThreadPoolExecutor(max_workers=width)
+    try:
+        for fn, deps in zip(tasks, inputs):
+            futures.append(pool.submit(target, fn, deps))
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f.done() and f.exception() is not None:
+                raise f.exception()
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 def cluster_conf(

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from nhl_data_pipeline_spark.session import run_concurrently
+
 SHEETS_ROW_CAP = 25_000  # practical max before the API chokes (DECISIONS.md:487)
 
 # The reference's export manifest, verbatim names and order
@@ -51,13 +53,17 @@ def export_all(
     reference's `SELECT *` → DataFrame → sheet/CSV hop preserves column
     order the same way). Returns {model: path}. The Sheets hop itself
     stays env-gated (export_sheets); CSV is the offline-verifiable sink
-    and the reference's own fallback for the oversize models."""
-    out: dict[str, str] = {}
-    for name in EXPORT_MODELS:
-        path = f"{out_dir}/{name}"
-        export_csv(models[name], path)
-        out[name] = path
-    return out
+    and the reference's own fallback for the oversize models. The 11
+    writes are independent and run concurrently."""
+    paths = {name: f"{out_dir}/{name}" for name in EXPORT_MODELS}
+    run_concurrently(
+        models[EXPORT_MODELS[0]].sparkSession,
+        [
+            lambda name=name: export_csv(models[name], paths[name])
+            for name in EXPORT_MODELS
+        ],
+    )
+    return paths
 
 
 def export_sheets(df: DataFrame, spreadsheet: str, worksheet: str) -> int:

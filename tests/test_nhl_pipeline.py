@@ -8,9 +8,11 @@ quality suite.
 
 from __future__ import annotations
 
+from functools import reduce
 from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.nhl import fixtures
@@ -271,6 +273,169 @@ def test_reference_dbt_suite_counts_match_yaml():
             for c in m.get("columns") or []:
                 declared += len(c.get("tests") or [])
     assert suite_counts()["reference_declared"] == declared == 233
+
+
+# The DAG's declaration order, which PipelineResult.models keeps.
+DAG_ORDER = [
+    "stg_games", "stg_player_game_stats", "stg_schedule_games",
+    "stg_odds_player_props", "dim_date", "dim_team", "dim_player",
+    "fact_game_results", "fact_player_game_stats", "fact_team_game_stats",
+    "fact_shot_events", "team_shot_metrics", "player_shot_metrics",
+    "team_shots_against_by_position", "team_shot_locations",
+    "player_shot_locations", "bruins_next_opponent",
+    "bruins_team_shot_locations", "bruins_player_shot_locations",
+    "bruins_shot_events", "bruins_opponent_shot_locations",
+    "stg_player_name_crosswalk", "fact_player_sog_props_v2",
+    "rpt_sog_props_performance",
+]
+
+
+def _primitive_suite(models, bronze):
+    """The reference suite checked one primitive call at a time: the
+    ``quality.py`` semantics the fused one-action-per-model suite must
+    reproduce exactly."""
+    from nhl_data_pipeline_spark.nhl.quality import (
+        CheckResult,
+        accepted_range,
+        accepted_values,
+        not_null,
+        relationships,
+        unique,
+    )
+    from nhl_data_pipeline_spark.nhl.quality_suite import SUITE
+
+    out = []
+    for model, spec in SUITE.items():
+        src = spec.get("source", "")
+        df = bronze[src.split(":", 1)[1]] if src else models[model]
+        m = spec.get("map", {})
+        col = lambda c: m.get(c, c)  # noqa: E731
+        ref_nn = spec.get("not_null", [])
+        if ref_nn:
+            for ref_c, r in zip(ref_nn, not_null(df, model, *map(col, ref_nn))):
+                out.append(CheckResult(model, f"not_null({ref_c})", r.passed, r.failing_rows))
+        for cols in spec.get("unique", []) + spec.get("unique_combination", []):
+            out.append(unique(df, model, *map(col, cols)))
+        for ref_c, values in spec.get("accepted_values", {}).items():
+            r = accepted_values(df, model, col(ref_c), values)
+            out.append(CheckResult(model, f"accepted_values({ref_c})", r.passed, r.failing_rows))
+        for ref_c, lo, hi, inclusive in spec.get("accepted_range", []):
+            out.append(accepted_range(df, model, col(ref_c), lo, hi, inclusive))
+        for ref_c, parent, parent_col in spec.get("relationships", []):
+            r = relationships(df, model, col(ref_c), models[parent], parent_col)
+            out.append(CheckResult(
+                model, f"relationships({ref_c}→{parent}.{parent_col})",
+                r.passed, r.failing_rows,
+            ))
+    return out
+
+
+def test_fused_suite_equals_primitives_on_poisoned_dag(models, bronze):
+    """The fused suite returns exactly the primitives' CheckResult list,
+    names, order and failing_rows, on a DAG with planted violations. The
+    dim_team parent is a view that repeats the key of the row carrying
+    the planted NULL, so a relationship join that multiplied child rows
+    would inflate that NULL's count and fail the comparison."""
+    from nhl_data_pipeline_spark.nhl.quality_suite import run_reference_suite
+
+    fpgs = models["fact_player_game_stats"]
+    first = fpgs.orderBy("game_id", "player_id").limit(1)
+    r0 = first.first()
+    is_r0 = (F.col("game_id") == r0["game_id"]) & (
+        F.col("player_id") == r0["player_id"]
+    )
+    null_player = F.lit(None).cast(fpgs.schema["player_id"].dataType)
+    poisoned_fpgs = reduce(DataFrame.unionByName, [
+        fpgs.withColumn("hits", F.when(is_r0, None).otherwise(F.col("hits"))),
+        first,  # duplicate (game_id, player_id)
+        first.withColumn("player_id", null_player),  # two rows sharing
+        first.withColumn("player_id", null_player),  # a NULL player key
+        first.withColumn("home_away", F.lit("neutral")),
+        first.withColumn("team_id", F.lit(-1)),  # orphan team
+    ])
+    dim_team = models["dim_team"]
+    poisoned_dim_team = dim_team.unionByName(  # a view with a repeated key
+        dim_team.filter(F.col("team_id") == r0["team_id"])
+    )
+    tsabp = models["team_shots_against_by_position"]
+    t0 = tsabp.orderBy("game_id", "team_id").first()
+    is_t0 = (F.col("game_id") == t0["game_id"]) & (F.col("team_id") == t0["team_id"])
+    poisoned_tsabp = tsabp.withColumn(
+        "pct_shots_against_from_forwards",
+        F.when(is_t0, F.lit(101.0)).otherwise(F.col("pct_shots_against_from_forwards")),
+    ).withColumn(  # orphan against the view parent
+        "team_id", F.when(is_t0, F.lit(-2)).otherwise(F.col("team_id"))
+    )
+    poisoned = {
+        **models,
+        "fact_player_game_stats": poisoned_fpgs,
+        "dim_team": poisoned_dim_team,
+        "team_shots_against_by_position": poisoned_tsabp,
+    }
+    want = _primitive_suite(poisoned, bronze)
+    got = run_reference_suite(poisoned, bronze)
+    assert got == want
+    failing = {(r.table, r.check): r.failing_rows for r in want if not r.passed}
+    f = "fact_player_game_stats"
+    assert failing[(f, "not_null(hits)")] == 1
+    assert failing[(f, "not_null(player_id)")] == 2
+    assert failing[(f, "unique(game_id, player_id)")] == 2
+    assert failing[(f, "accepted_values(home_away)")] == 1
+    assert failing[(f, "relationships(team_id→dim_team.team_id)")] == 1
+    assert failing[("dim_team", "unique(team_id)")] == 1
+    t = "team_shots_against_by_position"
+    assert failing[(t, "accepted_range(pct_shots_against_from_forwards,[0,100])")] == 1
+    assert failing[(t, "relationships(team_id→dim_team.team_id)")] == 1
+
+
+def test_reference_suite_job_count_and_group(spark, models, bronze):
+    """The suite runs a bounded number of Spark jobs (one fused action per
+    model, not one per check), and the jobs it launches from its worker
+    threads carry the caller's job group: with the group lost, none
+    would be counted."""
+    from nhl_data_pipeline_spark.nhl.quality_suite import run_reference_suite
+
+    sc = spark.sparkContext
+    group = "reference-suite-job-count"
+    sc.setJobGroup(group, "run_reference_suite")
+    try:
+        results = run_reference_suite(models, bronze)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(results) == 230
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 100, len(jobs)
+
+
+def test_run_pipeline_keeps_declaration_order(models):
+    assert list(models) == DAG_ORDER
+
+
+def test_run_pipeline_reraises_builder_error(spark, bronze, tmp_path, monkeypatch):
+    """A failing model builder surfaces as the pipeline's exception, at
+    once, and leaves no worker thread of the runner behind."""
+    import threading
+    import time
+
+    from nhl_data_pipeline_spark.nhl import facts
+
+    def broken(*_args):
+        raise RuntimeError("fact_game_results builder failed")
+
+    monkeypatch.setattr(facts, "fact_game_results", broken)
+    def pool_threads():
+        return {
+            t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor")
+        }
+
+    before = pool_threads()
+    t0 = time.perf_counter()
+    with pytest.raises(RuntimeError, match="fact_game_results builder failed"):
+        run_pipeline(spark, bronze, warehouse_dir=str(tmp_path / "wh"))
+    assert time.perf_counter() - t0 < 120
+    assert pool_threads() <= before
 
 
 def test_analyst_sql_corpus_runs(spark, models):
