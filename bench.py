@@ -18,7 +18,7 @@ measurement.
 
 Probes (skip them with SPARK_GRAFT_SKIP_PROBES=1 for fast local
 iteration): ``dedup_scale_probe`` (near-dup crossover and recall),
-``pipeline_e2e_probe`` (CLI end to end + staging x100) and
+``pipeline_e2e_probe`` (CLI end to end at x1) and
 ``pipeline_scale_probe`` (staging and DAG decade exponents, gated at the
 calibrated width). Results of the retired one-off probes are kept in
 ``BENCH_probes.json``.
@@ -470,31 +470,15 @@ def _pipeline_e2e_probe(spark) -> dict:
     """Operational SLA number for the one-command pipeline (cli.py): the
     reference's implicit budget is a 600 s dbt-Cloud job (BASELINE.md).
 
-    Two blocks:
-    - ``e2e_fixtures``: the full CLI path — bronze fixtures → 25-model
-      DAG (table models materialized to a scratch warehouse, Hilbert
-      writer included) → the 233-instance reference quality suite →
-      the CSV export manifest — timed end-to-end at ×1.
-    - ``staging_x100``: bronze boxscore+pbp replicated ×100 with
-      DISTINCT game ids (the payload's inner ``id`` is rewritten via
-      from_json→withField→to_json, offset r*20 inside the 4-digit game
-      number so ids stay 10 digits and latest-snapshot dedup sees 100×
-      real games), timed through the volume-bound bronze→silver path
-      (stg_games + player flatten + shot-event explode → noop). Output
-      row counts are asserted to scale exactly ×100 — proof the
-      replicas aren't collapsed by the snapshot dedup. The odds/metrics
-      tail is deliberately NOT scaled this way: identical team/date
-      replicas would give the entity-resolution join an artificial
-      100× fan-out no real corpus has; its cost is covered at ×1 and
-      grows with distinct games, not snapshots.
+    ``e2e_fixtures``: the full CLI path — bronze fixtures → 25-model DAG
+    (table models materialized to a scratch warehouse, Hilbert writer
+    included) → the 233-instance reference quality suite → the CSV
+    export manifest — timed end-to-end at ×1. The staging path at
+    replicated scale is ``pipeline_scale_probe``'s ``staging_cj_x100``.
     """
     import shutil
     import tempfile
 
-    from pyspark.sql import DataFrame as _DF
-    from pyspark.sql import functions as F
-
-    from nhl_data_pipeline_spark.nhl import facts, schemas, staging
     from nhl_data_pipeline_spark.nhl.pipeline import run_pipeline
     from nhl_data_pipeline_spark.nhl.quality_suite import run_reference_suite
     from nhl_data_pipeline_spark.sources.export import export_all
@@ -527,45 +511,6 @@ def _pipeline_e2e_probe(spark) -> dict:
         out["e2e_fixtures_sec"] = round(time.perf_counter() - t0, 3)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-    def replicate(raw: _DF, schema, n: int) -> _DF:
-        p = F.from_json("payload", schema)
-        reps = [
-            raw.withColumn(
-                "payload",
-                F.to_json(p.withField("id", p["id"] + F.lit(r * 20))),
-            ).withColumn("game_id", F.col("game_id") + F.lit(r * 20))
-            for r in range(n)
-        ]
-        return reduce(_DF.unionAll, reps).repartition(
-            spark.sparkContext.defaultParallelism
-        )
-
-    box100 = replicate(bronze["game_boxscore"], schemas.boxscore_payload(), 100)
-    pbp100 = replicate(bronze["game_pbp"], schemas.pbp_payload(), 100)
-    dim_player = spark.createDataFrame(
-        staging.stg_player_game_stats(bronze["game_boxscore"])
-        .select("player_id")
-        .distinct()
-        .toPandas()
-        .assign(player_name="Probe Player", position_code="C", position_type="F")
-    )
-
-    def silver(box, pbp):
-        g = staging.stg_games(box)
-        pg = staging.stg_player_game_stats(box)
-        se = facts.fact_shot_events(pbp, dim_player)
-        return g, pg, se
-
-    base_counts = tuple(df.count() for df in silver(bronze["game_boxscore"], bronze["game_pbp"]))
-    t0 = time.perf_counter()
-    big_counts = tuple(df.count() for df in silver(box100, pbp100))
-    out["staging_x100_sec"] = round(time.perf_counter() - t0, 3)
-    assert big_counts == tuple(100 * c for c in base_counts), (
-        base_counts,
-        big_counts,
-    )
-    out["staging_x100_rows"] = float(sum(big_counts))
     return out
 
 
@@ -587,11 +532,11 @@ def _pipeline_scale_probe(spark) -> dict:
 
     - ``staging_cj_x100/x1000``: bronze boxscore+pbp replicated ×100 and
       ×1000 with DISTINCT game ids via a single-plan crossJoin-range
-      replicator (the e2e probe's reduce-union replicate builds an
-      n-branch plan — analysis-bound past a few hundred replicas; the
-      crossJoin form is how you'd actually fan out synthetic load at
-      scale). Same id policy (r*20 payload-id offsets, injective for the
-      <20 distinct fixture games). Timed through the volume-bound
+      replicator (a reduce-union replicator builds an n-branch plan —
+      analysis-bound past a few hundred replicas; the crossJoin form is
+      how you'd actually fan out synthetic load at scale). Same id
+      policy (r*20 payload-id offsets, injective for the <20 distinct
+      fixture games). Timed through the volume-bound
       bronze→silver path (stg_games + player flatten + shot-event
       explode → count), counts asserted to scale EXACTLY ×n at both
       decades, and the per-decade exponent emitted:
@@ -600,10 +545,10 @@ def _pipeline_scale_probe(spark) -> dict:
     - ``dag_x100``: the FULL model DAG (run_pipeline with table/Z-order
       materialization, 25 models) built over the ×100 lake, timed; model
       row counts sanity-asserted (games models scale ×100; odds inputs
-      stay ×1 per the e2e probe's fan-out note — shared game_dates give
-      the props fact an artificial ×100 match fan-out, which is fine for
-      an executability/scale probe and is documented here, but means
-      odds-side counts are NOT asserted to a clean multiple).
+      stay ×1 — shared game_dates give the props fact an artificial
+      ×100 match fan-out, which is fine for an executability/scale
+      probe and is documented here, but means odds-side counts are NOT
+      asserted to a clean multiple).
     - ``worksheets_x100``: ALL 18 verbatim reference worksheet
       statements (10 team + 8 odds) executed over that ×100 model lake
       through the dialect shim — the fixture-scale pytest corpus run at

@@ -74,11 +74,10 @@ def dec(col: Column | str, scale: int = 6, prec: int = 18) -> Column:
     the value's scale) hits .5 ties where Spark (HALF_UP on the shortest
     string repr) and DuckDB (nearest on the binary value) diverge.
 
-    ``prec`` (r12, guide §2.2 "narrower types"): the cast's precision.
-    Default 18 is always safe. Passing ``prec <= 8`` turns the downstream
-    SUM into a plain unscaled-LONG sum: Catalyst's DecimalAggregates rule
-    rewrites ``Sum(decimal(p,s))`` into
-    ``MakeDecimal(Sum(UnscaledValue(e)), p+10, s)`` whenever
+    ``prec``: the cast's precision. Default 18 is always safe. Passing
+    ``prec <= 8`` turns the downstream SUM into a plain unscaled-LONG
+    sum: Catalyst's DecimalAggregates rule rewrites ``Sum(decimal(p,s))``
+    into ``MakeDecimal(Sum(UnscaledValue(e)), p+10, s)`` whenever
     ``p + 10 <= 18`` — a codegen 64-bit add instead of a 128-bit Decimal
     accumulator (measured ~5× on the aggregate kernel at sf0.1; the
     result value is bit-identical because both forms are exact). ONLY
@@ -92,8 +91,16 @@ def dec(col: Column | str, scale: int = 6, prec: int = 18) -> Column:
     return F.col(col).cast(p) if isinstance(col, str) else col.cast(p)
 
 
-def dsum_double(col: Column | str, scale: int = 6, prec: int = 18) -> Column:
-    """Exact decimal SUM emitted as double via a string bridge.
+def dec_sql(expr: str, scale: int = 6, prec: int = 18) -> str:
+    """:func:`dec` as Spark-SQL text, for expressions built as strings.
+    Same bound rules as :func:`dec` apply to ``prec``."""
+    return f"CAST({expr} AS DECIMAL({prec},{scale}))"
+
+
+def dsum_double_sql(expr: str, scale: int = 6, prec: int = 18) -> str:
+    """Exact decimal SUM emitted as double via a string bridge, as one
+    Spark-SQL string for ``F.expr`` (a Column-API build costs ~8 py4j
+    round trips per measure).
 
     decimal→double conversion rounds once the scaled integer exceeds 2^53,
     and engines round differently (1-ulp divergences caught at sf0.1).
@@ -105,21 +112,6 @@ def dsum_double(col: Column | str, scale: int = 6, prec: int = 18) -> Column:
     to the same double, so a narrower Spark-side cast — see :func:`dec` —
     changes nothing the value hash can see).
     """
-    return F.sum(dec(col, scale, prec)).cast("string").cast("double")
-
-
-def dec_sql(expr: str, scale: int = 6, prec: int = 18) -> str:
-    """Spark-SQL text twin of :func:`dec` (r12 chatter pass, guide §4):
-    renders the identical cast as one parsed string. Same bound rules as
-    :func:`dec` apply to ``prec``."""
-    return f"CAST({expr} AS DECIMAL({prec},{scale}))"
-
-
-def dsum_double_sql(expr: str, scale: int = 6, prec: int = 18) -> str:
-    """Spark-SQL text twin of :func:`dsum_double` — the identical
-    sum→string→double cast chain as one parsed string (the Column build
-    costs ~8 py4j round trips per measure; hot aggregate builders pass
-    this to F.expr instead)."""
     return f"CAST(CAST(sum({dec_sql(expr, scale, prec)}) AS STRING) AS DOUBLE)"
 
 

@@ -143,17 +143,12 @@ def stg_player_game_stats(boxscore_raw: DataFrame) -> DataFrame:
 def stg_schedule_games(schedule_raw: DataFrame) -> DataFrame:
     """Two-level flatten gameWeek[] → games[] of the LATEST schedule
     snapshot (bruins_next_opponent.sql:11-33: ORDER BY ingest_ts DESC
-    LIMIT 1, then double LATERAL FLATTEN)."""
-    latest = (
-        schedule_raw.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.orderBy(F.desc("ingest_ts"), F.desc("s3_key"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    LIMIT 1, then double LATERAL FLATTEN), with s3_key DESC breaking
+    ingest_ts ties. Sort + limit plans as TakeOrderedAndProject: a top-1
+    per partition, so only one row per partition reaches the final merge
+    (an unpartitioned row_number window moves every snapshot through one
+    task)."""
+    latest = schedule_raw.orderBy(F.desc("ingest_ts"), F.desc("s3_key")).limit(1)
     p = latest.withColumn("p", F.from_json("payload", schemas.schedule_payload()))
     day = p.select(F.col("ingest_ts"), F.explode("p.gameWeek").alias("day"))
     g = day.select(

@@ -116,164 +116,6 @@ def train_bpe(
     return merges, words
 
 
-def _triples(words: DataFrame) -> DataFrame:
-    """(freq, s1, s2, s3) — every adjacent symbol triple, weighted."""
-    syms = F.col("syms")
-    trip = F.when(
-        F.size(syms) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(syms) - 2),
-            lambda i: F.struct(
-                F.element_at(syms, i).alias("s1"),
-                F.element_at(syms, i + 1).alias("s2"),
-                F.element_at(syms, i + 2).alias("s3"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<s1:string,s2:string,s3:string>>"))
-    return words.select("freq", F.explode(trip).alias("t")).select(
-        "freq", "t.s1", "t.s2", "t.s3"
-    )
-
-
-def _created_pair_bounds(
-    words: DataFrame, cands: list[tuple[str, str]]
-) -> dict[tuple[str, str], int]:
-    """Per candidate merge (a,b): an upper bound on the count of ANY single
-    pair the merge can create.
-
-    Merging (a,b)→ab creates only pairs (x,ab) [count = #triples x,a,b]
-    and (ab,y) [count = #triples a,b,y]; quadruple self-adjacencies
-    (ab,ab) from 'a b a b' are dominated by the triple (a,b,a). So
-    max(max_x c(x,a,b), max_y c(a,b,y)) bounds every created pair — one
-    small filtered aggregation over the distinct-word table per ROUND.
-    """
-
-    def is_cand(x: F.Column, y: F.Column) -> F.Column:
-        cond = F.lit(False)
-        for a, b in cands:
-            cond = cond | ((x == F.lit(a)) & (y == F.lit(b)))
-        return cond
-
-    t = _triples(words)
-    left = (
-        t.filter(is_cand(F.col("s2"), F.col("s3")))
-        .groupBy(F.col("s2").alias("a"), F.col("s3").alias("b"), "s1")
-        .agg(F.sum("freq").alias("n"))
-    )
-    right = (
-        t.filter(is_cand(F.col("s1"), F.col("s2")))
-        .groupBy(F.col("s1").alias("a"), F.col("s2").alias("b"), "s3")
-        .agg(F.sum("freq").alias("n"))
-    )
-    rows = (
-        left.select("a", "b", "n")
-        .unionAll(right.select("a", "b", "n"))
-        .groupBy("a", "b")
-        .agg(F.max("n").alias("bound"))
-        .collect()
-    )
-    return {(r["a"], r["b"]): r["bound"] for r in rows}
-
-
-def train_bpe_batched(
-    docs: DataFrame,
-    n_merges: int,
-    *,
-    batch: int = 8,
-    text_col: str = "text",
-) -> tuple[list[Merge], DataFrame]:
-    """:func:`train_bpe` with PROVABLY-equivalent merge batching: per round,
-    the longest prefix of the (count DESC, pair ASC)-sorted pair list that
-    is safe to apply together is merged in ONE projection, collapsing
-    2·n_merges sequential Spark jobs to ~4·n_merges/batch.
-
-    A sorted-prefix p1..pm is safe (sequential argmax replay provably
-    selects exactly p1..pm in order) when, for every j:
-      1. {aj,bj} is disjoint from all earlier members' symbols AND merged
-         strings (disjoint merges commute and leave each other's counts
-         unchanged — a merge only destroys pairs sharing its symbols and
-         only creates pairs containing its new token);
-      2. nj strictly exceeds every earlier member's created-pair bound
-         (:func:`_created_pair_bounds`), so no freshly-created pair can
-         outrank pj at its replay step (strict > also settles the
-         lexicographic tiebreak);
-      3. no earlier member's merged string collides with an existing
-         corpus symbol (a collision would ADD created adjacencies to an
-         existing pair's count, voiding bound 2 — the colliding member
-         still applies, but closes its batch).
-    Everything below the prefix keeps its original count (≤ nj, sorted) or
-    only loses count, so the prefix IS the sequential trajectory. The
-    equivalence is additionally property-tested against both
-    :func:`train_bpe` and the plain-Python reference in tests/test_bpe.py.
-
-    MEASURED BOUND (sf0.1 corpus, 89 effective merges, local[32]): the
-    provably-safe prefix averages only 1.6 merges/round (histogram
-    24×1, 28×2, 3×3) — natural text has near-tied counts and
-    chain-adjacent pairs ('e'+'r' then 'er'+'s'), which violate
-    disjointness/strict-bound almost every round — while each round costs
-    3 jobs (pair count, triple bound, collision scan) vs sequential's 1.
-    Net: 52.6 s batched vs 19.2 s sequential. So batching is NOT the
-    production scale path; it is kept as the provably-safe construction.
-    The real answer at 100 TB is :func:`train_bpe_driver` below: the
-    corpus-scale stage is the one word-frequency groupBy, and the merge
-    loop runs driver-local on the compact vocabulary table.
-    """
-    words = (
-        word_frequencies(docs, text_col=text_col)
-        .select("word", "freq", _chars(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
-    )
-    merges: list[Merge] = []
-    while len(merges) < n_merges:
-        want = min(batch, n_merges - len(merges))
-        k = 2 * want + 8
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(k)
-            .collect()
-        )
-        cands = [
-            (r["a"], r["b"], r["n"]) for r in top if r["n"] > 1
-        ]
-        if not cands:
-            break
-        bounds = _created_pair_bounds(words, [(a, b) for a, b, _ in cands])
-        merged_strings = list({a + b for a, b, _ in cands})
-        colliding = {
-            r["s"]
-            for r in words.select(F.explode("syms").alias("s"))
-            .filter(F.col("s").isin(merged_strings))
-            .distinct()
-            .collect()
-        }
-        used: set[str] = set()
-        sel: list[Merge] = []
-        max_bound = 0
-        for a, b, n in cands:
-            if len(sel) >= want:
-                break
-            if used & {a, b, a + b}:
-                break  # prefix rule: stop at the first conflict, never skip
-            if sel and n <= max_bound:
-                break  # a created pair could outrank this candidate
-            sel.append((a, b))
-            if a + b in colliding:
-                break  # rule 3: colliding merge closes the batch
-            used |= {a, b, a + b}
-            max_bound = max(max_bound, bounds.get((a, b), 0))
-        if not sel:
-            break
-        merges.extend(sel)
-        syms = F.col("syms")
-        for a, b in sel:  # disjoint ⇒ fold order irrelevant; one projection
-            syms = _merge_fold(syms, a, b)
-        words = words.select("word", "freq", syms.alias("syms")).localCheckpoint(
-            eager=True
-        )
-    return merges, words
-
-
 def train_bpe_driver(
     docs: DataFrame,
     n_merges: int,
@@ -289,14 +131,16 @@ def train_bpe_driver(
 
     Why this is the 100 TB path: every distributed merge iteration costs a
     full Spark job over the word table (launch + shuffle latency dominate
-    — measured 19.2 s for 89 merges at sf0.1, and the provably-safe
-    batched variant is slower still, see :func:`train_bpe_batched`),
-    while the word table itself grows only ~O(corpus^0.7) (Heaps' law).
-    The driver loop does the same 89 merges in milliseconds; a 32K-merge
-    production vocab needs seconds, not 32K Spark jobs. ``max_words``
-    makes the driver-residency assumption explicit — beyond it (extreme
-    vocabularies: no pre-tokenization, heavy code/URL content), raise and
-    fall back to :func:`train_bpe`, which stays fully distributed.
+    — measured 19.2 s for 89 merges at sf0.1; batching merges into
+    provably-safe sorted prefixes measured slower still, 52.6 s, because
+    natural text's near-tied, chain-adjacent pairs allow only ~1.6 merges
+    per 3-job round), while the word table itself grows only
+    ~O(corpus^0.7) (Heaps' law). The driver loop does the same 89 merges
+    in milliseconds; a 32K-merge production vocab needs seconds, not 32K
+    Spark jobs. ``max_words`` makes the driver-residency assumption
+    explicit — beyond it (extreme vocabularies: no pre-tokenization,
+    heavy code/URL content) training degrades to :func:`train_bpe`, which
+    stays fully distributed and learns the same merges.
 
     Identical semantics to :func:`train_bpe` / the plain-Python reference
     in tests/test_bpe.py: pairs weighted by word frequency, argmax by
@@ -309,10 +153,7 @@ def train_bpe_driver(
     wf = word_frequencies(docs, text_col=text_col)
     rows = wf.limit(max_words + 1).collect()
     if len(rows) > max_words:
-        raise ValueError(
-            f"word-frequency table exceeds max_words={max_words}; "
-            "use train_bpe (distributed) for this corpus"
-        )
+        return train_bpe(docs, n_merges, text_col=text_col)[0]
     freq = {r["word"]: r["freq"] for r in rows}
     # Deterministic iteration order (collect order is partition-dependent).
     words = sorted(freq)

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nhl_data_pipeline_spark.operators.similarity import dot, norm
+from nhl_data_pipeline_spark.operators.similarity import dot_expr_sql, norm_expr_sql
 
 # Per-call cached-table rotation handles: each call unpersists the
 # PREVIOUS call's cached table before persisting its own, so long-lived
@@ -187,7 +187,10 @@ def semantic_neardup_pairs(
     tiny relative to centroid spacing). The global exact operator is the
     audit path for the residual."""
     assigned = kmeans(df, k, n_iter, vec=vec, id_col=id_col)[0].select(
-        "cluster_id", F.col(id_col), F.col(vec), norm(F.col(vec)).alias("nrm")
+        "cluster_id",
+        F.col(id_col),
+        F.col(vec),
+        F.expr(norm_expr_sql(vec)).alias("nrm"),
     )
     a = assigned.select(
         "cluster_id",
@@ -205,7 +208,7 @@ def semantic_neardup_pairs(
         a.join(b, "cluster_id")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cosine", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            "cosine", F.expr(f"{dot_expr_sql('va', 'vb')} / (na * nb)")
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -450,7 +453,7 @@ def semantic_neardup_pairs_lsh_blocked(
     import math
 
     if rows is None:
-        # ``n_total`` (r12): a caller that already knows the corpus row
+        # ``n_total``: a caller that already knows the corpus row
         # count (e.g. from a memoized source-identity count, the
         # ngram_lm_quality idiom) passes it and the plan builder stays
         # action-free; otherwise fall back to the column-pruned count job.

@@ -20,29 +20,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Float64 dot product of two array columns (left-to-right sum)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
 def dot_sql(a: str, b: str) -> str:
     return (
         f"list_sum(list_transform(list_zip({a}, {b}),"
         f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
     )
 
 
@@ -53,15 +34,10 @@ def norm_sql(a: str) -> str:
     )
 
 
-# Spark-SQL text twins of dot/norm (r12 chatter pass, guide §4): the
-# Python-lambda HOF builds above cost ~10 py4j round trips per call plus
-# matching GC detach traffic; these render the IDENTICAL expression tree
-# (zip_with/transform + left-fold aggregate, same casts, same 0.0 seed —
-# only the lambda-variable names differ, which plan fingerprints ignore)
-# as one parsed string. dot_sql/norm_sql above stay the DuckDB twins.
-
-
 def dot_expr_sql(a: str, b: str) -> str:
+    """Float64 dot product of two array expressions, summed left to right,
+    as one Spark-SQL string (a Column-API build of the same fold costs ~10
+    py4j round trips). :func:`dot_sql` is the DuckDB twin."""
     return (
         f"aggregate(zip_with({a}, {b},"
         f" (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -70,6 +46,8 @@ def dot_expr_sql(a: str, b: str) -> str:
 
 
 def norm_expr_sql(a: str) -> str:
+    """L2 norm of an array expression, the same left fold under sqrt.
+    :func:`norm_sql` is the DuckDB twin."""
     return (
         f"sqrt(aggregate(transform({a},"
         f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
@@ -141,7 +119,7 @@ def cosine_allpairs_numpy(
     batch scores batch×n pairs at C speed and emits only survivors, with
     the id< guard dropping mirrored/self pairs.
 
-    Parallelism (r7): the streamed side is hash-REPARTITIONED across the
+    Parallelism: the streamed side is hash-REPARTITIONED across the
     session's cores and scored in ≤1024-row chunks — the sf1 lake is one
     parquet file, so without the exchange ONE python worker scored all
     20K×20K pairs through a 3.2 GB-per-dimension-pass intermediate

@@ -1,12 +1,16 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-Language-ID (stopword-hit heuristic), quality scoring, token counting, and
-document fingerprinting — all as JVM-side column expressions (split /
-higher-order array functions), no Python UDFs, so they stay inside
-whole-stage codegen and scale linearly with input bytes.
+Language-ID (stopword-hit heuristic), quality scoring, token counting, the
+Gopher rule battery, repetition signals, PII redaction and document
+fingerprinting — all as JVM-side expressions (split / higher-order array
+functions), no Python UDFs, so they stay inside whole-stage codegen and
+scale linearly with input bytes.
 
-Column-expression builders return pyspark Columns; each has a matching
-DuckDB SQL fragment builder (suffix ``_sql``) used by the oracle strings.
+Each rule has ONE Spark form — a Column builder, or a Spark-SQL string
+(suffix ``_spark_sql``) where the plans pass it to ``selectExpr`` — and
+one hand-written DuckDB twin (suffix ``_sql``) used by the oracle
+strings. The twin is never generated from the Spark form, so parity
+checks two independent renderings of the same policy constants.
 """
 
 from __future__ import annotations
@@ -45,24 +49,14 @@ def _in_list_sql(items: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in items)
 
 
-def hits_in_tokens(toks: Column, words: tuple[str, ...]) -> Column:
-    """Count of tokens (from a pre-tokenized array) in the stopword list."""
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-
-# --- Spark-SQL string forms (py4j cost) ----------------------------------
+# --- Spark-SQL string forms ----------------------------------------------
 #
-# Building these expressions through the Column API costs hundreds of py4j
-# round-trips EACH (measured: one hits_in_tokens 53, the lang-ID CASE
-# chain 766, the gopher battery 771 — at ~0.13 ms/trip that is most of
-# text_profile's 0.47 s plan-build time, re-paid inside every timed bench
-# rep). Each form renders its expression to one SQL string, which
-# crosses the boundary in a single F.expr/selectExpr call. Where a Column
-# form exists too, both build the SAME expression tree from the same
-# constants, so the policy (stopword lists, weights, thresholds) cannot
-# diverge. Float literals carry the D suffix: bare `0.4` parses as
-# DECIMAL(1,1) in Spark SQL, while the Column forms build double literals.
+# The token-array rules are Spark-SQL strings, not Column builders: a
+# Column-API build of the same expression costs one py4j round trip per
+# node (53 for one stopword-hit count, ~770 each for the lang-ID CASE
+# chain and the gopher battery), while a string crosses the boundary in a
+# single F.expr/selectExpr call. Float literals carry the D suffix: bare
+# `0.4` parses as DECIMAL(1,1) in Spark SQL.
 
 
 def _array_lit_spark_sql(words: tuple[str, ...]) -> str:
@@ -71,7 +65,8 @@ def _array_lit_spark_sql(words: tuple[str, ...]) -> str:
 
 
 def hits_in_tokens_spark_sql(toks_sql: str, words: tuple[str, ...]) -> str:
-    """One-round-trip twin of :func:`hits_in_tokens`."""
+    """Count of tokens of the array ``toks_sql`` that are in ``words``
+    (with repeats)."""
     arr = _array_lit_spark_sql(words)
     return f"size(filter({toks_sql}, t -> array_contains({arr}, t)))"
 
@@ -101,9 +96,11 @@ def lang_id_from_hits_spark_sql(hits_sql: dict[str, str]) -> str:
 
 
 def quality_from_counts_spark_sql(n_sql: str, stop_sql: str, nu_sql: str) -> str:
-    """One-round-trip twin of :func:`quality_from_counts` (same 0.4/0.3/0.3
-    policy constants; weight changes must edit both forms — the parity
-    suite catches a one-sided edit)."""
+    """Deterministic quality heuristic over precomputed counts (tokens,
+    stopword hits, distinct tokens): length richness + non-stopword mass
+    + lexical diversity, weighted 0.4/0.3/0.3 (illustrative policy). The
+    DuckDB twin is :func:`quality_score_sql`; a weight change must edit
+    both, and the parity suite catches a one-sided edit."""
     nd = f"CAST({n_sql} AS DOUBLE)"
     return (
         f"0.4D * least({nd} / 50.0D, 1.0D)"
@@ -113,11 +110,13 @@ def quality_from_counts_spark_sql(n_sql: str, stop_sql: str, nu_sql: str) -> str
 
 
 def gopher_pass_spark_sql(toks_sql: str) -> str:
-    """One-round-trip twin of ``gopher_flags_from_tokens(t)["pass_gopher"]``
-    — just the conjunction (the optimizer prunes the struct to this same
-    expression when only the pass flag is selected)."""
+    """Gopher pass flag over a token array: the conjunction of the five
+    rules whose per-rule fields :func:`gopher_flags_sql` (the DuckDB twin)
+    reports."""
     n = f"size({toks_sql})"
     nd = f"CAST({n} AS DOUBLE)"
+    # mean word length from token lengths (length(text)/n would miscount
+    # separator runs)
     tok_chars = (
         f"aggregate(transform({toks_sql}, w -> length(w)), 0, (a, v) -> a + v)"
     )
@@ -142,16 +141,12 @@ def gopher_pass_spark_sql(toks_sql: str) -> str:
 
 
 def bigrams_of_tokens_spark_sql(toks_sql: str) -> str:
-    """One-round-trip twin of :func:`bigrams_of_tokens`."""
+    """Token 2-grams of the array ``toks_sql`` as 'tok_i tok_i+1' strings,
+    built with array HOFs — no explode, no shuffle, a per-row expression."""
     return (
         f"transform(slice({toks_sql}, 1, greatest(size({toks_sql}) - 1, 0)),"
         f" (x, i) -> concat(x, ' ', element_at({toks_sql}, i + 2)))"
     )
-
-
-def stopword_hits(col: Column | str, words: tuple[str, ...]) -> Column:
-    """Count of tokens that are in the given stopword list (with repeats)."""
-    return hits_in_tokens(tokens(col), words)
 
 
 def stopword_hits_sql(text_expr: str, words: tuple[str, ...]) -> str:
@@ -176,34 +171,6 @@ def lang_id_sql(text_expr: str) -> str:
     return sql
 
 
-def quality_from_counts(
-    n_tokens: Column, stop_hits: Column, n_unique: Column
-) -> Column:
-    """The quality formula over precomputed counts — the ONE place the
-    0.4/0.3/0.3 policy lives. Both the per-column form below and the
-    materialized-count projections in plans/q_text.py call this, so a
-    weight change cannot silently diverge the oracle-checked copies."""
-    n = n_tokens.cast("double")
-    return (
-        0.4 * F.least(n / 50.0, F.lit(1.0))
-        + 0.3 * (1.0 - stop_hits.cast("double") / n)
-        + 0.3 * (n_unique.cast("double") / n_tokens)
-    )
-
-
-def quality_score(col: Column | str) -> Column:
-    """Deterministic quality heuristic: length richness + non-stopword mass
-    + lexical diversity. Analog of length/punct/stopword-ratio scoring in
-    training-data curation; weights are illustrative policy.
-    """
-    t = tokens(col)
-    return quality_from_counts(
-        F.size(t),
-        stopword_hits(col, ALL_STOPWORDS),
-        F.size(F.array_distinct(t)),
-    )
-
-
 def quality_score_sql(text_expr: str) -> str:
     toks = f"string_split_regex({text_expr}, '\\s+')"
     n = f"CAST(len({toks}) AS DOUBLE)"
@@ -226,26 +193,12 @@ def fingerprint_sql(text_expr: str) -> str:
     return f"md5(lower(trim(regexp_replace({text_expr}, '\\s+', ' ', 'g'))))"
 
 
-def bigrams_of_tokens(t: Column) -> Column:
-    """Token 2-grams from a pre-tokenized array — per-row HOF expression."""
-    return F.transform(
-        F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-        lambda x, i: F.concat(x, F.lit(" "), F.element_at(t, i + F.lit(2))),
-    )
-
-
-def bigrams(col: Column | str) -> Column:
-    """Token 2-grams as 'tok_i tok_i+1' strings, built with array HOFs —
-    no explode, no shuffle, stays a per-row expression."""
-    return bigrams_of_tokens(tokens(col))
-
-
-def repetition_agg(df, id_col: str = "doc_id", text_col: str = "text",
-                   tokens_col: str | None = None):
-    """Gopher-style repetition signals per doc: (id, n_bigrams,
-    top_bigram_n, dup_bigram_mass). top_bigram_n = occurrences of the most
-    frequent bigram; dup_bigram_mass = total occurrences of bigrams seen
-    more than once (Rae et al. 2021 §A1.1, on token counts).
+def repetition_agg(df, tokens_col: str, id_col: str = "doc_id"):
+    """Gopher-style repetition signals per doc over the token array
+    ``tokens_col``: (id, n_bigrams, top_bigram_n, dup_bigram_mass).
+    top_bigram_n = occurrences of the most frequent bigram;
+    dup_bigram_mass = total occurrences of bigrams seen more than once
+    (Rae et al. 2021 §A1.1, on token counts).
 
     No zero-fill: docs whose text has no bigrams are absent (left-join +
     coalesce at the call site). Explode → two hash aggregates keyed
@@ -254,21 +207,13 @@ def repetition_agg(df, id_col: str = "doc_id", text_col: str = "text",
     accumulator was ~20× slower even on short docs (10.7 s vs ~0.5 s for
     5000 ~50-token docs at sf0.1).
     """
-    # tokens_col path: the bigram HOF as ONE expr string (the Column
-    # form costs ~870 py4j round-trips per build, see the *_spark_sql
-    # forms above). text_col path keeps the Column form: its
-    # regex pattern would need escaping games inside a SQL literal.
-    bg = (
-        F.expr(bigrams_of_tokens_spark_sql(tokens_col))
-        if tokens_col is not None
-        else bigrams(F.col(text_col))
-    )
+    bg = F.expr(bigrams_of_tokens_spark_sql(tokens_col))
     per_bg = (
         df.select(id_col, F.explode(bg).alias("bg"))
         .groupBy(id_col, "bg")
         .agg(F.expr("count(1)").alias("c"))
     )
-    # Aggregates as parsed SQL strings: one py4j trip each, same trees.
+    # Aggregates as parsed SQL strings: one py4j trip each.
     return per_bg.groupBy(id_col).agg(
         F.expr("CAST(sum(c) AS BIGINT)").alias("n_bigrams"),
         F.expr("CAST(max(c) AS BIGINT)").alias("top_bigram_n"),
@@ -373,7 +318,8 @@ def pii_hits_sql(text_expr: str) -> str:
 # Gopher-style rule battery (Rae et al. 2021, "Scaling Language Models",
 # table A1 — thresholds adapted): hard per-document filters that run BEFORE
 # model-based quality scoring in a pretraining pipeline. Every rule is a
-# pure codegen expression over one tokenization, with a DuckDB SQL twin.
+# pure codegen expression over one tokenization (:func:`gopher_pass_spark_sql`),
+# with a per-rule DuckDB SQL twin (:func:`gopher_flags_sql`).
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
 GOPHER_MIN_MEAN_WORD_LEN = 3.0
@@ -383,59 +329,11 @@ GOPHER_MIN_ALPHA_WORD_FRAC = 0.8  # words containing >= 1 alphabetic char
 GOPHER_MIN_DISTINCT_STOPWORDS = 2
 
 
-def gopher_flags(col: Column | str) -> Column:
-    """Struct of per-rule booleans + the overall pass flag.
-
-    Fields: word_count_ok, mean_word_len_ok, symbol_ratio_ok,
-    alpha_frac_ok, stopwords_ok, pass_gopher. One tokenize per row; every
-    rule derives from the same array (materialize the struct in its own
-    projection when composing, same pattern as the profile query).
-    """
-    return gopher_flags_from_tokens(tokens(col))
-
-
-def gopher_flags_from_tokens(t: Column) -> Column:
-    """Same battery over a pre-tokenized array (composition form: the
-    profile query feeds its materialized single-tokenize column)."""
-    n = F.size(t)
-    nd = n.cast("double")
-    # mean word length from token lengths (length(text)/n would miscount
-    # separator runs)
-    tok_chars = F.aggregate(
-        F.transform(t, lambda w: F.length(w)),
-        F.lit(0),
-        lambda a, v: a + v,
-    )
-    mean_len = tok_chars.cast("double") / nd
-    symbols = F.size(F.filter(t, lambda w: w.contains("#"))) + F.size(
-        F.filter(t, lambda w: w.contains("..."))
-    )
-    alpha = F.size(F.filter(t, lambda w: w.rlike("[A-Za-z]")))
-    stop_arr = F.array(*[F.lit(w) for w in ALL_STOPWORDS])
-    distinct_stops = F.size(
-        F.array_distinct(F.filter(t, lambda w: F.array_contains(stop_arr, w)))
-    )
-    word_count_ok = (n >= GOPHER_MIN_WORDS) & (n <= GOPHER_MAX_WORDS)
-    mean_len_ok = (mean_len >= GOPHER_MIN_MEAN_WORD_LEN) & (
-        mean_len <= GOPHER_MAX_MEAN_WORD_LEN
-    )
-    symbol_ok = symbols.cast("double") / nd <= GOPHER_MAX_SYMBOL_RATIO
-    alpha_ok = alpha.cast("double") / nd >= GOPHER_MIN_ALPHA_WORD_FRAC
-    stops_ok = distinct_stops >= GOPHER_MIN_DISTINCT_STOPWORDS
-    return F.struct(
-        word_count_ok.alias("word_count_ok"),
-        mean_len_ok.alias("mean_word_len_ok"),
-        symbol_ok.alias("symbol_ratio_ok"),
-        alpha_ok.alias("alpha_frac_ok"),
-        stops_ok.alias("stopwords_ok"),
-        (word_count_ok & mean_len_ok & symbol_ok & alpha_ok & stops_ok).alias(
-            "pass_gopher"
-        ),
-    )
-
-
 def gopher_flags_sql(text_expr: str) -> str:
-    """DuckDB twin of :func:`gopher_flags` as a struct_pack expression."""
+    """DuckDB struct_pack of the per-rule Gopher flags — word_count_ok,
+    mean_word_len_ok, symbol_ratio_ok, alpha_frac_ok, stopwords_ok — and
+    their conjunction pass_gopher, the twin of
+    :func:`gopher_pass_spark_sql`."""
     t = f"string_split_regex({text_expr}, '\\s+')"
     n = f"len({t})"
     nd = f"CAST({n} AS DOUBLE)"

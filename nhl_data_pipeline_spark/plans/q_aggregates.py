@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from nhl_data_pipeline_spark.catalog import load_table, tune_scan_splits
 from nhl_data_pipeline_spark.functions.scalars import (
     dec,
-    dsum_double,
     dsum_double_sql,
 )
 from nhl_data_pipeline_spark.plans.registry import query
@@ -61,7 +60,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flipped order, and keeping it byte-stable keeps the committed plan
     # captures diff-clean (values are identical either way).
     charge = f"{disc_price} * (l_tax + 1)"
-    # r12 narrow-decimal sums (guide §2.2; see scalars.dec): l_quantity
+    # Narrow-decimal sums (see scalars.dec): l_quantity
     # (integer-valued, ≤ 50 by the TPC-H data contract) and l_discount
     # (≤ 0.10, 2 dp) fit precision-8 decimals, so their SUMs compile to
     # unscaled-LONG adds via DecimalAggregates instead of Decimal128
@@ -74,8 +73,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
-        # Measures rendered as SQL text (r12 chatter pass — identical cast
-        # chains, one py4j round trip per measure; see scalars.dsum_double_sql).
+        # Measures rendered as SQL text: one py4j round trip per measure
+        # (see scalars.dsum_double_sql).
         .agg(
             F.expr(dsum_double_sql("l_quantity", 2, prec=8)).alias("sum_qty"),
             F.expr(dsum_double_sql("l_extendedprice")).alias("sum_base_price"),
@@ -219,7 +218,7 @@ def having_min_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately (SURVEY §3.2 — analyst SQL must run unchanged): Spark
     honors ordinals via spark.sql.groupByOrdinal (default on) and places
     the HAVING filter after the aggregate. The decimal-exact sum uses the
-    same string-bridge idiom as functions.scalars.dsum_double.
+    same string-bridge idiom as functions.scalars.dsum_double_sql.
     """
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
     hav = spark.sql(
@@ -437,7 +436,7 @@ def profiling_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            dsum_double("o_totalprice").alias("total"),
+            F.expr(dsum_double_sql("o_totalprice")).alias("total"),
         )
         .select(
             F.lit("cube").alias("op"),
@@ -455,7 +454,7 @@ def profiling_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builtin: Spark `percentile` and DuckDB `quantile_cont` implement the
     # same definition with differently-ordered float ops, and at sf1
     # (1M events) the p99 interpolation drifted 1 ulp between them
-    # (caught by the r6 sf1 parity sweep; bit-equal held through sf0.1).
+    # (caught by an sf1 parity sweep; bit-equal held through sf0.1).
     # Here BOTH engines evaluate the identical expression tree —
     # pos = p·(n−1); k = floor(pos); lo/hi = values at rank k+1/k+2;
     # lo + (coalesce(hi, lo) − lo)·(pos − k) — so every IEEE op matches

@@ -21,7 +21,6 @@ from pyspark.sql.window import Window
 
 from nhl_data_pipeline_spark.catalog import load_table, tune_scan_splits
 from nhl_data_pipeline_spark.functions.scalars import (
-    dsum_double,
     dsum_double_sql,
     split_part,
 )
@@ -54,7 +53,7 @@ def broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
-        # Measures as SQL text (r12 chatter pass) — identical expressions.
+        # Measures as SQL text: one py4j round trip each.
         .agg(
             F.expr(
                 dsum_double_sql("l_extendedprice * (1 - l_discount)")
@@ -102,10 +101,10 @@ def composite_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     if w:
         li = li.repartition(w, F.col("l_orderkey"), F.col("l_suppkey"))
     grp = li.groupBy("l_orderkey", "l_suppkey").agg(
-        # Narrow-decimal sum (r12, see pricing_summary's bound note):
+        # Narrow-decimal sum (see pricing_summary's bound note):
         # per-(order,supp) qty sums are ≤ 7 lines × 50, far inside
         # decimal(18,2) at any scale.
-        dsum_double("l_quantity", 2, prec=8).alias("grp_qty"),
+        F.expr(dsum_double_sql("l_quantity", 2, prec=8)).alias("grp_qty"),
         F.count(F.lit(1)).alias("grp_lines"),
     )
     return li.join(grp, ["l_orderkey", "l_suppkey"]).select(
@@ -513,7 +512,7 @@ def self_compare_filtered_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "click")
         .groupBy("user_id")
         .agg(
-            dsum_double("value").alias("click_value"),
+            F.expr(dsum_double_sql("value")).alias("click_value"),
             F.count(F.lit(1)).alias("n_clicks"),
         )
     )
@@ -521,7 +520,7 @@ def self_compare_filtered_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(
-            dsum_double("value").alias("purchase_value"),
+            F.expr(dsum_double_sql("value")).alias("purchase_value"),
             F.count(F.lit(1)).alias("n_purchases"),
         )
     )

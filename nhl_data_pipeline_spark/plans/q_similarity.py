@@ -16,7 +16,7 @@ from nhl_data_pipeline_spark.catalog import load_table
 from nhl_data_pipeline_spark.operators.similarity import (
     cosine_allpairs_numpy,
     cosine_topk,
-    dot,
+    dot_expr_sql,
     dot_sql,
     hyperplane_band_buckets,
     hyperplane_band_buckets_sql,
@@ -150,8 +150,8 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = normed.filter(F.col("vec_id") >= _N_QUERIES)
     qv = normed.filter(F.col("vec_id") < _N_QUERIES)
 
-    cos_cc = dot(F.col("cent_vec"), F.col("embedding")) / (
-        F.col("cent_nrm") * F.col("nrm")
+    cos_cc = F.expr(
+        f"{dot_expr_sql('cent_vec', 'embedding')} / (cent_nrm * nrm)"
     )
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.desc("sim"), F.asc("centroid_id")
@@ -181,7 +181,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(q_side), "query_id")
         .withColumn(
             "cosine",
-            dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")),
+            F.expr(f"{dot_expr_sql('q_vec', 'embedding')} / (q_nrm * nrm)"),
         )
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
     )
@@ -350,8 +350,8 @@ def _kmeans_lsh_scale_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup density, not n²; recall audited in tests/test_kmeans.py).
 
     The corpus row count feeding the adaptive LSH band width is memoized
-    per source identity (path, size, mtime — the ngram_lm_quality idiom,
-    r12) so repeat plan constructions skip the count job; a rewritten
+    per source identity (path, size, mtime — the ngram_lm_quality idiom)
+    so repeat plan constructions skip the count job; a rewritten
     lake file invalidates the entry."""
     import os
 

@@ -48,9 +48,8 @@ def _lang_quality_scored(
     ``n_removed``) doesn't need a second join back onto its own subtree
     to recover them (that join re-evaluated the whole
     strip-frequent-lines branch a second time)."""
-    # Expression trees as one-round-trip SQL strings (r12, guide §5 —
-    # the Column-API forms cost ~2,000 py4j round-trips per build here;
-    # the *_spark_sql twins render the same expressions in a handful).
+    # The rules are Spark-SQL strings (operators.text *_spark_sql): one
+    # py4j round trip each, where Column-API builds cost ~2,000 here.
     counted = d.select(
         "doc_id", *passthrough, X.tokens(F.col("text")).alias("_toks")
     ).selectExpr(
@@ -122,11 +121,10 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("text_len"),
         X.tokens(F.col("text")).alias("_toks"),
     )
-    # Signal expressions as one-round-trip SQL strings (r12, guide §5):
-    # the Column-API forms of the stopword-hit battery, the gopher
-    # conjunction and the lang-ID CASE chain cost ~3,200 py4j round-trips
-    # per build (~0.42 s re-paid inside every timed rep); the *_spark_sql
-    # twins render the identical expressions in a handful of calls.
+    # The stopword-hit battery, the gopher conjunction and the lang-ID
+    # CASE chain are Spark-SQL strings (operators.text *_spark_sql): a
+    # handful of py4j calls per build, where Column-API builds cost
+    # ~3,200 round trips (~0.42 s re-paid inside every timed rep).
     counted = toked.selectExpr(
         "doc_id", "n_chars", "lang", "text_len",
         "size(_toks) AS n_tokens",
@@ -1078,16 +1076,14 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").alias("stratum"),
         "sample_key",
     )
-    qrate = F.least(
-        F.lit(1.0), F.greatest(F.lit(0.0), X.quality_score(F.col("text")))
-    )
     soft = (
-        d.select(
+        _lang_quality_scored(d, passthrough=("lang",))
+        .select(
             F.lit("quality_weighted").alias("mode"),
             "doc_id",
             F.col("lang").alias("stratum"),
             MX.sample_key("doc_id").alias("sample_key"),
-            qrate.alias("_rate"),
+            F.expr("least(1.0D, greatest(0.0D, quality))").alias("_rate"),
         )
         .filter(
             (F.col("_rate") >= 1.0)

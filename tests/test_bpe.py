@@ -83,9 +83,26 @@ def test_train_bpe_driver_matches_reference(spark, corpus):
     assert got == want_merges and len(got) > 0
 
 
-def test_train_bpe_driver_max_words_guard(spark, corpus):
-    with pytest.raises(ValueError, match="max_words"):
-        bpe.train_bpe_driver(corpus, N_MERGES, max_words=3)
+def test_train_bpe_driver_max_words_guard(spark, corpus, monkeypatch):
+    """Past ``max_words`` the driver-local loop does not run: training
+    degrades to the distributed trainer, which learns the same merges."""
+    wf = {
+        r["word"]: r["freq"]
+        for r in bpe.word_frequencies(corpus).collect()
+    }
+    assert len(wf) > 3
+    want_merges, _ = _py_bpe(wf, N_MERGES)
+    calls = []
+    distributed = bpe.train_bpe
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return distributed(*args, **kwargs)
+
+    monkeypatch.setattr(bpe, "train_bpe", counting)
+    got = bpe.train_bpe_driver(corpus, N_MERGES, max_words=3)
+    assert got == want_merges and len(got) > 0
+    assert len(calls) == 1
 
 
 def test_encode_reproduces_training_segmentation(spark, corpus):
@@ -198,70 +215,3 @@ def test_vocabulary_covers_all_symbols(spark, corpus):
     segs = [s for r in words.collect() for s in r["syms"]]
     assert set(segs) == vocab
     assert any(len(t) > 1 for t in vocab)  # merges actually happened
-
-
-def test_train_bpe_batched_equals_sequential_on_corpus(spark, corpus):
-    """The batched trainer's safe-prefix rule must reproduce the sequential
-    merge trajectory exactly — merge list AND final segmentation — while
-    running ~batch× fewer merge rounds."""
-    want_merges, want_words = bpe.train_bpe(corpus, N_MERGES)
-    got_merges, got_words = bpe.train_bpe_batched(corpus, N_MERGES, batch=6)
-    assert got_merges == want_merges
-    want_segs = {r["word"]: list(r["syms"]) for r in want_words.collect()}
-    got_segs = {r["word"]: list(r["syms"]) for r in got_words.collect()}
-    assert got_segs == want_segs
-
-
-def test_train_bpe_batched_actually_batches(spark, corpus):
-    """Sublinearity evidence: the batched trainer must need strictly fewer
-    pair-count rounds than merges learned (i.e., at least one round
-    applied >1 merge) on the real corpus."""
-    rounds = 0
-    orig = bpe._pair_counts
-
-    def counting(words):
-        nonlocal rounds
-        rounds += 1
-        return orig(words)
-
-    bpe._pair_counts = counting
-    try:
-        merges, _ = bpe.train_bpe_batched(corpus, N_MERGES, batch=6)
-    finally:
-        bpe._pair_counts = orig
-    # train_bpe would have used exactly len(merges) pair-count jobs (+1 for
-    # the stop probe); batching must beat that.
-    assert len(merges) == N_MERGES
-    assert rounds < len(merges)
-
-
-try:
-    from hypothesis import given, settings, strategies as st  # noqa: F811
-
-    @settings(max_examples=3, deadline=None)
-    @given(st.lists(st.lists(_WORD, min_size=1, max_size=8), min_size=2, max_size=10))
-    def test_train_bpe_batched_matches_sequential_on_random_corpora(
-        spark, docs_words
-    ):
-        """Adversarial regime for the safe-prefix rule: a 4-letter alphabet
-        maximizes symbol collisions, merged-string collisions ('ab' both a
-        merge result and a pre-existing symbol is impossible here, but
-        created-pair interference is rampant), so batches shrink to 1
-        where needed — output must still be EXACTLY the sequential/Python
-        trajectory."""
-        rows = [(i, " ".join(ws)) for i, ws in enumerate(docs_words)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got_merges, got_words = bpe.train_bpe_batched(df, 6, batch=4)
-
-        wf: dict[str, int] = {}
-        for _, text in rows:
-            for w in text.split(" "):
-                if w:
-                    wf[w] = wf.get(w, 0) + 1
-        want_merges, want_segs = _py_bpe(wf, 6)
-        assert got_merges == want_merges
-        got_segs = {r["word"]: list(r["syms"]) for r in got_words.collect()}
-        assert got_segs == want_segs
-
-except ImportError:  # pragma: no cover
-    pass

@@ -1,11 +1,11 @@
-"""r12 chatter pass: the SQL-string renderings must be the SAME
-expressions as the Column-API forms they replaced.
+"""Spark-SQL string forms vs the Column-API expressions they stand for.
 
-Each test rebuilds the LEGACY Column expression inline (the pre-r12
-body, kept here as the executable spec) and pins the rendered twin
-bit-identical on data AND structurally identical in the analyzed plan
-(ignoring auto-generated lambda-variable names / expression ids), so a
-future edit to a twin cannot silently drift from the policy constants.
+The plans build these expressions as SQL strings (one py4j round trip
+each). Each test rebuilds the Column-API form inline, as the executable
+spec, and pins the string form bit-identical on data and, where the
+trees must match, structurally identical in the analyzed plan (ignoring
+auto-generated lambda-variable names / expression ids), so an edit to a
+string form cannot silently drift from the policy it renders.
 """
 
 from __future__ import annotations
@@ -23,15 +23,15 @@ def _norm_plan(df) -> str:
 
 
 def test_dsum_double_sql_matches_column_form(spark):
-    from nhl_data_pipeline_spark.functions.scalars import (
-        dsum_double,
-        dsum_double_sql,
-    )
+    from nhl_data_pipeline_spark.functions.scalars import dec, dsum_double_sql
 
     df = spark.range(100).selectExpr(
         "CAST(id AS DOUBLE) / 7 AS v", "id % 3 AS g"
     )
-    legacy = df.groupBy("g").agg(dsum_double("v").alias("s"))
+    # Column form: exact decimal sum → string → double.
+    legacy = df.groupBy("g").agg(
+        F.sum(dec("v")).cast("string").cast("double").alias("s")
+    )
     twin = df.groupBy("g").agg(F.expr(dsum_double_sql("v")).alias("s"))
     assert _norm_plan(legacy) == _norm_plan(twin)
     assert sorted(map(tuple, legacy.collect())) == sorted(
@@ -41,9 +41,7 @@ def test_dsum_double_sql_matches_column_form(spark):
 
 def test_dot_norm_expr_sql_bitwise(spark):
     from nhl_data_pipeline_spark.operators.similarity import (
-        dot,
         dot_expr_sql,
-        norm,
         norm_expr_sql,
     )
 
@@ -51,20 +49,33 @@ def test_dot_norm_expr_sql_bitwise(spark):
         "transform(sequence(1, 8), i -> CAST(id * i AS DOUBLE) / 9.7) AS a",
         "transform(sequence(1, 8), i -> CAST(id + i AS DOUBLE) / 3.1) AS b",
     )
-    legacy = df.select(
-        dot(F.col("a"), F.col("b")).alias("d"), norm(F.col("a")).alias("n")
+    # Column form: float64 products folded left to right from 0.0.
+    a, b = F.col("a"), F.col("b")
+    dot_col = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0).cast("double"),
+        lambda acc, v: acc + v,
     )
+    norm_col = F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0).cast("double"),
+            lambda acc, v: acc + v,
+        )
+    )
+    legacy = df.select(dot_col.alias("d"), norm_col.alias("n"))
     twin = df.select(
         F.expr(dot_expr_sql("a", "b")).alias("d"),
         F.expr(norm_expr_sql("a")).alias("n"),
     )
+    assert _norm_plan(legacy) == _norm_plan(twin)
     for lr, tr in zip(legacy.collect(), twin.collect()):
         # Bitwise: the fold order and casts are identical.
         assert lr["d"] == tr["d"] and lr["n"] == tr["n"]
 
 
 def test_minhash_battery_matches_legacy_columns(spark):
-    # Legacy pre-r12 battery from dedup.lsh_band_table, inline.
+    # Column form of the dedup.lsh_band_table MinHash battery.
     df = spark.range(30).selectExpr(
         "id AS doc_id",
         "transform(sequence(1, 5), i -> concat('tok', CAST(id * i AS STRING))) AS _sh",
@@ -101,7 +112,7 @@ def test_adc_dist_column_matches_legacy(spark):
         "id AS vec_id",
         f"transform(sequence(1, {m}), i -> CAST(id % {ksub} AS INT)) AS pq_code",
     )
-    # Legacy pre-r12 Column build, inline.
+    # Column form of the ADC lookup-table sum.
     dist = None
     for j in range(m):
         q_sub = query[j * sub : (j + 1) * sub]

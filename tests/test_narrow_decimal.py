@@ -1,4 +1,4 @@
-"""r12: narrow-decimal sums (scalars.dec prec= / dsum_double prec=).
+"""Narrow-decimal sums (scalars.dec prec= / dsum_double_sql prec=).
 
 The optimization contract: passing prec<=8 turns SUM(decimal(p,s)) into
 Catalyst's unscaled-LONG rewrite (DecimalAggregates — MakeDecimal over a
@@ -15,12 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nhl_data_pipeline_spark.functions.scalars import dec, dsum_double
+from nhl_data_pipeline_spark.functions.scalars import dec, dsum_double_sql
 
 
 def _sum(spark, values, **kw) -> tuple[float, str]:
     df = spark.createDataFrame([(float(v),) for v in values], "v double")
-    row = df.agg(dsum_double("v", **kw).alias("s")).collect()[0]
+    row = df.agg(F.expr(dsum_double_sql("v", **kw)).alias("s")).collect()[0]
     plan = df.agg(F.sum(dec("v", **kw)).alias("s"))._jdf.queryExecution().executedPlan().toString()
     return row["s"], plan
 

@@ -97,6 +97,44 @@ def test_completed_filter_in_silver_not_staging(models):
     assert models["fact_game_results"].count() == n_off
 
 
+def test_schedule_latest_snapshot_breaks_ingest_ts_ties_by_s3_key(spark):
+    """The latest schedule snapshot is ORDER BY ingest_ts DESC, s3_key DESC
+    LIMIT 1, planned as a per-partition top-1 (no unpartitioned window)."""
+    import json
+
+    from nhl_data_pipeline_spark.nhl.staging import stg_schedule_games
+
+    def snap(game_id, s3_key, ingest_ts):
+        game = {
+            "id": game_id,
+            "gameState": "FUT",
+            "gameType": 2,
+            "startTimeUTC": "2024-11-14T00:00:00Z",
+            "homeTeam": {"id": 1, "abbrev": "BOS"},
+            "awayTeam": {"id": 2, "abbrev": "TOR"},
+        }
+        payload = {"gameWeek": [{"date": "2024-11-14", "games": [game]}]}
+        return (json.dumps(payload), s3_key, ingest_ts)
+
+    raw = (
+        spark.createDataFrame(
+            [
+                snap(1, "raw/schedule/z_older.json", "2024-11-13 10:00:00"),
+                snap(2, "raw/schedule/a_tie.json", "2024-11-14 10:00:00"),
+                snap(3, "raw/schedule/b_tie.json", "2024-11-14 10:00:00"),
+            ],
+            "payload string, s3_key string, ingest_ts string",
+        )
+        .withColumn("ingest_ts", F.to_timestamp("ingest_ts"))
+        .repartition(3)
+    )
+    out = stg_schedule_games(raw)
+    assert [r["game_id"] for r in out.select("game_id").collect()] == [3]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+
+
 def test_null_player_rows_dropped(models):
     assert models["stg_player_game_stats"].filter("player_id IS NULL").count() == 0
     assert models["stg_player_game_stats"].count() > 0

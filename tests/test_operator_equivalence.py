@@ -93,7 +93,7 @@ def test_cosine_allpairs_numpy_bit_equals_jvm_fold(spark):
                  F.col("nrm").alias("na"))
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"),
                  F.col("nrm").alias("nb"))
-    cos = S.dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(f"{S.dot_expr_sql('ea', 'eb')} / (na * nb)")
     ref = {
         (r["vec_a"], r["vec_b"]): r["cosine"]
         for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -135,8 +135,8 @@ def _brute_bigram_stats(text: str) -> tuple[int, int, int]:
 
 
 def test_repetition_stats_match_bruteforce(spark):
-    """repetition_agg from raw text and from a pre-split tokens column
-    both equal a Python brute force; docs with no bigrams produce no row."""
+    """repetition_agg over a pre-split tokens column equals a Python brute
+    force; docs with no bigrams produce no row."""
     from nhl_data_pipeline_spark.operators import text as X
 
     rng = random.Random(11)
@@ -165,7 +165,6 @@ def test_repetition_stats_match_bruteforce(spark):
     def stats(agg):
         return {r[0]: tuple(r[1:]) for r in agg.select(*cols).collect()}
 
-    assert stats(X.repetition_agg(df)) == want
     toks = df.select("doc_id", X.tokens("text").alias("toks"))
     assert stats(X.repetition_agg(toks, tokens_col="toks")) == want
 

@@ -31,14 +31,6 @@ KEEP = {
     "_demo_weight_sql": "weight rule of demo_weights and classifier_score_sql",
     "_hex6_int_sql": "hex decoder of _demo_weight_sql",
     "classifier_score_sql": "DuckDB twin of the classifier score",
-    # code whose tests still need rework
-    "train_bpe": "named fallback of train_bpe_driver; the encode tests train with it",
-    "train_bpe_batched": "batched trainer checked against train_bpe",
-    "_pair_counts": "pair counter of both BPE trainers",
-    "_triples": "helper of _created_pair_bounds",
-    "_created_pair_bounds": "helper of train_bpe_batched",
-    "gopher_flags": "per-rule Gopher flags the rule tests assert on",
-    "gopher_flags_from_tokens": "token-array form of gopher_flags",
 }
 
 
