@@ -40,7 +40,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from nhl_data_pipeline_spark.catalog import TABLES, load_table
 from nhl_data_pipeline_spark.plans.registry import all_queries
-from nhl_data_pipeline_spark.session import get_spark
+from nhl_data_pipeline_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -345,6 +345,9 @@ def main() -> None:
     cpu_reps: dict[str, list[float]] = {}
     run_min: dict[str, float] = {}
     shuf_w: dict[str, float] = {}
+    # Janino compiles over the timed reps: generated classes the cache
+    # did not hold, evicted or new because the code differs per run.
+    compiles: dict[str, int] = {}
     from nhl_data_pipeline_spark.catalog import reset_scan_splits
 
     for name, spec in specs.items():
@@ -358,6 +361,8 @@ def main() -> None:
             bench_fn = spec.bench_fn or spec.fn
             for i in range(5):
                 spark.catalog.clearCache()
+                if i == 2:
+                    compiled = codegen_compiles(spark)
                 mark = meter.snap() if i >= 2 else -1
                 t0 = time.perf_counter()
                 bench_fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -373,6 +378,7 @@ def main() -> None:
             print(f"WARNING: bench run failed for {name}: {exc!r}", file=sys.stderr)
             timings[name] = 999.0
             continue
+        compiles[name] = codegen_compiles(spark) - compiled
         reps[name] = [round(r, 3) for r in runs]
         timings[name] = round(sorted(runs)[len(runs) // 2], 3)
         if deltas:
@@ -415,6 +421,7 @@ def main() -> None:
                     "cpu_reps": cpu_reps,
                     "run": run_min,
                     "shuffle_write": shuf_w,
+                    "compiles": compiles,
                     "cpus": spark.sparkContext.defaultParallelism,
                 }
             )

@@ -19,18 +19,22 @@ def stg_player_name_crosswalk(
     """Multi-strategy odds-name → roster-player resolution
     (stg_player_name_crosswalk.sql:66-139).
 
-    Three strategies of decreasing confidence, each excluding names already
-    matched (reference uses NOT IN — rewritten as left_anti, equivalent
-    because the null names were filtered in staging, SURVEY §7.3.3):
+    Three strategies of decreasing confidence; a name takes the matches of
+    the best strategy that matches it at all (the reference cascades them
+    with NOT IN):
       1.00 exact (case/trim-insensitive)
       0.95 accent-folded
       0.85 first-initial + last-token, only when unambiguous
            (COUNT(*) OVER (PARTITION BY odds_name) = 1 guard, :111)
     then best match per odds name by confidence (W2, :133-136).
+
+    One equi-join computes all three: both sides explode to a
+    ``(_lvl, _key)`` row per strategy, and one window per name keeps the
+    rows at its lowest matched level.
     """
     odds_names = stg_odds_player_props.select("odds_player_name").distinct()
-    # current_team_abbrev rides the SAME roster broadcast each strategy
-    # already joins — the reference-schema column costs no extra join.
+    # current_team_abbrev rides the roster broadcast — the
+    # reference-schema column costs no extra join.
     if "current_team_abbrev" in dim_player.columns:
         roster = dim_player.select(
             "player_id", "player_name", "current_team_abbrev"
@@ -45,54 +49,41 @@ def stg_player_name_crosswalk(
     key3 = lambda c: F.concat(  # noqa: E731
         F.substring(fold(c), 1, 1), F.lit("|"), F.upper(split_part(fold(c), " ", -1))
     )
+    # Strategy levels 1-3, best first.
+    keys = (up, fold, key3)
 
-    s1 = (
-        odds_names.join(
-            F.broadcast(roster),
-            up(F.col("odds_player_name")) == up(F.col("player_name")),
-        )
-        .select(
-            "odds_player_name", "player_id", "player_name", "current_team_abbrev"
-        )
-        .withColumn("match_confidence", F.lit(1.0))
-        .withColumn("match_strategy", F.lit("exact"))
+    def keyed(df: DataFrame, name: str) -> DataFrame:
+        return df.select("*", F.inline(F.array(*[
+            F.struct(F.lit(lvl).alias("_lvl"), key(F.col(name)).alias("_key"))
+            for lvl, key in enumerate(keys, 1)
+        ])))
+
+    matched = keyed(odds_names, "odds_player_name").join(
+        F.broadcast(keyed(roster, "player_name")), ["_lvl", "_key"]
     )
-    rest2 = odds_names.join(s1.select("odds_player_name"), "odds_player_name", "left_anti")
-    s2 = (
-        rest2.join(
-            F.broadcast(roster),
-            fold(F.col("odds_player_name")) == fold(F.col("player_name")),
-        )
-        .select(
-            "odds_player_name", "player_id", "player_name", "current_team_abbrev"
-        )
-        .withColumn("match_confidence", F.lit(0.95))
-        .withColumn("match_strategy", F.lit("accent_normalized"))
-    )
-    rest3 = rest2.join(s2.select("odds_player_name"), "odds_player_name", "left_anti")
-    s3_raw = rest3.join(
-        F.broadcast(roster),
-        key3(F.col("odds_player_name")) == key3(F.col("player_name")),
-    ).select(
-        "odds_player_name", "player_id", "player_name", "current_team_abbrev"
-    )
-    # Ambiguity guard: keep only odds names resolving to exactly one player.
-    w_cnt = Window.partitionBy("odds_player_name")
-    s3 = (
-        s3_raw.withColumn("_n", F.count(F.lit(1)).over(w_cnt))
-        .filter(F.col("_n") == 1)
-        .drop("_n")
-        .withColumn("match_confidence", F.lit(0.85))
-        .withColumn("match_strategy", F.lit("initial_last"))
-    )
-    unioned = s1.unionByName(s2).unionByName(s3)
-    w_best = Window.partitionBy("odds_player_name").orderBy(
-        F.desc("match_confidence"), F.asc("player_name")
-    )
+    # Ambiguity guard: an initial_last name must resolve to one player.
+    w_name = Window.partitionBy("odds_player_name")
+    w_best = w_name.orderBy(F.asc("player_name"))
     best = (
-        unioned.withColumn("_rn", F.row_number().over(w_best))
+        matched.select(
+            "*",
+            F.min("_lvl").over(w_name).alias("_min"),
+            F.count(F.when(F.col("_lvl") == 3, 1)).over(w_name).alias("_n3"),
+        )
+        .filter(
+            (F.col("_lvl") == F.col("_min"))
+            & ((F.col("_min") < 3) | (F.col("_n3") == 1))
+        )
+        .withColumn("_rn", F.row_number().over(w_best))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    )
+    lvl = F.col("_lvl")
+    best = best.select(
+        "odds_player_name", "player_id", "player_name", "current_team_abbrev",
+        F.when(lvl == 1, 1.0).when(lvl == 2, 0.95).otherwise(0.85)
+        .alias("match_confidence"),
+        F.when(lvl == 1, "exact").when(lvl == 2, "accent_normalized")
+        .otherwise("initial_last").alias("match_strategy"),
     )
     # Reference-schema aliases alongside the internal names: the
     # reference's own worksheet (dbt_nhl/analysis/odds_matching_queries.sql)

@@ -5,7 +5,8 @@ AQE on (runtime coalescing + skew-join splitting), Arrow on (fast pandas
 interop for the few Pandas-UDF operators), UTC session timezone (bit-exact
 timestamp parity with columnar engines such as DuckDB that store UTC-naive),
 and shuffle partitions sized to the actual parallelism instead of the
-historical default of 200.
+historical default of 200. Spark's generated-class cache is sized to
+hold the engine's working set, so repeated queries reuse compiled code.
 """
 
 from __future__ import annotations
@@ -31,6 +32,21 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 1.8, 7.3, 9.5, 9.9] vs 12g: [7.8, 1.3, 1.0, 1.0, 1.0, 0.9]). 12g still
 # clears the boiler5000/sf1-probe fan-out that OOM'd the 1g default.
 DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+# Spark's generated-class cache (spark.sql.codegen.cache.maxEntries) is
+# an LRU of 100 entries by default: smaller than one pass of the 14 bench
+# queries, so every pass recompiled its classes with Janino and re-JITed
+# them cold. Working set measured by tools/codegen_working_set.py at
+# sf0.01 on 4 cores, one JVM, nothing evicted
+# (bench_logs/codegen_cache/working_set_4096.json): bench queries 249
+# classes, the nhl_daily CLI pass 509 more, all 50 registry queries 900
+# more — 1,658 distinct in their union. 4096 leaves 2.4x headroom; a
+# repeated pass then compiles 8/14/52 classes (code that differs per
+# run) where the default compiled 242/515/1305. Same-box A/B against
+# the default on 4 cores, perfbench --trace 0, 10 alternating pairs
+# (bench_logs/codegen_cache/ab_query_mix.jsonl): query_mix pass_s median
+# 9.72 -> 7.21 s, faster in 10 of 10 pairs. Metaspace after a registry
+# pass: 198-202 MB either way.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -101,6 +117,11 @@ def get_spark(
         # Shuffle partitions ~ cores for local runs. On a cluster this is
         # executors*cores*2-3; AQE coalesces down from there.
         .config("spark.sql.shuffle.partitions", str(n))
+        # Generated-class cache sized to the working set (see
+        # CODEGEN_CACHE_ENTRIES). A static conf: only a builder may set
+        # it, so it stays out of cluster_conf and get_spark's conf.set
+        # path, which raise CANNOT_MODIFY_STATIC_CONFIG on a live session.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Arrow transfer for pandas_udf / toPandas: vectorized, zero-copy-ish.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # UTC everywhere: deterministic timestamp semantics, oracle parity.
@@ -116,6 +137,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far: one per miss of
+    the generated-class cache, whole-stage and expression code alike."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def run_concurrently(

@@ -1,0 +1,36 @@
+"""The generated-class cache holds the bench queries' working set.
+
+Spark's default cache (``spark.sql.codegen.cache.maxEntries`` = 100) is
+smaller than one pass of the 14 bench queries, so its LRU evicted every
+class before the next pass reached it and each pass recompiled about 245
+classes. ``session.CODEGEN_CACHE_ENTRIES`` sizes it to the measured
+working set; a repeated pass then compiles almost nothing.
+"""
+
+from __future__ import annotations
+
+from nhl_data_pipeline_spark.catalog import reset_scan_splits
+from nhl_data_pipeline_spark.plans.registry import all_queries
+from nhl_data_pipeline_spark.session import codegen_compiles
+from tests.conftest import TEST_SF_DIR
+
+
+def test_repeated_bench_pass_reuses_generated_classes(spark):
+    specs = [s for _, s in sorted(all_queries().items()) if s.bench]
+
+    def one_pass() -> int:
+        c0 = codegen_compiles(spark)
+        for spec in specs:
+            reset_scan_splits(spark)
+            spark.catalog.clearCache()
+            (spec.bench_fn or spec.fn)(spark, TEST_SF_DIR).write.format(
+                "noop"
+            ).mode("overwrite").save()
+        return codegen_compiles(spark) - c0
+
+    # One cold pass compiles ~250 classes at this scale (249 and 258 in two
+    # 8-core runs). Tests that ran earlier in this JVM may have compiled
+    # part of them already, so the bound never falls below that figure.
+    first = one_pass()
+    second = one_pass()
+    assert second <= 0.1 * max(first, 240), (first, second)

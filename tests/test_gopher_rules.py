@@ -35,6 +35,10 @@ def test_gopher_flags_match_duckdb_twin_on_corpus(spark, duck):
 
 
 def test_gopher_individual_rules(spark, duck):
+    # No test lake has '#' or '...', so cases 2 and 5-8 are the symbol
+    # rule's only check; it counts words containing either and passes at
+    # a ratio <= 0.1.
+    prose = " ".join(["the quick brown fox jumps over a lazy dog"] * 10)
     texts = [
         # 0: too short (< 50 words)
         "the a of to and " * 3,
@@ -46,6 +50,14 @@ def test_gopher_individual_rules(spark, duck):
         ("123 456 " * 30) + "789",
         # 4: mean word length too high (long tokens)
         ("pneumonoultramicroscopics " * 60) + "the a",
+        # 5: '...'-heavy: 30 of 120 words
+        prose + " wait..." * 30,
+        # 6: symbol ratio exactly 0.1: 10 of 100 words carry '#'
+        prose + " #tag" * 10,
+        # 7: just above 0.1: 11 of 101 words
+        prose + " #tag" * 11,
+        # 8: single dots are not '...': 30 of 120 words
+        prose + " U.S." * 30,
     ]
     values = ", ".join(f"({i}, '{t}')" for i, t in enumerate(texts))
     flags = {
@@ -59,11 +71,13 @@ def test_gopher_individual_rules(spark, duck):
     assert not flags[2]["symbol_ratio_ok"]
     assert not flags[3]["alpha_frac_ok"] and not flags[3]["stopwords_ok"]
     assert not flags[4]["mean_word_len_ok"]
-    assert [flags[i]["pass_gopher"] for i in range(5)] == [
-        False, True, False, False, False
+    assert [flags[i]["symbol_ratio_ok"] for i in range(5, 9)] == [
+        False, True, False, True
     ]
+    want = [False, True, False, False, False, False, True, False, True]
+    assert [flags[i]["pass_gopher"] for i in range(9)] == want
 
     spark_pass = _spark_pass(
         spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     )
-    assert spark_pass == {0: False, 1: True, 2: False, 3: False, 4: False}
+    assert spark_pass == dict(enumerate(want))

@@ -174,6 +174,41 @@ def test_crosswalk_match_classes(models):
     assert "Nonexistent Player" not in xw
 
 
+def test_crosswalk_strategy_precedence(spark):
+    """On a hand-built roster: exact beats accent-folded beats
+    initial_last, exact ignores case, and an initial_last key shared by
+    two players drops the name."""
+    from nhl_data_pipeline_spark.nhl.odds import stg_player_name_crosswalk
+
+    roster = spark.createDataFrame(
+        [
+            (1, "Tim Stutzle"),
+            (2, "Tím Stützle"),  # folds onto "TIM STUTZLE" too
+            (3, "Leon Draisaitl"),
+            (4, "Lars Draisaitl"),  # shares the initial_last key L|DRAISAITL
+            (5, "Jack Hughes"),
+            (6, "Jake Hughes"),  # J|HUGHES is ambiguous
+            (7, "J.T. Miller"),
+        ],
+        "player_id long, player_name string",
+    )
+    odds = spark.createDataFrame(
+        [("TIM STUTZLE",), ("Léon Draisaitl",), ("J Hughes",), ("JT Miller",),
+         ("Nobody Here",)],
+        "odds_player_name string",
+    )
+    got = {
+        r["odds_player_name"]: (r["player_id"], r["match_strategy"],
+                                r["match_confidence"])
+        for r in stg_player_name_crosswalk(odds, roster).collect()
+    }
+    assert got == {
+        "TIM STUTZLE": (1, "exact", 1.0),
+        "Léon Draisaitl": (3, "accent_normalized", 0.95),
+        "JT Miller": (7, "initial_last", 0.85),
+    }
+
+
 def test_sog_props_outcomes(models):
     props = models["fact_player_sog_props_v2"]
     outcomes = {r["outcome"] for r in props.select("outcome").distinct().collect()}
