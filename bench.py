@@ -46,9 +46,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _git_commit() -> str:
-    """Engine commit of the running tree — embedded in every leg headline
-    so sweep artifacts are traceable to ONE engine version per leg (r10,
-    ADVICE: the r9 sf30 artifact silently mixed pre- and post-fix legs)."""
+    """Engine commit of the running tree, carried in the headline as
+    ``engine_commit`` so every recorded number names the one engine
+    version that produced it; numbers from different commits must never
+    be compared as if they were one run."""
     import subprocess
 
     try:
@@ -66,10 +67,9 @@ def _git_commit() -> str:
 
 class _StageMeter:
     """Per-query executor CPU / run time / shuffle-write totals from the
-    Spark UI REST API (stage-level StageData), r10 VERDICT ask #1: the
-    sf30 "wall-only, CPU is sublinear" defense existed only in prose —
-    this meter makes executor CPU a first-class per-leg measurement so
-    sweep artifacts can emit ``cpu_exponent`` beside ``exponent_norm``.
+    Spark UI REST API (stage-level StageData): executor CPU is a
+    first-class per-query measurement beside wall time, so a claim that
+    work grows sublinearly rests on CPU numbers, not on prose.
 
     Mechanics: ``snap()`` returns the highest completed stageId after
     draining the listener bus; ``since(mark)`` sums ``executorCpuTime``
@@ -106,7 +106,7 @@ class _StageMeter:
     def _stages(self) -> list[dict] | None:
         """Completed StageData rows, or None when the REST read fails.
 
-        r11 (ADVICE): the read is guarded HERE, not in callers' per-query
+        The read is guarded HERE, not in callers' per-query
         try blocks — a transient UI hiccup (port reset, URLError, slow
         listener) must degrade to "no CPU detail for this query", never
         masquerade as a query failure: the query's wall time is real and
@@ -161,9 +161,9 @@ def _sf_from_dir(d: str) -> float:
 
 def _calibration_anchor(spark) -> float:
     """Fixed, data-independent CPU-bound micro-op, reported as the MIN
-    of 5 runs (r9; was 2-warmup median-of-3).
+    of 5 runs.
 
-    Why min: r9's back-to-back sweep legs measured the median-of-3
+    Why min: back-to-back sf10/sf30 sweep legs measured the median-of-3
     anchor 25% apart (1.039 vs 0.832) while the same legs' QUERY totals
     agreed to 3.6% — the ~1 s anchor op is noisier than what it
     normalizes, so dividing by it injects up to log(1.25)/log(3.33) ≈
@@ -174,7 +174,7 @@ def _calibration_anchor(spark) -> float:
 
     Purpose: cross-ENVIRONMENT normalization. Identical pinned plans have
     measured 1.5-1.7× apart between the driver's bench env and same-day
-    local runs (r6: 25.88 vs 16.58 s, uniform across all queries), and
+    local runs (25.88 vs 16.58 s, uniform across all queries), and
     ±15-30% between runs in one booted container — without a
     data-independent anchor those gaps can only be argued, not divided
     out. normalized_total = total / (anchor / reference_anchor).
@@ -207,18 +207,18 @@ def _calibration_anchor(spark) -> float:
 
 
 def _calibration_anchors(spark) -> dict[str, float]:
-    """THREE fixed, data-independent anchor shapes (r8, VERDICT ask #3).
+    """THREE fixed, data-independent anchor shapes.
 
-    The r7 single CPU anchor over-corrected across hosts: driver/local
+    A single CPU anchor over-corrected across hosts: driver/local
     anchor ratio 1.48× vs a bench-total ratio of 1.19× — normalizing the
     driver total by it yielded a driver time FASTER than local, which is
     impossible. The environment gap evidently does not live uniformly in
     JVM-CPU speed, so one shape cannot transfer. Emitting one anchor per
     execution COMPONENT lets a reader attribute the gap instead:
 
-    - ``anchor_sec``      — JVM codegen + hash-agg (the r7 shape, kept
-      under its old key so sweep tooling and round-over-round
-      comparisons parse unchanged);
+    - ``anchor_sec``      — JVM codegen + hash-agg (the original single
+      anchor, kept under its old key so the committed artifacts stay
+      comparable);
     - ``anchor_shuffle_sec`` — a fixed 2^22-row round-trip through a
       hash-partitioned exchange (shuffle write + fetch + read path:
       serialization, disk, scheduler);
@@ -329,13 +329,13 @@ def main() -> None:
     # persisted intermediates are recomputed inside the measurement —
     # only JIT/codegen state stays warm, never data.
     timings: dict[str, float] = {}
-    # Per-rep times (r9, VERDICT ask #6): the headline keeps the median,
-    # but the artifact now carries every timed rep — run-to-run spread is
-    # the kmeans-variance signal, and the sweep tool emits max/min per
-    # query from these instead of anyone stitching legs by hand.
+    # Per-rep times: the headline keeps the median, but the artifact
+    # carries every timed rep — run-to-run spread is the kmeans-variance
+    # signal, and max/min per query come from these, not from stitching
+    # runs by hand.
     reps: dict[str, list[float]] = {}
-    # Per-query executor CPU / run-time / shuffle-write (r10, VERDICT
-    # ask #1): CPU is the work signal wall-clock can't give on a fixed
+    # Per-query executor CPU / run-time / shuffle-write: CPU is the work
+    # signal wall-clock can't give on a fixed
     # box — a wall exponent >1 with CPU exponent ≤1 is scheduling
     # asymptote, not per-task state growth. min over the timed reps,
     # same one-sided-noise estimator as the anchors (GC/JIT only ADD
@@ -353,7 +353,7 @@ def main() -> None:
     for name, spec in specs.items():
         runs: list[float] = []
         deltas: list[dict] = []
-        # Execution-order independence (VERDICT r9 "what's wrong" #2):
+        # Execution-order independence:
         # every query block starts from the default scan-split size, so
         # an untuned query never inherits the previous query's tuning.
         reset_scan_splits(spark)
@@ -387,12 +387,12 @@ def main() -> None:
             run_min[name] = round(min(d["run_sec"] for d in deltas), 3)
             shuf_w[name] = min(d["shuffle_write_bytes"] for d in deltas)
 
-    # Deterministic scale counts (r9, VERDICT ask #3): candidate-pair
-    # cardinalities are the noise-immune scaling signal (the r8 jaccard
-    # diagnosis worked exactly this way) — SPARK_GRAFT_COUNTS=1 records
-    # them in the headline so sweep artifacts carry counts alongside
-    # times. Off by default: the count jobs would perturb the driver's
-    # timed environment for no benefit at sf0.1.
+    # Deterministic scale counts: candidate-pair cardinalities are the
+    # noise-immune scaling signal (the jaccard scaling diagnosis worked
+    # exactly this way) — SPARK_GRAFT_COUNTS=1 records them in the
+    # headline so recorded runs carry counts alongside times. Off by
+    # default: the count jobs would perturb the driver's timed environment
+    # for no benefit at sf0.1.
     counts: dict[str, float | str] = {}
     if os.environ.get("SPARK_GRAFT_COUNTS") == "1":
         try:
@@ -409,9 +409,8 @@ def main() -> None:
 
     # CPU detail on its OWN penultimate-ish stdout line: the headline
     # line must stay well under the driver's ~2,000-char tail window
-    # (the r5 truncation lesson), and sweep tooling reads full leg
-    # captures, so the per-query CPU block lives here and the sweep
-    # tool picks it up by its "probe" key.
+    # (a longer headline was once truncated), and readers of the full
+    # capture pick the per-query CPU block up by its "probe" key.
     if cpu_min:
         print(
             json.dumps(
@@ -465,11 +464,11 @@ def main() -> None:
 
 def _gate_calibrated(spark) -> bool:
     """True when the probe exponent gates' 0.95 ceilings apply: they were
-    measured/calibrated at 32 cores (r7-r10). The driver's lower-core
-    bench leg still runs the probes and records the exponents, but a
-    fixed-cost-amortization artifact at 8 cores must not read as a
-    structural regression (r12's 8-core leg: staging 1.035 with the
-    identical engine that reads 0.455 at 32)."""
+    measured/calibrated at 32 cores. A lower-core bench leg still runs
+    the probes and records the exponents, but a fixed-cost-amortization
+    artifact at 8 cores must not read as a structural regression (an
+    8-core leg read staging 1.035 with the identical engine that reads
+    0.455 at 32, BENCH_r12_c8.json)."""
     return spark.sparkContext.defaultParallelism >= 32
 
 
@@ -522,8 +521,8 @@ def _pipeline_e2e_probe(spark) -> dict:
 
 
 # Statements expected to return zero rows over the ×100 model lake —
-# pinned so any statement going empty fails loudly (r8, VERDICT ask #4).
-# EMPTY since r10 (VERDICT r9 ask #7): team_3's `team_id = 10` is covered
+# pinned so any statement going empty fails loudly. The set is EMPTY:
+# team_3's `team_id = 10` is covered
 # by the OTT/WPG fixture teams, and team_8's `CURRENT_DATE - INTERVAL
 # '15 days'` window is pinned to the injected as_of=2024-11-15 via
 # dialect.rewrite_current_date, so its window intersects the fixture
@@ -534,8 +533,8 @@ _WORKSHEET_AS_OF = "2024-11-15"  # run_pipeline's injected as_of
 
 
 def _pipeline_scale_probe(spark) -> dict:
-    """r7: second-decade scaling for the NHL model DAG + the full analyst
-    worksheet corpus at replicated scale (VERDICT r6 asks #6/#7).
+    """Second-decade scaling for the NHL model DAG + the full analyst
+    worksheet corpus at replicated scale.
 
     - ``staging_cj_x100/x1000``: bronze boxscore+pbp replicated ×100 and
       ×1000 with DISTINCT game ids via a single-plan crossJoin-range
@@ -630,16 +629,16 @@ def _pipeline_scale_probe(spark) -> dict:
         return c, time.perf_counter() - t0
 
     staged_at(100)  # warmup: compiles every silver plan variant
-    # min-of-2 per leg (r9, VERDICT ask #5): the gate read 0.848 (r7) →
-    # 0.933 (driver r8) vs 0.81 on builder legs — environment noise, not
+    # min-of-2 per leg: the gate read 0.848 → 0.933 on one host vs 0.81
+    # on another — environment noise, not
     # growth, and single-shot legs left 0.017 of cushion to the 0.95
     # gate. Wall-clock noise is one-sided (times only inflate), so the
     # min of 2 reps per leg is the noise-robust estimator — the same
-    # reasoning as the sweep tool's per-leg min — and both reps are
-    # recorded so drift stays diagnosable.
+    # reasoning as the anchors' min — and both reps are recorded so drift
+    # stays diagnosable.
     #
-    # r10 (VERDICT r9 "what's wrong" #3): min-of-2 alone still read
-    # 0.921 on the driver vs 0.813 on builder legs — the environment
+    # min-of-2 alone still read 0.921 on one host vs 0.813 on another —
+    # the environment
     # drifts BETWEEN the x100 and x1000 measurement blocks, which a
     # per-leg min cannot divide out. Apply the sweeps' leg-matched
     # anchor recipe: a fixed data-independent micro-anchor measured
@@ -683,20 +682,19 @@ def _pipeline_scale_probe(spark) -> dict:
     out["staging_x1000_rows"] = float(sum(c1000))
     out["staging_exponent_raw"] = round(math.log10(t1000 / t100), 3)
     out["staging_exponent"] = round(math.log10(t1000n / t100n), 3)
-    # r8 (VERDICT ask #6): the second-decade staging exponent is a GATE,
-    # not just a recording — a model change that makes staging
-    # superlinear fails the bench run instead of drifting (r7 measured
-    # 0.848; 0.95 leaves headroom for environment noise while still
-    # catching anything structurally worse than linear). Gated on the
-    # anchor-normalized value since r10.
+    # The second-decade staging exponent is a GATE, not just a
+    # recording — a model change that makes staging superlinear fails the
+    # bench run instead of drifting (first measured 0.848; 0.95 leaves
+    # headroom for environment noise while still catching anything
+    # structurally worse than linear). Gated on the anchor-normalized
+    # value.
     #
-    # r13 (VERDICT r12 ask #3): the 0.95 ceiling was calibrated at 32
-    # cores. At lower core counts the ×100 leg no longer saturates the
-    # box while ×1000 does, so fixed per-leg costs amortize differently
-    # and the exponent reads higher with NO per-row growth (the r12
-    # 8-core leg read 1.035 and killed the probe). Off the calibrated
-    # width the value is recorded, not asserted — the 32-core driver leg
-    # keeps the hard gate.
+    # The 0.95 ceiling was calibrated at 32 cores. At lower core counts
+    # the ×100 leg no longer saturates the box while ×1000 does, so fixed
+    # per-leg costs amortize differently and the exponent reads higher
+    # with NO per-row growth (an 8-core leg read 1.035 and killed the
+    # probe, BENCH_r12_c8.json). Off the calibrated width the value is
+    # recorded, not asserted — the 32-core driver leg keeps the hard gate.
     if _gate_calibrated(spark):
         assert out["staging_exponent"] <= 0.95, out["staging_exponent"]
     else:
@@ -715,7 +713,7 @@ def _pipeline_scale_probe(spark) -> dict:
     ).count()
     tmp = tempfile.mkdtemp(prefix="nhl_scale_")
     try:
-        # r8 (VERDICT ask #6): the full-DAG leg gets the same asserted
+        # The full-DAG leg gets the same asserted
         # exponent ceiling as staging — time the 25-model DAG at ×10 AND
         # ×100 and gate the decade exponent. Fixed per-model costs
         # (planning, Z-order write setup) dominate at ×10, so the
@@ -754,7 +752,7 @@ def _pipeline_scale_probe(spark) -> dict:
         out["dag_exponent"] = round(
             math.log10(out["dag_x100_sec"] / out["dag_x10_sec"]), 3
         )
-        # Same core-count calibration rule as the staging gate (r13).
+        # Same core-count calibration rule as the staging gate.
         if _gate_calibrated(spark):
             assert out["dag_exponent"] <= 0.95, out["dag_exponent"]
         else:
@@ -815,7 +813,7 @@ def _pipeline_scale_probe(spark) -> dict:
         out["worksheets_x100_empty"] = ",".join(empty)
         out["worksheets_x100_empty_cause"] = _WORKSHEET_EMPTY_CAUSE
         assert executed == 18, executed
-        # r8 (VERDICT ask #4): the EXACT expected-empty set is pinned —
+        # The EXACT expected-empty set is pinned —
         # any OTHER statement going empty (a regression silently
         # emptying a join) fails the probe loudly, as does a fixture /
         # date change making these two produce rows.

@@ -41,9 +41,8 @@ def shuffle_width_for(
     tables: str | tuple[str, ...],
     bytes_per_partition: int,
 ) -> int:
-    """Shuffle width derived from SOURCE size, not session config (r9,
-    VERDICT r8 ask #2 — generalizing the recipe proven on the jaccard
-    self-join in plans/q_text.py).
+    """Shuffle width derived from SOURCE size, not session config (the
+    recipe first proven on the jaccard self-join in plans/q_text.py).
 
     Why: a fixed ``spark.sql.shuffle.partitions`` makes PER-TASK hash/sort
     state (SHJ build side, partial-agg maps, sort runs) grow linearly with
@@ -74,28 +73,26 @@ def shuffle_width_for(
         except OSError:  # non-local path (cluster): parallelism fallback
             return par
     derived = max(par, total // bytes_per_partition + 1)
-    # r11 (VERDICT r10 ask #1): wave-quantize past the fragmentation
-    # gate. The 512 KiB/task budget is measured against SPILL (sf10) and
-    # is the right floor while the lake is moderate — but applied
-    # unquantized at the fifth decade it fragments the plan into
-    # thousands of ~200 ms tasks and the box pays pure scheduling tax.
-    # Past TEXT_QUANTIZE_WAVES whole waves of the session parallelism,
-    # the width is re-derived as WHOLE WAVES at a 2× stretched per-task
-    # budget (TEXT_STRETCH_BYTES_PER_TASK). Measured at sf100
-    # (bench_logs/r11/probe_text_width_{prefix,postfix}.out): 576 = 18
-    # waves × 1 MiB/task and the unquantized 1098 are within single-run
-    # noise of each other (89.1 vs 95.4 s one run, 106.6 vs 95.6 the
-    # next — probes, no settle protocol), BOTH zero-spill; the spill
-    # cliff sits at ~1.8 MiB/task (320-wide: wall 116 s, 24 GB disk
-    # spill), so the 1 MiB stretch keeps ~1.8× headroom while HALVING
-    # the task count — strictly less scheduling tax at equal spill
-    # safety, which is the property that compounds at 100 TB where the
-    # unquantized width would be ~100K tasks. The max() keeps the
-    # stretched width continuous at the gate and state-bounded beyond
-    # it: a 10× bigger lake gets 10× the waves, never 10× the per-task
-    # state.
+    # Wave-quantize past the fragmentation gate. The 512 KiB/task budget
+    # is measured against SPILL (sf10) and is the right floor while the
+    # lake is moderate — but applied unquantized at the fifth decade it
+    # fragments the plan into thousands of ~200 ms tasks and the box pays
+    # pure scheduling tax. Past TEXT_QUANTIZE_WAVES whole waves of the
+    # session parallelism, the width is re-derived as WHOLE WAVES at a 2×
+    # stretched per-task budget (TEXT_STRETCH_BYTES_PER_TASK). Measured at
+    # sf100 (bench_logs/r11/probe_text_width_{prefix,postfix}.out): 576 =
+    # 18 waves × 1 MiB/task and the unquantized 1098 are within single-run
+    # noise of each other (89.1 vs 95.4 s one run, 106.6 vs 95.6 the next
+    # — probes, no settle protocol), BOTH zero-spill; the spill cliff sits
+    # at ~1.8 MiB/task (320-wide: wall 116 s, 24 GB disk spill), so the 1
+    # MiB stretch keeps ~1.8× headroom while HALVING the task count —
+    # strictly less scheduling tax at equal spill safety, which is the
+    # property that compounds at 100 TB where the unquantized width would
+    # be ~100K tasks. The max() keeps the stretched width continuous at
+    # the gate and state-bounded beyond it: a 10× bigger lake gets 10× the
+    # waves, never 10× the per-task state.
     if derived > TEXT_QUANTIZE_WAVES * par:
-        # r12 (ADVICE r11): the stretch budget is CALLER-RELATIVE —
+        # The stretch budget is CALLER-RELATIVE —
         # max(1 MiB floor, 2 × the caller's own per-task budget). The
         # floor reproduces the measured text policy exactly (2 × 512 KiB
         # = the 1 MiB stretch benched at sf100), while a caller that
@@ -119,7 +116,7 @@ def shuffle_width_for(
 TEXT_BYTES_PER_PARTITION = 512 << 10
 ROW_BYTES_PER_PARTITION = 8 << 20
 
-# Fragmentation gate for text widths (r11, VERDICT r10 ask #1): once the
+# Fragmentation gate for text widths: once the
 # 512 KiB-derived width exceeds this many whole waves of the session
 # parallelism, scheduling tax outgrows spill risk and the width is
 # re-derived as whole waves at the 2× stretched budget below. 16 waves
@@ -134,7 +131,7 @@ TEXT_STRETCH_BYTES_PER_TASK = 1 << 20
 _DEFAULT_MAX_SPLIT = 128 << 20  # spark.sql.files.maxPartitionBytes default
 _OPEN_COST = 4 << 20  # spark.sql.files.openCostInBytes default
 
-# Row-join spill gate (r9, fourth-decade find). The r9 first cut derived
+# Row-join spill gate (found by the sf10→sf30 sweep). A first cut derived
 # an explicit width for EVERY big fact join from an 8 MiB/task budget —
 # calibrated on the shingle-exploding text plans (~30× in-memory
 # expansion), wildly conservative for plain row joins (~4×). At sf30
@@ -184,8 +181,7 @@ def fact_shuffle_width(
 
 def tune_scan_splits(spark: SparkSession, sf_dir: str, table: str) -> None:
     """Size scan splits of the query's dominant fact table into WHOLE
-    waves of the session's parallelism (r9, found by the fourth-decade
-    sweep).
+    waves of the session's parallelism (found by the sf10→sf30 sweep).
 
     Spark's split formula is ``maxSplitBytes = min(maxPartitionBytes,
     max(openCost, totalBytes / parallelism))``. While the lake is small
@@ -208,14 +204,14 @@ def tune_scan_splits(spark: SparkSession, sf_dir: str, table: str) -> None:
     paths leave the session conf alone (driver-side getsize only, no
     Spark job — the lm.py gate lesson).
 
-    r10 (VERDICT r9 "what's wrong" #2): the conf is now set
-    DETERMINISTICALLY on every call — the tiny-lake branch RESETS it to
-    the 128 MiB default instead of leaving whatever a previous query's
-    tuning put there. Spark reads ``spark.sql.files.maxPartitionBytes``
-    at EXECUTION time (FilePartition.maxSplitBytes when the scan RDD is
-    built), so a save/restore around the query BUILD would nullify the
-    tuning; always-set makes the executed split a pure function of
-    (sf_dir, dominant table) for every query that calls this, and
+    The conf is set DETERMINISTICALLY on every call — the tiny-lake branch
+    RESETS it to the 128 MiB default instead of leaving whatever a
+    previous query's tuning put there. Spark reads
+    ``spark.sql.files.maxPartitionBytes`` at EXECUTION time
+    (FilePartition.maxSplitBytes when the scan RDD is built), so a
+    save/restore around the query BUILD would nullify the tuning;
+    always-set makes the executed split a pure function of (sf_dir,
+    dominant table) for every query that calls this, and
     :func:`reset_scan_splits` covers untuned queries in shared-session
     runners (bench.py per-query blocks, the NHL pipeline runner).
     """
@@ -238,14 +234,14 @@ def reset_scan_splits(spark: SparkSession) -> None:
     """Restore the default scan-split size. Shared-session runners call
     this between queries so an untuned query never inherits a split that
     a previously-built query's :func:`tune_scan_splits` pinned —
-    execution-order-dependent scan widths were VERDICT r9's latent
-    cross-query-contamination bug."""
+    execution-order-dependent scan widths would contaminate one query
+    with another's tuning."""
     spark.conf.set(
         "spark.sql.files.maxPartitionBytes", str(_DEFAULT_MAX_SPLIT)
     )
 
 
-# Bucketed-layout registry (r12, VERDICT r11 ask #1/#4): table name →
+# Bucketed-layout registry: table name →
 # (catalog table, bucket columns). When a lake table has been materialized
 # as a bucketed catalog table (sources/bucketed.py), registering it here
 # makes load_table serve the bucketed scan and lets the width policies
@@ -271,10 +267,6 @@ def register_bucketed_layout(
     BUCKETED_LAYOUT[name] = (catalog_table, tuple(bucket_cols))
 
 
-def clear_bucketed_layout() -> None:
-    BUCKETED_LAYOUT.clear()
-
-
 def bucketed_on(name: str, *cols: str) -> bool:
     """True iff ``name`` is registered with bucket columns ⊆ ``cols`` —
     exactly when HashPartitioning(bucket_cols) satisfies a
@@ -286,7 +278,7 @@ def bucketed_on(name: str, *cols: str) -> bool:
 
 
 # ---------------------------------------------------------------------
-# MEMOIZATION POLICY (r13, VERDICT r12 ask #8). The engine keeps exactly
+# MEMOIZATION POLICY. The engine keeps exactly
 # two classes of cross-call memo, both stand-ins for what a real 100 TB
 # deployment serves from its metastore/catalog statistics, and both
 # keyed on the SOURCE FILE's identity (path, st_size, st_mtime_ns) so a
@@ -308,11 +300,11 @@ def bucketed_on(name: str, *cols: str) -> bool:
 # merge-lists and that their keys carry the file-identity invalidation.
 # ---------------------------------------------------------------------
 
-# Per-session memo of lazy table DataFrames (r12, guide §5 driver costs +
+# Per-session memo of lazy table DataFrames (guide §5 driver costs +
 # §6 metadata): ``spark.read.parquet`` re-infers the schema on EVERY call —
 # a driver-side footer-read job per table per query execution (~40-90 ms
 # each on this box; join_chain_revenue paid six of them per bench rep,
-# measured in the r12 job-timeline probe). A real 100 TB engine serves
+# measured in a job-timeline probe). A real 100 TB engine serves
 # schemas from a catalog/metastore, not per-query footer reads — this memo
 # is that catalog. It caches only the LAZY plan (schema + file listing):
 # every action still scans the parquet from disk, so no data or results

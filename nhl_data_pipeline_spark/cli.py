@@ -8,10 +8,11 @@ Airflow + dbt build + the export scripts, collapsed into one Spark job:
 
 Defaults read the committed bronze fixture parquet
 (`nhl/bronze_fixtures/`, the same bytes the hash-checked
-`nhl_pipeline_e2e` oracle consumes); point ``--bronze`` at a real lake
-written by `sources/lake.py` for production data. Exit code is the
-quality gate: non-zero when any reference dbt-suite assertion fails —
-the same contract as `dbt build` (`dbt_nhl/` in the reference).
+`nhl_pipeline_e2e` oracle consumes); point ``--bronze`` at a directory
+holding the same four bronze Parquet tables for production data. Exit
+code is the quality gate: non-zero when any reference dbt-suite
+assertion fails — the same contract as `dbt build` (`dbt_nhl/` in the
+reference).
 """
 
 from __future__ import annotations

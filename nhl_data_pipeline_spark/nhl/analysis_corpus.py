@@ -8,13 +8,11 @@ registered silver tables with only dialect tweaks."
 
 Each entry below expresses one family in Spark SQL dialect (the tweaks:
 QUALIFY → subquery where needed, CURRENT_DATE → injected as-of date,
-interval syntax). run_corpus() executes all of them against the temp views
-registered by pipeline.run_pipeline.
+interval syntax). tests/test_nhl_pipeline.py runs every entry through
+spark.sql against the temp views registered by pipeline.run_pipeline.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 AS_OF = "2024-11-15"  # injected "today" (reproducibility, SURVEY §7.3.4)
 
@@ -155,9 +153,3 @@ CORPUS: dict[str, str] = {
         ORDER BY game_date
     """,
 }
-
-
-def run_corpus(spark: SparkSession) -> dict[str, DataFrame]:
-    """Execute every corpus query via spark.sql against the registered model
-    views; returns name → result DataFrame."""
-    return {name: spark.sql(sql) for name, sql in CORPUS.items()}

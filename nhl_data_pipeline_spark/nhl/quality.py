@@ -4,9 +4,8 @@ unique / not_null / accepted_values / accepted_range / relationships (FK)
 / unique_combination_of_columns (dbt_nhl/models/silver/schema.yml,
 strategy at .context/DECISIONS.md:355-396), one Spark action per call
 (``not_null`` covers all its columns in one aggregate). They define the
-semantics: ``run_standard_suite`` runs on them, and the reference's full
-233-instance suite (``quality_suite.py``) fuses them into one action per
-model and is tested against them.
+semantics: the reference's full 233-instance suite (``quality_suite.py``)
+fuses them into one action per model and is tested against them.
 """
 
 from __future__ import annotations
@@ -90,43 +89,3 @@ def relationships(
         .count()
     )
     return CheckResult(table, f"relationships({col}→{parent_col})", orphans == 0, orphans)
-
-
-POSITION_CODES = ["C", "LW", "RW", "L", "R", "D", "G"]  # silver/schema.yml:108
-
-
-def run_standard_suite(models: dict[str, DataFrame]) -> list[CheckResult]:
-    """The reference's core schema tests over our model DAG."""
-    out: list[CheckResult] = []
-    fgr = models["fact_game_results"]
-    fpgs = models["fact_player_game_stats"]
-    ftgs = models["fact_team_game_stats"]
-    fse = models["fact_shot_events"]
-    dt = models["dim_team"]
-    dp = models["dim_player"]
-
-    out += not_null(fgr, "fact_game_results", "game_id", "game_date", "home_team_id")
-    out.append(unique(fgr, "fact_game_results", "game_id"))
-    out.append(accepted_values(fgr, "fact_game_results", "winning_side", ["home", "away"]))
-
-    out += not_null(fpgs, "fact_player_game_stats", "game_id", "player_id", "team_id")
-    out.append(unique(fpgs, "fact_player_game_stats", "game_id", "player_id"))
-    out.append(
-        accepted_values(fpgs, "fact_player_game_stats", "position_code", POSITION_CODES)
-    )
-    out.append(accepted_values(fpgs, "fact_player_game_stats", "home_away", ["home", "away"]))
-    out.append(relationships(fpgs, "fact_player_game_stats", "player_id", dp, "player_id"))
-    out.append(relationships(fpgs, "fact_player_game_stats", "team_id", dt, "team_id"))
-
-    out.append(unique(ftgs, "fact_team_game_stats", "game_id", "team_id"))
-    out.append(relationships(ftgs, "fact_team_game_stats", "team_id", dt, "team_id"))
-
-    out.append(unique(fse, "fact_shot_events", "game_id", "event_id"))
-    out.append(
-        accepted_values(fse, "fact_shot_events", "shot_result", ["goal", "saved", "missed"])
-    )
-    out.append(relationships(fse, "fact_shot_events", "team_id", dt, "team_id"))
-
-    out.append(unique(dp, "dim_player", "player_id"))
-    out.append(unique(dt, "dim_team", "team_id"))
-    return out

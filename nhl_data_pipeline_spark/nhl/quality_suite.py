@@ -269,7 +269,7 @@ SUITE: dict[str, dict] = {
 }
 
 # Reference tests NOT runnable on the engine's DAG, with the reason —
-# surfaced by suite_counts() so the parity gap is explicit, never silent.
+# counted by the suite tests so the parity gap is explicit, never silent.
 SKIPPED: list[tuple[str, str, str]] = [
     (
         "fact_player_sog_props", t, "v1 model superseded by v2 in the engine"
@@ -387,20 +387,3 @@ def run_reference_suite(
     ]
     spark = next(iter(models.values())).sparkSession
     return [r for rs in run_concurrently(spark, tasks) for r in rs]
-
-
-def suite_counts() -> dict[str, int]:
-    """Declared / runnable / skipped instance counts vs the reference."""
-    declared = 0
-    for spec in SUITE.values():
-        declared += len(spec.get("not_null", []))
-        declared += len(spec.get("unique", []))
-        declared += len(spec.get("unique_combination", []))
-        declared += len(spec.get("accepted_values", {}))
-        declared += len(spec.get("accepted_range", []))
-        declared += len(spec.get("relationships", []))
-    return {
-        "runnable": declared,
-        "skipped": len(SKIPPED),
-        "reference_declared": declared + len(SKIPPED),
-    }

@@ -170,31 +170,6 @@ def stg_schedule_games(schedule_raw: DataFrame) -> DataFrame:
     )
 
 
-def extract_final_game_ids(schedule_games: DataFrame, max_games: int = 30) -> DataFrame:
-    """Final-game selection (gamecenter_selection.py:51-72) as native ops:
-    state filter + 10-digit id check + first-seen-order dedup + cap.
-
-    The reference dedupes in schedule-iteration order (earliest listing
-    first) before capping; a distributed scan has no row order, so "first
-    seen" is pinned to its deterministic equivalent: the game's earliest
-    schedule date, with game_id as the unique tiebreak. When more than
-    max_games finals exist this selects the same earliest-listed subset the
-    reference's loop does.
-    """
-    final_states = ("OFF", "OVER", "FINAL")
-    return (
-        schedule_games.filter(
-            F.col("game_state").isin(*final_states)
-            & (F.length(F.col("game_id").cast("string")) == 10)
-        )
-        .groupBy("game_id")
-        .agg(F.min("game_date").alias("_first_listed"))
-        .orderBy("_first_listed", "game_id")
-        .limit(max_games)
-        .select("game_id")
-    )
-
-
 def stg_odds_player_props(odds_raw: DataFrame) -> DataFrame:
     """Three-level flatten bookmakers[] → markets[] → outcomes[] →
     one row per (event, bookmaker, player, bet side)

@@ -96,12 +96,11 @@ def length_bucketed_batches(
     WITHIN a bin bounds per-row padding waste to bin_width − 1 tokens.
     batch_id is globally unique ((bin, seq) packed) and DETERMINISTIC:
     rows order by (n_tokens, id) inside their bin, so a re-run on any
-    partitioning emits identical batches — the same reproducibility rule
-    as the shard sink.
+    partitioning emits identical batches.
 
     Scale shape: one exchange (the bin-partitioned window); no driver
     state. The window's per-bin sort is the padding-efficiency price —
-    at 100 TB shard first (sources/shards.py) and batch within shards so
+    at 100 TB partition by a shard key first and batch within shards so
     each sort is shard-local.
     """
     from pyspark.sql.window import Window

@@ -46,7 +46,7 @@ def exploded_distinct_shingles(
     window's id hash partitioning. Docs with < n tokens vanish (their last
     lead is always null) — same guard as :func:`shingles`.
 
-    r13 probe note (guide §1.1): an element_at-over-the-carried-array form
+    Rejected (guide §1.1): an element_at-over-the-carried-array form
     (no lead windows — the rewrite that DID win inside operators/lm.py by
     deleting that plan's exchange) was A/B'd here and REJECTED: every
     consumer of this table needs the id distribution immediately anyway,
@@ -311,9 +311,9 @@ def dedup_against_reference(
     fingerprint — broadcast while the reference fits (driver-side
     dedup ledgers often do), shuffled-hash beyond that, never a full
     rescan of historical text. Compose with exact_dedup_keep_min on the
-    survivors to also dedup the increment internally — the same
-    two-stage shape sources.lake.append_new_only uses for id-keyed
-    idempotence, here content-keyed.
+    survivors to also dedup the increment internally — the incremental
+    append shape (anti-join the increment against what is loaded), keyed
+    on content instead of an id.
     """
     tmp = "__ref_fp"  # collision-safe: never clobber a caller's fp column
     keyed = new_docs.withColumn(tmp, key)

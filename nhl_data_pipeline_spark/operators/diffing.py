@@ -8,11 +8,11 @@ and compares content FINGERPRINTS (16-byte md5, never the text), so the
 full-outer join moves (id, fp) pairs only — at 100 TB this is two narrow
 scans and one join however large the documents are.
 
-Pairs with `sources/versioned.py` (the snapshots) and
-`operators/text.fingerprint` (the content key); the per-doc statuses
-feed data-quality gates ("a reprocess that CHANGES >1% of docs needs
-sign-off") and incremental downstream refreshes (recompute only
-added ∪ changed).
+The two snapshots are any two reads of the corpus (for example two
+dated parquet directories); `operators/text.fingerprint` is the content
+key. The per-doc statuses feed data-quality gates ("a reprocess that
+CHANGES >1% of docs needs sign-off") and incremental downstream
+refreshes (recompute only added ∪ changed).
 """
 
 from __future__ import annotations

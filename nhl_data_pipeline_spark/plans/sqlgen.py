@@ -26,19 +26,8 @@ def dsum(expr: str, alias: str, scale: int = 6) -> str:
     return f"{dsum_expr(expr, scale)} AS {alias}"
 
 
-def davg(expr: str, alias: str, scale: int = 6) -> str:
-    """Order-independent AVG as exact-decimal SUM / COUNT(*), as DOUBLE."""
-    return f"{dsum_expr(expr, scale)} / COUNT(*) AS {alias}"
-
-
 def bcount(alias: str, filter_expr: str | None = None) -> str:
     """COUNT(*) (optionally filtered) pinned to BIGINT (DuckDB COUNT is already
     BIGINT; the cast also guards conditional-sum variants)."""
     inner = f"CASE WHEN {filter_expr} THEN 1 END" if filter_expr else "*"
     return f"CAST(COUNT({inner}) AS BIGINT) AS {alias}"
-
-
-def bsum(expr: str, alias: str) -> str:
-    """SUM over an integer expression pinned to BIGINT (DuckDB sums ints to
-    HUGEINT, which would break schema parity)."""
-    return f"CAST(SUM({expr}) AS BIGINT) AS {alias}"

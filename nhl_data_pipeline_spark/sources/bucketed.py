@@ -36,7 +36,7 @@ def write_bucketed(
     bucketing METADATA, so without re-registration a new JVM would see
     plain parquet and re-shuffle (the layout's whole point lost).
 
-    ``single_file`` (r12, measured at sf100 — bench_logs/r12/): a plain
+    ``single_file`` (measured at sf100, bench_logs/r12/): a plain
     bucketed write emits one file per (input task × bucket), i.e.
     scan_tasks × n_buckets fragments — 16K files at sf100/128 buckets,
     32K at 256 — and the cold scan goes seek-bound (join_chain 143.7 →
@@ -61,7 +61,7 @@ def write_bucketed(
 
 def recommended_buckets(table_bytes: int, total_cores: int) -> int:
     """Bucket-count sizing rule for a fact table, as measured at sf100
-    (r12 probe matrix, bench_logs/r12/):
+    (probe matrix in bench_logs/r12/):
 
     - **Floor: one 128 MiB-compressed bucket per scan task** —
       ``ceil(table_bytes / 128 MiB)`` rounded UP to whole waves of the
@@ -79,7 +79,7 @@ def recommended_buckets(table_bytes: int, total_cores: int) -> int:
       seek-bound (measured: +37% wall at 256 multi-file buckets).
     - Whole waves, never a bare power of two: a ragged tail wave idles
       the fixed-size cluster exactly like the scan-split cap did
-      (catalog.tune_scan_splits' r9 finding).
+      (the rule ``catalog.tune_scan_splits`` follows).
     """
     if table_bytes <= 0 or total_cores <= 0:
         raise ValueError("table_bytes and total_cores must be positive")
@@ -152,18 +152,3 @@ def ensure_bucketed_lake(
         out[name] = tbl
     return out
 
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the executed plan — the
-    metric bucketing drives to zero."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        1 for line in plan.splitlines() if "Exchange hashpartitioning" in line
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key."""
-    return spark.table(left_table).join(spark.table(right_table), key)

@@ -2,11 +2,9 @@
 
 The reference exports 11 silver models to Google Sheets worksheets and 2-3
 to CSV for Tableau (src/nhl_pipeline/export/sheets_export.py:39-133,
-tableau_export.py:41-173). Spark-side: CSV is a native writer; the Sheets
-hop is driver-side pandas → gspread and is stubbed behind an import-try
-(network + credentials are environment concerns, not engine surface).
-Row-cap guard reproduced: Sheets rejects ~48K rows (.context/
-DECISIONS.md:481-487).
+tableau_export.py:41-173). Spark-side the sink is CSV, a native writer;
+the Sheets hop (driver-side pandas → gspread, network + credentials) is
+an environment concern, not engine surface, and is not reproduced.
 """
 
 from __future__ import annotations
@@ -14,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from nhl_data_pipeline_spark.session import run_concurrently
-
-SHEETS_ROW_CAP = 25_000  # practical max before the API chokes (DECISIONS.md:487)
 
 # The reference's export manifest, verbatim names and order
 # (sheets_export.py:39-57): the 11 active worksheet entries — six full
@@ -51,9 +47,9 @@ def export_all(
     to CSV: one `<out_dir>/<model>.csv` directory per EXPORT_MODELS entry,
     header row carrying the model's columns in their model order (the
     reference's `SELECT *` → DataFrame → sheet/CSV hop preserves column
-    order the same way). Returns {model: path}. The Sheets hop itself
-    stays env-gated (export_sheets); CSV is the offline-verifiable sink
-    and the reference's own fallback for the oversize models. The 11
+    order the same way). Returns {model: path}. CSV is the
+    offline-verifiable sink and the reference's own fallback for the
+    oversize models. The 11
     writes are independent and run concurrently."""
     paths = {name: f"{out_dir}/{name}" for name in EXPORT_MODELS}
     run_concurrently(
@@ -65,26 +61,3 @@ def export_all(
     )
     return paths
 
-
-def export_sheets(df: DataFrame, spreadsheet: str, worksheet: str) -> int:
-    """Google Sheets export: toPandas → gspread, guarded by the row cap.
-
-    Raises NotImplementedError where gspread/credentials are absent (this
-    container); the cap check and the pandas hop — the engine-side logic —
-    run regardless, so the guard is testable offline.
-    """
-    n = df.count()
-    if n > SHEETS_ROW_CAP:
-        raise ValueError(
-            f"{worksheet}: {n} rows exceeds the Sheets practical cap "
-            f"({SHEETS_ROW_CAP}); export a filtered model instead "
-            "(the reference's Bruins-only models exist for this reason)"
-        )
-    pdf = df.toPandas()
-    try:
-        import gspread  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            f"gspread not installed; {len(pdf)} rows ready for {spreadsheet}/{worksheet}"
-        ) from e
-    raise NotImplementedError("wire gspread client here when credentials exist")

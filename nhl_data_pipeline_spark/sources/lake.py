@@ -1,67 +1,16 @@
-"""Hive-partitioned JSON lake: writer, reader, idempotent re-runs.
+"""Latest-wins upsert into a parquet table: the sink of the streaming
+upsert (``streaming/events_stream.py``).
 
-Reference operators S4-S6: the `date=/hour=/game_id=` S3 layout
-(src/nhl_pipeline/utils/paths.py:36-117), per-file HEAD-based idempotency
-(s3_utils.py:28-59), and the COPY INTO METADATA$FILENAME regex extraction
-(dags/nhl_daily_ingestion_dag.py:133-190).
-
-Spark-first replacements:
-- writer: df.write.partitionBy("date", "hour") — layout for free;
-- idempotency: dynamic partition overwrite replaces day partitions
-  atomically (no per-file existence checks);
-- filename metadata: partition columns come back free on read; for
-  non-partition metadata, regexp_extract(input_file_name()).
+The reference re-snapshots its sources and keeps the newest snapshot per
+key (W1 dedup); with a table format that is MERGE INTO. Here it is a
+union + ``row_number`` rewrite, scoped to the affected partitions when the
+table is partitioned.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_partitioned_json(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("date", "hour")
-) -> None:
-    """S4: partitioned JSON sink. Dynamic partition overwrite = re-running a
-    day replaces exactly that day's partitions (S5 idempotency without HEAD
-    checks or _SUCCESS markers)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .json(path)
-    )
-
-
-def read_lake_json(spark: SparkSession, path: str) -> DataFrame:
-    """S6: read the lake back; Hive partition columns (date=, hour=) are
-    discovered automatically, and the source file path is attached for
-    lineage — the METADATA$FILENAME equivalent."""
-    return spark.read.json(path).withColumn("s3_key", F.input_file_name())
-
-
-def extract_key_metadata(df: DataFrame, key_col: str = "s3_key") -> DataFrame:
-    """The COPY INTO regex extraction (nhl_daily_ingestion_dag.py:161-162):
-    pull date/game_id out of the file path even when not Hive-partitioned."""
-    return df.withColumns(
-        {
-            "key_date": F.to_date(
-                F.regexp_extract(F.col(key_col), r"date=(\d{4}-\d{2}-\d{2})", 1)
-            ),
-            "key_game_id": F.regexp_extract(
-                F.col(key_col), r"game_id=(\d+)", 1
-            ).cast("long"),
-        }
-    )
-
-
-def append_new_only(
-    incoming: DataFrame, existing: DataFrame, key: str
-) -> DataFrame:
-    """The Iceberg incremental-append pattern
-    (iceberg/bronze_odds_player_props.py:274-346): anti-join incoming rows
-    against already-loaded ids; only the delta is appended."""
-    return incoming.join(existing.select(key).distinct(), key, "left_anti")
 
 
 def upsert_latest(

@@ -162,46 +162,3 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def file_bounding_boxes(path: str, cols: list[str]) -> list[dict]:
-    """Per-parquet-file min/max for ``cols`` read from the footers (what a
-    scan's file-level pruning sees). Used to MEASURE layout quality."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(Path(path).glob("*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        box: dict = {"file": f.name}
-        for c in cols:
-            lo, hi = None, None
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    if col.path_in_schema == c and col.statistics is not None:
-                        s = col.statistics
-                        lo = s.min if lo is None else min(lo, s.min)
-                        hi = s.max if hi is None else max(hi, s.max)
-            box[c] = (lo, hi)
-        out.append(box)
-    return out
-
-
-def files_intersecting(
-    boxes: list[dict], predicate: dict[str, tuple]
-) -> int:
-    """How many files a footer-pruning scan must read for a box predicate
-    {col: (lo, hi)} — the number whose bounding box intersects it."""
-    n = 0
-    for box in boxes:
-        hit = True
-        for c, (plo, phi) in predicate.items():
-            lo, hi = box[c]
-            if lo is None or hi < plo or lo > phi:
-                hit = False
-                break
-        n += hit
-    return n

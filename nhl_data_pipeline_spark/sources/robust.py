@@ -17,11 +17,6 @@ vanish. This module is the engine-side contract for that:
   NOTE (Spark contract): the corrupt column must be materialized
   alongside at least one other field, and filtering on it requires the
   raw column to be retained in the schema passed to the reader.
-- ``schema_union``: widen two explicit schemas field-by-field (new fields
-  nullable, int→long→double numeric promotion, anything else conflicting
-  → string with a recorded reason) — the deterministic analog of
-  parquet's mergeSchema for JSON batches, so old readers keep working
-  when producers add fields.
 - ``drift_report``: per-batch field census (present / null-rate / type
   tag) as a tiny aggregate — the monitoring hook that catches drift
   BEFORE it breaks the silver layer.
@@ -102,58 +97,6 @@ def read_json_quarantine(
     return QuarantineSplit(good=good, quarantined=quarantined, cached=df)
 
 
-_NUMERIC_WIDEN = {
-    ("integer", "long"): T.LongType(),
-    ("long", "integer"): T.LongType(),
-    ("integer", "double"): T.DoubleType(),
-    ("double", "integer"): T.DoubleType(),
-    ("long", "double"): T.DoubleType(),
-    ("double", "long"): T.DoubleType(),
-}
-
-
-def schema_union(
-    old: T.StructType, new: T.StructType
-) -> tuple[T.StructType, list[str]]:
-    """Widened schema covering both, plus human-readable drift notes.
-
-    Rules (deterministic, order = old fields then new-only fields):
-    same type → keep; numeric pair → wider numeric; otherwise → string
-    (JSON's universal donor) with a note. New-only fields arrive
-    nullable; removed fields stay (old data still has them).
-    """
-    notes: list[str] = []
-    by_name_new = {f.name: f for f in new.fields}
-    fields: list[T.StructField] = []
-    for f in old.fields:
-        g = by_name_new.get(f.name)
-        if g is None:
-            notes.append(f"field '{f.name}' absent in new batches (kept)")
-            fields.append(T.StructField(f.name, f.dataType, True))
-        elif g.dataType == f.dataType:
-            fields.append(T.StructField(f.name, f.dataType, True))
-        else:
-            key = (f.dataType.typeName(), g.dataType.typeName())
-            if key in _NUMERIC_WIDEN:
-                t = _NUMERIC_WIDEN[key]
-                notes.append(
-                    f"field '{f.name}' widened {key[0]}+{key[1]} -> "
-                    f"{t.typeName()}"
-                )
-                fields.append(T.StructField(f.name, t, True))
-            else:
-                notes.append(
-                    f"field '{f.name}' type conflict {key[0]} vs {key[1]}"
-                    " -> string"
-                )
-                fields.append(T.StructField(f.name, T.StringType(), True))
-    for g in new.fields:
-        if not any(f.name == g.name for f in old.fields):
-            notes.append(f"field '{g.name}' added (nullable)")
-            fields.append(T.StructField(g.name, g.dataType, True))
-    return T.StructType(fields), notes
-
-
 def drift_report(df: DataFrame) -> DataFrame:
     """One-aggregate field census: (field, n_present, null_rate, type).
 
@@ -183,87 +126,3 @@ def drift_report(df: DataFrame) -> DataFrame:
         F.explode(F.array(*pairs)).alias("s")
     ).select("s.field", "s.n_present", "s.null_rate", "s.type")
 
-
-def stream_json_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    good_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming form of :func:`read_json_quarantine`: a file-source
-    stream whose every micro-batch is split into a good sink and a
-    quarantine sink inside ONE foreachBatch. `availableNow` turns it into
-    an incremental backfill over whatever landed since the last
-    checkpoint; the quarantine output carries (source_file, raw) exactly
-    like the batch form, so replay tooling works against either.
-
-    Idempotence, stated honestly: foreachBatch is at-least-once — a crash
-    between the two appends (or before the checkpoint commit) REPLAYS the
-    batch. Both writes therefore partition by the deterministic batch id
-    and OVERWRITE only their own partition (dynamic partitionOverwriteMode),
-    so a replayed batch replaces its own previous output instead of
-    appending a duplicate — the effective semantics become exactly-once.
-    (The corrupt-column-only restriction doesn't bite here: the batch
-    frame foreachBatch hands over is already parsed.)
-    """
-    full = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
-    reader = (
-        spark.readStream.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
-    if max_files_per_trigger is not None:
-        # Bounded backfill: cap each micro-batch at N source files so a
-        # month-long catch-up over a 100 TB lake proceeds in restartable,
-        # memory-bounded increments instead of one giant batch.
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.json(path)
-        # capture at scan time, as in the batch form
-        .select("*", F.input_file_name().alias("_source_file"))
-    )
-
-    split = quarantine_batch_writer(good_path, quarantine_path)
-    return (
-        stream.writeStream.foreachBatch(split)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def quarantine_batch_writer(good_path: str, quarantine_path: str):
-    """The foreachBatch body of :func:`stream_json_quarantine`, exposed so
-    the replay-idempotence property is directly testable: calling it twice
-    with the same (frame, batch_id) must leave the sinks unchanged."""
-
-    def _split(batch_df: DataFrame, batch_id: int) -> None:
-        tagged = batch_df.withColumn("_batch_id", F.lit(batch_id)).persist()
-        (
-            tagged.filter(F.col(CORRUPT_COL).isNull())
-            .drop(CORRUPT_COL, "_source_file")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(good_path)
-        )
-        (
-            tagged.filter(F.col(CORRUPT_COL).isNotNull())
-            .select(
-                F.col("_source_file").alias("source_file"),
-                F.col(CORRUPT_COL).alias("raw"),
-                "_batch_id",
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(quarantine_path)
-        )
-        tagged.unpersist()
-
-    return _split

@@ -1,14 +1,12 @@
-"""bench.py's _StageMeter contract (r10, VERDICT r9 ask #1).
+"""bench.py's _StageMeter contract.
 
-The meter is the source of every cpu_exponent in the sweep artifacts,
-so its failure modes are pinned: with the UI off (every non-bench
-session, session.py policy) it must disable itself and return inert
-values — a caller must never mistake "no UI" for "zero CPU" — and the
-sweep tool's leg parser must pass cpu through only when a cpu_detail
-line exists (covered in tests/test_sweep_tool.py). The enabled path is
-exercised end-to-end by every bench leg (cpu_detail line + nonzero
-totals asserted against wall in the committed legs), which a unit test
-cannot reproduce without binding the UI port inside pytest.
+The meter is the source of every per-query executor-CPU number bench
+records, so its failure modes are pinned: with the UI off (every
+non-bench session, session.py policy) it must disable itself and return
+inert values — a caller must never mistake "no UI" for "zero CPU". The
+enabled path is exercised end-to-end by every bench leg (cpu_detail line
++ nonzero totals asserted against wall in the committed legs), which a
+unit test cannot reproduce without binding the UI port inside pytest.
 """
 
 from __future__ import annotations
@@ -37,9 +35,9 @@ def test_committed_legs_carry_consistent_cpu_detail():
     the min of its own reps, and the CPU MIN never exceeds the RUN MIN
     by more than the rounding slack.
 
-    r11 (ADVICE): validates every round's legs instead of hard-coding
-    bench_logs/r10 and a count — pruning or relocating old logs must not
-    fail the unit suite — and SKIPS (not fails) when no legs with CPU
+    Validates every committed leg instead of hard-coding one directory
+    and a count — pruning or relocating old logs must not fail the unit
+    suite — and SKIPS (not fails) when no legs with CPU
     detail exist at all. On the cpu<=run bound: both are mins taken
     independently across reps, so this is min_i(cpu_i) <= min_j(run_j) *
     1.05 — valid because cpu_i <= run_i per rep (executor CPU is a

@@ -6,12 +6,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.catalog import load_table
-from nhl_data_pipeline_spark.sources.bucketed import (
-    bucketed_join,
-    exchange_count,
-    write_bucketed,
-)
+from nhl_data_pipeline_spark.sources.bucketed import write_bucketed
 from tests.conftest import TEST_SF_DIR
+
+
+def exchange_count(df) -> int:
+    """Number of shuffle Exchange operators in the executed plan — the
+    metric bucketing drives to zero."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        1 for line in plan.splitlines() if "Exchange hashpartitioning" in line
+    )
 
 
 @pytest.fixture(scope="module")
@@ -33,7 +38,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
-        j = bucketed_join(spark, lt, rt, "l_orderkey")
+        j = spark.table(lt).join(spark.table(rt), "l_orderkey")
         assert exchange_count(j) == 0, "bucketed join must not shuffle"
 
         li = load_table(spark, TEST_SF_DIR, "lineitem")
@@ -56,7 +61,7 @@ def test_bucketed_aggregation_reuses_partitioning(spark, bucketed_tables):
 
 
 def test_register_bucketed_table_survives_catalog_loss(spark, tmp_path):
-    """r12 (VERDICT r11 ask #1): the bucketing METADATA lives in the
+    """The bucketing METADATA lives in the
     session catalog, so a fresh JVM reading the same parquet would
     re-shuffle. register_bucketed_table re-attaches the directory (bucket
     ids recovered from the part-*_NNNNN file names) and the exchange-free
@@ -90,7 +95,7 @@ def test_register_bucketed_table_survives_catalog_loss(spark, tmp_path):
 @pytest.fixture()
 def bucketed_layout(spark, tmp_path):
     """lineitem/orders served from a bucket-by-orderkey layout via
-    catalog.BUCKETED_LAYOUT (the r12 engine switch the sf100
+    catalog.BUCKETED_LAYOUT (the engine switch the sf100
     counterfactual probe flips)."""
     import nhl_data_pipeline_spark.catalog as catalog
     from nhl_data_pipeline_spark.sources.bucketed import ensure_bucketed_lake
@@ -109,7 +114,7 @@ def bucketed_layout(spark, tmp_path):
     )
     catalog.register_bucketed_layout("orders", mapping["orders"], ["o_orderkey"])
     yield mapping
-    catalog.clear_bucketed_layout()
+    catalog.BUCKETED_LAYOUT.clear()
     for tbl in mapping.values():
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -162,7 +167,7 @@ def test_layout_aware_plans_results_unchanged(spark, bucketed_layout):
     got = sorted(
         map(tuple, topk_customers_by_revenue(spark, TEST_SF_DIR).collect())
     )
-    catalog.clear_bucketed_layout()
+    catalog.BUCKETED_LAYOUT.clear()
     want = sorted(
         map(tuple, topk_customers_by_revenue(spark, TEST_SF_DIR).collect())
     )
@@ -171,9 +176,9 @@ def test_layout_aware_plans_results_unchanged(spark, bucketed_layout):
 
 def test_layout_skips_explicit_width_repartition(spark, bucketed_layout, monkeypatch):
     """Above the spill gate the plans plant REPARTITION_BY_NUM on
-    l_orderkey (r9 policy) — but a bucketed lineitem already carries that
-    distribution, so the width guard must SKIP it (planting it would
-    re-add the exchange the layout removed)."""
+    l_orderkey (catalog.fact_shuffle_width) — but a bucketed lineitem
+    already carries that distribution, so the width guard must SKIP it
+    (planting it would re-add the exchange the layout removed)."""
     import nhl_data_pipeline_spark.catalog as cat
     from nhl_data_pipeline_spark.plans.q_windows import (
         topk_customers_by_revenue,
@@ -189,8 +194,8 @@ def test_layout_skips_explicit_width_repartition(spark, bucketed_layout, monkeyp
     assert "REPARTITION_BY_NUM" not in plan
 
     # …and without the layout the same forced width DOES plant it
-    # (the pre-r12 behavior, still correct for plain lake scans).
-    cat.clear_bucketed_layout()
+    # (the behavior that stays correct for plain lake scans).
+    cat.BUCKETED_LAYOUT.clear()
     plan = (
         topk_customers_by_revenue(spark, TEST_SF_DIR)
         ._jdf.queryExecution()
@@ -200,7 +205,7 @@ def test_layout_skips_explicit_width_repartition(spark, bucketed_layout, monkeyp
 
 
 def test_recommended_buckets_rule():
-    """r12 sizing rule: ceil(bytes / 128 MiB) rounded up to whole waves —
+    """Sizing rule: ceil(bytes / 128 MiB) rounded up to whole waves —
     the sf100 probe configuration (16.5 GB, 32 cores → 128) must fall out
     of the rule, and the count is always a wave multiple."""
     from nhl_data_pipeline_spark.sources.bucketed import recommended_buckets

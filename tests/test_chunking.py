@@ -165,14 +165,11 @@ def test_length_bucketed_batches_twin_and_properties(spark, duck):
     assert again == got
 
 
-def test_curation_to_training_composition(spark, tmp_path):
-    """The round-4 stages compose end-to-end: chunk long docs → score each
-    chunk with the quality classifier → keep positives → length-bucketed
-    batches → epoch-shuffled training shards. Checks the handoffs (column
-    contracts) and the end state (every kept chunk lands in exactly one
-    shard file, reproducibly)."""
-    from pathlib import Path
-
+def test_curation_to_training_composition(spark):
+    """The curation stages compose end-to-end: chunk long docs → score
+    each chunk with the quality classifier → keep positives →
+    length-bucketed batches. Checks the handoffs (column contracts) and
+    the end state (every kept chunk lands in exactly one batch)."""
     from nhl_data_pipeline_spark.operators.chunking import (
         chunk_documents,
         length_bucketed_batches,
@@ -180,9 +177,6 @@ def test_curation_to_training_composition(spark, tmp_path):
     from nhl_data_pipeline_spark.operators.classifier import (
         classifier_score,
         demo_weights,
-    )
-    from nhl_data_pipeline_spark.sources.shards import (
-        write_epoch_shuffled_shards,
     )
 
     docs = load_table(spark, TEST_SF_DIR, "documents").select("doc_id", "text")
@@ -202,16 +196,6 @@ def test_curation_to_training_composition(spark, tmp_path):
     batched = length_bucketed_batches(
         kept, batch_size=8, bin_width=8, id_col="chunk_key", text_col="chunk_text"
     )
-    assert batched.count() == n_kept
-
-    out = str(tmp_path / "shards")
-    write_epoch_shuffled_shards(kept, out, 4, "chunk_key", seed=1)
-    shard_keys = []
-    for d in sorted(Path(out).iterdir()):
-        if d.name.startswith("shard="):
-            shard_keys += [
-                r["chunk_key"] for r in spark.read.parquet(str(d)).collect()
-            ]
-    assert sorted(shard_keys) == sorted(
+    assert sorted(r["chunk_key"] for r in batched.collect()) == sorted(
         r["chunk_key"] for r in kept.collect()
     )  # exactly once, no loss

@@ -1,13 +1,15 @@
-"""Every function in ``operators/`` must be reachable from a product path.
+"""Every top-level def and class in the package is reached from a product path.
 
 An AST-only check (no Spark session). Roots are the names referenced by
-the package outside ``operators/``, by module-level code inside
-``operators/``, and by ``__spark_entry__.py``, ``bench.py``, ``tools/*.py``
-and ``perfbench/*.py``. The closure of those roots over the top-level
-``def``s in ``operators/*.py`` must cover every def except the ``KEEP``
-names below, each of which a test uses as a reference or fixture. A new
-operator that only its own test calls fails here: wire it into a query,
-or delete it.
+module-level statements anywhere in the package, every def decorated with
+the registry's ``@query(...)``, and ``__spark_entry__.py``, ``bench.py``,
+``tools/*.py`` and ``perfbench/*.py``. The closure of those roots over the
+top-level ``def``s and ``class``es of ``nhl_data_pipeline_spark/**`` must
+cover every one except the ``KEEP`` names below, each of which a test uses
+as a reference or fixture. Names come from ``Name``, ``Attribute`` and
+``alias`` nodes; string literals do not count. Code that only its own test
+calls fails here: wire it into a product path, move it into that test, or
+delete it.
 """
 
 from __future__ import annotations
@@ -17,7 +19,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "nhl_data_pipeline_spark"
-OPS = PKG / "operators"
 
 KEEP = {
     # independent references a test checks a live path against
@@ -25,6 +26,12 @@ KEEP = {
     "simhash": "array-HOF reference for simhash_exploded",
     "interval_join_naive": "reference for the range-join operator",
     "semantic_neardup_pairs": "exact reference for the blocked semantic-dedup forms",
+    "accent_fold_unicode": "NFKD reference for accent_fold",
+    "not_null": "primitive the fused quality suite is checked against",
+    "unique": "primitive the fused quality suite is checked against",
+    "accepted_values": "primitive the fused quality suite is checked against",
+    "accepted_range": "primitive the fused quality suite is checked against",
+    "relationships": "primitive the fused quality suite is checked against",
     # fixtures and twins for tests of live code
     "train_codebooks": "trains the PQ codebooks the encode/ADC tests use",
     "demo_weights": "classifier weights fixture",
@@ -32,6 +39,8 @@ KEEP = {
     "_hex6_int_sql": "hex decoder of _demo_weight_sql",
     "classifier_score_sql": "DuckDB twin of the classifier score",
 }
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -50,17 +59,25 @@ def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
 
 
-def unreached_operator_defs() -> set[str]:
+def _is_query(stmt: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call)
+        and isinstance(d.func, ast.Name)
+        and d.func.id == "query"
+        for d in getattr(stmt, "decorator_list", ())
+    )
+
+
+def unreached_package_defs() -> set[str]:
     defs: dict[str, list[ast.AST]] = {}
     roots: set[str] = set()
-    for f in sorted(OPS.glob("*.py")):
+    for f in sorted(PKG.rglob("*.py")):
         for stmt in _parse(f).body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if isinstance(stmt, _DEFS) and not _is_query(stmt):
                 defs.setdefault(stmt.name, []).append(stmt)
             else:
                 roots |= _names(stmt)
-    sources = [p for p in PKG.rglob("*.py") if OPS not in p.parents]
-    sources += [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    sources = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
     sources += sorted((ROOT / "tools").glob("*.py"))
     sources += sorted((ROOT / "perfbench").glob("*.py"))
     for f in sources:
@@ -79,8 +96,8 @@ def unreached_operator_defs() -> set[str]:
 
 
 def test_every_operator_def_is_reached_or_kept():
-    unreached = unreached_operator_defs()
+    unreached = unreached_package_defs()
     orphans = sorted(unreached - set(KEEP))
-    assert not orphans, f"operators no product path reaches: {orphans}"
+    assert not orphans, f"defs no product path reaches: {orphans}"
     stale = sorted(set(KEEP) - unreached)
     assert not stale, f"KEEP names now reached (or gone), drop them: {stale}"

@@ -2,12 +2,10 @@
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.catalog import load_table
-from nhl_data_pipeline_spark.sources import lake, rest
+from nhl_data_pipeline_spark.sources import lake
 from nhl_data_pipeline_spark.streaming import events_stream as es
 from tests.conftest import TEST_SF_DIR
 
@@ -31,12 +29,12 @@ def test_streaming_tumbling_counts_match_batch(spark):
 
 
 def test_read_events_stream_ts_dtype_dispatch(spark, tmp_path):
-    """Regression (round-2 defect): read_events_stream must handle BOTH
+    """Regression: read_events_stream must handle BOTH
     physical ts encodings — timestamp[us] parquet (what the test lake
     actually stores; Spark reads it as TIMESTAMP_NTZ) and raw int64
     nanoseconds (what spark.sql.legacy.parquet.nanosAsLong surfaces).
-    The r2 bug applied the ns→µs conversion unconditionally and blew up
-    with DATATYPE_MISMATCH on the micros-typed lake."""
+    Applying the ns→µs conversion unconditionally blows up with
+    DATATYPE_MISMATCH on the micros-typed lake."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -231,63 +229,6 @@ def test_upsert_stream_checkpoint_resume(spark, tmp_path, monkeypatch):
     assert all(got[i] == (2.0, t1) for i in range(50, 150))  # latest wins
 
 
-def test_rest_fetch_with_injected_fetcher(spark):
-    calls = []
-
-    def fake_fetch(url: str) -> dict:
-        calls.append(url)
-        return {"url": url, "items": [1, 2, 3]}
-
-    df = rest.fetch_to_dataframe(spark, ["http://x/a", "http://x/b"], fake_fetch)
-    rows = df.collect()
-    assert len(rows) == 2 and calls == ["http://x/a", "http://x/b"]
-    assert json.loads(rows[0]["payload"])["items"] == [1, 2, 3]
-
-
-def test_rest_pagination_stops_on_short_page(spark):
-    def fake_fetch(url: str) -> dict:
-        start = int(url.split("start=")[1].split("&")[0])
-        n = 5 if start >= 10 else 10  # third page is short
-        return {"data": list(range(n))}
-
-    df = rest.fetch_paginated(
-        spark, "http://x/api?start={start}&limit={limit}", fake_fetch, page_size=10
-    )
-    assert df.count() == 2  # full page + short page
-
-
-def test_lake_roundtrip_and_idempotent_overwrite(spark, tmp_path):
-    path = str(tmp_path / "lake")
-    src = spark.createDataFrame(
-        [(json.dumps({"v": i}), f"2024-11-{1 + i % 2:02d}", 3, i) for i in range(6)],
-        "payload string, date string, hour int, game_id long",
-    )
-    lake.write_partitioned_json(src, path)
-    back = lake.read_lake_json(spark, path)
-    assert back.count() == 6
-    assert {"date", "hour"} <= set(back.columns)  # partition discovery
-    meta = lake.extract_key_metadata(back)
-    assert meta.filter(F.col("key_date").isNull()).count() == 0
-
-    # re-write only day 2024-11-01 with fewer rows → that partition replaced,
-    # the other day untouched (dynamic partition overwrite)
-    redo = spark.createDataFrame(
-        [(json.dumps({"v": 99}), "2024-11-01", 3, 99)],
-        "payload string, date string, hour int, game_id long",
-    )
-    lake.write_partitioned_json(redo, path)
-    after = lake.read_lake_json(spark, path)
-    assert after.filter("date = '2024-11-01'").count() == 1
-    assert after.filter("date = '2024-11-02'").count() == 3
-
-
-def test_append_new_only(spark):
-    existing = spark.createDataFrame([(1,), (2,)], "event_id long")
-    incoming = spark.createDataFrame([(2,), (3,), (4,)], "event_id long")
-    delta = lake.append_new_only(incoming, existing, "event_id")
-    assert sorted(r["event_id"] for r in delta.collect()) == [3, 4]
-
-
 def test_upsert_latest(spark, tmp_path):
     path = str(tmp_path / "tbl")
     day1 = spark.createDataFrame(
@@ -368,35 +309,6 @@ def test_upsert_latest_tie_determinism(spark, tmp_path):
     assert a[0]["val"] == b[0]["val"]
 
 
-def test_fetch_paginated_honesty(spark):
-    """Missing items_key raises (error-shaped payload must not read as a
-    complete short page); exhausting max_pages without a short page warns."""
-    import warnings
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="no 'data' key"):
-        rest.fetch_paginated(
-            spark,
-            "http://x/api?start={start}&limit={limit}",
-            lambda url: {"error": "rate limited"},
-            page_size=10,
-        )
-
-    full = lambda url: {"data": list(range(10))}  # noqa: E731
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        df = rest.fetch_paginated(
-            spark,
-            "http://x/api?start={start}&limit={limit}",
-            full,
-            page_size=10,
-            max_pages=3,
-        )
-        assert df.count() == 3
-        assert any("TRUNCATED" in str(x.message) for x in w)
-
-
 def test_streaming_checkpoint_recovery(spark, tmp_path):
     """Exactly-once across a restart: a second availableNow run over the
     SAME checkpoint must process only files that arrived after the first
@@ -427,82 +339,3 @@ def test_streaming_checkpoint_recovery(spark, tmp_path):
     assert out.count() == n1 + n2
     # No duplicates: every event_id exactly once.
     assert out.select("event_id").distinct().count() == n1 + n2
-
-
-def test_training_shards_deterministic_and_ordered(spark, tmp_path):
-    from pathlib import Path
-
-    from nhl_data_pipeline_spark.sources.shards import (
-        shard_id,
-        write_training_shards,
-    )
-
-    docs = load_table(spark, TEST_SF_DIR, "documents").select(
-        "doc_id", "lang", "n_chars"
-    )
-    n = docs.count()
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, 4, "doc_id", ["doc_id"])
-
-    dirs = sorted(p.name for p in Path(out).iterdir() if p.name.startswith("shard="))
-    assert len(dirs) == 4
-    total = 0
-    for d in dirs:
-        k = int(d.split("=")[1])
-        files = [p for p in (Path(out) / d).glob("*.parquet")]
-        assert len(files) == 1  # whole shard co-located in one file
-        rows = spark.read.parquet(str(Path(out) / d)).collect()
-        total += len(rows)
-        ids = [r.doc_id for r in rows]
-        assert ids == sorted(ids)  # in-file order
-        # Membership is the pure hash function of the key.
-        expected = {
-            r.doc_id
-            for r in docs.select(
-                "doc_id", shard_id(F.col("doc_id"), 4).alias("s")
-            ).collect()
-            if r.s == k
-        }
-        assert set(ids) == expected
-    assert total == n
-
-    # Re-run is byte-stable on membership: same shard -> same ids.
-    out2 = str(tmp_path / "shards2")
-    write_training_shards(docs.repartition(7), out2, 4, "doc_id", ["doc_id"])
-    for d in dirs:
-        a = {r.doc_id for r in spark.read.parquet(str(Path(out) / d)).collect()}
-        b = {r.doc_id for r in spark.read.parquet(str(Path(out2) / d)).collect()}
-        assert a == b
-
-
-def test_epoch_shuffled_shards(spark, tmp_path):
-    """Per-epoch seeded shuffle: shard MEMBERSHIP is epoch-invariant, the
-    within-shard ORDER is a reproducible permutation that changes with the
-    seed."""
-    from pathlib import Path
-
-    from nhl_data_pipeline_spark.sources.shards import (
-        write_epoch_shuffled_shards,
-    )
-
-    docs = load_table(spark, TEST_SF_DIR, "documents").select("doc_id", "lang")
-
-    def orders(path: str) -> dict[str, list[int]]:
-        return {
-            d.name: [
-                r.doc_id for r in spark.read.parquet(str(d)).collect()
-            ]
-            for d in sorted(Path(path).iterdir())
-            if d.name.startswith("shard=")
-        }
-
-    e0, e0b, e1 = (str(tmp_path / x) for x in ("e0", "e0b", "e1"))
-    write_epoch_shuffled_shards(docs, e0, 4, "doc_id", seed=0)
-    write_epoch_shuffled_shards(docs.repartition(5), e0b, 4, "doc_id", seed=0)
-    write_epoch_shuffled_shards(docs, e1, 4, "doc_id", seed=1)
-    o0, o0b, o1 = orders(e0), orders(e0b), orders(e1)
-    assert o0 == o0b  # same epoch reproduces byte-identical order
-    for shard in o0:
-        assert set(o0[shard]) == set(o1[shard])  # membership fixed
-        assert o0[shard] != o1[shard]  # order is a new permutation
-        assert sorted(o0[shard]) != o0[shard]  # and actually shuffled
