@@ -358,14 +358,13 @@ def main() -> None:
         # an untuned query never inherits the previous query's tuning.
         reset_scan_splits(spark)
         try:
-            bench_fn = spec.bench_fn or spec.fn
             for i in range(5):
                 spark.catalog.clearCache()
                 if i == 2:
                     compiled = codegen_compiles(spark)
                 mark = meter.snap() if i >= 2 else -1
                 t0 = time.perf_counter()
-                bench_fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+                spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 if i >= 2:
                     runs.append(time.perf_counter() - t0)
                     d = meter.since(mark)
@@ -396,13 +395,9 @@ def main() -> None:
     counts: dict[str, float | str] = {}
     if os.environ.get("SPARK_GRAFT_COUNTS") == "1":
         try:
-            from nhl_data_pipeline_spark.plans.q_text import (
-                _minhash_lsh_pure,
-            )
-
             spark.catalog.clearCache()
             counts["minhash_lsh_candidate_pairs"] = float(
-                _minhash_lsh_pure(spark, SF_DIR).count()
+                all_queries()["dedup_minhash_lsh"].fn(spark, SF_DIR).count()
             )
         except Exception as exc:  # noqa: BLE001
             counts["error"] = repr(exc)[:200]
@@ -528,7 +523,7 @@ def _pipeline_e2e_probe(spark) -> dict:
 # dialect.rewrite_current_date, so its window intersects the fixture
 # season — all 18 statements must now produce rows.
 _WORKSHEET_EXPECTED_EMPTY: set[str] = set()
-_WORKSHEET_EMPTY_CAUSE = "none expected empty since r10"
+_WORKSHEET_EMPTY_CAUSE = "none expected empty"
 _WORKSHEET_AS_OF = "2024-11-15"  # run_pipeline's injected as_of
 
 
@@ -879,7 +874,7 @@ def _dedup_scale_probe(spark) -> dict:
     for sf_dir in ("/root/testdata/sf0.01", SF_DIR):
         probe: dict[str, float] = {}
         timed(probe, "ngram_jaccard_naive", qs["dedup_ngram_jaccard"].fn(spark, sf_dir))
-        timed(probe, "minhash_lsh", qs["dedup_minhash_lsh"].bench_fn(spark, sf_dir))
+        timed(probe, "minhash_lsh", qs["dedup_minhash_lsh"].fn(spark, sf_dir))
         out[Path(sf_dir).name] = probe
 
     def naive_pairs_of(sh):

@@ -132,20 +132,33 @@ def conditional_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (hit_rate_ratios folded into distinct_counts below — round-4 registry
-# rotation; the A4 ratio columns now ride the same per-event_type
-# aggregate pass.)
-
-
+@query(
+    "distinct_counts",
+    covers="A4,A5,A6",
+    oracle=f"""
+        SELECT d.event_type, d.user_id, u.unique_users, u.n_events,
+               u.n_over, u.n_decided, u.over_rate
+        FROM (SELECT DISTINCT event_type, user_id FROM events) d
+        JOIN (
+            SELECT event_type,
+                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS unique_users,
+                   {bcount('n_events')},
+                   {bcount('n_over', 'value > 250')},
+                   {bcount('n_decided', 'value <> 250')},
+                   CAST(COUNT(CASE WHEN value > 250 THEN 1 END) AS DOUBLE)
+                       / NULLIF(COUNT(CASE WHEN value <> 250 THEN 1 END), 0)
+                       AS over_rate
+            FROM events
+            GROUP BY event_type
+        ) u USING (event_type)
+    """,
+)
 def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT dedup (A5) + exact COUNT(DISTINCT) per group (A6) +
-    NULLIF-guarded filtered-count hit-rate ratios (A4). Driver-checked as
-    the 'dist' branch of `having_min_sample` since the round-5 second
-    rotation (the `hit_rate_ratios` row was merged here in round 4; the
-    ratio columns
-    ride the same per-event_type aggregate pass, so the fold costs no
-    extra scan): every distinct (event_type, user_id) pair annotated with
-    its group's counts and over-rate.
+    NULLIF-guarded filtered-count hit-rate ratios (A4): every distinct
+    (event_type, user_id) pair annotated with its group's counts and
+    over-rate. The ratio columns ride the same per-event_type aggregate
+    pass, so they cost no extra scan.
 
     Analogs: dim_team's DISTINCT + the crosswalk's distinct odds names
     (`dim_team.sql:11-30`, `stg_player_name_crosswalk.sql:52-64`), the
@@ -176,41 +189,17 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "having_min_sample",
-    covers="A4,A5,A6,A7,A8",
+    covers="A7,A8",
     oracle=f"""
-        SELECT 'hav' AS op, c_mktsegment AS g1,
-               CAST(c_nationkey AS BIGINT) AS g2, {bcount('m1')},
-               CAST(NULL AS BIGINT) AS m2, CAST(NULL AS BIGINT) AS m3,
-               CAST(NULL AS BIGINT) AS m4, {dsum('c_acctbal', 'v')}
+        SELECT c_nationkey, c_mktsegment, {bcount('n_customers')},
+               {dsum('c_acctbal', 'total_balance')}
         FROM customer
         GROUP BY c_nationkey, c_mktsegment
         HAVING COUNT(*) >= 10
-        UNION ALL
-        SELECT 'dist', d.event_type, d.user_id, u.unique_users, u.n_events,
-               u.n_over, u.n_decided, u.over_rate
-        FROM (SELECT DISTINCT event_type, user_id FROM events) d
-        JOIN (
-            SELECT event_type,
-                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS unique_users,
-                   {bcount('n_events')},
-                   {bcount('n_over', 'value > 250')},
-                   {bcount('n_decided', 'value <> 250')},
-                   CAST(COUNT(CASE WHEN value > 250 THEN 1 END) AS DOUBLE)
-                       / NULLIF(COUNT(CASE WHEN value <> 250 THEN 1 END), 0)
-                       AS over_rate
-            FROM events
-            GROUP BY event_type
-        ) u USING (event_type)
     """,
 )
 def having_min_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAVING + GROUP BY ordinal (A7+A8), union-tagged with the
-    DISTINCT / COUNT(DISTINCT) / hit-rate family (merged
-    `distinct_counts`, round-5 second rotation — both are pure aggregate
-    surfaces; the fold freed a driver slot, see q_projection).
-
-    'hav' branch (merged A7+A8; formerly two registered queries — the
-    registry sits at the driver's 50-query cap).
+    """HAVING + GROUP BY ordinal (A7+A8).
 
     Analog of `HAVING COUNT(*) >= 5/10/20`
     (`rpt_sog_props_performance.sql:73,104`) and `GROUP BY 1,2,...,7`
@@ -221,7 +210,7 @@ def having_min_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     same string-bridge idiom as functions.scalars.dsum_double_sql.
     """
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    hav = spark.sql(
+    return spark.sql(
         """
         SELECT c_nationkey, c_mktsegment,
                CAST(COUNT(*) AS BIGINT) AS n_customers,
@@ -231,42 +220,17 @@ def having_min_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2
         HAVING COUNT(*) >= 10
         """
-    ).select(
-        F.lit("hav").alias("op"),
-        F.col("c_mktsegment").alias("g1"),
-        F.col("c_nationkey").cast("bigint").alias("g2"),
-        F.col("n_customers").alias("m1"),
-        F.lit(None).cast("bigint").alias("m2"),
-        F.lit(None).cast("bigint").alias("m3"),
-        F.lit(None).cast("bigint").alias("m4"),
-        F.col("total_balance").alias("v"),
     )
-    dist = distinct_counts(spark, sf_dir).select(
-        F.lit("dist").alias("op"),
-        F.col("event_type").alias("g1"),
-        F.col("user_id").cast("bigint").alias("g2"),
-        F.col("unique_users").alias("m1"),
-        F.col("n_events").alias("m2"),
-        F.col("n_over").alias("m3"),
-        F.col("n_decided").alias("m4"),
-        F.col("over_rate").alias("v"),
-    )
-    return hav.unionByName(dist)
 
-
-# (null_profiling folded into profiling_aggregates below — round-4
-# registry rotation; the A9 null profile is now the 'nulls' branch of the
-# tagged profiling union.)
 
 _NULL_PROFILE_COLS = ("event_id", "user_id", "event_type", "value", "props")
 
 
 @query(
     "set_operations",
-    covers="U1,U2,U-ext-intersect,U-ext-except",
+    covers="U1,U2",
     oracle=f"""
-        SELECT user_id AS grp_key, metric_source AS op, metric_value,
-               {bcount('n_copies')}
+        SELECT user_id, metric_source, metric_value, {bcount('n_copies')}
         FROM (
             SELECT user_id, 'click' AS metric_source, value AS metric_value
             FROM events WHERE event_type = 'click'
@@ -275,29 +239,10 @@ _NULL_PROFILE_COLS = ("event_id", "user_id", "event_type", "value", "props")
             FROM events WHERE event_type = 'purchase'
         )
         GROUP BY user_id, metric_source, metric_value
-        UNION ALL
-        SELECT CAST(nationkey AS BIGINT), op,
-               CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT)
-        FROM (
-            SELECT nationkey, 'intersect' AS op FROM (
-                SELECT c_nationkey AS nationkey FROM customer
-                INTERSECT
-                SELECT s_nationkey FROM supplier
-            )
-            UNION ALL
-            SELECT nationkey, 'except' AS op FROM (
-                SELECT c_nationkey AS nationkey FROM customer
-                EXCEPT
-                SELECT s_nationkey FROM supplier
-            )
-        )
     """,
 )
 def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full set-operation family in one tagged result: UNION ALL with
-    rename-alignment (U1), deduplicating UNION (U2), and the INTERSECT /
-    EXCEPT dialect extensions (beyond the reference — SURVEY §2.8 notes it
-    has neither), each branch tagged in `op`.
+    """UNION ALL with rename-alignment (U1) + deduplicating UNION (U2).
 
     Analogs: the 4-way home/away×position union
     (`stg_player_game_stats.sql:29-57`), the rename-for-compatibility union
@@ -306,10 +251,7 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-swap bug; the groupBy-all-columns dedup keeps the UNION ALL
     multiplicity observable as n_copies (ALL and DISTINCT semantics in one
     plan: Union → two-phase hash aggregate, map-side partials combine
-    before the shuffle). INTERSECT plans as a left-semi join after
-    distinct, EXCEPT as a left-anti join (the J8 shape, reused by
-    Catalyst); both share the same two scans. The final stitch is itself a
-    rename-alignment union over disjoint shapes (nulled measure columns).
+    before the shuffle).
     """
     e = load_table(spark, sf_dir, "events")
 
@@ -320,53 +262,80 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("metric_value"),
         )
 
-    uni = (
+    return (
         side("click")
         .unionByName(side("purchase"))
         .groupBy("user_id", "metric_source", "metric_value")
         .agg(F.count(F.lit(1)).alias("n_copies"))
-        .select(
-            F.col("user_id").alias("grp_key"),
-            F.col("metric_source").alias("op"),
-            "metric_value",
-            "n_copies",
-        )
     )
+
+
+@query(
+    "intersect_except",
+    covers="U-ext-intersect,U-ext-except",
+    oracle="""
+        SELECT nationkey, 'intersect' AS set_op FROM (
+            SELECT c_nationkey AS nationkey FROM customer
+            INTERSECT
+            SELECT s_nationkey FROM supplier
+        )
+        UNION ALL
+        SELECT nationkey, 'except' FROM (
+            SELECT c_nationkey AS nationkey FROM customer
+            EXCEPT
+            SELECT s_nationkey FROM supplier
+        )
+    """,
+)
+def intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The INTERSECT / EXCEPT dialect extensions (beyond the reference —
+    SURVEY §2.8 notes it has neither), each nation key labelled with the
+    set operation that produced it. INTERSECT plans as a left-semi join
+    after distinct, EXCEPT as a left-anti join (the J8 shape, reused by
+    Catalyst); both share the same two scans."""
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
     s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
-    sets = (
+    return (
         c.intersect(s)
-        .withColumn("op", F.lit("intersect"))
-        .unionByName(c.subtract(s).withColumn("op", F.lit("except")))
-        .select(
-            F.col("nationkey").cast("bigint").alias("grp_key"),
-            "op",
-            F.lit(None).cast("double").alias("metric_value"),
-            F.lit(None).cast("bigint").alias("n_copies"),
-        )
+        .withColumn("set_op", F.lit("intersect"))
+        .unionByName(c.subtract(s).withColumn("set_op", F.lit("except")))
     )
-    return uni.unionByName(sets)
 
 
 @query(
     "profiling_aggregates",
-    covers="A-ext-cube,A-ext-percentile,A9",
+    covers="A-ext-cube",
     oracle=f"""
-        SELECT 'cube' AS op, o_orderstatus AS dim1, o_orderpriority AS dim2,
-               {bcount('n')}, {dsum('o_totalprice', 'total')},
-               CAST(NULL AS DOUBLE) AS p50, CAST(NULL AS DOUBLE) AS p90,
-               CAST(NULL AS DOUBLE) AS p99
+        SELECT o_orderstatus, o_orderpriority,
+               {bcount('n')}, {dsum('o_totalprice', 'total')}
         FROM orders
         GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        UNION ALL
-        SELECT 'percentile', event_type, CAST(NULL AS VARCHAR),
-               CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
+    """,
+)
+def profiling_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE grouping sets over orders: SURVEY §2.5 notes the reference has
+    none; a 100 TB profiling pipeline wants every marginal from one pass."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .cube("o_orderstatus", "o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr(dsum_double_sql("o_totalprice")).alias("total"),
+        )
+    )
+
+
+@query(
+    "percentile_profile",
+    covers="A-ext-percentile",
+    oracle=f"""
+        SELECT event_type,
                {", ".join(
-                   f"lo{p} + (COALESCE(hi{p}, lo{p}) - lo{p}) * fr{p}"
+                   f"lo{p} + (COALESCE(hi{p}, lo{p}) - lo{p}) * fr{p} AS p{p}"
                    for p in ("50", "90", "99")
                )}
         FROM (
@@ -398,72 +367,27 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             GROUP BY event_type
         )
-        UNION ALL
-        SELECT 'nulls', cols.c, CAST(NULL AS VARCHAR), cols.n_nulls,
-               CAST(t.n_rows AS DOUBLE), CAST(NULL AS DOUBLE),
-               CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-        FROM (
-            {" UNION ALL ".join(
-                f'''SELECT '{c}' AS c,
-                    CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                        AS n_nulls FROM events'''
-                for c in _NULL_PROFILE_COLS
-            )}
-        ) cols
-        CROSS JOIN (SELECT count(*) AS n_rows FROM events) t
     """,
 )
-def profiling_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-profiling aggregates beyond the reference's surface, one
-    tagged result (formerly cube_rollup_profile + percentile_profile +
-    null_profiling, merged row-for-row): CUBE grouping sets over orders
-    (SURVEY §2.5 notes the reference has none; a 100 TB profiling pipeline
-    wants every marginal from one pass), exact interpolated percentiles
-    per event type (explicit rank arithmetic mirrored in both engines —
-    see the inline comment; the builtins drift 1 ulp at 1M rows; at
-    100 TB prefer approx_percentile's t-digest), and the
-    per-column null profile of events (A9 — analog of the time-travel
-    validator's null profile, `src/nhl_pipeline/utils/
-    time_travel_validator.py:126-160`, `query/validate_bronze.py:157-166`)
-    as 'nulls' rows: dim1 = column name, n = null count, total = row
-    count. The null branch is ONE aggregate pass producing a single row,
-    unpivoted to rows via `stack` — no per-column rescans. The CUBE's own
-    NULL margin dims stay distinguishable from the other branches via the
-    op tag. Each branch is an independent scan→aggregate; the stitch is a
-    rename-alignment union of disjoint shapes (nulled measure columns)."""
-    o = load_table(spark, sf_dir, "orders")
-    cube = (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(dsum_double_sql("o_totalprice")).alias("total"),
-        )
-        .select(
-            F.lit("cube").alias("op"),
-            F.col("o_orderstatus").alias("dim1"),
-            F.col("o_orderpriority").alias("dim2"),
-            "n",
-            "total",
-            F.lit(None).cast("double").alias("p50"),
-            F.lit(None).cast("double").alias("p90"),
-            F.lit(None).cast("double").alias("p99"),
-        )
-    )
-    e = load_table(spark, sf_dir, "events")
-    # Exact interpolated percentiles via EXPLICIT rank arithmetic, not the
-    # builtin: Spark `percentile` and DuckDB `quantile_cont` implement the
-    # same definition with differently-ordered float ops, and at sf1
-    # (1M events) the p99 interpolation drifted 1 ulp between them
-    # (caught by an sf1 parity sweep; bit-equal held through sf0.1).
-    # Here BOTH engines evaluate the identical expression tree —
-    # pos = p·(n−1); k = floor(pos); lo/hi = values at rank k+1/k+2;
-    # lo + (coalesce(hi, lo) − lo)·(pos − k) — so every IEEE op matches
-    # bit-for-bit at any scale. NULL values are filtered first (the
-    # builtins ignore them; NULL ordering also differs between engines).
+def percentile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact interpolated p50/p90/p99 per event type (at 100 TB prefer
+    approx_percentile's t-digest).
+
+    Explicit rank arithmetic, not the builtin: Spark `percentile` and
+    DuckDB `quantile_cont` implement the same definition with
+    differently-ordered float ops, and at sf1 (1M events) the p99
+    interpolation drifted 1 ulp between them (caught by an sf1 parity
+    sweep; bit-equal held through sf0.1). Here BOTH engines evaluate the
+    identical expression tree — pos = p·(n−1); k = floor(pos); lo/hi =
+    values at rank k+1/k+2; lo + (coalesce(hi, lo) − lo)·(pos − k) — so
+    every IEEE op matches bit-for-bit at any scale. NULL values are
+    filtered first (the builtins ignore them; NULL ordering also differs
+    between engines)."""
     from pyspark.sql.window import Window as W
 
     ranked = (
-        e.filter(F.col("value").isNotNull())
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
         .select("event_type", "value")
         .withColumn(
             "rn",
@@ -493,45 +417,46 @@ def profiling_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo, hi, fr = (F.col(f"{c}{tag}") for c in ("lo", "hi", "fr"))
         return lo + (F.coalesce(hi, lo) - lo) * fr
 
-    pct = (
-        ranked.groupBy("event_type")
-        .agg(*aggs)
-        .select(
-            F.lit("percentile").alias("op"),
-            F.col("event_type").alias("dim1"),
-            F.lit(None).cast("string").alias("dim2"),
-            F.lit(None).cast("bigint").alias("n"),
-            F.lit(None).cast("double").alias("total"),
-            interp("50").alias("p50"),
-            interp("90").alias("p90"),
-            interp("99").alias("p99"),
-        )
+    return ranked.groupBy("event_type").agg(*aggs).select(
+        "event_type", *(interp(t).alias(f"p{t}") for t in ("50", "90", "99"))
     )
-    one = e.agg(
+
+
+@query(
+    "null_profiling",
+    covers="A9",
+    oracle=f"""
+        SELECT cols.column_name, cols.n_nulls, t.n_rows
+        FROM (
+            {" UNION ALL ".join(
+                f'''SELECT '{c}' AS column_name,
+                    CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                        AS n_nulls FROM events'''
+                for c in _NULL_PROFILE_COLS
+            )}
+        ) cols
+        CROSS JOIN (SELECT count(*) AS n_rows FROM events) t
+    """,
+)
+def null_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-column null profile of events (A9): analog of the time-travel
+    validator's null profile (`src/nhl_pipeline/utils/
+    time_travel_validator.py:126-160`, `query/validate_bronze.py:157-166`).
+    ONE aggregate pass produces a single row, unpivoted to one row per
+    column via `stack` — no per-column rescans."""
+    one = load_table(spark, sf_dir, "events").agg(
         *[
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
             .cast("bigint")
             .alias(f"_null_{c}")
             for c in _NULL_PROFILE_COLS
         ],
-        F.count(F.lit(1)).alias("_n_rows"),
+        F.count(F.lit(1)).alias("n_rows"),
     )
     stack_args = ", ".join(f"'{c}', _null_{c}" for c in _NULL_PROFILE_COLS)
-    nulls = one.select(
+    return one.select(
         F.expr(
-            f"stack({len(_NULL_PROFILE_COLS)}, {stack_args}) AS (dim1, n)"
+            f"stack({len(_NULL_PROFILE_COLS)}, {stack_args}) AS (column_name, n_nulls)"
         ),
-        F.col("_n_rows"),
-    ).select(
-        F.lit("nulls").alias("op"),
-        "dim1",
-        F.lit(None).cast("string").alias("dim2"),
-        "n",
-        F.col("_n_rows").cast("double").alias("total"),
-        F.lit(None).cast("double").alias("p50"),
-        F.lit(None).cast("double").alias("p90"),
-        F.lit(None).cast("double").alias("p99"),
+        "n_rows",
     )
-    return cube.unionByName(pct).unionByName(nulls)
-
-

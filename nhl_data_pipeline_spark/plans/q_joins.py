@@ -85,8 +85,7 @@ def composite_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_suppkey) hash partitioning, so AQE can plan a single shuffle reused by
     the aggregate and the join.
 
-    r9 (VERDICT r8 ask #2 audit, refined by the fourth-decade sweep):
-    session width + AQE is the fast path; catalog.fact_shuffle_width
+    Scale policy: session width + AQE is the fast path; catalog.fact_shuffle_width
     engages an explicit whole-wave composite-key repartition (feeding
     BOTH the aggregate and both join sides — distribution satisfied,
     zero planted exchanges on top) only once per-task state at session
@@ -137,16 +136,15 @@ def join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dim tables broadcast; the customer⋈orders and orders⋈lineitem joins
     shuffle on their natural keys. The region filter prunes before any join.
 
-    r9 scale policy (VERDICT r8 ask #2, refined by the fourth-decade
-    sweep): the fact-side shuffles stay at session width under AQE — the
+    Scale policy: the fact-side shuffles stay at session width under AQE — the
     measured fast path (sf30: 11.0 s plain vs 18.8 s with the first-cut
     explicit 698-way repartition, whose 4.5 MiB tasks lost more to
     scheduling and disabled AQE coalescing than they saved; the WORK is
-    sublinear — committed r10 measurement: cpu_exponent 0.91 at
-    sf10→sf30, BENCH_r10_sf30_sweep.json).
+    sublinear — cpu_exponent 0.91 at sf10→sf30,
+    BENCH_r10_sf30_sweep.json).
     catalog.fact_shuffle_width returns a width only once per-task
     compressed input at session width would break the no-spill budget
-    (the r8 defect class this guard exists for); then each fact side is
+    (per-task hash state growing with the lake); then each fact side is
     repartitioned on its join key at a whole-wave width targeting
     ~64 MiB/task. REPARTITION_BY_NUM on the join key satisfies the
     join's required distribution, so EnsureRequirements plants nothing
@@ -167,7 +165,7 @@ def join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     if w_co:
         c = c.repartition(w_co, F.col("c_custkey"))
         o = o.repartition(w_co, F.col("o_custkey"))
-    # r12 (VERDICT r11 ask #1): layout-aware width — a lineitem served
+    # Layout-aware width: a lineitem served
     # from a bucket-by-l_orderkey layout (catalog.BUCKETED_LAYOUT) already
     # carries the join's distribution, so the explicit repartition would
     # RE-ADD the exchange the layout removed (the 128-task, 9.7 GB-write,
@@ -177,8 +175,8 @@ def join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = li.repartition(w_li, F.col("l_orderkey"))
     co = c.join(o, F.col("c_custkey") == F.col("o_custkey"))
     if bucketed_on("lineitem", "l_orderkey"):
-        # Layout-aware JOIN STRATEGY, not just layout-aware width (r12
-        # probe, bench_logs/r12/probe_bucketed_join_sf100.out): with a
+        # Layout-aware JOIN STRATEGY, not just layout-aware width
+        # (bench_logs/r12/probe_bucketed_join_sf100.out): with a
         # multi-file-bucket lineitem the default sort-merge join re-sorts
         # every bucket locally — 25 GB mem / 9.3 GB disk sorter spill at
         # sf100, the exact disk-bound pathology the layout was built to
@@ -389,48 +387,23 @@ def entity_resolution_crosswalk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cross_anti_join_flags",
-    covers="J7,J8,J9",
+    covers="J7,J8",
     oracle="""
-        SELECT 'flags' AS op, c.c_custkey AS entity_key,
-               CAST(NULL AS BIGINT) AS row_key, c.c_name AS name,
+        SELECT c.c_custkey, c.c_name,
                CASE WHEN EXISTS (SELECT 1 FROM orders o
                                  WHERE o.o_custkey = c.c_custkey)
                     THEN 'has_orders' ELSE 'no_orders' END AS order_status,
-               g.max_order_ts AS ts,
-               CAST(NULL AS DOUBLE) AS price
+               g.max_order_ts
         FROM customer c
         CROSS JOIN (SELECT max(o_orderdate) AS max_order_ts FROM orders) g
-        UNION ALL
-        SELECT 'latest', o.o_custkey, o.o_orderkey, CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), o.o_orderdate, o.o_totalprice
-        FROM orders o
-        WHERE EXISTS (
-            SELECT 1 FROM (
-                SELECT o_custkey, max(o_orderdate) AS max_ts
-                FROM orders GROUP BY o_custkey
-            ) m
-            WHERE m.o_custkey = o.o_custkey AND m.max_ts = o.o_orderdate
-        )
     """,
 )
 def cross_anti_join_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar broadcast cross join + semi/anti partition of one dimension
-    (merged `cross_join_scalar` + `anti_join_unmatched`, round-4 rotation)
-    + the tuple-IN latest-row-per-entity semi join (merged
-    `semi_join_latest_order`, round-5 rotation — this slot already unions
-    the J7/J8/J9 join variants).
-
-    'flags' branch: every customer tagged has_orders/no_orders via a
-    GENUINE left_semi / left_anti pair (both operators stay in the
-    physical plan — pinned in tests/test_plan_shape.py), with the global
-    latest order timestamp attached to every row by a broadcast
-    nested-loop cross join.
-
-    'latest' branch: semi join via tuple-IN against an aggregate — the
-    latest order per customer, analog of latest-game-per-team streak
-    detection (`team_shot_example_queries.sql:96-103`), expressed as a
-    left_semi on the composite key (the plan Spark produces for a
-    multi-column IN subquery).
+    """Scalar broadcast cross join + semi/anti partition of one dimension:
+    every customer tagged has_orders/no_orders via a GENUINE left_semi /
+    left_anti pair (both operators stay in the physical plan — pinned in
+    tests/test_plan_shape.py), with the global latest order timestamp
+    attached to every row by a broadcast nested-loop cross join.
 
     Analogs: attaching `current_season` / `next_opponent` to every row
     (`dim_player.sql:79`, `bruins_opponent_shot_locations.sql:21`);
@@ -440,7 +413,6 @@ def cross_anti_join_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast the orders key set (or shuffle on custkey when it outgrows
     the broadcast threshold); the scalar side is always a 1-row broadcast.
     """
-    nul_s = lambda a: F.lit(None).cast("string").alias(a)  # noqa: E731
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     g = o.agg(F.max("o_orderdate").alias("max_order_ts"))
@@ -454,33 +426,35 @@ def cross_anti_join_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "c_name")
         .withColumn("order_status", F.lit("no_orders"))
     )
-    flags = (
-        semi.unionByName(anti)
-        .crossJoin(F.broadcast(g))
-        .select(
-            F.lit("flags").alias("op"),
-            F.col("c_custkey").alias("entity_key"),
-            F.lit(None).cast("bigint").alias("row_key"),
-            F.col("c_name").alias("name"),
-            "order_status",
-            F.col("max_order_ts").alias("ts"),
-            F.lit(None).cast("double").alias("price"),
+    return semi.unionByName(anti).crossJoin(F.broadcast(g))
+
+
+@query(
+    "semi_join_latest_order",
+    covers="J9",
+    oracle="""
+        SELECT o.o_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
+        FROM orders o
+        WHERE EXISTS (
+            SELECT 1 FROM (
+                SELECT o_custkey, max(o_orderdate) AS max_ts
+                FROM orders GROUP BY o_custkey
+            ) m
+            WHERE m.o_custkey = o.o_custkey AND m.max_ts = o.o_orderdate
         )
-    )
+    """,
+)
+def semi_join_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi join via tuple-IN against an aggregate: the latest order per
+    customer, analog of latest-game-per-team streak detection
+    (`team_shot_example_queries.sql:96-103`), expressed as a left_semi on
+    the composite key (the plan Spark produces for a multi-column IN
+    subquery)."""
+    o = load_table(spark, sf_dir, "orders")
     latest = o.groupBy("o_custkey").agg(F.max("o_orderdate").alias("o_orderdate"))
-    latest_rows = (
-        o.join(latest, ["o_custkey", "o_orderdate"], "left_semi")
-        .select(
-            F.lit("latest").alias("op"),
-            F.col("o_custkey").alias("entity_key"),
-            F.col("o_orderkey").alias("row_key"),
-            nul_s("name"),
-            nul_s("order_status"),
-            F.col("o_orderdate").alias("ts"),
-            F.col("o_totalprice").alias("price"),
-        )
+    return o.join(latest, ["o_custkey", "o_orderdate"], "left_semi").select(
+        "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    return flags.unionByName(latest_rows)
 
 
 @query(

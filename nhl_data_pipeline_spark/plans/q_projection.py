@@ -25,10 +25,24 @@ from nhl_data_pipeline_spark.plans.registry import query
 from nhl_data_pipeline_spark.plans.sqlgen import bcount
 
 
-def typed_projection_p1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure P1/P3 typed-projection shape — what the pushdown plan test
-    pins (`tests/test_plan_shape.py`): both the filter and the column
-    pruning must reach the parquet scan (PushedFilters / ReadSchema)."""
+@query(
+    "typed_projection_filter",
+    covers="P1,P3",
+    oracle="""
+        SELECT o_orderkey, o_custkey, o_orderstatus,
+               o_totalprice AS total_price, o_orderdate AS order_ts,
+               o_orderpriority AS priority
+        FROM orders
+        WHERE o_orderstatus = 'F'
+          AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+    """,
+)
+def typed_projection_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Typed column projection + predicate filters (P1/P3): analog of the
+    VARIANT path projection `stg_games.sql:11-30` and the completed-games
+    filter `fact_game_results.sql:82-83`. Both the filter and the column
+    pruning reach the parquet scan (PushedFilters / ReadSchema), pinned
+    by `tests/test_plan_shape.py`."""
     return (
         load_table(spark, sf_dir, "orders")
         .filter(
@@ -47,120 +61,54 @@ def typed_projection_p1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "typed_projection_filter",
-    covers="P1,P3,S6,A1",
+    "json_path_extraction",
+    covers="S6,A1",
     oracle=f"""
-        SELECT 'typed' AS op, o_orderkey AS key1, o_custkey AS key2,
-               o_orderstatus AS status, o_totalprice AS total_price,
-               o_orderdate AS order_ts, o_orderpriority AS priority
-        FROM orders
-        WHERE o_orderstatus = 'F'
-          AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-        UNION ALL
-        SELECT 'json', k, n, CAST(NULL AS VARCHAR), CAST(NULL AS DOUBLE),
-               CAST(NULL AS TIMESTAMP), CAST(NULL AS VARCHAR)
-        FROM (
-            SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-                   {bcount('n')}
-            FROM events
-            WHERE json_extract_string(props, '$.k') IS NOT NULL
-            GROUP BY 1
-        )
+        SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+               {bcount('n')}
+        FROM events
+        WHERE json_extract_string(props, '$.k') IS NOT NULL
+        GROUP BY 1
     """,
 )
-def typed_projection_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed column projection + predicate filters (P1/P3), union-tagged
-    with JSON path extraction + cast from a raw string payload (merged
-    `json_path_extraction`, round-5 second rotation — both are the
-    schema-on-read projection family; the fold freed a driver slot for
-    the bloom/chunking/diffing/robust rows).
-
-    'typed' branch: analog of the VARIANT path projection
-    `stg_games.sql:11-30` and the completed-games filter
-    `fact_game_results.sql:82-83`. Both the filter and the column pruning
-    reach the parquet scan — pinned on the pure shape
-    (:func:`typed_projection_p1`) by `tests/test_plan_shape.py`.
-
-    'json' branch: analog of `payload:homeTeam.id::INT` VARIANT access
-    (`stg_games.sql:11-30`) when the payload is kept as a raw JSON string
-    (bronze fidelity); `get_json_object` is the schema-on-read path, while
-    `from_json` with an explicit StructType is the typed path used by the
-    NHL pipeline models.
-    """
-    typed = typed_projection_p1(spark, sf_dir).select(
-        F.lit("typed").alias("op"),
-        F.col("o_orderkey").alias("key1"),
-        F.col("o_custkey").alias("key2"),
-        F.col("o_orderstatus").alias("status"),
-        "total_price",
-        "order_ts",
-        "priority",
-    )
+def json_path_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON path extraction + cast from a raw string payload: analog of
+    `payload:homeTeam.id::INT` VARIANT access (`stg_games.sql:11-30`)
+    when the payload is kept as a raw JSON string (bronze fidelity);
+    `get_json_object` is the schema-on-read path, while `from_json` with
+    an explicit StructType is the typed path used by the NHL pipeline
+    models."""
     e = load_table(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("bigint")
-    js = (
+    return (
         e.select(k.alias("k"))
         .filter(F.col("k").isNotNull())
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("json").alias("op"),
-            F.col("k").alias("key1"),
-            F.col("n").alias("key2"),
-            F.lit(None).cast("string").alias("status"),
-            F.lit(None).cast("double").alias("total_price"),
-            F.lit(None).cast("timestamp_ntz").alias("order_ts"),
-            F.lit(None).cast("string").alias("priority"),
-        )
     )
-    return typed.unionByName(js)
 
 
 @query(
     "case_conditional_projection",
-    covers="P4,P6,A1",
+    covers="P4",
     oracle="""
-        SELECT 'case' AS op, o_orderkey AS row_key,
+        SELECT o_orderkey,
                CASE WHEN o_orderstatus = 'F' THEN 'finished'
                     WHEN o_orderstatus = 'O' THEN 'open'
                     ELSE 'pending' END AS status_label,
                CASE WHEN o_totalprice >= 300000 THEN 'high'
                     WHEN o_totalprice >= 100000 THEN 'mid'
                     ELSE 'low' END AS price_band,
-               CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END AS is_rush,
-               CAST(NULL AS DOUBLE) AS value_bin,
-               CAST(NULL AS BIGINT) AS n
+               CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END AS is_rush
         FROM orders
-        UNION ALL
-        SELECT 'bin', CAST(NULL AS BIGINT),
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS INT),
-               CAST(floor(abs(value) / 5) * 5 AS DOUBLE) AS value_bin,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM events
-        GROUP BY 6
     """,
 )
 def case_conditional_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CASE/conditional projection chains + 5-unit coordinate binning
-    (merged `coordinate_binning`, round-5 registry rotation — both small
-    single-table projections, union-tagged like `scalar_functions`).
-
-    'case' branch — analog of winner/result/shot_result derivations
-    (`fact_game_results.sql:60-72`, `fact_shot_events.sql:93-117`).
-
-    'bin' branch — analog of shot-location binning
-    `team_shot_locations.sql:17-23` (ROUND(ABS(x)/5)*5). Binning uses
-    floor() rather than round(): a 2-dp input divided by 5 lands exactly
-    on .5 ties (12.50/5 = 2.5) where engines' round() tie-breaking
-    diverges, while floor() is tie-free — and half-open bins are the
-    semantics a histogram wants anyway.
-    """
-    nul_s = lambda a: F.lit(None).cast("string").alias(a)  # noqa: E731
-    o = load_table(spark, sf_dir, "orders")
-    case_rows = o.select(
-        F.lit("case").alias("op"),
-        F.col("o_orderkey").alias("row_key"),
+    """CASE/conditional projection chains — analog of winner/result/
+    shot_result derivations (`fact_game_results.sql:60-72`,
+    `fact_shot_events.sql:93-117`)."""
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
         F.when(F.col("o_orderstatus") == "F", "finished")
         .when(F.col("o_orderstatus") == "O", "open")
         .otherwise("pending")
@@ -172,26 +120,33 @@ def case_conditional_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
         .otherwise(0)
         .alias("is_rush"),
-        F.lit(None).cast("double").alias("value_bin"),
-        F.lit(None).cast("bigint").alias("n"),
     )
-    e = load_table(spark, sf_dir, "events")
-    bin_rows = (
-        e.groupBy(
+
+
+@query(
+    "coordinate_binning",
+    covers="P6,A1",
+    oracle="""
+        SELECT CAST(floor(abs(value) / 5) * 5 AS DOUBLE) AS value_bin,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM events
+        GROUP BY 1
+    """,
+)
+def coordinate_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """5-unit coordinate binning — analog of shot-location binning
+    `team_shot_locations.sql:17-23` (ROUND(ABS(x)/5)*5). Binning uses
+    floor() rather than round(): a 2-dp input divided by 5 lands exactly
+    on .5 ties (12.50/5 = 2.5) where engines' round() tie-breaking
+    diverges, while floor() is tie-free — and half-open bins are the
+    semantics a histogram wants anyway."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(
             (F.floor(F.abs(F.col("value")) / 5) * 5).cast("double").alias("value_bin")
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("bin").alias("op"),
-            F.lit(None).cast("bigint").alias("row_key"),
-            nul_s("status_label"),
-            nul_s("price_band"),
-            F.lit(None).cast("int").alias("is_rush"),
-            "value_bin",
-            "n",
-        )
     )
-    return case_rows.unionByName(bin_rows)
 
 
 @query(
@@ -228,15 +183,11 @@ def derived_metrics_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (json_path_extraction folded into typed_projection_filter above —
-# round-5 second rotation.)
-
-
 @query(
     "scalar_functions",
-    covers="§2.9-string,J5-keys,§2.9-date,§2.9-interval,P3,LLM-pii-redaction,LLM-url-dedup",
-    oracle=f"""
-        SELECT 'string' AS op, c_custkey AS row_key,
+    covers="§2.9-string,J5-keys",
+    oracle="""
+        SELECT c_custkey,
                upper(trim(c_name)) AS name_upper,
                (string_split(c_name, ' '))[-1] AS last_token,
                left(c_name, 1) AS first_initial,
@@ -245,51 +196,84 @@ def derived_metrics_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
                  'AAAAAAaaaaaaEEEEeeeeIIIIiiiiOOOOOoooooUUUUuuuuCcNnYyy') AS folded,
                COALESCE(regexp_extract(c_name, '([0-9]+)', 1), '') AS digits,
                CAST(length(c_name) AS INT) AS name_len,
-               c_name || '#' || CAST(c_nationkey AS STRING) AS name_nation,
-               CAST(NULL AS INT) AS yr, CAST(NULL AS INT) AS mo,
-               CAST(NULL AS INT) AS dom, CAST(NULL AS INT) AS dow_sunday0,
-               CAST(NULL AS INT) AS doy, CAST(NULL AS INT) AS iso_week,
-               CAST(NULL AS VARCHAR) AS month_name,
-               CAST(NULL AS VARCHAR) AS day_name,
-               CAST(NULL AS TIMESTAMP) AS plus_week_ts,
-               CAST(NULL AS TIMESTAMP) AS order_ts,
-               CAST(NULL AS VARCHAR) AS contact_redacted,
-               CAST(NULL AS INT) AS pii_n,
-               CAST(NULL AS VARCHAR) AS canon_url
+               c_name || '#' || CAST(c_nationkey AS STRING) AS name_nation
         FROM customer
-        UNION ALL
-        SELECT 'date', o_orderkey,
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR),
-               CAST(year(o_orderdate) AS INT),
-               CAST(month(o_orderdate) AS INT),
-               CAST(date_part('day', o_orderdate) AS INT),
-               CAST(date_part('dow', o_orderdate) AS INT),
-               CAST(date_part('doy', o_orderdate) AS INT),
-               CAST(date_part('week', o_orderdate) AS INT),
-               monthname(o_orderdate), dayname(o_orderdate),
-               CAST(CAST(o_orderdate AS DATE) + 7 AS TIMESTAMP),
-               o_orderdate,
-               CAST(NULL AS VARCHAR), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR)
+    """,
+)
+def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The §2.9 string-function surface: UPPER/TRIM/LEFT/SPLIT_PART(-1)/
+    accent-fold/REGEXP_SUBSTR/LENGTH/CONCAT — the exact key-derivation
+    toolkit of the entity-resolution crosswalk
+    (`stg_player_name_crosswalk.sql:25-47`) and fuzzy join J5
+    (`fact_player_sog_props_v2.sql:115-128`)."""
+    c = load_table(spark, sf_dir, "customer")
+    return c.select(
+        "c_custkey",
+        F.upper(F.trim(F.col("c_name"))).alias("name_upper"),
+        split_part(F.col("c_name"), " ", -1).alias("last_token"),
+        F.substring(F.col("c_name"), 1, 1).alias("first_initial"),
+        accent_fold(F.col("c_name")).alias("folded"),
+        F.regexp_extract(F.col("c_name"), "([0-9]+)", 1).alias("digits"),
+        F.length(F.col("c_name")).alias("name_len"),
+        F.concat(
+            F.col("c_name"), F.lit("#"), F.col("c_nationkey").cast("string")
+        ).alias("name_nation"),
+    )
+
+
+@query(
+    "date_interval_functions",
+    covers="§2.9-date,§2.9-interval,P3",
+    oracle="""
+        SELECT o_orderkey,
+               CAST(year(o_orderdate) AS INT) AS yr,
+               CAST(month(o_orderdate) AS INT) AS mo,
+               CAST(date_part('day', o_orderdate) AS INT) AS dom,
+               CAST(date_part('dow', o_orderdate) AS INT) AS dow_sunday0,
+               CAST(date_part('doy', o_orderdate) AS INT) AS doy,
+               CAST(date_part('week', o_orderdate) AS INT) AS iso_week,
+               monthname(o_orderdate) AS month_name,
+               dayname(o_orderdate) AS day_name,
+               CAST(CAST(o_orderdate AS DATE) + 7 AS TIMESTAMP) AS plus_week_ts,
+               o_orderdate AS order_ts
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1998-09-02 00:00:00' - INTERVAL 400 DAY
-        UNION ALL
-        SELECT 'pii', c_custkey,
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR),
-               CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-               {X.redact_pii_sql('contact')},
-               {X.pii_hits_sql('contact')},
-               CAST(NULL AS VARCHAR)
+    """,
+)
+def date_interval_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The date-part family with the Snowflake DAYOFWEEK (0=Sunday) base
+    over an INTERVAL-arithmetic recency filter — the dim_date derivations
+    (`dim_date.sql:45-56`) and the `CURRENT_DATE - INTERVAL '15 days'`
+    filter (`team_shot_example_queries.sql:193`; "today" is an injected
+    constant per SURVEY §7.3.4). Spark's dayofweek() is 1-based Sunday,
+    Snowflake's 0-based — sunday_zero_dow pins the reference semantics
+    (also DuckDB's 'dow'). The interval filter folds to a literal and
+    reaches the parquet scan as a pushed predicate."""
+    o = load_table(spark, sf_dir, "orders")
+    d = F.col("o_orderdate")
+    anchor = F.lit("1998-09-02 00:00:00").cast("timestamp_ntz")
+    return o.filter(d >= anchor - F.expr("INTERVAL 400 DAY")).select(
+        "o_orderkey",
+        F.year(d).alias("yr"),
+        F.month(d).alias("mo"),
+        F.dayofmonth(d).alias("dom"),
+        sunday_zero_dow(d).alias("dow_sunday0"),
+        F.dayofyear(d).alias("doy"),
+        F.weekofyear(d).alias("iso_week"),
+        F.date_format(d, "MMMM").alias("month_name"),
+        F.date_format(d, "EEEE").alias("day_name"),
+        F.date_add(d.cast("date"), 7).cast("timestamp_ntz").alias("plus_week_ts"),
+        d.alias("order_ts"),
+    )
+
+
+@query(
+    "pii_redaction",
+    covers="LLM-pii-redaction",
+    oracle=f"""
+        SELECT c_custkey,
+               {X.redact_pii_sql('contact')} AS contact_redacted,
+               {X.pii_hits_sql('contact')} AS pii_n
         FROM (
             SELECT c_custkey, concat_ws(' ', c_name,
                 '<' || translate(lower(c_name), '#', '.') || '@example.org>',
@@ -304,114 +288,17 @@ def derived_metrics_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) AS contact
             FROM customer
         ) pii_src
-        UNION ALL
-        SELECT 'url', c_custkey,
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS VARCHAR), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR),
-               CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP),
-               CAST(NULL AS VARCHAR), CAST(NULL AS INT),
-               {U.canonical_url_sql('raw')}
-        FROM (
-            SELECT c_custkey,
-                   (CASE WHEN c_custkey % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END
-                    || CASE WHEN c_custkey % 3 = 0 THEN 'Shop.Example.COM'
-                            ELSE 'shop.example.com' END
-                    || CASE WHEN c_custkey % 5 = 0 THEN ':443' ELSE '' END
-                    || '/item/' || CAST(c_custkey AS VARCHAR)
-                    || CASE WHEN c_custkey % 4 = 0 THEN '/' ELSE '' END
-                    || CASE WHEN c_custkey % 7 = 0
-                            THEN '?utm_source=mail&x=' || CAST(c_custkey % 10 AS VARCHAR)
-                            WHEN c_custkey % 7 = 1
-                            THEN '?x=' || CAST(c_custkey % 10 AS VARCHAR) || '&utm_campaign=2'
-                            ELSE '' END
-                    || CASE WHEN c_custkey % 11 = 0 THEN '#frag' ELSE '' END) AS raw
-            FROM customer
-        ) url_src
     """,
 )
-def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The §2.9 scalar-function surface, one tagged result (formerly
-    string_functions + date_interval_functions, merged row-for-row).
-
-    String branch: UPPER/TRIM/LEFT/SPLIT_PART(-1)/accent-fold/
-    REGEXP_SUBSTR/LENGTH/CONCAT — the exact key-derivation toolkit of the
-    entity-resolution crosswalk (`stg_player_name_crosswalk.sql:25-47`) and
-    fuzzy join J5 (`fact_player_sog_props_v2.sql:115-128`).
-
-    Date branch: the date-part family with the Snowflake DAYOFWEEK
-    (0=Sunday) base over an INTERVAL-arithmetic recency filter — the
-    dim_date derivations (`dim_date.sql:45-56`) and the `CURRENT_DATE -
-    INTERVAL '15 days'` filter (`team_shot_example_queries.sql:193`;
-    "today" is an injected constant per SURVEY §7.3.4). Spark's
-    dayofweek() is 1-based Sunday, Snowflake's 0-based — sunday_zero_dow
-    pins the reference semantics (also DuckDB's 'dow'). The interval
-    filter folds to a literal and reaches the parquet scan as a pushed
-    predicate; each branch prunes to its own columns, and the stitch is a
-    rename-alignment union of disjoint shapes (nulled other-family cols).
-
-    PII branch: the training-data redaction pass (operators.text.redact_pii
-    — email/IPv4/SSN/phone → typed tags, a JVM regexp_replace chain in
-    whole-stage codegen) over contact strings synthesized deterministically
-    from customer rows, plus the pii_hits audit count; the oracle applies
-    the literally-identical regexes in DuckDB, hash-checking cross-engine
-    regex semantics on every row.
-
-    URL branch: crawl-dedup canonicalization (operators.urls — scheme/host
-    lowering, fragment + tracking-param strip, default-port and non-root
-    trailing-slash removal) over deterministically-messy URLs keyed off
-    c_custkey; same RE2-subset patterns run in both engines.
-    """
+def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The training-data redaction pass (operators.text.redact_pii —
+    email/IPv4/SSN/phone → typed tags, a JVM regexp_replace chain in
+    whole-stage codegen) plus the pii_hits audit count, over contact
+    strings synthesized deterministically from customer rows (email from
+    the name, phone/SSN/IP from the key) so the chain has real spans to
+    scrub; the oracle applies the literally-identical regexes in DuckDB,
+    hash-checking cross-engine regex semantics on every row."""
     c = load_table(spark, sf_dir, "customer")
-    nul_s = lambda a: F.lit(None).cast("string").alias(a)  # noqa: E731
-    nul_i = lambda a: F.lit(None).cast("int").alias(a)  # noqa: E731
-    nul_ts = lambda a: F.lit(None).cast("timestamp_ntz").alias(a)  # noqa: E731
-    strings = c.select(
-        F.lit("string").alias("op"),
-        F.col("c_custkey").alias("row_key"),
-        F.upper(F.trim(F.col("c_name"))).alias("name_upper"),
-        split_part(F.col("c_name"), " ", -1).alias("last_token"),
-        F.substring(F.col("c_name"), 1, 1).alias("first_initial"),
-        accent_fold(F.col("c_name")).alias("folded"),
-        F.regexp_extract(F.col("c_name"), "([0-9]+)", 1).alias("digits"),
-        F.length(F.col("c_name")).alias("name_len"),
-        F.concat(
-            F.col("c_name"), F.lit("#"), F.col("c_nationkey").cast("string")
-        ).alias("name_nation"),
-        nul_i("yr"), nul_i("mo"), nul_i("dom"), nul_i("dow_sunday0"),
-        nul_i("doy"), nul_i("iso_week"), nul_s("month_name"),
-        nul_s("day_name"), nul_ts("plus_week_ts"), nul_ts("order_ts"),
-        nul_s("contact_redacted"), nul_i("pii_n"), nul_s("canon_url"),
-    )
-    o = load_table(spark, sf_dir, "orders")
-    d = F.col("o_orderdate")
-    anchor = F.lit("1998-09-02 00:00:00").cast("timestamp_ntz")
-    dates = o.filter(d >= anchor - F.expr("INTERVAL 400 DAY")).select(
-        F.lit("date").alias("op"),
-        F.col("o_orderkey").alias("row_key"),
-        nul_s("name_upper"), nul_s("last_token"), nul_s("first_initial"),
-        nul_s("folded"), nul_s("digits"), nul_i("name_len"),
-        nul_s("name_nation"),
-        F.year(d).alias("yr"),
-        F.month(d).alias("mo"),
-        F.dayofmonth(d).alias("dom"),
-        sunday_zero_dow(d).alias("dow_sunday0"),
-        F.dayofyear(d).alias("doy"),
-        F.weekofyear(d).alias("iso_week"),
-        F.date_format(d, "MMMM").alias("month_name"),
-        F.date_format(d, "EEEE").alias("day_name"),
-        F.date_add(d.cast("date"), 7).cast("timestamp_ntz").alias("plus_week_ts"),
-        d.alias("order_ts"),
-        nul_s("contact_redacted"), nul_i("pii_n"), nul_s("canon_url"),
-    )
-    # PII branch: synthesize deterministic contact strings (email from the
-    # name, phone/SSN/IP from the key) so the redaction chain has real spans
-    # to scrub — the oracle runs the literally-identical regexes in DuckDB.
     k = F.col("c_custkey")
     s = lambda col: col.cast("string")  # noqa: E731
     email = F.concat(
@@ -433,50 +320,60 @@ def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ", F.col("c_name"), F.concat(F.lit("<"), email, F.lit(">")),
         F.lit("ip"), ip, F.lit("ssn"), ssn, F.lit("tel"), phone,
     )
-    pii = c.select(
-        F.lit("pii").alias("op"),
-        F.col("c_custkey").alias("row_key"),
-        nul_s("name_upper"), nul_s("last_token"), nul_s("first_initial"),
-        nul_s("folded"), nul_s("digits"), nul_i("name_len"),
-        nul_s("name_nation"),
-        nul_i("yr"), nul_i("mo"), nul_i("dom"), nul_i("dow_sunday0"),
-        nul_i("doy"), nul_i("iso_week"), nul_s("month_name"),
-        nul_s("day_name"), nul_ts("plus_week_ts"), nul_ts("order_ts"),
+    return c.select(
+        "c_custkey",
         X.redact_pii(contact).alias("contact_redacted"),
         X.pii_hits(contact).alias("pii_n"),
-        nul_s("canon_url"),
     )
-    # URL branch: deterministically-messy URLs (casing, default port,
-    # trailing slash, tracking params, fragment all keyed off c_custkey)
-    # canonicalized by operators.urls — the oracle builds the same strings
-    # and applies the same RE2-subset patterns in DuckDB.
-    ks = s(k)
+
+
+@query(
+    "url_canonicalization",
+    covers="LLM-url-dedup",
+    oracle=f"""
+        SELECT c_custkey, {U.canonical_url_sql('raw')} AS canon_url
+        FROM (
+            SELECT c_custkey,
+                   (CASE WHEN c_custkey % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END
+                    || CASE WHEN c_custkey % 3 = 0 THEN 'Shop.Example.COM'
+                            ELSE 'shop.example.com' END
+                    || CASE WHEN c_custkey % 5 = 0 THEN ':443' ELSE '' END
+                    || '/item/' || CAST(c_custkey AS VARCHAR)
+                    || CASE WHEN c_custkey % 4 = 0 THEN '/' ELSE '' END
+                    || CASE WHEN c_custkey % 7 = 0
+                            THEN '?utm_source=mail&x=' || CAST(c_custkey % 10 AS VARCHAR)
+                            WHEN c_custkey % 7 = 1
+                            THEN '?x=' || CAST(c_custkey % 10 AS VARCHAR) || '&utm_campaign=2'
+                            ELSE '' END
+                    || CASE WHEN c_custkey % 11 = 0 THEN '#frag' ELSE '' END) AS raw
+            FROM customer
+        ) url_src
+    """,
+)
+def url_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-dedup URL canonicalization (operators.urls — scheme/host
+    lowering, fragment + tracking-param strip, default-port and non-root
+    trailing-slash removal) over deterministically-messy URLs (casing,
+    default port, trailing slash, tracking params, fragment, all keyed
+    off c_custkey); the same RE2-subset patterns run in both engines."""
+    k = F.col("c_custkey")
+    s = lambda col: col.cast("string")  # noqa: E731
     raw_url = F.concat(
         F.when(k % 2 == 0, F.lit("HTTPS://")).otherwise(F.lit("https://")),
         F.when(k % 3 == 0, F.lit("Shop.Example.COM")).otherwise(
             F.lit("shop.example.com")
         ),
         F.when(k % 5 == 0, F.lit(":443")).otherwise(F.lit("")),
-        F.lit("/item/"), ks,
+        F.lit("/item/"), s(k),
         F.when(k % 4 == 0, F.lit("/")).otherwise(F.lit("")),
         F.when(k % 7 == 0, F.concat(F.lit("?utm_source=mail&x="), s(k % 10)))
         .when(k % 7 == 1, F.concat(F.lit("?x="), s(k % 10), F.lit("&utm_campaign=2")))
         .otherwise(F.lit("")),
         F.when(k % 11 == 0, F.lit("#frag")).otherwise(F.lit("")),
     )
-    urls = c.select(
-        F.lit("url").alias("op"),
-        F.col("c_custkey").alias("row_key"),
-        nul_s("name_upper"), nul_s("last_token"), nul_s("first_initial"),
-        nul_s("folded"), nul_s("digits"), nul_i("name_len"),
-        nul_s("name_nation"),
-        nul_i("yr"), nul_i("mo"), nul_i("dom"), nul_i("dow_sunday0"),
-        nul_i("doy"), nul_i("iso_week"), nul_s("month_name"),
-        nul_s("day_name"), nul_ts("plus_week_ts"), nul_ts("order_ts"),
-        nul_s("contact_redacted"), nul_i("pii_n"),
-        U.canonical_url(raw_url).alias("canon_url"),
+    return load_table(spark, sf_dir, "customer").select(
+        "c_custkey", U.canonical_url(raw_url).alias("canon_url")
     )
-    return strings.unionByName(dates).unionByName(pii).unionByName(urls)
 
 
 @query(
@@ -549,15 +446,16 @@ def date_spine_seasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def robust_ingest_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust JSON ingest driver row (round-5 second rotation; the family
-    was twin/property-tested only — `sources/robust.py`): serialize the
+    """Robust JSON ingest (`sources/robust.py`): serialize the
     documents table to JSON lines with a deterministic corruption rule
     (doc_id % 37 == 0 → a '{' is prepended, so the line cannot parse as
     JSON regardless of the record's field content — robust even to docs
     whose nullable fields are omitted by to_json, and it leaves the
     doc_id digits intact for the quarantine-branch re-extraction), run
     the one-scan PERMISSIVE quarantine split, and emit good rows +
-    quarantined ids + the field census of the good side.
+    quarantined ids + the field census of the good side. The three
+    branches stay one union-tagged query because all read the one cached
+    quarantine split.
 
     The oracle predicts all three branches straight from the parquet
     table: good rows must round-trip text EXACTLY (text_len equality is

@@ -199,21 +199,13 @@ _DIM, _LSH_BANDS, _LSH_ROWS = 64, 8, 3
 _BBKT_SQL = hyperplane_band_buckets_sql("embedding", _DIM, _LSH_BANDS, _LSH_ROWS)
 
 
-# Driver-checked as the 'emb' branch of dedup_minhash_lsh in plans/q_text
-# (round-5 second rotation — both are banded-LSH near-dup pair generators;
-# the fold freed a driver slot for the bloom/chunking/diffing/robust rows).
-#
-# r7 rewrite for sf1-sweep repeatability (the all-pairs cosine was the one
-# ~40-min DuckDB oracle at 20K vectors): the per-pair interpreted
-# list_zip/list_transform fold — evaluated TWICE (SELECT + WHERE) — is
-# replaced by a LEFT-ASSOCIATED unrolled arithmetic chain over 64
-# pre-extracted double columns, computed once in a streamed subquery.
-# (0.0 + q.d1*c.d1 + ... + q.d64*c.d64) parses left-associative, so the
-# float64 addition order is EXACTLY the engine's aggregate fold (which
-# seeds acc=0.0) and the old list_sum form — verified bit-exact over all
-# 920 sf0.1 pairs, 3.2× faster there and vectorized instead of
-# interpreted at scale (extrapolates to ~2 min at sf1's 200M pairs).
-# Semantics unchanged: still the full exact all-pairs audit baseline.
+# The oracle's cosine is a LEFT-ASSOCIATED unrolled arithmetic chain over
+# 64 pre-extracted double columns, computed once in a streamed subquery,
+# not a per-pair interpreted list_zip/list_transform fold (which ran
+# ~40 min at sf1's 20K vectors). (0.0 + q.d1*c.d1 + ... + q.d64*c.d64)
+# parses left-associative, so the float64 addition order is EXACTLY the
+# engine's aggregate fold (which seeds acc=0.0) — verified bit-exact over
+# all 920 sf0.1 pairs, 3.2× faster than the list form there.
 _NEARDUP_DIM_COLS = ",\n                   ".join(
     f"CAST(embedding[{i}] AS DOUBLE) AS d{i}" for i in range(1, _DIM + 1)
 )
@@ -250,13 +242,16 @@ EMBEDDING_NEARDUP_ORACLE = f"""
     """
 
 
+@query(
+    "embedding_neardup_pairs",
+    covers="LLM-dedup-embedding,LLM-dedup-embedding-lsh",
+    oracle=EMBEDDING_NEARDUP_ORACLE,
+)
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup pairs, each flagged with whether the
-    banded hyperplane LSH ALSO surfaces it (merged
-    `embedding_cosine_neardup` + `embedding_neardup_lsh`, both formerly
-    separate green rows — one registry slot, and the in_lsh flag makes the
+    banded hyperplane LSH ALSO surfaces it: the in_lsh flag makes the
     LSH's empirical recall a directly-audited quantity instead of a
-    docstring claim).
+    docstring claim.
 
     The exact side is the vectorized bit-exact all-pairs scorer
     (operators.similarity.cosine_allpairs_numpy — Arrow-batched
@@ -303,51 +298,95 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- round 4:
-# driver rows for the k-means / PQ families. Both use PINNED deterministic
-# centroids (the k smallest-id corpus vectors — operators.kmeans.
-# init_centroids) so the oracle is pure SQL: the Lloyd UPDATE step's
-# decimal-exact mean is deliberately NOT in the oracle path because
-# float->decimal casts are not cross-engine bit-stable (Spark rounds via
-# JDK Double.toString's shortest-repr, DuckDB via the exact binary
-# expansion — measured divergence at scale 18, e.g. 123.456001281738280000
-# vs ...276864), while the assignment/blocking/ADC arithmetic below is the
-# proven left-to-right float64 idiom. The trained variants (kmeans n_iter>0,
-# train_codebooks) are numpy-parity + recall-gate verified in
-# tests/test_kmeans.py / tests/test_pq.py.
+# k-means / PQ queries. Both use PINNED deterministic centroids (the k
+# smallest-id corpus vectors — operators.kmeans.init_centroids) so the
+# oracle is pure SQL: the Lloyd UPDATE step's decimal-exact mean is
+# deliberately NOT in the oracle path because float->decimal casts are not
+# cross-engine bit-stable (Spark rounds via JDK Double.toString's
+# shortest-repr, DuckDB via the exact binary expansion — measured
+# divergence at scale 18, e.g. 123.456001281738280000 vs ...276864), while
+# the assignment/blocking/ADC arithmetic below is the proven left-to-right
+# float64 idiom. The trained variants (kmeans n_iter>0, train_codebooks)
+# are numpy-parity + recall-gate verified in tests/test_kmeans.py /
+# tests/test_pq.py.
 
 _KM_K = 8  # clusters for the semantic-dedup blocking key
+# The exact audit's threshold is deliberately low so that it yields oracle
+# rows at sf0.01; banded sign-LSH can only block efficiently when the
+# target cosine is high (semantic_neardup_pairs_lsh_blocked's docstring
+# has the collision math), so the scale form runs the production near-dup
+# regime instead.
 _KM_THRESHOLD = 0.4
-# Audit-sample bound for the ORACLE-CHECKED exact within-cluster form
-# (r8, VERDICT ask #1): the exact all-pairs-within-cluster audit is
-# O(n²/k) by definition, so its cost at any SF is capped by bounding the
-# sample, not the algorithm. 25_000 covers every driver lake (max vec_id
-# 1_999 at sf0.1) AND the full sf1 lake (ids 0..19_999) — all existing
-# correctness/parity hashes are byte-identical — while sf3/sf10 sweeps
-# audit a constant 25K-vector sample instead of an O(n²) blow-up. The
-# BENCHED form (bench_fn below) runs the density-linear kmeans×LSH scale
-# path over the FULL lake.
+_KM_SCALE_THRESHOLD = 0.9
+# Sample bound of the exact within-cluster audit, which is O(n²/k) by
+# definition: its cost at any SF is capped by bounding the sample, not the
+# algorithm. 25_000 covers every test lake (max vec_id 1_999 at sf0.1) and
+# the full sf1 lake (ids 0..19_999), so larger sweeps audit a constant
+# 25K-vector sample.
 _KM_AUDIT_BOUND = 25_000
 
 
-# Benched threshold: the PRODUCTION dedup regime (near-dup pairs), not
-# the audit's deliberately-low 0.4 (chosen to yield enough oracle rows at
-# sf0.01). Banded sign-LSH can only block efficiently when the target
-# cosine is high — see semantic_neardup_pairs_lsh_blocked's docstring for
-# the collision math; at 0.4 NO banding parameterization both recalls and
-# blocks (p=0.63 → rows high enough to kill random collisions also kills
-# recall), which is exactly why the exact form remains the audit branch.
-_KM_SCALE_THRESHOLD = 0.9
+def _sqd_sql(a: str, b: str) -> str:
+    """DuckDB twin of operators.kmeans._sq_dist (left-to-right float64)."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}),"
+        f" p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
+        f" * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
+    )
+
+
+def _km_pairs_oracle(threshold: float, bound: int | None) -> str:
+    """Exact within-cluster pairs at cosine >= ``threshold`` under the
+    pinned centroids, over vectors with id < ``bound`` (None: all)."""
+    sample = "" if bound is None else f"WHERE e.vec_id < {bound}"
+    return f"""
+        WITH cents AS (
+            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster_id,
+                   embedding AS cvec
+            FROM (SELECT vec_id, embedding FROM embeddings
+                  ORDER BY vec_id LIMIT {_KM_K})
+        ),
+        dists AS (
+            SELECT e.vec_id, e.embedding, c.cluster_id,
+                   {_sqd_sql('e.embedding', 'c.cvec')} AS d
+            FROM embeddings e CROSS JOIN cents c
+            {sample}
+        ),
+        assigned AS (
+            SELECT vec_id, embedding, cluster_id,
+                   {norm_sql('embedding')} AS nrm
+            FROM (SELECT *, row_number() OVER (
+                      PARTITION BY vec_id ORDER BY d, cluster_id) AS rn
+                  FROM dists)
+            WHERE rn = 1
+        )
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
+                   AS cosine
+        FROM assigned a JOIN assigned b
+          ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
+        WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
+              >= {threshold}
+    """
 
 
 _VEC_COUNT_MEMO: dict[tuple[str, int, int], int] = {}
 
 
-def _kmeans_lsh_scale_form(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benched shape for the kmeans_semantic_dedup slot: kmeans blocking
-    composed with in-cluster hyperplane-LSH banding over the FULL lake
+@query(
+    "kmeans_semantic_dedup",
+    covers="LLM-kmeans,LLM-dedup-embedding-lsh",
+    bench=True,
+    oracle=_km_pairs_oracle(_KM_SCALE_THRESHOLD, None),
+)
+def kmeans_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic near-dup pairs at cosine >= 0.9 over the FULL lake: kmeans
+    blocking composed with in-cluster hyperplane-LSH banding
     (operators.kmeans.semantic_neardup_pairs_lsh_blocked — work tracks
-    near-dup density, not n²; recall audited in tests/test_kmeans.py).
+    near-dup density, not n²). Candidates are scored exactly under the
+    same pinned centroids as the oracle, so the output is a subset of the
+    exact within-cluster pairs and equals it at recall 1 (recall is
+    audited in tests/test_kmeans.py).
 
     The corpus row count feeding the adaptive LSH band width is memoized
     per source identity (path, size, mtime — the ngram_lm_quality idiom)
@@ -368,58 +407,16 @@ def _kmeans_lsh_scale_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sqd_sql(a: str, b: str) -> str:
-    """DuckDB twin of operators.kmeans._sq_dist (left-to-right float64)."""
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}),"
-        f" p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-        f" * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-    )
-
-
 @query(
-    "kmeans_semantic_dedup",
+    "kmeans_cluster_audit",
     covers="LLM-kmeans,LLM-dedup-embedding",
-    bench=True,
-    bench_fn=_kmeans_lsh_scale_form,
-    oracle=f"""
-        WITH cents AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster_id,
-                   embedding AS cvec
-            FROM (SELECT vec_id, embedding FROM embeddings
-                  ORDER BY vec_id LIMIT {_KM_K})
-        ),
-        dists AS (
-            SELECT e.vec_id, e.embedding, c.cluster_id,
-                   {_sqd_sql('e.embedding', 'c.cvec')} AS d
-            FROM embeddings e CROSS JOIN cents c
-            WHERE e.vec_id < {_KM_AUDIT_BOUND}
-        ),
-        assigned AS (
-            SELECT vec_id, embedding, cluster_id,
-                   {norm_sql('embedding')} AS nrm
-            FROM (SELECT *, row_number() OVER (
-                      PARTITION BY vec_id ORDER BY d, cluster_id) AS rn
-                  FROM dists)
-            WHERE rn = 1
-        )
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
-                   AS cosine
-        FROM assigned a JOIN assigned b
-          ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-        WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)
-              >= {_KM_THRESHOLD}
-    """,
+    oracle=_km_pairs_oracle(_KM_THRESHOLD, _KM_AUDIT_BOUND),
 )
-def kmeans_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic near-dup pairs searched only WITHIN k-means clusters:
-    sum-of-squares-of-cluster-sizes work instead of n² — the ORACLE-AUDIT
-    branch of the slot, run on a bounded sample (_KM_AUDIT_BOUND) so its
-    cost is constant at any SF. The slot's BENCHED shape is the
-    density-linear kmeans×LSH composition (_kmeans_lsh_scale_form) over
-    the full lake — r8 re-registration per VERDICT ask #1 after the
-    within-cluster all-pairs read a 1.09 normalized exponent at sf1→sf3.
+def kmeans_cluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact semantic near-dup pairs at cosine >= 0.4 searched only WITHIN
+    k-means clusters: sum-of-squares-of-cluster-sizes work instead of n²,
+    run on a bounded sample (_KM_AUDIT_BOUND) so its cost is constant at
+    any SF.
 
     Assignment is pure whole-stage codegen (literal centroid matrix,
     zip_with/aggregate squared-L2 fold, array_position first-min
@@ -428,10 +425,10 @@ def kmeans_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential accumulation is bit-identical to the JVM/DuckDB fold
     (verified on the full 15K-pair set; the pure-JVM self-join form,
     operators/kmeans.py::semantic_neardup_pairs, is 3× slower at sf0.1
-    and kept as the no-Python fallback). This driver row pins the
-    centroids at init (k smallest-id vectors, n_iter=0) so DuckDB can
-    replay the exact assignment arithmetic; the Lloyd's refinement
-    (decimal-exact order-independent means) is numpy-parity verified in
+    and kept as the no-Python fallback). The centroids are pinned at init
+    (k smallest-id vectors, n_iter=0) so DuckDB can replay the exact
+    assignment arithmetic; the Lloyd's refinement (decimal-exact
+    order-independent means) is numpy-parity verified in
     tests/test_kmeans.py — see the module comment above for why
     float→decimal rounding can't cross the engine boundary.
     Reference analog: `dbt_nhl/models/staging/stg_player_name_crosswalk.sql:66-139`
@@ -439,11 +436,6 @@ def kmeans_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from nhl_data_pipeline_spark.operators import kmeans as KM
 
-    # Bounded audit sample (module comment at _KM_AUDIT_BOUND): the exact
-    # within-cluster all-pairs is the AUDIT branch — constant cost at any
-    # SF. The benched shape (bench_fn) is the kmeans×LSH scale form over
-    # the full lake. Every driver lake and the sf1 parity lake sit
-    # entirely under the bound, so existing hashes are unchanged.
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _KM_AUDIT_BOUND
     )
@@ -516,9 +508,9 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.pq.train_codebooks) are the production path, verified by
     numpy-bitwise + planted-cluster ranking tests (tests/test_pq.py).
     Encode is the Arrow-vectorized form (operators/pq.py::encode_numpy,
-    bit-identical to the codegen projection — r6: the interpreted-HOF
-    fold was the query's dominant cost; measured 2.38 → 0.67 s at sf0.1
-    and 4.92 → 0.86 s at sf1, same-session A/B); ADC is
+    bit-identical to the codegen projection; the interpreted-HOF fold it
+    replaces measured 2.38 → 0.67 s at sf0.1 and 4.92 → 0.86 s at sf1,
+    same-session A/B); ADC is
     m element_at lookups + left-assoc adds per row; top-k is a global
     row_number with (dist, id) tiebreak — Spark's WindowGroupLimit
     prefilters each partition to its local top-k before the merge.

@@ -26,7 +26,6 @@ from nhl_data_pipeline_spark.operators import sketch as SK
 from nhl_data_pipeline_spark.operators import mixing as MX
 from nhl_data_pipeline_spark.operators import multimodal as M
 from nhl_data_pipeline_spark.operators import text as X
-from nhl_data_pipeline_spark.plans.q_similarity import EMBEDDING_NEARDUP_ORACLE
 from nhl_data_pipeline_spark.plans.registry import query
 
 _TOKS = "string_split_regex(text, '\\s+')"
@@ -270,9 +269,10 @@ def _ledger_band_table_sql(src: str, bands: int = 4) -> str:
 )
 def doc_signature_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc content signatures + exact dedup verdict, union-tagged with
-    the INCREMENTAL ledger dedup family (r6 fold — the last §8 dedup
-    family without a driver row; merged `doc_fingerprint_dedup` +
-    `dedup_simhash` in earlier rotations).
+    the INCREMENTAL ledger dedup family. The branches stay one query
+    because they share stages: 'sig' and 'ledger_exact' read one
+    persisted base projection, and the three 'ledger_near_*'/'ledger_delta'
+    branches read one ledger band-table join.
 
     'sig' branch: the doc's 16-byte canonical fingerprint (exact-dedup
     key), the group's keep_doc_id / n_dups from the hash-aggregate dedup
@@ -280,7 +280,7 @@ def doc_signature_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup bucket (`simhash_exploded`, codegen explode+sum form).
     Scale shape: ONE persisted base projection (doc_id, fp, toks) feeds
     all three consumers — without it the plan scans the documents table
-    three times (plan-audited round 4); the dedup aggregate moves 16-byte
+    three times; the dedup aggregate moves 16-byte
     fingerprints only; the annotate-back join is fp↔fp hash join (both
     sides already hashed by fp); SimHash is one exchange of (id, 16
     partial sums).
@@ -422,7 +422,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       SAME distribution: one compact doc-row shuffle replaces a round-robin
       doc shuffle PLUS an exploded-token-row shuffle (plan-verified 2→1
       exchanges);
-    - SIZE-ADAPTIVE width (r8, found by the sf3→sf10 sweep): every count
+    - SIZE-ADAPTIVE width (BENCH_r08_sf10_sweep.json): every count
       in this plan scales exactly linearly (shingles/candidates/pairs all
       ×3.33 at 3.33× data, re-verified), yet the benched time read a 1.18
       normalized exponent — zero spill at sf3 vs ~15 GB spill PER RUN at
@@ -441,9 +441,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # ~512 KiB of compressed documents per partition ≈ the measured
     # no-spill per-task budget (sf3/17 MB ran clean at 32 partitions;
-    # sf10/57 MB spilled 15 GB at the same width). r9: the inline stat
-    # moved to catalog.shuffle_width_for so every fact-side shuffle in the
-    # engine derives width from the same one-liner.
+    # sf10/57 MB spilled 15 GB at the same width); catalog.shuffle_width_for
+    # derives every fact-side shuffle width from the same one-liner.
     from nhl_data_pipeline_spark.catalog import (
         TEXT_BYTES_PER_PARTITION,
         shuffle_width_for,
@@ -541,10 +540,33 @@ _SIG_SQL = D.minhash_signature_sql("sh", _K)
 _BKEYS_SQL = D.lsh_band_keys_sql("sig", _BANDS, _ROWS)
 
 
-def _minhash_lsh_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure MinHash-LSH pair shape — what bench.py (and the recall
-    probe in tests/test_scale_operators.py) times; the merged correctness
-    query below adds the embedding-LSH branch."""
+@query(
+    "dedup_minhash_lsh",
+    covers="LLM-dedup-minhash-lsh",
+    bench=True,
+    oracle=f"""
+        WITH shg AS (
+            SELECT doc_id, {_SH_SQL} AS sh
+            FROM documents WHERE len({_TOKS}) >= 3
+        ),
+        sigs AS (SELECT doc_id, {_SIG_SQL} AS sig FROM shg),
+        bands AS (
+            SELECT doc_id, unnest(generate_series(1, {_BANDS})) AS band_idx,
+                   unnest({_BKEYS_SQL}) AS band_key
+            FROM sigs
+        )
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a
+        JOIN bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+                    AND a.doc_id < b.doc_id
+    """,
+)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(k=12) + LSH banding (4 bands × 3 rows) candidate pairs: the
+    n²-free near-dup path — docs meet only inside a band bucket, so join
+    cost tracks true duplicate density. Band probability: jaccard^3 per
+    band, 1-(1-j^3)^4 overall — j=0.9 → 98% recall; the exact-jaccard
+    query above is the verify stage downstream."""
     # Size-derived width: at session width the band self-join's per-task
     # state grows with the lake (sf3→sf10 exponent 0.89 raw / 1.01
     # normalized, BENCH_r08_sf10_sweep.json). Same 512 KiB/partition text
@@ -566,68 +588,6 @@ def _minhash_lsh_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the planner would otherwise use.
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return minhash_band_pairs(d, width=width if width > session_width else None)
-
-
-@query(
-    "dedup_minhash_lsh",
-    covers="LLM-dedup-minhash-lsh,LLM-dedup-embedding,LLM-dedup-embedding-lsh",
-    bench=True,
-    bench_fn=_minhash_lsh_pure,
-    oracle=f"""
-        WITH shg AS (
-            SELECT doc_id, {_SH_SQL} AS sh
-            FROM documents WHERE len({_TOKS}) >= 3
-        ),
-        sigs AS (SELECT doc_id, {_SIG_SQL} AS sig FROM shg),
-        bands AS (
-            SELECT doc_id, unnest(generate_series(1, {_BANDS})) AS band_idx,
-                   unnest({_BKEYS_SQL}) AS band_key
-            FROM sigs
-        )
-        SELECT DISTINCT 'mh' AS op, a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(NULL AS DOUBLE) AS score, CAST(NULL AS BOOLEAN) AS in_lsh
-        FROM bands a
-        JOIN bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                    AND a.doc_id < b.doc_id
-        UNION ALL
-        SELECT 'emb', vec_a, vec_b, cosine, in_lsh
-        FROM ({EMBEDDING_NEARDUP_ORACLE})
-    """,
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(k=12) + LSH banding (4 bands × 3 rows) candidate pairs,
-    union-tagged with the embedding-cosine near-dup pairs + hyperplane-LSH
-    flag (merged `embedding_neardup_pairs` — both are banded-LSH near-dup
-    pair generators over different modalities; bench.py still times the
-    pure MinHash shape via bench_fn).
-
-    'mh' branch: the n²-free near-dup path — docs meet only inside a band
-    bucket, so join cost tracks true duplicate density. Band probability:
-    jaccard^3 per band, 1-(1-j^3)^4 overall — j=0.9 → 98% recall; the
-    exact-jaccard query above is the verify stage downstream.
-
-    'emb' branch: plans/q_similarity.embedding_neardup_pairs — exact
-    cosine pairs ≥0.4 flagged with banded hyperplane-LSH membership.
-    """
-    from nhl_data_pipeline_spark.plans.q_similarity import (
-        embedding_neardup_pairs,
-    )
-
-    mh = _minhash_lsh_pure(spark, sf_dir).select(
-        F.lit("mh").alias("op"),
-        F.col("doc_a").alias("id_a"),
-        F.col("doc_b").alias("id_b"),
-        F.lit(None).cast("double").alias("score"),
-        F.lit(None).cast("boolean").alias("in_lsh"),
-    )
-    emb = embedding_neardup_pairs(spark, sf_dir).select(
-        F.lit("emb").alias("op"),
-        F.col("vec_a").alias("id_a"),
-        F.col("vec_b").alias("id_b"),
-        F.col("cosine").alias("score"),
-        "in_lsh",
-    )
-    return mh.unionByName(emb)
 
 
 def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
@@ -680,123 +640,111 @@ def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
     )
 
 
-# (dedup_simhash folded into doc_signature_dedup above — round-4 registry
-# rotation to free driver slots for the round-3 operator families.)
-
-
 @query(
     "multimodal_feature_extract",
-    covers="LLM-multimodal,LLM-multimodal-decode,mapInPandas",
-    oracle=f"""
-        SELECT 'bytes' AS op, doc_id,
-               CAST(strlen(text) AS INT) AS n_bytes,
-               md5(text) AS content_hash,
-               CAST(NULL AS INT) AS width, CAST(NULL AS INT) AS height,
-               CAST(NULL AS DOUBLE) AS mean_r,
-               CAST(NULL AS DOUBLE) AS mean_g,
-               CAST(NULL AS DOUBLE) AS mean_b
+    covers="LLM-multimodal,mapInPandas",
+    oracle="""
+        SELECT doc_id, CAST(strlen(text) AS INT) AS n_bytes,
+               md5(text) AS content_hash
         FROM documents
-        UNION ALL
-        SELECT 'decode', doc_id, CAST(NULL AS INT),
-               md5(substr(text, 1, 36)),
-               CAST(4 AS INT), CAST(3 AS INT),
-               {", ".join(
-                   "CAST(list_sum(list_transform(range(0, 12), k -> "
-                   f"ord(substr(text, 1 + k*3 + {c}, 1)))) AS DOUBLE) / 12"
-                   for c in range(3)
-               )}
-        FROM documents
-        WHERE strlen(text) >= 36
-          AND regexp_matches(text, '^[\\x00-\\x7f]*$')
-        UNION ALL
-        SELECT 'audio', doc_id, CAST(NULL AS INT),
-               md5(substr(text, 1, 36)),
-               CAST(9 AS INT), CAST(2 AS INT),
-               {", ".join(
-                   "CAST(list_sum(list_transform(range(0, 9), k -> "
-                   f"ord(substr(text, 1 + k*4 + {c * 2}, 1)) + "
-                   f"256 * ord(substr(text, 1 + k*4 + {c * 2} + 1, 1))"
-                   ")) AS DOUBLE) / 9"
-                   for c in range(2)
-               )},
-               CAST(NULL AS DOUBLE)
-        FROM documents
-        WHERE strlen(text) >= 36
-          AND regexp_matches(text, '^[\\x00-\\x7f]*$')
     """,
 )
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload feature extraction through the Arrow mapInPandas path,
-    PLUS (r7) the REAL image decoder driver-checked end to end.
+    """Binary-payload feature extraction through the Arrow mapInPandas
+    path: the payload is a real binary column; the extractor runs per
+    Arrow batch exactly as an image/audio featurizer would; the oracle
+    checks the deterministic features (byte length + md5), proving the
+    plumbing."""
+    d = load_table(spark, sf_dir, "documents")
+    return M.extract_features(M.attach_binary_payload(d)).select(
+        "doc_id", "n_bytes", "content_hash"
+    )
 
-    'bytes' branch: the payload is a real binary column; the extractor
-    runs per Arrow batch exactly as an image/audio featurizer would; the
-    oracle checks the deterministic features (byte length + md5), proving
-    the plumbing.
 
-    'decode' branch: each document's first 36 bytes become the raster of
-    a REAL 4×3 P6 PPM payload (header + raw RGB rows — text is ASCII, so
-    chars are bytes), decoded by operators.multimodal.decode_image_raw
-    (the dependency-free PPM/BMP decoder). The oracle replays the decode
+# Both decoders read each document's first 36 chars as raw bytes. DuckDB
+# substr/strlen/ord and Spark substring/length are CHARACTER-based while
+# the decoders consume UTF-8 BYTES — any non-ASCII char in the window
+# would desync chars from bytes (ord() > 255, payload > 36 bytes). Both
+# sides filter on the identical full-text ASCII predicate, so the
+# chars-are-bytes invariant is checked, not assumed.
+_ASCII_RASTER_SQL = "strlen(text) >= 36 AND regexp_matches(text, '^[\\x00-\\x7f]*$')"
+
+
+def _ascii_raster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents").filter(
+        (F.length("text") >= 36) & F.col("text").rlike("^[\\x00-\\x7f]*$")
+    )
+
+
+@query(
+    "image_decode",
+    covers="LLM-multimodal-decode",
+    oracle=f"""
+        SELECT doc_id, md5(substr(text, 1, 36)) AS pixel_md5,
+               CAST(4 AS INT) AS width, CAST(3 AS INT) AS height,
+               {", ".join(
+                   "CAST(list_sum(list_transform(range(0, 12), k -> "
+                   f"ord(substr(text, 1 + k*3 + {c}, 1)))) AS DOUBLE) / 12 AS mean_{ch}"
+                   for c, ch in enumerate("rgb")
+               )}
+        FROM documents
+        WHERE {_ASCII_RASTER_SQL}
+    """,
+)
+def image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL image decoder, checked end to end: each document's first
+    36 bytes become the raster of a 4×3 P6 PPM payload (header + raw RGB
+    rows), decoded by operators.multimodal.decode_image_raw (the
+    dependency-free PPM/BMP decoder). The oracle replays the decode
     arithmetic from the source text: per-channel means are integer byte
     sums over every 3rd char's code point divided once (bit-exact both
     engines), and pixel_md5 of the canonical RGB tensor equals
     md5(substr(text,1,36)) because the tensor bytes ARE those text
     bytes. A wrong stride, channel order, or row order in the decoder
-    would break the hash — the decode path itself is driver-checked,
-    not just the batch plumbing.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    nul = lambda t, a: F.lit(None).cast(t).alias(a)  # noqa: E731
-    feats = M.extract_features(M.attach_binary_payload(d)).select(
-        F.lit("bytes").alias("op"),
-        "doc_id",
-        "n_bytes",
-        "content_hash",
-        nul("int", "width"),
-        nul("int", "height"),
-        nul("double", "mean_r"),
-        nul("double", "mean_g"),
-        nul("double", "mean_b"),
-    )
-    # ASCII gate (r7 ADVICE): DuckDB substr/strlen/ord and Spark
-    # substring/length are CHARACTER-based while decode_image_raw
-    # consumes UTF-8 BYTES — any non-ASCII char in the raster window
-    # would desync chars from bytes (ord() > 255, raster > 36 bytes).
-    # Gate the branch on an identical full-text ASCII predicate on both
-    # sides so the chars-are-bytes invariant is checked, not assumed.
-    ascii_docs = d.filter(
-        (F.length("text") >= 36) & F.col("text").rlike("^[\\x00-\\x7f]*$")
-    )
-    img = ascii_docs.select(
+    would break the hash."""
+    img = _ascii_raster_docs(spark, sf_dir).select(
         "doc_id",
         F.encode(
             F.concat(F.lit("P6\n4 3\n255\n"), F.substring("text", 1, 36)),
             "utf-8",
         ).alias("payload"),
     )
-    dec = M.decode_image_raw(img).select(
-        F.lit("decode").alias("op"),
+    return M.decode_image_raw(img).select(
         "doc_id",
-        nul("int", "n_bytes"),
-        F.col("pixel_md5").alias("content_hash"),
+        "pixel_md5",
         "width",
         "height",
-        F.element_at("mean_rgb", 1).alias("mean_r"),
-        F.element_at("mean_rgb", 2).alias("mean_g"),
-        F.element_at("mean_rgb", 3).alias("mean_b"),
+        *(F.element_at("mean_rgb", i + 1).alias(f"mean_{ch}") for i, ch in enumerate("rgb")),
     )
-    # 'audio' branch (r8, VERDICT ask #7): the same 36 ASCII bytes become
-    # the data chunk of a REAL stereo PCM-16 RIFF WAVE payload (9 frames
-    # × 2 channels × 2 bytes), decoded by decode_audio_raw — the oracle
-    # replays the int16 little-endian DE-INTERLEAVE from the source
-    # chars (sample[k,c] = ord(byte[4k+2c]) + 256·ord(byte[4k+2c+1]);
-    # ASCII ⇒ high byte < 128 ⇒ non-negative, so the chars-are-bytes
-    # trick stays exact — signed samples are covered by unit test), and
-    # the canonical tensor md5 equals md5(substr(text,1,36)) because
-    # reshaping a contiguous LE buffer preserves its bytes. Columns map
-    # onto the union schema: width=n_frames, height=n_channels,
-    # mean_r/mean_g = channel means.
+
+
+@query(
+    "audio_decode",
+    covers="LLM-multimodal-decode",
+    oracle=f"""
+        SELECT doc_id, md5(substr(text, 1, 36)) AS sample_md5,
+               CAST(9 AS INT) AS n_frames, CAST(2 AS INT) AS n_channels,
+               {", ".join(
+                   "CAST(list_sum(list_transform(range(0, 9), k -> "
+                   f"ord(substr(text, 1 + k*4 + {c * 2}, 1)) + "
+                   f"256 * ord(substr(text, 1 + k*4 + {c * 2} + 1, 1))"
+                   f")) AS DOUBLE) / 9 AS mean_ch{c}"
+                   for c in range(2)
+               )}
+        FROM documents
+        WHERE {_ASCII_RASTER_SQL}
+    """,
+)
+def audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL audio decoder, checked end to end: each document's first
+    36 bytes become the data chunk of a stereo PCM-16 RIFF WAVE payload
+    (9 frames × 2 channels × 2 bytes), decoded by decode_audio_raw. The
+    oracle replays the int16 little-endian DE-INTERLEAVE from the source
+    chars (sample[k,c] = ord(byte[4k+2c]) + 256·ord(byte[4k+2c+1]); ASCII
+    ⇒ high byte < 128 ⇒ non-negative, so the chars-are-bytes trick stays
+    exact — signed samples are covered by unit test), and the canonical
+    tensor md5 equals md5(substr(text,1,36)) because reshaping a
+    contiguous LE buffer preserves its bytes."""
     import struct as _struct
 
     wav_header = (
@@ -804,26 +752,19 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         + b"fmt " + _struct.pack("<IHHIIHH", 16, 1, 2, 8000, 32000, 4, 16)
         + b"data" + _struct.pack("<I", 36)
     )
-    aud = M.decode_audio_raw(
-        ascii_docs.select(
-            "doc_id",
-            F.concat(
-                F.lit(wav_header),
-                F.encode(F.substring("text", 1, 36), "utf-8"),
-            ).alias("payload"),
-        )
-    ).select(
-        F.lit("audio").alias("op"),
+    aud = _ascii_raster_docs(spark, sf_dir).select(
         "doc_id",
-        nul("int", "n_bytes"),
-        F.col("sample_md5").alias("content_hash"),
-        F.col("n_frames").alias("width"),
-        F.col("n_channels").alias("height"),
-        F.element_at("mean_amp", 1).alias("mean_r"),
-        F.element_at("mean_amp", 2).alias("mean_g"),
-        nul("double", "mean_b"),
+        F.concat(
+            F.lit(wav_header), F.encode(F.substring("text", 1, 36), "utf-8")
+        ).alias("payload"),
     )
-    return feats.unionByName(dec).unionByName(aud)
+    return M.decode_audio_raw(aud).select(
+        "doc_id",
+        "sample_md5",
+        "n_frames",
+        "n_channels",
+        *(F.element_at("mean_amp", c + 1).alias(f"mean_ch{c}") for c in range(2)),
+    )
 
 
 _CURATION_BOILER = "subscribe footer newsletter cookie banner legal notice"
@@ -900,16 +841,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     stripped = L.strip_frequent_lines(dirty, 50)
-    # r12 (guide §2.4, remove shuffles outright): the previous shape
-    # joined ``stripped`` back onto d0 for ``lang`` — a column the final
-    # projection never outputs (the oracle's scored CTE carries d.lang
-    # only as dead weight) — and then joined ``stripped`` AGAIN to
-    # recover n_removed, re-evaluating the whole strip branch (3 more
-    # documents scans + its aggregates). Both joins are row-preserving
-    # on the doc_id key (strip emits every doc exactly once), so
-    # dropping the dead lang join and riding n_removed through the
-    # scoring projection is value-identical: 2 joins, 2 exchanges and 4
-    # duplicate documents-scan branches gone (plans/r12/
+    # n_removed rides through the scoring projection instead of a join
+    # of ``stripped`` back onto the documents: strip emits every doc
+    # exactly once, so that join would be row-preserving and only cost
+    # 2 exchanges and 4 duplicate documents-scan branches (plans/r12/
     # curation_pipeline_{before,after}.txt; oracle hash unchanged).
     scored = _lang_quality_scored(stripped, passthrough=("n_removed",))
     drop_docs = (
@@ -1094,7 +1029,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strata.unionAll(mixed).unionAll(soft)
 
 
-_BPE_N = 8  # merges the driver row replays; >1-count pairs exist at every SF
+_BPE_N = 8  # merges the oracle replays; >1-count pairs exist at every SF
 
 
 def _bpe_oracle_ctes(n: int) -> str:
@@ -1188,10 +1123,9 @@ def _corpus_doc_count(spark: SparkSession, sf_dir: str) -> int:
 
 @query(
     "tfidf_top_terms",
-    covers="LLM-text,tfidf,LLM-bpe,W2,A1",
+    covers="LLM-text,tfidf,W2,A1",
     oracle=f"""
-        WITH {_bpe_oracle_ctes(_BPE_N)},
-        toks AS (
+        WITH toks AS (
             SELECT doc_id, unnest({_TOKS}) AS term FROM documents
         ),
         tf AS (
@@ -1207,8 +1141,7 @@ def _corpus_doc_count(spark: SparkSession, sf_dir: str) -> int:
                    CAST(tf.tf * (n.n_docs + 1) AS DOUBLE) / (df.df + 1) AS score
             FROM tf JOIN df USING (term) CROSS JOIN n
         )
-        SELECT 'tfidf' AS op, doc_id, term, tf, df, score,
-               CAST(rnk AS INT) AS rnk, CAST(NULL AS VARCHAR) AS seq
+        SELECT doc_id, term, tf, df, score, CAST(rnk AS INT) AS rnk
         FROM (
             SELECT scored.*, row_number() OVER (
                 PARTITION BY doc_id ORDER BY score DESC, term
@@ -1216,65 +1149,23 @@ def _corpus_doc_count(spark: SparkSession, sf_dir: str) -> int:
             FROM scored
         )
         WHERE rnk <= 3
-        UNION ALL
-        SELECT 'bpe_merge', CAST(NULL AS BIGINT), term,
-               CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-               CAST(NULL AS DOUBLE), CAST(rnk AS INT),
-               CAST(NULL AS VARCHAR)
-        FROM ({_BPE_MERGE_UNION})
-        UNION ALL
-        SELECT 'bpe_seg', CAST(NULL AS BIGINT), word, freq,
-               CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-               CAST(NULL AS INT), seq
-        FROM bpe_w{_BPE_N}
-        UNION ALL
-        SELECT 'bpe_vocab', CAST(NULL AS BIGINT), tok,
-               CAST(sum(freq) AS BIGINT), CAST(count(*) AS BIGINT),
-               CAST(NULL AS DOUBLE), CAST(NULL AS INT),
-               CAST(NULL AS VARCHAR)
-        FROM (SELECT freq, unnest(string_split(seq, ' ')) AS tok
-              FROM bpe_w{_BPE_N})
-        GROUP BY tok
     """,
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 distinguishing terms by smoothed TF-IDF, PLUS
-    the BPE tokenizer-training family union-tagged into the same slot
-    (r7: converts the last parity-only §8 family to driver-checked).
-
-    BPE branches — all three production pieces hash-checked against a
-    full SQL replay of the training algorithm (see _bpe_oracle_ctes):
-    - 'bpe_merge': the first ``_BPE_N`` merge rules from
-      ``bpe.train_bpe_driver`` — the 100 TB path (ONE corpus-sized
-      word-frequency job, merge loop driver-local over the compact
-      vocab; reference-free, see operators/bpe.py) — as (rank, 'a|b').
-    - 'bpe_seg': ``bpe.encode`` of every distinct corpus word under
-      those merges (codegen aggregate-fold per merge, no Python, no
-      shuffle) — encode(train corpus) must BE the training
-      segmentation, so this hash also pins the trainer/encoder
-      round-trip.
-    - 'bpe_vocab': ``bpe.vocabulary`` over the segmentation — per
-      subword token, total corpus frequency (tf) and #words (df).
-
-    TF-IDF branch — document fingerprinting for corpus analysis: tf per
-    (doc, term), df per term, score = tf·(N+1)/(df+1) — a rational
-    TF-IDF variant chosen because IEEE multiply/divide are correctly
-    rounded in every engine (ln() is not guaranteed bit-identical across
-    libm implementations, so a log-idf would flake the hash gate in the
-    last ulp). Ranking ties break on the term string, so the top-3 SET
-    is fully deterministic.
+    """Per-document top-3 distinguishing terms by smoothed TF-IDF —
+    document fingerprinting for corpus analysis: tf per (doc, term), df
+    per term, score = tf·(N+1)/(df+1) — a rational TF-IDF variant chosen
+    because IEEE multiply/divide are correctly rounded in every engine
+    (ln() is not guaranteed bit-identical across libm implementations, so
+    a log-idf would flake the hash gate in the last ulp). Ranking ties
+    break on the term string, so the top-3 SET is fully deterministic.
 
     Plan: tf groupBy (one shuffle on doc+term), df groupBy (one on term),
     scalar N broadcast via cross join, score join back on term, top-k per
     doc as a rank window (one shuffle on doc). Every stage is JVM codegen;
     df for ultra-common terms is the only skew point — at 100 TB cap it
     with a stop-term filter before the join, same shape as stop-shingles.
-    The BPE branches add one corpus-sized word count per side of the
-    trainer/encoder (at 100 TB you would persist the word table once and
-    feed both; at driver scale the recompute is cheaper than the cache).
     """
-    from nhl_data_pipeline_spark.operators import bpe as B
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -1295,64 +1186,96 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    nul = lambda t, a: F.lit(None).cast(t).alias(a)  # noqa: E731
-    tfidf = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select(
-            F.lit("tfidf").alias("op"),
-            "doc_id",
-            "term",
-            "tf",
-            "df",
-            "score",
-            "rnk",
-            nul("string", "seq"),
-        )
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= 3
     )
+
+
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
+    """The first ``_BPE_N`` merges of ``bpe.train_bpe_driver`` — the 100 TB
+    path (ONE corpus-sized word-frequency job, merge loop driver-local
+    over the compact vocab; reference-free, see operators/bpe.py) —
+    memoized per source identity (_BPE_MEMO)."""
+    from nhl_data_pipeline_spark.operators import bpe as B
+
     src = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(src)
     key = (src, st.st_size, st.st_mtime_ns)
     if key not in _BPE_MEMO:
-        _BPE_MEMO[key] = B.train_bpe_driver(d, _BPE_N)
-    merges = _BPE_MEMO[key]
-    merge_rows = spark.createDataFrame(
-        [(f"{a}|{b}", i + 1) for i, (a, b) in enumerate(merges)],
-        "term string, rnk int",
-    ).select(
-        F.lit("bpe_merge").alias("op"),
-        nul("bigint", "doc_id"),
-        "term",
-        nul("bigint", "tf"),
-        nul("bigint", "df"),
-        nul("double", "score"),
-        "rnk",
-        nul("string", "seq"),
+        _BPE_MEMO[key] = B.train_bpe_driver(
+            load_table(spark, sf_dir, "documents"), _BPE_N
+        )
+    return _BPE_MEMO[key]
+
+
+@query(
+    "bpe_merges",
+    covers="LLM-bpe",
+    oracle=f"""
+        WITH {_bpe_oracle_ctes(_BPE_N)}
+        SELECT rnk, term FROM ({_BPE_MERGE_UNION})
+    """,
+)
+def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE tokenizer training: the learned merge rules as (rank, 'a|b'),
+    hash-checked against a full SQL replay of the training algorithm
+    (_bpe_oracle_ctes)."""
+    return spark.createDataFrame(
+        [(i + 1, f"{a}|{b}") for i, (a, b) in enumerate(_bpe_merges(spark, sf_dir))],
+        "rnk int, term string",
     )
-    segt = B.encode(B.word_frequencies(d), merges, text_col="word")
+
+
+@query(
+    "bpe_segmentation",
+    covers="LLM-bpe",
+    oracle=f"""
+        WITH {_bpe_oracle_ctes(_BPE_N)}
+        SELECT 'bpe_seg' AS op, word AS term, freq AS tf,
+               CAST(NULL AS BIGINT) AS df, seq
+        FROM bpe_w{_BPE_N}
+        UNION ALL
+        SELECT 'bpe_vocab', tok, CAST(sum(freq) AS BIGINT),
+               CAST(count(*) AS BIGINT), CAST(NULL AS VARCHAR)
+        FROM (SELECT freq, unnest(string_split(seq, ' ')) AS tok
+              FROM bpe_w{_BPE_N})
+        GROUP BY tok
+    """,
+)
+def bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE encode + vocabulary under the trained merges, hash-checked
+    against the SQL replay of training (_bpe_oracle_ctes). Both branches
+    read one segmentation, so they stay one query, tagged in `op`:
+    - 'bpe_seg': ``bpe.encode`` of every distinct corpus word (codegen
+      aggregate-fold per merge, no Python, no shuffle) — encode(train
+      corpus) must BE the training segmentation, so this hash also pins
+      the trainer/encoder round-trip.
+    - 'bpe_vocab': ``bpe.vocabulary`` over the segmentation — per
+      subword token, total corpus frequency (tf) and #words (df).
+    """
+    from nhl_data_pipeline_spark.operators import bpe as B
+
+    d = load_table(spark, sf_dir, "documents")
+    segt = B.encode(
+        B.word_frequencies(d), _bpe_merges(spark, sf_dir), text_col="word"
+    )
     seg = segt.select(
         F.lit("bpe_seg").alias("op"),
-        nul("bigint", "doc_id"),
         F.col("word").alias("term"),
         F.col("freq").alias("tf"),
-        nul("bigint", "df"),
-        nul("double", "score"),
-        nul("int", "rnk"),
+        F.lit(None).cast("bigint").alias("df"),
         F.array_join("bpe_tokens", " ").alias("seq"),
     )
     voc = B.vocabulary(
         segt.select("freq", F.col("bpe_tokens").alias("syms"))
     ).select(
         F.lit("bpe_vocab").alias("op"),
-        nul("bigint", "doc_id"),
         F.col("token").alias("term"),
         F.col("total_freq").alias("tf"),
         F.col("n_words").alias("df"),
-        nul("double", "score"),
-        nul("int", "rnk"),
-        nul("string", "seq"),
+        F.lit(None).cast("string").alias("seq"),
     )
-    return tfidf.unionByName(merge_rows).unionByName(seg).unionByName(voc)
+    return seg.unionByName(voc)
 
 
 _SH4_SQL = D.shingles_sql(_TOKS, 4)
@@ -1484,7 +1407,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     str_sh = D.exploded_distinct_shingles(d, X.tokens(F.col("text")), 4)
     # Seed battery rendered as SQL text — same expressions, one py4j round
-    # trip per seed instead of ~6 (see dedup.lsh_band_table, r12).
+    # trip per seed instead of ~6 (see dedup.lsh_band_table).
     sigs = str_sh.groupBy("doc_id", "n").agg(
         *[F.expr(f"min(md5(concat('{i}|', s)))").alias(f"h{i}") for i in range(12)]
     ).select(
@@ -1674,7 +1597,7 @@ _WINNOW_AGG_SQL = f"""
 )
 def pii_winnow_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub audit + winnowing document fingerprints in one per-doc
-    report (two operators, one registry slot — the 50-query cap).
+    report, joined on doc_id.
 
     - `pii_hits` / `redacted_len`: operators.text.redact_pii's
       regexp_replace chain counted and applied — whole-stage codegen,
@@ -1717,10 +1640,8 @@ def pii_winnow_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- round 4:
-# driver rows for the n-gram LM and count-min-sketch families (their
-# DuckDB twins existed since round 3; the registry rotation freed the
-# slots).
+# ---------------------------------------------------------------- n-gram
+# LM and count-min-sketch queries, each checked against its DuckDB twin.
 
 
 @query(
@@ -1786,7 +1707,8 @@ _CMS_TOP = 20
     """,
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch build + heavy-hitter estimation, one tagged result:
+    """Count-min sketch build + heavy-hitter estimation, one tagged result
+    (the estimates probe the sketch the 'cell' rows emit):
     'cell' rows are the full d×w counter table (≤ 1024 rows whatever the
     corpus size — built in ONE corpus scan, operators/sketch.py), 'est'
     rows are the min-over-rows estimates for the corpus's top-20 exact
@@ -1834,8 +1756,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate-SPAN detection (Lee et al. 2022 substring dedup,
     operators/spans.py): every maximal run of tokens covered by an 8-gram
-    occurring ≥2 times corpus-wide, per document. Driver row since the
-    round-5 rotation (DuckDB twin previously pytest-only,
+    occurring ≥2 times corpus-wide, per document (twin-tested also in
     tests/test_spans.py).
 
     Scale shape (module docstring has the full story): positional-gram
@@ -1858,7 +1779,6 @@ def classifier_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/classifier.py::train_logreg — zero init, lr=0.5, label
     y = doc_id % 2, training subset doc_id < 256) feeding the broadcast-
     weights inference path (::classifier_score) over the FULL table.
-    Driver row since the round-5 rotation.
 
     The oracle replays the training update in EXACT integer arithmetic —
     possible because at iteration 1 the fixed-point errors are ±5·10⁸
@@ -1897,9 +1817,8 @@ def classifier_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def report_card_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus report card + exact per-group token-count quantiles
-    (operators/report.py), one row per (source, lang). Driver row since
-    the round-5 rotation (all-integer DuckDB twins previously pytest-only,
-    tests/test_scale_operators.py).
+    (operators/report.py), one row per (source, lang); all-integer DuckDB
+    twins (also tested in tests/test_scale_operators.py).
 
     One corpus scan feeds the conditional-aggregate datasheet (counts,
     token/char totals, exact histogram bins, fingerprint dup counts); the
@@ -1913,8 +1832,8 @@ def report_card_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rep.join(qq, ["source", "lang"])
 
 
-# ---------------------------------------------------------------- round 5
-# second rotation: driver rows for the round-4 twin-only families.
+# ---------------------------------------------------------------- chunking,
+# batching and snapshot diffing, each checked against its DuckDB twin.
 
 from nhl_data_pipeline_spark.operators.chunking import (  # noqa: E402
     chunk_documents,
@@ -1935,58 +1854,48 @@ _BATCH, _BIN = 32, 16
 
 
 @query(
-    "document_chunking_batching",
-    covers="LLM-chunking,LLM-length-batching",
+    "document_chunking",
+    covers="LLM-chunking",
     oracle=f"""
-        SELECT 'chunk' AS op, doc_id, CAST(chunk_id AS INT) AS chunk_id,
-               n_chunks, n_tokens, chunk_text,
-               CAST(NULL AS INT) AS bin, CAST(NULL AS BIGINT) AS batch_id
+        SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id, n_chunks, n_tokens,
+               chunk_text
         FROM ({chunk_documents_sql(chunk_tokens=_CHUNK_TOKENS, overlap=_CHUNK_OVERLAP)})
-        UNION ALL
-        SELECT 'batch', doc_id, CAST(NULL AS INT), CAST(NULL AS INT),
-               n_tokens, CAST(NULL AS VARCHAR), bin, batch_id
-        FROM ({length_bucketed_batches_sql(batch_size=_BATCH, bin_width=_BIN)})
     """,
 )
-def document_chunking_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-token chunking with overlap + length-bucketed inference
-    batching, union-tagged (driver row since the round-5 second rotation;
-    both were twin-only in tests/test_chunking.py).
-
-    'chunk' branch: `operators/chunking.chunk_documents` — pure per-row
-    whole-stage codegen (posexplode over a sequence of chunk starts,
-    slice, array_join); no shuffle, fan-out linear in document length.
-
-    'batch' branch: `operators/chunking.length_bucketed_batches` —
-    deterministic globally-unique batch ids from a (bin)-partitioned
-    window ordered by (n_tokens, doc_id); one exchange.
-    """
+def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-token chunking with overlap: `operators/chunking.chunk_documents`
+    — pure per-row whole-stage codegen (posexplode over a sequence of
+    chunk starts, slice, array_join); no shuffle, fan-out linear in
+    document length."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ch = chunk_documents(
+    return chunk_documents(
         docs, chunk_tokens=_CHUNK_TOKENS, overlap=_CHUNK_OVERLAP
     ).select(
-        F.lit("chunk").alias("op"),
         "doc_id",
         F.col("chunk_id").cast("int").alias("chunk_id"),
         "n_chunks",
         "n_tokens",
         "chunk_text",
-        F.lit(None).cast("int").alias("bin"),
-        F.lit(None).cast("bigint").alias("batch_id"),
     )
-    bt = length_bucketed_batches(
-        docs, batch_size=_BATCH, bin_width=_BIN
-    ).select(
-        F.lit("batch").alias("op"),
-        "doc_id",
-        F.lit(None).cast("int").alias("chunk_id"),
-        F.lit(None).cast("int").alias("n_chunks"),
-        "n_tokens",
-        F.lit(None).cast("string").alias("chunk_text"),
-        "bin",
-        "batch_id",
+
+
+@query(
+    "length_bucketed_batching",
+    covers="LLM-length-batching",
+    oracle=f"""
+        SELECT doc_id, n_tokens, bin, batch_id
+        FROM ({length_bucketed_batches_sql(batch_size=_BATCH, bin_width=_BIN)})
+    """,
+)
+def length_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-bucketed inference batching:
+    `operators/chunking.length_bucketed_batches` — deterministic
+    globally-unique batch ids from a (bin)-partitioned window ordered by
+    (n_tokens, doc_id); one exchange."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return length_bucketed_batches(docs, batch_size=_BATCH, bin_width=_BIN).select(
+        "doc_id", "n_tokens", "bin", "batch_id"
     )
-    return ch.unionByName(bt)
 
 
 _DIFF_OLD = "SELECT doc_id, text FROM documents WHERE doc_id % 10 < 8"
@@ -2006,9 +1915,8 @@ _DIFF_NEW = """SELECT doc_id,
     ),
 )
 def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-aware churn between two corpus snapshots (driver row since
-    the round-5 second rotation; formerly twin-only in
-    tests/test_diffing.py).
+    """Content-aware churn between two corpus snapshots (also twin-tested
+    in tests/test_diffing.py).
 
     The snapshots are derived deterministically from the documents table
     (old = doc_id%10<8, new = doc_id%10>=2 with %10∈{2,3} edited), so

@@ -23,10 +23,30 @@ from nhl_data_pipeline_spark.plans.registry import query
 from nhl_data_pipeline_spark.plans.sqlgen import dsum
 
 
-def _latest_snapshot_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure W1 latest-snapshot shape — what bench.py times (the merged
-    correctness query below adds the W2 branch; benching the union would
-    break round-over-round comparability of this headline number)."""
+@query(
+    "latest_snapshot_dedup",
+    covers="W1",
+    bench=True,
+    oracle="""
+        SELECT user_id, event_id, ts, event_type, value
+        FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY user_id ORDER BY ts DESC, event_id DESC
+            ) AS rn
+            FROM events
+        )
+        WHERE rn = 1
+    """,
+)
+def latest_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Latest-snapshot-wins dedup, the reference's core pattern (W1):
+    `QUALIFY ROW_NUMBER() OVER (PARTITION BY payload:id ORDER BY
+    partition_date DESC, s3_key DESC) = 1` (`stg_games.sql:32`,
+    `.context/DECISIONS.md:289-320`) applied to the events table: one
+    surviving row per user_id, ordered by recency with a unique tiebreak.
+    At scale: project needed columns BEFORE the window so the shuffle moves
+    narrow rows, not full payloads (SURVEY §4 spill note).
+    """
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
@@ -39,23 +59,10 @@ def _latest_snapshot_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "latest_snapshot_dedup",
-    covers="W1,W2",
-    bench=True,
-    bench_fn=_latest_snapshot_w1,
+    "preference_rank",
+    covers="W2",
     oracle="""
-        SELECT 'latest' AS op, user_id AS entity_id, event_id AS pick_id,
-               ts AS picked_ts, event_type AS label, value
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY user_id ORDER BY ts DESC, event_id DESC
-            ) AS rn
-            FROM events
-        )
-        WHERE rn = 1
-        UNION ALL
-        SELECT 'pref', o_custkey, o_orderkey, o_orderdate, o_orderpriority,
-               CAST(NULL AS DOUBLE)
+        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority
         FROM (
             SELECT *, ROW_NUMBER() OVER (
                 PARTITION BY o_custkey
@@ -70,31 +77,10 @@ def _latest_snapshot_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rn = 1
     """,
 )
-def latest_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-snapshot-wins dedup — the reference's core pattern (W1) —
-    plus CASE-ordered preference ranking (W2; merged `preference_rank`,
-    round-5 registry rotation — both are best-row-per-entity ROW_NUMBER
-    windows, union-tagged).
-
-    'latest' branch: `QUALIFY ROW_NUMBER() OVER (PARTITION BY payload:id
-    ORDER BY partition_date DESC, s3_key DESC) = 1` (`stg_games.sql:32`,
-    `.context/DECISIONS.md:289-320`) applied to the events table: one
-    surviving row per user_id, ordered by recency with a unique tiebreak.
-    At scale: project needed columns BEFORE the window so the shuffle moves
-    narrow rows, not full payloads (SURVEY §4 spill note).
-
-    'pref' branch: bookmaker-priority ranking
+def preference_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CASE-ordered preference ranking (W2): the bookmaker-priority pick
     (`fact_player_sog_props_v2.sql:33-53`) — a hand-written preference
-    order, then recency, then a unique tiebreak.
-    """
-    latest = _latest_snapshot_w1(spark, sf_dir).select(
-        F.lit("latest").alias("op"),
-        F.col("user_id").alias("entity_id"),
-        F.col("event_id").alias("pick_id"),
-        F.col("ts").alias("picked_ts"),
-        F.col("event_type").alias("label"),
-        "value",
-    )
+    order, then recency, then a unique tiebreak, one row per customer."""
     o = load_table(spark, sf_dir, "orders")
     pref = (
         F.when(F.col("o_orderpriority") == "1-URGENT", 1)
@@ -106,25 +92,37 @@ def latest_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy(
         pref.asc(), F.desc("o_orderdate"), F.desc("o_orderkey")
     )
-    best = (
+    return (
         o.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(
-            F.lit("pref").alias("op"),
-            F.col("o_custkey").alias("entity_id"),
-            F.col("o_orderkey").alias("pick_id"),
-            F.col("o_orderdate").alias("picked_ts"),
-            F.col("o_orderpriority").alias("label"),
-            F.lit(None).cast("double").alias("value"),
-        )
+        .select("o_custkey", "o_orderkey", "o_orderdate", "o_orderpriority")
     )
-    return latest.unionByName(best)
 
 
-def _rolling_avg_w3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure W3/W4 rolling-frames shape — what bench.py times (the
-    merged correctness query below adds the RANGE-frame branch; benching
-    the union would break round-over-round comparability).
+@query(
+    "rolling_avg_frames",
+    covers="W3,W4",
+    bench=True,
+    oracle="""
+        SELECT user_id, event_id, ts,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w3 AS DOUBLE)
+                   / COUNT(*) OVER w3 AS avg_3,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w10 AS DOUBLE)
+                   / COUNT(*) OVER w10 AS avg_10,
+               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER wall AS DOUBLE)
+                   / COUNT(*) OVER wall AS running_avg
+        FROM events
+        WINDOW
+          w3  AS (PARTITION BY user_id ORDER BY ts, event_id
+                  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),
+          w10 AS (PARTITION BY user_id ORDER BY ts, event_id
+                  ROWS BETWEEN 9 PRECEDING AND CURRENT ROW),
+          wall AS (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    """,
+)
+def rolling_avg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling 3/10-row averages + running average (W3/W4).
 
     Analog of the 3/5/10-game rolling windows (`team_shot_metrics.sql:29-86`)
     and the UNBOUNDED PRECEDING season-to-date frame (`:66-77`). One shuffle
@@ -147,69 +145,6 @@ def _rolling_avg_w3(spark: SparkSession, sf_dir: str) -> DataFrame:
         avg_over(w10).alias("avg_10"),
         avg_over(wall).alias("running_avg"),
     )
-
-
-@query(
-    "rolling_avg_frames",
-    covers="W3,W4,W-ext-range-frame",
-    bench=True,
-    bench_fn=_rolling_avg_w3,
-    oracle="""
-        SELECT 'roll' AS op, user_id AS entity_id, event_id AS item_id, ts,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w3 AS DOUBLE)
-                   / COUNT(*) OVER w3 AS m1,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w10 AS DOUBLE)
-                   / COUNT(*) OVER w10 AS m2,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER wall AS DOUBLE)
-                   / COUNT(*) OVER wall AS m3
-        FROM events
-        WINDOW
-          w3  AS (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),
-          w10 AS (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN 9 PRECEDING AND CURRENT ROW),
-          wall AS (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        UNION ALL
-        SELECT 'range', o_custkey, o_orderkey, CAST(NULL AS TIMESTAMP),
-               CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(30,2))) OVER w
-                         AS VARCHAR) AS DOUBLE),
-               CAST(count(*) OVER w AS DOUBLE),
-               CAST(NULL AS DOUBLE)
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
-                     RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
-    """,
-)
-def rolling_avg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 3/10-row averages + running average (W3/W4), union-tagged
-    with the value-RANGE interval frame (merged `range_interval_window`,
-    round-5 second rotation — both are moving-frame window families;
-    bench.py still times the pure rolling shape via bench_fn).
-
-    'roll' branch: :func:`_rolling_avg_w3`. 'range' branch:
-    :func:`range_interval_window` — the rolling 30-DAY order total whose
-    frame peers by VALUE distance, not row position.
-    """
-    roll = _rolling_avg_w3(spark, sf_dir).select(
-        F.lit("roll").alias("op"),
-        F.col("user_id").alias("entity_id"),
-        F.col("event_id").alias("item_id"),
-        "ts",
-        F.col("avg_3").alias("m1"),
-        F.col("avg_10").alias("m2"),
-        F.col("running_avg").alias("m3"),
-    )
-    rng = range_interval_window(spark, sf_dir).select(
-        F.lit("range").alias("op"),
-        F.col("o_custkey").alias("entity_id"),
-        F.col("o_orderkey").alias("item_id"),
-        F.lit(None).cast("timestamp_ntz").alias("ts"),
-        F.col("sum_30d").alias("m1"),
-        F.col("n_30d").cast("double").alias("m2"),
-        F.lit(None).cast("double").alias("m3"),
-    )
-    return roll.unionByName(rng)
 
 
 @query(
@@ -291,8 +226,7 @@ def topk_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Also covers O1 (`ORDER BY ingest_ts DESC LIMIT 1`,
     `bruins_next_opponent.sql:11-17`): ORDER BY + LIMIT k plans as the same
     distributed TakeOrderedAndProject physical operator for any k — LIMIT 1
-    is the k=1 case, so the argmax shape is absorbed here (formerly the
-    separate argmax_limit1 query; registry sits at the driver's 50-cap).
+    is the k=1 case, so the argmax shape needs no query of its own.
 
     Analog of the top-25 betting performers (`odds_matching_queries.sql:117-131`).
     Revenue is decimal-exact, so the ordering — and therefore the top-k SET —
@@ -305,7 +239,7 @@ def topk_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — so no wide row ever shuffles. ~25% faster than the
     join-first form at sf0.1 and the gap widens with lineitem fan-out.
 
-    r10 scale policy: the per-order aggregate inherits the same
+    Scale policy: the per-order aggregate inherits the same
     spill-gated whole-wave width as join_chain_revenue's fact side
     (catalog.fact_shuffle_width) — at sf30 the session-width shuffle
     puts ~145 MB compressed lineitem per task, past the measured spill
@@ -322,14 +256,14 @@ def topk_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # r12 (VERDICT r11 ask #1): layout-aware width — bucket-by-l_orderkey
+    # Layout-aware width: bucket-by-l_orderkey
     # lineitem already satisfies the per-order aggregate's distribution;
     # repartitioning it would re-plant the exchange whose map-side sorter
     # spilled 13.7 GB mem / 6.2 GB disk at sf100
     # (bench_logs/r11/probe_stage_topk_sf100.out).
     if w_li and not bucketed_on("lineitem", "l_orderkey"):
         li = li.repartition(w_li, F.col("l_orderkey"))
-    # Measure as SQL text (r12 chatter pass) — the identical dec() cast.
+    # Measure as SQL text: the identical dec() cast, one py4j call.
     per_order = li.groupBy("l_orderkey").agg(
         F.expr(
             "sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))"
@@ -381,9 +315,11 @@ RANGE_INTERVAL_WINDOW_SQL = """
 """
 
 
-# (range_interval_window folded into rolling_avg_frames above — round-5
-# second rotation; RANGE_INTERVAL_WINDOW_SQL stays the standalone twin
-# used by tests/test_scale_operators.py.)
+@query(
+    "range_interval_window",
+    covers="W-ext-range-frame",
+    oracle=RANGE_INTERVAL_WINDOW_SQL,
+)
 def range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-RANGE window frame: per customer, the rolling 30-DAY order
     total ending at each order — peers by VALUE distance, not row
@@ -397,8 +333,6 @@ def range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     date ordering (both engines' RANGE bounds are inclusive). The sum is
     decimal-exact — emitted as DOUBLE through the varchar bridge
     (sqlgen.dsum_expr rationale) so the hash compares engine-stably.
-    Driver-checked as the 'range' branch of rolling_avg_frames (round-5
-    second rotation); also twin-tested in tests/test_scale_operators.py.
     """
     o = load_table(spark, sf_dir, "orders")
     day = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date"))

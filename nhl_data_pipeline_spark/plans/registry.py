@@ -20,7 +20,7 @@ Design rules for parity-safe queries:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,12 +34,7 @@ class QuerySpec:
     oracle: str | None  # None → driver records rows-only check
     covers: str  # SURVEY §2 operator ids, e.g. "A1,A2,P5"
     bench: bool = False  # part of bench.py's headline set
-    tags: tuple[str, ...] = field(default_factory=tuple)
-    # What bench.py times when it differs from the correctness query: the
-    # registry rotation folds extra operators into some correctness slots
-    # (driver 50-row cap), which would silently change a benched query's
-    # plan and break round-over-round comparability. bench_fn pins the
-    # original benched shape; None → bench times fn itself.
+    # Always None (each benched plan is its fn); perfbench/workloads.py reads it.
     bench_fn: QueryFn | None = None
 
 
@@ -52,8 +47,6 @@ def query(
     oracle: str | None,
     covers: str,
     bench: bool = False,
-    tags: tuple[str, ...] = (),
-    bench_fn: QueryFn | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator registering a (spark, sf_dir) -> DataFrame query."""
 
@@ -61,8 +54,7 @@ def query(
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = QuerySpec(
-            name=name, fn=fn, oracle=oracle, covers=covers, bench=bench,
-            tags=tags, bench_fn=bench_fn,
+            name=name, fn=fn, oracle=oracle, covers=covers, bench=bench
         )
         return fn
 

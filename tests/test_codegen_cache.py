@@ -23,7 +23,7 @@ def test_repeated_bench_pass_reuses_generated_classes(spark):
         for spec in specs:
             reset_scan_splits(spark)
             spark.catalog.clearCache()
-            (spec.bench_fn or spec.fn)(spark, TEST_SF_DIR).write.format(
+            spec.fn(spark, TEST_SF_DIR).write.format(
                 "noop"
             ).mode("overwrite").save()
         return codegen_compiles(spark) - c0

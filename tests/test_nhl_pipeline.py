@@ -574,7 +574,7 @@ def test_analyst_sql_corpus_runs(spark, models):
 def test_full_analysis_corpus_runs(spark, models):
     """SURVEY §3.2 acceptance: every analyst query family executes via
     spark.sql over the registered views and returns a sane shape."""
-    from nhl_data_pipeline_spark.nhl.analysis_corpus import CORPUS
+    from tests.analysis_corpus import CORPUS
 
     results = {name: spark.sql(sql).collect() for name, sql in CORPUS.items()}
     assert set(results) >= {

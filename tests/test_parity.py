@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from nhl_data_pipeline_spark.plans.parity import compare_query
-from nhl_data_pipeline_spark.plans.registry import all_queries
+from nhl_data_pipeline_spark.plans.registry import QuerySpec, all_queries
 from tests.conftest import TEST_SF_DIR
 
 
@@ -43,3 +43,11 @@ def test_queries_and_oracles_consistent():
     o = e.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) == len(all_queries())
+    # Each timed plan is the plan parity checks: a bench query has an
+    # oracle, and every spec is fully described by the fields `query()`
+    # registers, so none carries a second, unchecked plan to time.
+    specs = all_queries().values()
+    assert all(s.oracle is not None for s in specs if s.bench)
+    assert all(
+        s == QuerySpec(s.name, s.fn, s.oracle, s.covers, s.bench) for s in specs
+    )

@@ -1,4 +1,4 @@
-"""Size-gated persistence of multi-consumer intermediates (r12).
+"""Size-gated persistence of multi-consumer intermediates.
 
 probe_persist_ab (committed under bench_logs/r12/) measured the columnar
 cache build+read machinery at ~10x the recompute it saves while the
@@ -52,8 +52,7 @@ def test_jaccard_and_contamination_have_no_cache(spark):
 
     specs = all_queries()
     for name in ("dedup_ngram_jaccard", "contamination_check"):
-        fn = specs[name].bench_fn or specs[name].fn
-        df = fn(spark, TEST_SF_DIR)
+        df = specs[name].fn(spark, TEST_SF_DIR)
         assert _n_cached(df) == 0, name
     spark.catalog.clearCache()
 
@@ -61,13 +60,13 @@ def test_jaccard_and_contamination_have_no_cache(spark):
 def test_minhash_plan_build_runs_no_job(spark, monkeypatch):
     from nhl_data_pipeline_spark.plans import q_text
 
-    q_text._minhash_lsh_pure(spark, TEST_SF_DIR)  # warm the catalog memos
+    q_text.dedup_minhash_lsh(spark, TEST_SF_DIR)  # warm the catalog memos
     monkeypatch.setattr(q_text, "_DOC_COUNT_MEMO", {})
     sc = spark.sparkContext
     group = f"minhash-plan-build-{uuid.uuid4().hex}"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        df = q_text._minhash_lsh_pure(spark, TEST_SF_DIR)
+        df = q_text.dedup_minhash_lsh(spark, TEST_SF_DIR)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -32,19 +32,15 @@ def test_static_plans_match_committed_fingerprints(spark):
     want = json.loads(BASELINE.read_text())
     drift = {}
     for name, spec in all_queries().items():
-        shapes = [(name, spec.fn)]
-        if spec.bench_fn is not None:  # benched shapes pinned too (r8)
-            shapes.append((f"{name}#bench", spec.bench_fn))
-        for key, fn in shapes:
-            plan = (
-                fn(spark, TEST_SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            got = fingerprint(plan)
-            if got != want.get(key):
-                drift[key] = {"want": want.get(key), "got": got}
+        plan = (
+            spec.fn(spark, TEST_SF_DIR)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        got = fingerprint(plan)
+        if got != want.get(name):
+            drift[name] = {"want": want.get(name), "got": got}
     assert not drift, (
         f"{len(drift)} quer{'y' if len(drift) == 1 else 'ies'} changed "
         f"plan shape: {json.dumps(drift, indent=1)}\n"

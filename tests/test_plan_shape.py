@@ -28,27 +28,13 @@ def run(spark, name: str):
 
 
 def test_filter_and_column_pushdown_reach_scan(spark):
-    # The registered query union-tags a JSON-extraction branch (round-5
-    # second rotation); pushdown is pinned on the pure P1 shape so the
-    # ReadSchema assertion below keeps pointing at the orders scan.
-    from nhl_data_pipeline_spark.plans.q_projection import typed_projection_p1
-
-    df = typed_projection_p1(spark, TEST_SF_DIR)
-    p = plan_str(df)
+    p = plan_str(run(spark, "typed_projection_filter"))
     assert "PushedFilters: [" in p
     assert "IsNotNull(o_orderstatus)" in p or "EqualTo(o_orderstatus,F)" in p
     # Column pruning: scan schema must not include unprojected columns.
     read_schema = next(s for s in p.splitlines() if "ReadSchema" in s)
     assert "o_comment" not in read_schema
     assert "o_clerk" not in read_schema
-
-    # The REGISTERED (union-tagged) query must keep the same pushdown on
-    # its orders scan — a future edit that stops routing the typed
-    # branch through typed_projection_p1 must not silently lose it.
-    pm = plan_str(run(spark, "typed_projection_filter"))
-    assert "IsNotNull(o_orderstatus)" in pm or "EqualTo(o_orderstatus,F)" in pm
-    for rs in (s for s in pm.splitlines() if "ReadSchema" in s):
-        assert "o_comment" not in rs and "o_clerk" not in rs
 
 
 def test_small_dims_are_broadcast(spark):
@@ -76,15 +62,14 @@ def test_aggregation_is_partial_then_final(spark):
 
 
 def test_semi_and_anti_joins_stay_joins(spark):
-    # The merged cross+semi/anti+latest query (r5 rotation folds the
-    # tuple-IN latest-order semi join in) must keep BOTH join types as
-    # real join operators (plus the scalar broadcast nested-loop cross
-    # join). Two LeftSemi sites: the has_orders flag and the tuple-IN
-    # latest-order branch.
-    merged = plan_str(run(spark, "cross_anti_join_flags"))
-    assert "LeftAnti" in merged
-    assert merged.count("LeftSemi") >= 2
-    assert "BroadcastNestedLoopJoin" in merged
+    # The has_orders/no_orders partition keeps BOTH join types as real
+    # join operators (plus the scalar broadcast nested-loop cross join),
+    # and the tuple-IN latest-order filter stays a semi join.
+    flags = plan_str(run(spark, "cross_anti_join_flags"))
+    assert "LeftAnti" in flags
+    assert "LeftSemi" in flags
+    assert "BroadcastNestedLoopJoin" in flags
+    assert "LeftSemi" in plan_str(run(spark, "semi_join_latest_order"))
 
 
 def test_partition_pruning_on_partitioned_write(spark, tmp_path):
@@ -161,7 +146,7 @@ def test_mixture_rates_broadcast_back(spark):
 
 
 def test_line_dedup_boilerplate_set_broadcasts(spark):
-    """strip_frequent_lines (r13 shape): the boilerplate HASH set is
+    """strip_frequent_lines: the boilerplate HASH set is
     collapsed to one row and attaches via a 1-row broadcast nested-loop
     cross — the corpus never shuffles at all for the strip (no exploded
     anti-join, no reassembly aggregate); the only aggregate in the plan
@@ -240,8 +225,8 @@ def test_stop_shingle_hot_set_broadcasts(spark):
 def test_lm_scoring_joins_on_hashed_gram_at_model_scale(spark):
     """ngram_lm_score (self-scored): p_fixed must be computed per
     DISTINCT gram and joined back on the 8-byte xxhash64 key (not the
-    gram string); the vocab scalar must broadcast. Guards the round-4
-    restructure that removed the corpus-scale ctx shuffle."""
+    gram string); the vocab scalar must broadcast, so no corpus-scale
+    ctx shuffle appears."""
     from nhl_data_pipeline_spark.catalog import load_table
     from nhl_data_pipeline_spark.operators.lm import ngram_lm_score
 

@@ -127,7 +127,7 @@ def test_minhash_lsh_empirical_recall_vs_exact(spark):
     }
     lsh = {
         (r["doc_a"], r["doc_b"])
-        for r in all_queries()["dedup_minhash_lsh"].bench_fn(spark, TEST_SF_DIR).collect()
+        for r in all_queries()["dedup_minhash_lsh"].fn(spark, TEST_SF_DIR).collect()
     }
     assert len(exact) > 0
     recall = len(lsh & exact) / len(exact)
@@ -228,7 +228,7 @@ def test_multimodal_decode_image_raw_ppm_bmp(spark):
 
 
 def test_multimodal_decode_audio_raw_wav(spark):
-    """The real WAV PCM-16 decode path (r8): de-interleave, signedness,
+    """The real WAV PCM-16 decode path: de-interleave, signedness,
     RIFF chunk walking, and the canonical tensor md5, all against a
     direct numpy reference. Samples include negatives (the ASCII-built
     oracle payloads can never exercise the sign bit) and the second
@@ -288,9 +288,9 @@ def test_multimodal_decode_audio_raw_wav(spark):
             )
         ).collect()
 
-    # Malformed fmt chunks keep the ValueError contract (r9, ADVICE r8:
-    # a 0-channel fmt previously leaked ZeroDivisionError and a
-    # truncated one struct.error). Driver-side call — the contract is
+    # Malformed fmt chunks keep the ValueError contract: neither a
+    # 0-channel fmt (ZeroDivisionError) nor a truncated one (struct.error)
+    # may leak another exception type. Driver-side call — the contract is
     # the decoder's, not the Arrow stage's.
     from nhl_data_pipeline_spark.operators.multimodal import _decode_wav
 

@@ -1,5 +1,4 @@
-"""catalog.shuffle_width_for — the size-derived shuffle-width policy
-(r9, VERDICT r8 asks #2/#3).
+"""catalog.shuffle_width_for — the size-derived shuffle-width policy.
 
 A fixed shuffle width makes per-task hash/sort state grow linearly with
 the lake (measured: ~15 GB spill per jaccard run at sf10, raw exponent
@@ -73,7 +72,7 @@ def test_budgets_are_sane():
 
 
 def test_text_width_wave_quantizes_past_fragmentation_gate(spark, tmp_path):
-    """r11 (VERDICT r10 ask #1): past TEXT_QUANTIZE_WAVES whole waves the
+    """Past TEXT_QUANTIZE_WAVES whole waves the
     width re-derives as whole waves at the 2× stretched budget — measured
     at sf100 (bench_logs/r11): 576 = 18 waves × 1 MiB/task beats the
     unquantized 1098 with zero spill, and the spill cliff only appears at
@@ -120,13 +119,13 @@ def test_text_width_wave_quantizes_past_fragmentation_gate(spark, tmp_path):
 
 
 def test_quantize_stretch_is_caller_relative(spark, tmp_path):
-    """r12 (ADVICE r11): a caller crossing the 16-wave gate with a budget
+    """A caller crossing the 16-wave gate with a budget
     LARGER than the text budget must re-derive at 2× its OWN budget, not
     at the 1 MiB text constant — the text constant would hand an 8 MiB-
     budget caller up to 8× MORE tasks than its unquantized width,
     inverting the quantization's intent. For the text budget itself the
-    stretch is exactly the benched 1 MiB (2 × 512 KiB), so every r11
-    measurement and fingerprint is untouched."""
+    stretch is exactly the benched 1 MiB (2 × 512 KiB), the width the
+    sf100 measurements (bench_logs/r11) ran at."""
     import nhl_data_pipeline_spark.catalog as cat
 
     par = spark.sparkContext.defaultParallelism
@@ -151,7 +150,7 @@ def test_quantize_stretch_is_caller_relative(spark, tmp_path):
 
 
 def test_jaccard_pair_agg_runs_at_text_width_above_gate(spark, monkeypatch):
-    """r11 (fifth-decade spill attribution): the pair-count aggregate must
+    """The pair-count aggregate must
     inherit the text width when the gate fires — at sf100 the session-width
     final agg held ~1.5 GB of hash state per task and spilled 48 GB memory
     / 8.7 GB disk (1078 of 3163 CPU-s). REPARTITION_BY_NUM on (doc_a,
@@ -163,8 +162,8 @@ def test_jaccard_pair_agg_runs_at_text_width_above_gate(spark, monkeypatch):
     par = spark.sparkContext.defaultParallelism
 
     # Fixture SF: width == par — the standing side repartitions on `s`
-    # stay, and NOTHING is planted on the aggregate keys (the pre-r11
-    # benched shape, fingerprint-pinned).
+    # stay, and NOTHING is planted on the aggregate keys (the
+    # fingerprint-pinned shape).
     p0 = (
         dedup_ngram_jaccard(spark, TEST_SF_DIR)
         ._jdf.queryExecution()
@@ -213,14 +212,14 @@ def test_minhash_width_gate_compares_session_shuffle_width(spark, monkeypatch):
     above the core count, and a width between the two must not narrow
     the join."""
     import nhl_data_pipeline_spark.catalog as cat
-    from nhl_data_pipeline_spark.plans.q_text import _minhash_lsh_pure
+    from nhl_data_pipeline_spark.plans.q_text import dedup_minhash_lsh
 
     par = spark.sparkContext.defaultParallelism
 
     def band_repartitions(width: int) -> list[str]:
         monkeypatch.setattr(cat, "shuffle_width_for", lambda *a, **k: width)
         p = (
-            _minhash_lsh_pure(spark, TEST_SF_DIR)
+            dedup_minhash_lsh(spark, TEST_SF_DIR)
             ._jdf.queryExecution()
             .optimizedPlan()
             .toString()
@@ -297,7 +296,7 @@ def _tiny(spark, name):
 
 
 def test_tune_scan_splits_whole_waves(spark, monkeypatch):
-    """Scan-split policy (r9, fourth-decade find): below the 128 MiB cap
+    """Scan-split policy: below the 128 MiB cap
     the computed split equals Spark's own bytes-per-core result (no-op);
     past it, the split shrinks so task count is a whole multiple of the
     session cores — no ragged tail wave of a fixed-size-cap scan."""
@@ -307,7 +306,7 @@ def test_tune_scan_splits_whole_waves(spark, monkeypatch):
     before = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         # tiny lake: openCost floor governs — conf reset to the default
-        # (r10: deterministic always-set, not left-as-was)
+        # (deterministic always-set, not left-as-was)
         cat.tune_scan_splits(spark, TEST_SF_DIR, "lineitem")
         assert (
             int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
@@ -336,7 +335,7 @@ def test_tune_scan_splits_whole_waves(spark, monkeypatch):
 
 
 def test_tune_scan_splits_no_cross_query_leak(spark, monkeypatch):
-    """VERDICT r9 "what's wrong" #2 regression: a big-table query's tuned
+    """Regression: a big-table query's tuned
     split must NOT leak into a later small-table query on the same
     session. tune_scan_splits is execution-time conf (Spark reads
     maxPartitionBytes when the scan RDD is built, not at DataFrame

@@ -1,4 +1,4 @@
-"""Scalar-statistics memo boundary (r13, VERDICT r12 ask #8).
+"""Scalar-statistics memo boundary.
 
 catalog.py's memoization policy allows exactly two memo classes: lazy
 table plans (test_catalog_memo.py) and file-identity-keyed SCALAR
@@ -27,10 +27,9 @@ def _check_key(key) -> None:
 def test_stat_memos_hold_only_scalars(spark):
     specs = all_queries()
     # Build (not run) every memo-populating query so the memos are warm.
-    for name in ("ngram_lm_quality", "dedup_minhash_lsh", "tfidf_top_terms",
+    for name in ("ngram_lm_quality", "dedup_minhash_lsh", "bpe_merges",
                  "kmeans_semantic_dedup"):
-        fn = specs[name].bench_fn or specs[name].fn
-        fn(spark, TEST_SF_DIR)
+        specs[name].fn(spark, TEST_SF_DIR)
 
     assert q_text._DOC_COUNT_MEMO, "doc-count memo never populated"
     for key, val in q_text._DOC_COUNT_MEMO.items():

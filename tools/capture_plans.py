@@ -69,9 +69,7 @@ def main() -> None:
         names = [n for n, s in specs.items() if s.bench]
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
-        spec = specs[name]
-        fn = spec.bench_fn or spec.fn
-        df = fn(spark, sf_dir)
+        df = specs[name].fn(spark, sf_dir)
         plan = jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -80,10 +80,9 @@ def main() -> None:
     def queries(names):
         def one_pass():
             for name in names:
-                fn = specs[name].bench_fn or specs[name].fn
                 reset_scan_splits(spark)
                 spark.catalog.clearCache()
-                fn(spark, args.sf_dir).write.format("noop").mode(
+                specs[name].fn(spark, args.sf_dir).write.format("noop").mode(
                     "overwrite").save()
         return one_pass
 

@@ -42,8 +42,7 @@ def main() -> None:
     for name, spec in sorted(all_queries().items()):
         if not spec.bench:
             continue
-        fn = spec.bench_fn or spec.fn
-        df = fn(spark, SF_DIR)
+        df = spec.fn(spark, SF_DIR)
         plan = jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -61,18 +61,6 @@ def main() -> None:
         plan = df._jdf.queryExecution().executedPlan().toString()
         out[name] = fingerprint(plan)
         print(name, out[name])
-        # r8: benched shapes are pinned too (keyed `name#bench`) — a
-        # bench_fn that silently grows an Exchange or a Python eval node
-        # would otherwise drift the headline timings with no gate.
-        if spec.bench_fn is not None:
-            bplan = (
-                spec.bench_fn(spark, SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            out[f"{name}#bench"] = fingerprint(bplan)
-            print(f"{name}#bench", out[f"{name}#bench"])
     OUT.write_text(json.dumps(out, indent=1, sort_keys=True) + "\n")
     print(f"wrote {OUT}")
 
