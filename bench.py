@@ -22,9 +22,6 @@ iteration): ``dedup_scale_probe`` (near-dup crossover and recall),
 ``pipeline_scale_probe`` (staging and DAG decade exponents, gated at the
 calibrated width). Results of the retired one-off probes are kept in
 ``BENCH_probes.json``.
-
-Other knobs: SPARK_GRAFT_ONLY="q1,q2" benches a subset;
-SPARK_GRAFT_COUNTS=1 adds deterministic candidate-pair counts.
 """
 
 from __future__ import annotations
@@ -288,17 +285,6 @@ def main() -> None:
     )
     meter = _StageMeter(spark)
     specs = {n: s for n, s in all_queries().items() if s.bench}
-    # Targeted sweeps (e.g. the sf3 second-decade exponent runs) time a
-    # subset without perturbing the full-headline artifact contract:
-    # SPARK_GRAFT_ONLY="q1,q2" filters the benched set; the output line
-    # keeps the same shape so sweep tooling parses it unchanged.
-    only = os.environ.get("SPARK_GRAFT_ONLY")
-    if only:
-        names = {n.strip() for n in only.split(",") if n.strip()}
-        unknown = names - specs.keys()
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_ONLY names not benched: {unknown}")
-        specs = {n: s for n, s in specs.items() if n in names}
 
     # Warmup: touch every table (footer reads), then run each headline
     # query once AT THE TARGET SF. Warming at a smaller sf is not enough:
@@ -386,22 +372,6 @@ def main() -> None:
             run_min[name] = round(min(d["run_sec"] for d in deltas), 3)
             shuf_w[name] = min(d["shuffle_write_bytes"] for d in deltas)
 
-    # Deterministic scale counts: candidate-pair cardinalities are the
-    # noise-immune scaling signal (the jaccard scaling diagnosis worked
-    # exactly this way) — SPARK_GRAFT_COUNTS=1 records them in the
-    # headline so recorded runs carry counts alongside times. Off by
-    # default: the count jobs would perturb the driver's timed environment
-    # for no benefit at sf0.1.
-    counts: dict[str, float | str] = {}
-    if os.environ.get("SPARK_GRAFT_COUNTS") == "1":
-        try:
-            spark.catalog.clearCache()
-            counts["minhash_lsh_candidate_pairs"] = float(
-                all_queries()["dedup_minhash_lsh"].fn(spark, SF_DIR).count()
-            )
-        except Exception as exc:  # noqa: BLE001
-            counts["error"] = repr(exc)[:200]
-
     # CPU detail on its OWN penultimate-ish stdout line: the headline
     # line must stay well under the driver's ~2,000-char tail window
     # (a longer headline was once truncated), and readers of the full
@@ -447,7 +417,6 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "runs": reps,
-                **({"counts": counts} if counts else {}),
                 "sf": _sf_from_dir(SF_DIR),
                 **anchors,
                 "engine_commit": _git_commit(),
@@ -842,7 +811,10 @@ def _dedup_scale_probe(spark) -> dict:
 
     The rule it measures: exact Jaccard runs the naive all-shingle join on
     clean corpora and the same join behind ``drop_stop_shingles`` under
-    boilerplate skew; MinHash-LSH is the approximate path.
+    boilerplate skew; MinHash-LSH is the approximate path. The naive join
+    timed on the built corpora is the product's
+    ``operators/dedup.py::jaccard_pairs`` with no width (the planner's
+    exchanges), the pair join ``dedup_ngram_jaccard`` runs.
     - Clean corpora (sf0.01 and SF_DIR documents as-is): the naive join
       and MinHash-LSH, timed side by side.
     - Hot-shingle skew (``sf0.1_boiler3k``: 3000 docs sharing a 60-token
@@ -877,26 +849,6 @@ def _dedup_scale_probe(spark) -> dict:
         timed(probe, "minhash_lsh", qs["dedup_minhash_lsh"].fn(spark, sf_dir))
         out[Path(sf_dir).name] = probe
 
-    def naive_pairs_of(sh):
-        a = sh.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "s")
-        b = sh.select(
-            F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "s"
-        ).hint("shuffle_hash")
-        return (
-            a.join(b, ["s"])
-            .filter(
-                (F.col("doc_a") < F.col("doc_b"))
-                & (4 * F.greatest("n_a", "n_b") <= 5 * F.least("n_a", "n_b"))
-            )
-            .groupBy("doc_a", "doc_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-            .filter(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-                >= 0.8
-            )
-        )
-
     # Hot-shingle regime: 3000 sf0.1 docs + shared 60-token boilerplate.
     # (3000, not 5000: the naive join without the stop-cap OOMs at 5000.)
     boiler = " ".join(f"footer{i} legal{i} nav{i}" for i in range(20))
@@ -911,13 +863,13 @@ def _dedup_scale_probe(spark) -> dict:
     sh = D.exploded_distinct_shingles(
         docs, X.tokens(F.col("text")), 3, hash_shingles=True
     ).persist()
-    timed(probe, "ngram_jaccard_naive", naive_pairs_of(sh))
+    timed(probe, "ngram_jaccard_naive", D.jaccard_pairs(sh))
     # Stop-shingle gate ON: drop shingles with df > 100 (the 58 boilerplate
     # shingles have df = 3000) before the same join.
     timed(
         probe,
         "ngram_jaccard_naive_stopcap100",
-        naive_pairs_of(D.drop_stop_shingles(sh, max_df=100)),
+        D.jaccard_pairs(D.drop_stop_shingles(sh, max_df=100)),
     )
     sh.unpersist()
     # LSH candidate precision in the skewed regime (see docstring): the
@@ -963,27 +915,24 @@ def _dedup_scale_probe(spark) -> dict:
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )
     probe = {}
+    # One shingle table serves the timed legs and the quality metrics.
     sh = D.exploded_distinct_shingles(
         big, X.tokens(F.col("text")), 3, hash_shingles=True
     ).persist()
-    timed(probe, "ngram_jaccard_naive", naive_pairs_of(sh))
+    timed(probe, "ngram_jaccard_naive", D.jaccard_pairs(sh))
     timed(
         probe,
         "ngram_jaccard_naive_stopcap100",
-        naive_pairs_of(D.drop_stop_shingles(sh, max_df=100)),
+        D.jaccard_pairs(D.drop_stop_shingles(sh, max_df=100)),
     )
-    sh.unpersist()
     timed(probe, "minhash_lsh", minhash_band_pairs(big))
     # Quality metrics at the decade scale (not just wall-clock): the
     # stop-cap's semantic cost (pairs lost by treating hot shingles as
     # stop-words) and MinHash-LSH candidate recall vs the exact pair set.
-    sh = D.exploded_distinct_shingles(
-        big, X.tokens(F.col("text")), 3, hash_shingles=True
-    ).persist()
-    exact = naive_pairs_of(sh).select("doc_a", "doc_b").persist()
+    exact = D.jaccard_pairs(sh).select("doc_a", "doc_b").persist()
     n_exact = exact.count()
     n_stopcap = (
-        naive_pairs_of(D.drop_stop_shingles(sh, max_df=100))
+        D.jaccard_pairs(D.drop_stop_shingles(sh, max_df=100))
         .select("doc_a", "doc_b")
         .join(exact, ["doc_a", "doc_b"], "left_semi")
         .count()

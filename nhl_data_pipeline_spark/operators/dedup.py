@@ -1,5 +1,16 @@
 """Near-duplicate detection operators: shingling, MinHash+LSH, SimHash.
 
+Every near-dup plan is composed from four shared kernels, each the one
+Spark implementation of its step:
+- :func:`kgram_rows` — posexplode + lead() windows, one row per complete
+  k-gram (shingles and winnowing fingerprints are built on it);
+- :func:`minhash_bands` — k seeded-md5 MIN aggregates → band md5 keys →
+  one row per (group, band) (the LSH band table and contamination_check);
+- :func:`band_pairs` — distinct ``a < b`` id pairs from an equi-self-join
+  on band keys (MinHash, hyperplane-LSH and k-means-blocked LSH);
+- :func:`jaccard_pairs` — exact shingle-Jaccard pairs at J ≥ 0.8 from an
+  exploded shingle table (dedup_ngram_jaccard and bench.py's dedup probe).
+
 All portable-deterministic: hashes are md5 strings (identical in every
 engine), MinHash takes the lexicographic MIN of seeded md5s, SimHash derives
 bits from md5 hex nibbles. No engine-specific hash functions, no Python in
@@ -28,6 +39,26 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------- shingles
 
 
+def kgram_rows(
+    docs: DataFrame, tokens_col: Column, n: int, id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, tok, pos, t1, …, t{n-1}) — one row per COMPLETE n-gram of the
+    tokens array, starting at token ``pos``: posexplode the tokens, then
+    lead(tok, 1..n-1) windows over (id, pos). Rows whose last lead is null
+    (the final n-1 positions, and every row of a doc with < n tokens) are
+    dropped. Whole-stage codegen; the window costs one exchange on id.
+    (tok before pos matches the shingle plans pinned in docs/PLANS.md;
+    winnowing pays a free in-codegen column reorder for it.)"""
+    from pyspark.sql.window import Window
+
+    tok = docs.select(id_col, F.posexplode(tokens_col).alias("pos", "tok"))
+    w = Window.partitionBy(id_col).orderBy("pos")
+    leads = [F.lead("tok", i).over(w).alias(f"t{i}") for i in range(1, n)]
+    return tok.select(id_col, "tok", "pos", *leads).filter(
+        F.col(f"t{n - 1}").isNotNull()
+    )
+
+
 def exploded_distinct_shingles(
     docs: DataFrame,
     tokens_col: Column,
@@ -36,8 +67,8 @@ def exploded_distinct_shingles(
     hash_shingles: bool = False,
 ) -> DataFrame:
     """(id, n, s) rows — one per DISTINCT n-gram shingle — built entirely in
-    whole-stage codegen: posexplode the tokens, lead(tok, 1..n-1) windows
-    over (id, pos) concat consecutive n-tuples, dedupe, count the set size.
+    whole-stage codegen: the :func:`kgram_rows` n-tuples are concatenated
+    (or hashed), deduped, and the set size is counted.
 
     This is the fastest shingle path (no Python workers, no interpreted
     higher-order functions — 3-4× faster than the Arrow-batched builder at
@@ -74,17 +105,10 @@ def exploded_distinct_shingles(
     """
     from pyspark.sql.window import Window
 
-    tok = docs.select(id_col, F.posexplode(tokens_col).alias("pos", "tok"))
-    w = Window.partitionBy(id_col).orderBy("pos")
-    leads = [F.lead("tok", i).over(w).alias(f"t{i}") for i in range(1, n)]
     parts = ["tok", *[f"t{i}" for i in range(1, n)]]
     s = F.xxhash64(*parts) if hash_shingles else F.concat_ws(" ", *parts)
-    triples = (
-        tok.select(id_col, "tok", *leads)
-        .filter(F.col(f"t{n - 1}").isNotNull())
-        .select(id_col, s.alias("s"))
-    )
-    return triples.dropDuplicates([id_col, "s"]).withColumn(
+    grams = kgram_rows(docs, tokens_col, n, id_col).select(id_col, s.alias("s"))
+    return grams.dropDuplicates([id_col, "s"]).withColumn(
         "n", F.count(F.lit(1)).over(Window.partitionBy(id_col)).cast("bigint")
     )
 
@@ -132,6 +156,60 @@ def drop_stop_shingles(
     )
 
 
+def jaccard_pairs(sh: DataFrame, width: int | None = None) -> DataFrame:
+    """(doc_a, doc_b, jaccard) — every pair doc_a < doc_b of an exploded
+    (doc_id, n, s) shingle table with Jaccard ≥ 0.8, exact: a self
+    equi-join on ``s``, the exact-preserving length prefilter
+    4·max(n_a, n_b) ≤ 5·min(n_a, n_b) (J ≤ min/max, so it is implied by
+    J ≥ 0.8) before the pair COUNT aggregate, then J = common / union.
+
+    ``width``: each side is repartitioned on ``s`` at ``width``
+    (REPARTITION_BY_NUM satisfies the join's distribution, so
+    EnsureRequirements plants nothing on top and the join executes at
+    ``width``, not at the session's fixed shuffle.partitions). A
+    repartition-once-then-cache variant re-exchanged BOTH sides at the
+    session width: the self-join re-aliases one side's attributes and the
+    cached HashPartitioning no longer matches. The pair aggregate is also
+    pinned at ``width`` (on (doc_a, doc_b), a subset of its grouping keys,
+    so no extra exchange) when ``width`` exceeds spark.sql.shuffle.partitions
+    — the width the unpinned aggregate would run at; at sf100 the
+    session-width aggregate spilled 48 GB and took 1078 of 3163 executor
+    CPU-s, at ``width`` 530 CPU-s with no spill
+    (bench_logs/r11/probe_stage_detail_postfix.out). Comparing against
+    defaultParallelism instead would NARROW it under session.cluster_conf,
+    whose shuffle width is at least 2× the cores. The pinned exchange
+    moves un-combined pair rows, which costs little: a (pair, shingle) row
+    combines only with other shingles of the same pair in one s-partition.
+    ``width=None`` leaves every exchange to the planner.
+
+    The build side is hinted shuffle_hash: it skips the sort-merge sort on
+    the shingle key (~40% faster here). Filters are parsed SQL strings:
+    the same expression trees in a fraction of the py4j round trips
+    (bench_logs/r12/probe_chatter_attr_wave0.json)."""
+    a = sh.selectExpr("doc_id AS doc_a", "n AS n_a", "s")
+    b = sh.selectExpr("doc_id AS doc_b", "n AS n_b", "s")
+    if width is not None:
+        a = a.repartition(width, F.col("s"))
+        b = b.repartition(width, F.col("s"))
+    pairs = a.join(b.hint("shuffle_hash"), ["s"]).filter(
+        "doc_a < doc_b AND 4 * greatest(n_a, n_b) <= 5 * least(n_a, n_b)"
+    )
+    session_width = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if width is not None and width > session_width:
+        pairs = pairs.repartition(width, F.col("doc_a"), F.col("doc_b"))
+    common = pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
+        F.expr("count(1)").alias("n_common")
+    )
+    return (
+        common.withColumn(
+            "jaccard",
+            F.expr("CAST(n_common AS DOUBLE) / (n_a + n_b - n_common)"),
+        )
+        .filter("jaccard >= 0.8D")
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def shingles(tokens_col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from a tokens array.
 
@@ -169,18 +247,39 @@ def minhash_signature_sql(shingles_expr: str, k: int = 12) -> str:
     return f"[{mins}]"
 
 
-def lsh_band_keys(sig_col: Column, bands: int, rows: int) -> Column:
-    """Array of `bands` bucket keys; docs sharing any key are candidates.
-    Key = md5 of the band's signature slice."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.element_at(sig_col, b * rows + r + 1) for r in range(rows)]
-                )
-            )
-            for b in range(bands)
-        ]
+def minhash_bands(
+    sh: DataFrame, group_cols: list[str], k: int, bands: int, rows: int
+) -> DataFrame:
+    """(group_cols…, sig, band_idx, band_key) — one row per (group, band)
+    of the MinHash-LSH signature over an exploded string-shingle table
+    ``sh`` (column ``s``): sig[i] = MIN(md5('<i>|' || s)) per group,
+    band b's key = md5 of sig[b·rows .. b·rows+rows-1] joined by '|',
+    band_idx = 1..bands. Values match the DuckDB
+    :func:`minhash_signature_sql` / :func:`lsh_band_keys_sql` twins.
+
+    The k MIN aggregates are plain codegen aggregates that reuse the
+    shingle stage's id partitioning (no exchange when ``group_cols`` start
+    with that id). Seeds and band keys are rendered as SQL text, parsed
+    JVM-side in one py4j round trip each instead of ~6 per Column node
+    (bench_logs/r12/probe_chatter_attr_wave0.json); the expression trees
+    are the same. Band keys are md5s over plain signature columns: no
+    lambdas, so no interpreted evaluation and no sibling-lambda collision."""
+    hs = [f"h{i}" for i in range(k)]
+    sigs = sh.groupBy(*group_cols).agg(
+        *[F.expr(f"min(md5(concat('{i}|', s)))").alias(h) for i, h in enumerate(hs)]
+    )
+    bkeys = ", ".join(
+        "md5(concat_ws('|', "
+        + ", ".join(hs[b * rows : (b + 1) * rows])
+        + "))"
+        for b in range(bands)
+    )
+    return sigs.select(
+        *group_cols,
+        F.expr(f"array({', '.join(hs)})").alias("sig"),
+        F.posexplode(F.expr(f"array({bkeys})")).alias("band_idx0", "band_key"),
+    ).select(
+        *group_cols, "sig", (F.col("band_idx0") + 1).alias("band_idx"), "band_key"
     )
 
 
@@ -190,6 +289,43 @@ def lsh_band_keys_sql(sig_expr: str, bands: int, rows: int) -> str:
         for b in range(bands)
     )
     return f"[{keys}]"
+
+
+def band_pairs(
+    bands: DataFrame,
+    keys: list[str],
+    id_col: str,
+    names: tuple[str, str],
+    width: int | None = None,
+) -> DataFrame:
+    """Distinct (a, b) id pairs, a < b, of rows that share every column in
+    ``keys`` — the banded LSH self-join. ``names`` names the two id
+    columns. Each side carries the id (renamed) and ``keys`` in the order
+    they have in ``bands``.
+
+    ``width``: both sides are first repartitioned on ``keys`` at ``width``,
+    so the join executes at that width instead of the session's fixed
+    shuffle.partitions (REPARTITION_BY_NUM on the join keys satisfies the
+    join's distribution; EnsureRequirements plants nothing on top).
+    ``None`` leaves the exchange to the planner (broadcast at fixture
+    scale, session-width exchanges above). Callers persist ``bands``:
+    it feeds both sides."""
+    def side(name: str) -> DataFrame:
+        cols = [
+            F.col(c).alias(name) if c == id_col else F.col(c)
+            for c in bands.columns
+            if c == id_col or c in keys
+        ]
+        out = bands.select(*cols)
+        return out if width is None else out.repartition(width, *keys)
+
+    a, b = names
+    return (
+        side(a).join(side(b), list(keys))
+        .filter(f"{a} < {b}")
+        .select(a, b)
+        .distinct()
+    )
 
 
 # ---------------------------------------------------------------- simhash
@@ -336,10 +472,8 @@ def lsh_band_table(
     short_doc_fallback: bool = True,
 ) -> DataFrame:
     """(id, band_idx, band_key) — one row per (doc, band), the join-able
-    form of the MinHash-LSH signature (same codegen aggregation shape as
-    plans/q_text.py::minhash_band_pairs: exploded distinct shingles →
-    k MIN aggregates reusing the shingle stage's partitioning → band md5s
-    → posexplode).
+    form of the MinHash-LSH signature: exploded distinct shingles →
+    :func:`minhash_bands`.
 
     Docs shorter than the shingle width have NO MinHash signature; for
     them one synthetic band_idx=0 row carries the exact content
@@ -355,30 +489,8 @@ def lsh_band_table(
     sh = exploded_distinct_shingles(
         base, tokens(F.col(text_col)), n, id_col=id_col
     )
-    # The k seed-min aggregates and the band-key md5 array are rendered as
-    # SQL text (driver boundary): the per-seed Column build —
-    # min(md5(concat(lit, col))) × k plus bands × concat_ws — cost ~6 py4j
-    # round trips per node (~800 per call,
-    # bench_logs/r12/probe_chatter_attr_wave0.json); the rendered strings
-    # are parsed JVM-side in one trip each and the expression trees (and
-    # the pinned plan fingerprints) are identical.
-    sigs = sh.groupBy(id_col).agg(
-        *[
-            F.expr(f"min(md5(concat('{i}|', s)))").alias(f"h{i}")
-            for i in range(k)
-        ]
-    )
-    band_key_sql = lambda b: (  # noqa: E731
-        "md5(concat_ws('|', "
-        + ", ".join(f"h{b * rows + r}" for r in range(rows))
-        + "))"
-    )
-    bkeys = ", ".join(band_key_sql(b) for b in range(bands))
-    banded = sigs.select(
-        id_col,
-        F.posexplode(F.expr(f"array({bkeys})")).alias("band_idx0", "band_key"),
-    ).select(
-        id_col, (F.col("band_idx0") + 1).alias("band_idx"), "band_key"
+    banded = minhash_bands(sh, [id_col], k, bands, rows).select(
+        id_col, "band_idx", "band_key"
     )
     if not short_doc_fallback:
         # batch pair-generation semantics (minhash_band_pairs): short docs
@@ -391,7 +503,8 @@ def lsh_band_table(
     # fallback exists to prevent. Coalescing to '' keys all NULL-text
     # docs into one exact-dup band, which is the fallback's semantics
     # (identical short content ⇒ same band).
-    short = base.join(sigs.select(id_col), id_col, "left_anti").select(
+    # The docs with a signature are the distinct ids of the shingle table.
+    short = base.join(sh.select(id_col).distinct(), id_col, "left_anti").select(
         id_col,
         F.lit(0).alias("band_idx"),
         fingerprint(F.coalesce(F.col(text_col), F.lit(""))).alias("band_key"),
@@ -485,7 +598,7 @@ def winnowing_fingerprints(
     doc_fingerprint_dedup's whole-content hash (reference analog: none;
     its dedup is whole-row only).
 
-    Plan: posexplode + lead() k-gram hashes (the exploded-shingle shape),
+    Plan: :func:`kgram_rows` k-grams hashed (the exploded-shingle shape),
     then a min over a ROWS window of `window` — all whole-stage codegen,
     one exchange on the doc id, distinct fingerprints per doc at the end.
     At 100 TB the fingerprint table is ~2/(window+1) of the shingle table
@@ -500,17 +613,12 @@ def winnowing_fingerprints(
     """
     from pyspark.sql.window import Window
 
-    tok = docs.select(id_col, F.posexplode(tokens_col).alias("pos", "tok"))
-    w = Window.partitionBy(id_col).orderBy("pos")
-    leads = [F.lead("tok", i).over(w).alias(f"t{i}") for i in range(1, k)]
     gram_cols = [F.col("tok"), *[F.col(f"t{i}") for i in range(1, k)]]
     h = hash_fn(gram_cols) if hash_fn is not None else F.xxhash64(*gram_cols)
-    grams = (
-        tok.select(id_col, "pos", "tok", *leads)
-        .filter(F.col(f"t{k - 1}").isNotNull())
-        .select(id_col, "pos", h.alias("h"))
+    grams = kgram_rows(docs, tokens_col, k, id_col).select(
+        id_col, "pos", h.alias("h")
     )
-    wmin = w.rowsBetween(0, window - 1)
+    wmin = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
     fps = grams.select(
         id_col,
         "pos",

@@ -38,12 +38,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nhl_data_pipeline_spark.operators.dedup import band_pairs
 from nhl_data_pipeline_spark.operators.similarity import dot_expr_sql, norm_expr_sql
 
 # Per-call cached-table rotation handles: each call unpersists the
 # PREVIOUS call's cached table before persisting its own, so long-lived
 # sessions hold at most one cached copy per operator instead of one per
-# call. The swap is lock-guarded (r9, ADVICE r8): without it, two
+# call. The swap is lock-guarded: without it, two
 # concurrent callers could race the read-then-unpersist and one would
 # drop the other's cache before its downstream stage ran — correctness
 # is unaffected (unpersist just forces a recompute), but the persist's
@@ -240,7 +241,7 @@ def semantic_neardup_pairs_blocked_numpy(
     the cosine bits and the ≥-threshold pair set match the oracle
     exactly (measured: 3.0 s → ~1 s at sf0.1, identical hash).
 
-    Oversized-cluster TILING (the r6 sf1-sweep fix): with fixed k, a
+    Oversized-cluster TILING: with fixed k, a
     10× corpus makes every cluster's pair block 100× bigger AND caps
     parallelism at k tasks — measured 12.6× wall-clock at 10× data
     (BENCH_r06_sf1_sweep.json). Tiles are sized from the LARGEST
@@ -271,8 +272,8 @@ def semantic_neardup_pairs_blocked_numpy(
 
     # Persisted: the sizing agg below materializes the assignment and
     # the pair stage then reads it back instead of re-scanning +
-    # re-assigning the corpus (the r7 review caught the double pass).
-    # Leak guard (r7 ADVICE, lock-guarded r9 — see _rotate_cache): each
+    # re-assigning the corpus.
+    # Leak guard (lock-guarded — see _rotate_cache): each
     # call rotates a module-level handle, unpersisting the PREVIOUS
     # call's assignment before persisting the new one — long-lived
     # sessions calling this repeatedly hold at most one cached
@@ -386,9 +387,10 @@ def semantic_neardup_pairs_lsh_blocked(
 ) -> DataFrame:
     """kmeans blocking COMPOSED with in-cluster hyperplane-LSH banding —
     the density-linear scale form of the cluster-scoped semantic dedup
-    (r7 VERDICT ask #1: the exact within-cluster all-pairs is O(n²/k)
-    work by construction and its benched exponent read 1.09 at sf1→sf3;
-    this form's work tracks near-dup DENSITY, not n²).
+    (the exact within-cluster all-pairs is O(n²/k) work by construction
+    and its benched exponent read 1.09 at sf1→sf3,
+    BENCH_r07_sf3_sweep_full.json; this form's work tracks near-dup
+    DENSITY, not n²).
 
     Candidate generation: a row's key is (cluster_id, band_idx, bucket) —
     a pair is a candidate iff both members share the kmeans cluster AND
@@ -418,7 +420,7 @@ def semantic_neardup_pairs_lsh_blocked(
     true near-identicals (p≈1) stay at recall ≈1 at any practical
     width. n comes from a column-pruned count of the caller's frame —
     for the registered query that is a parquet metadata count, never a
-    cached frame (the r7 fingerprint-drift lesson).
+    cached frame.
 
     Scale shape, piece by piece:
     - assignment is the fixed-k literal-centroid codegen scan (k stays
@@ -430,8 +432,9 @@ def semantic_neardup_pairs_lsh_blocked(
       per-plane HOF fold would be hundreds of aggregate() evals per
       row), and scoring is a second Arrow stage over the candidates —
       no interpreted higher-order function anywhere in this plan (the
-      r8 sf10 profile read 8-34 s run-to-run variance with ZERO spill
-      from HOF allocation churn alone);
+      HOF form read 8-34 s run-to-run at sf10 with ZERO spill, from
+      allocation churn alone; this form's spread is in
+      BENCH_r09_sf10_sweep.json);
     - the band table carries (cluster, band, bucket, id) ONLY — vectors
       are never replicated through the ×bands fan-out;
     - the self-join shuffles on the 3-part key; group sizes track bucket
@@ -471,13 +474,13 @@ def semantic_neardup_pairs_lsh_blocked(
     )
     planes = np.array(hyperplanes(dim, bands * rows), dtype=np.float64)
 
-    # ONE Arrow stage does assignment + bucketize (r8 GC fix): the
+    # ONE Arrow stage does assignment + bucketize: the
     # interpreted HOF forms — the per-row zip_with/aggregate squared-L2
     # fold over k centroids for assignment, and the per-candidate
     # zip_with/aggregate cosine fold for scoring — were this query's
     # dominant cost AND its variance at sf10 (8-34 s run-to-run with
     # zero spill: interpreted HOF evaluation allocates per row/lambda,
-    # churning old-gen exactly like the r7 LM broadcast pathology).
+    # churning old-gen).
     # Distances use the SAME sequential per-dimension accumulation as
     # the JVM fold (acc += (v_d - c_d)² in dim order, vectorized across
     # rows) so argmin — np.argmin's first-minimum matches
@@ -527,23 +530,16 @@ def semantic_neardup_pairs_lsh_blocked(
     # Persisted: the band table feeds BOTH self-join sides — without it
     # the assignment+bucketize stage runs twice (same pattern as
     # minhash_band_pairs' bands.persist()). Rotated per call like the
-    # blocked form's assignment cache (r9, ADVICE r8: this persist had
-    # no rotation — the same cached-table leak class the r7 fix closed
-    # for semantic_neardup_pairs_blocked_numpy).
+    # blocked form's assignment cache, so a long-lived session holds one
+    # cached band table instead of one per call.
     banded = _rotate_cache(
         "_LAST_BANDED", src.mapInPandas(assign_bucketize, band_schema)
     )
-    a = banded.select(
-        "cluster_id", "band_idx", "bucket", F.col(id_col).alias("id_a")
-    )
-    b = banded.select(
-        "cluster_id", "band_idx", "bucket", F.col(id_col).alias("id_b")
-    )
-    cand = (
-        a.join(b, ["cluster_id", "band_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    # Keys ahead of the id: band_pairs keeps the frame's column order, and
+    # keys-first is the join-side order docs/PLANS.md pins for this plan.
+    keys = ["cluster_id", "band_idx", "bucket"]
+    cand = band_pairs(
+        banded.select(*keys, id_col), keys, id_col, ("id_a", "id_b")
     )
     va = src.select(F.col(id_col).alias("id_a"), F.col(vec).alias("va"))
     vb = src.select(F.col(id_col).alias("id_b"), F.col(vec).alias("vb"))

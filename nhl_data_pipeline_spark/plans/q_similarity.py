@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nhl_data_pipeline_spark.catalog import load_table
+from nhl_data_pipeline_spark.operators import dedup as D
 from nhl_data_pipeline_spark.operators.similarity import (
     cosine_allpairs_numpy,
     cosine_topk,
@@ -275,19 +276,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = e.select(
         "vec_id", F.posexplode("bkts").alias("band_idx", "bucket")
     ).persist()
-    a = banded.select(
-        F.col("vec_id").alias("vec_a"), "band_idx", "bucket"
-    )
-    b = banded.select(
-        F.col("vec_id").alias("vec_b"), "band_idx", "bucket"
-    )
-    cand = (
-        a.join(b, ["band_idx", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-        .withColumn("_hit", F.lit(True))
-    )
+    cand = D.band_pairs(
+        banded, ["band_idx", "bucket"], "vec_id", ("vec_a", "vec_b")
+    ).withColumn("_hit", F.lit(True))
     # LSH-verified pairs are a subset of the exact pair set (precision 1),
     # so flagging = a left join of candidates onto the exact pairs.
     return exact.join(cand, ["vec_a", "vec_b"], "left").select(

@@ -408,15 +408,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       Python workers at all (the JVM higher-order-function build is
       interpreted, slower still); the shingle count n rides along as a
       frameless windowed COUNT minus 2, so no sizes-aggregate join either;
-    - the pair join carries an exact-preserving length prefilter
-      (J ≤ min/max, so 4·max(n_a,n_b) ≤ 5·min(n_a,n_b) is implied by
-      J ≥ 0.8) that prunes pairs before the groupBy shuffle;
+    - the pair join is operators/dedup.py::jaccard_pairs: an
+      exact-preserving length prefilter (J ≤ min/max, so
+      4·max(n_a,n_b) ≤ 5·min(n_a,n_b) is implied by J ≥ 0.8) prunes
+      pairs before the groupBy shuffle;
     - shingles are carried as xxhash64 longs, not strings: the join/groupBy
       shuffles move 8-byte keys (~20% faster end-to-end; collision bound
       ~D²/2⁶⁵ — see exploded_distinct_shingles — and the string-keyed
       DuckDB oracle cross-checks the final pairs);
-    - the exploded shingle table is persisted: it feeds both join sides —
-      one window computation instead of two;
     - the read-parallelizing repartition hashes on doc_id (not round-robin)
       so the shingle window and every downstream groupBy(doc_id) reuse the
       SAME distribution: one compact doc-row shuffle replaces a round-robin
@@ -471,68 +470,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = D.exploded_distinct_shingles(
         d, X.tokens(F.col("text")), 3, hash_shingles=True
     )
-    # Each side is EXPLICITLY repartitioned on the join key at `width`
-    # (REPARTITION_BY_NUM satisfies the join's distribution, so
-    # EnsureRequirements plants nothing on top and the join executes at
-    # `width`, not at the session's fixed shuffle.partitions). A
-    # repartition-once-then-cache variant was tried and rejected: the
-    # self-join re-aliases one side's attributes, the cached
-    # HashPartitioning no longer matches either scan's output, and
-    # EnsureRequirements re-exchanged BOTH sides at session width —
-    # one extra shuffle AND the spill back.
-    a = sh.selectExpr("doc_id AS doc_a", "n AS n_a", "s").repartition(
-        width, F.col("s")
-    )
-    # shuffle_hash: skips the sort-merge sort on the wide string key (~40%
-    # faster here); the width above keeps a partition's build side inside
-    # executor memory as the lake grows.
-    b = (
-        sh.selectExpr("doc_id AS doc_b", "n AS n_b", "s")
-        .repartition(width, F.col("s"))
-        .hint("shuffle_hash")
-    )
-    # Projections/filters as parsed SQL strings: same expression trees,
-    # a fraction of the py4j round trips
-    # (bench_logs/r12/probe_chatter_attr_wave0.json).
-    pairs = a.join(b, ["s"]).filter(
-        "doc_a < doc_b AND 4 * greatest(n_a, n_b) <= 5 * least(n_a, n_b)"
-    )
-    # The pair COUNT aggregate runs at `width` too. At the session width
-    # its final stage at sf100 read 8.25 GB of pair rows in 32 tasks,
-    # held ~1.5 GB of hash state each, and spilled 48 GB memory / 8.7 GB
-    # disk: 1078 of the run's 3163 executor-CPU seconds, as much as the
-    # self-join stage itself; at `width` the same stage reads 530 CPU-s
-    # with zero spill (per-stage attribution in
-    # bench_logs/r11/probe_stage_detail_postfix.out). REPARTITION_BY_NUM on
-    # (doc_a, doc_b) — a subset of the grouping keys, so it satisfies
-    # the aggregate's ClusteredDistribution and no extra exchange is
-    # planted — runs the aggregate at `width` too, holding per-task agg
-    # state constant as the lake grows. Gate: fire only when the
-    # repartition actually WIDENS the aggregate — i.e. width > the
-    # session's spark.sql.shuffle.partitions, which is what the unfixed
-    # aggregate would run at. Comparing against defaultParallelism instead
-    # is wrong under session.cluster_conf, which sets shuffle.partitions
-    # to at least 2× the cores: a width between the two would NARROW the
-    # aggregate and grow per-task hash state. At local[n] the two values
-    # are equal.
-    # The trade — the exchange moves un-combined pair rows (no map-side
-    # partial agg) — is measured cheap: a (pair, shingle) row survives
-    # partial agg unless the SAME pair shares MULTIPLE shingles hashed to
-    # one s-partition, so the combine ratio is near 1 by construction.
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if width > session_width:
-        pairs = pairs.repartition(width, F.col("doc_a"), F.col("doc_b"))
-    common = pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
-        F.expr("count(1)").alias("n_common")
-    )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.expr("CAST(n_common AS DOUBLE) / (n_a + n_b - n_common)"),
-        )
-        .filter("jaccard >= 0.8D")
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return D.jaccard_pairs(sh, width)
 
 
 _K, _BANDS, _ROWS = 12, 4, 3
@@ -597,23 +535,10 @@ def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
     boilerplate-heavy corpus, and in its ``sf1_50k`` block for time and
     recall).
 
-    ``width``: explicit partition count for the band self-join sides —
-    callers with a known source size pass catalog.shuffle_width_for so the
-    join executes at a lake-proportional width instead of the session's
-    fixed shuffle.partitions (REPARTITION_BY_NUM on the join keys satisfies
-    the join's distribution, so EnsureRequirements plants nothing on top).
-    Default None: no explicit side repartitions — the planner's choice
-    (broadcast at fixture scale, planted session-width exchanges above)
-    is right for small callers and keeps the pinned fingerprints
-    byte-identical."""
-    # Signature via aggregation, not array HOFs: over the codegen-built
-    # exploded shingle table, sig[i] is simply MIN(md5('<i>|' || s)) — k
-    # plain min aggregates (lexicographic string min ≡ array_min of the
-    # md5s, so values are bit-identical to the array formulation and the
-    # same oracle applies). The groupBy(doc_id) reuses the shingle stage's
-    # doc_id hash partitioning — no exchange — and nothing here leaves
-    # whole-stage codegen. Band keys are md5s over plain signature columns
-    # (no lambdas → no sibling-collision risk, no interpreted eval).
+    ``width``: the band self-join's partition count
+    (operators/dedup.py::band_pairs); callers with a known source size
+    pass catalog.shuffle_width_for. Default None leaves the exchange to
+    the planner, which is right for small callers."""
     # ONE band-table construction serves batch pair generation here AND
     # the incremental ledger (operators/dedup.py::neardup_against_ledger) —
     # a parameter drift between the two can no longer desync batch vs
@@ -626,17 +551,9 @@ def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
     # persisted: it is 4 narrow rows per doc, and the recompute it saves is
     # the whole shingle-explode + signature aggregate. A persist/recompute
     # A/B measured persist faster and tighter (bench_logs/r13/minhash_ab_*).
-    bands = bands.persist()
-    a = bands.selectExpr("doc_id AS doc_a", "band_idx", "band_key")
-    b = bands.selectExpr("doc_id AS doc_b", "band_idx", "band_key")
-    if width is not None:
-        a = a.repartition(width, F.col("band_idx"), F.col("band_key"))
-        b = b.repartition(width, F.col("band_idx"), F.col("band_key"))
-    return (
-        a.join(b, ["band_idx", "band_key"])
-        .filter("doc_a < doc_b")
-        .select("doc_a", "doc_b")
-        .distinct()
+    return D.band_pairs(
+        bands.persist(), ["band_idx", "band_key"], "doc_id",
+        ("doc_a", "doc_b"), width,
     )
 
 
@@ -1406,28 +1323,10 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     str_sh = D.exploded_distinct_shingles(d, X.tokens(F.col("text")), 4)
-    # Seed battery rendered as SQL text — same expressions, one py4j round
-    # trip per seed instead of ~6 (see dedup.lsh_band_table).
-    sigs = str_sh.groupBy("doc_id", "n").agg(
-        *[F.expr(f"min(md5(concat('{i}|', s)))").alias(f"h{i}") for i in range(12)]
-    ).select(
-        "doc_id",
-        "n",
-        F.expr("array(" + ", ".join(f"h{i}" for i in range(12)) + ")").alias("sig"),
-    )
-    # band keys via the ONE shared constructor (operators/dedup.py) — the
-    # SQL oracle is generated from its lsh_band_keys_sql twin, so banding
-    # parameters can never drift between the engines or the dedup family.
-    bands = sigs.select(
-        "doc_id",
-        "n",
-        "sig",
-        F.posexplode(D.lsh_band_keys(F.col("sig"), 4, 3)).alias(
-            "band_idx0", "band_key"
-        ),
-    ).select(
-        "doc_id", "n", "sig", (F.col("band_idx0") + 1).alias("band_idx"), "band_key"
-    )
+    # The shared MinHash band kernel; the oracle renders its DuckDB twins
+    # (minhash_signature_sql / lsh_band_keys_sql), so the banding rule
+    # cannot drift between the engines or across the dedup family.
+    bands = D.minhash_bands(str_sh, ["doc_id", "n"], 12, 4, 3)
     ev = bands.filter(F.col("doc_id") % 7 == 0).select(
         "band_idx", "band_key", F.col("sig").alias("esig")
     )

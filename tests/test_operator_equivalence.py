@@ -49,6 +49,61 @@ def test_exploded_shingles_equal_array_form(spark, token_docs):
     )).count() == 0
 
 
+def _brute_jaccard_pairs(texts: dict[int, str]) -> set[tuple[int, int, float]]:
+    """All pairs a < b with 3-gram-set Jaccard >= 0.8, in plain Python."""
+    grams = {}
+    for i, t in texts.items():
+        toks = t.split()
+        grams[i] = {" ".join(toks[j : j + 3]) for j in range(len(toks) - 2)}
+    out = set()
+    for a in grams:
+        for b in grams:
+            if a < b and grams[a] and grams[b]:
+                j = len(grams[a] & grams[b]) / len(grams[a] | grams[b])
+                if j >= 0.8:
+                    out.add((a, b, j))
+    return out
+
+
+def test_jaccard_pairs_match_bruteforce(spark):
+    """D.jaccard_pairs — the product pair join — against brute-force
+    Python Jaccard, with and without an explicit width. Includes a pair
+    exactly on the bound (4 of 5 trigrams: J = 0.8 and 4·5 = 5·4 on the
+    length prefilter), one just below it (J = 7/9), identical docs, a doc
+    below the shingle width and seeded random texts."""
+    ten = " ".join(f"w{i}" for i in range(10))
+    texts = {
+        1: "a b c d e f",
+        2: "a b c d e f g",  # J(1, 2) = 4/5, exactly the bound
+        3: ten,
+        4: ten.rsplit(" ", 1)[0] + " zz",  # J(3, 4) = 7/9, just below
+        5: "p q r s t",
+        6: "p q r s t",  # identical: J = 1
+        7: "a b",  # no trigram
+    }
+    rng = random.Random(11)
+    for i in range(8, 40):
+        base = texts[rng.choice([1, 2, 3, 5])].split()
+        edits = rng.randint(0, 2)
+        for _ in range(edits):
+            base[rng.randrange(len(base))] = rng.choice(WORDS)
+        texts[i] = " ".join(base + [rng.choice(WORDS)] * rng.randint(0, 2))
+    want = _brute_jaccard_pairs(texts)
+    assert (1, 2, 0.8) in want and all(p[:2] != (3, 4) for p in want)
+
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    sh = D.exploded_distinct_shingles(
+        docs, F.split("text", " "), 3, hash_shingles=True
+    )
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for width in (None, 3, session + 1):
+        got = {
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in D.jaccard_pairs(sh, width).collect()
+        }
+        assert got == want, width
+
+
 def test_simhash_exploded_equals_array_fold(spark, token_docs):
     fast = {
         (r["doc_id"], r["simhash16"])

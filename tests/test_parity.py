@@ -8,6 +8,8 @@ check at sf0.01 ad hoc.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from nhl_data_pipeline_spark.plans.parity import compare_query
@@ -26,6 +28,22 @@ def test_query_matches_oracle(spark, duck, name):
     spec = all_queries()[name]
     if spec.oracle is not None:
         assert r.spark_rows == r.oracle_rows
+
+
+def test_having_min_sample_values_one_decade_up(spark):
+    """At sf0.001 no (nation, segment) group reaches having_min_sample's
+    HAVING COUNT(*) >= 10 floor, so its case above compares only columns
+    and emptiness. One decade up the oracle returns rows: compare them."""
+    from nhl_data_pipeline_spark.plans.parity import duck_connection
+
+    sf_dir = str(Path(TEST_SF_DIR).parent / "sf0.01")
+    con = duck_connection(sf_dir)
+    try:
+        r = compare_query(spark, con, "having_min_sample", sf_dir)
+    finally:
+        con.close()
+    assert r.ok, r.detail
+    assert r.spark_rows == r.oracle_rows > 0
 
 
 def test_entry_smoke(spark):

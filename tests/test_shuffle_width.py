@@ -11,6 +11,7 @@ when (and only when) the lake is above the spill regime.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -190,19 +191,37 @@ def test_jaccard_pair_agg_runs_at_text_width_above_gate(spark, monkeypatch):
 
 
 def test_minhash_band_join_takes_explicit_width(spark):
-    """width=N must hash-partition BOTH self-join sides on the band keys
-    at N — REPARTITION_BY_NUM satisfies the join distribution, so the
-    plan shows the explicit width and no extra planted exchange."""
-    from nhl_data_pipeline_spark.catalog import load_table
-    from nhl_data_pipeline_spark.plans.q_text import minhash_band_pairs
+    """band_pairs(width=N) must hash-partition BOTH self-join sides on the
+    band keys at N — REPARTITION_BY_NUM satisfies the join distribution,
+    so the plan shows the explicit width and no extra planted exchange.
+    Checked on both key sets in use: MinHash's (band_idx, band_key) and
+    the k-means-blocked LSH's (cluster_id, band_idx, bucket)."""
+    from nhl_data_pipeline_spark.operators.dedup import band_pairs
 
-    d = load_table(spark, TEST_SF_DIR, "documents")
-    p = minhash_band_pairs(d, width=57)._jdf.queryExecution().toString()
-    assert p.count("REPARTITION_BY_NUM") >= 2
-    assert "57" in p
-    # Default (None) keeps the planner's own shape: no forced widths.
-    p0 = minhash_band_pairs(d)._jdf.queryExecution().toString()
-    assert "REPARTITION_BY_NUM" not in p0
+    minhash = spark.createDataFrame(
+        [(1, 1, "k"), (2, 1, "k"), (3, 2, "k"), (4, 1, "j")],
+        "doc_id long, band_idx int, band_key string",
+    )
+    kmeans = spark.createDataFrame(
+        [(10, 1, 5, 0), (11, 1, 5, 0), (12, 1, 5, 1), (13, 2, 5, 0)],
+        "vec_id long, band_idx int, bucket long, cluster_id int",
+    )
+    cases = [
+        (minhash, ["band_idx", "band_key"], "doc_id", {(1, 2)}),
+        (kmeans, ["cluster_id", "band_idx", "bucket"], "vec_id", {(10, 11)}),
+    ]
+    for bands, keys, id_col, want in cases:
+        pinned = band_pairs(bands, keys, id_col, ("a", "b"), width=57)
+        p = pinned._jdf.queryExecution().optimizedPlan().toString()
+        reps = re.findall(r"RepartitionByExpression \[(.*)\], (\d+)", p)
+        assert [(re.sub(r"#\d+L?", "", k), w) for k, w in reps] == [
+            (", ".join(keys), "57")
+        ] * 2
+        # Default (None) keeps the planner's own shape: no forced widths.
+        plain = band_pairs(bands, keys, id_col, ("a", "b"))
+        assert "REPARTITION_BY_NUM" not in plain._jdf.queryExecution().toString()
+        for df in (pinned, plain):
+            assert {(r["a"], r["b"]) for r in df.collect()} == want
 
 
 def test_minhash_width_gate_compares_session_shuffle_width(spark, monkeypatch):
