@@ -10,10 +10,25 @@ would be injected.
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TABLES = (
     "region",
@@ -287,31 +302,152 @@ def bucketed_on(name: str, *cols: str) -> bool:
 # 1. Lazy-plan memos (``_DF_CACHE`` below): the unanalyzed DataFrame per
 #    table — schema + file listing only; every action still scans the
 #    parquet.
-# 2. Scalar-statistics memos (plans/q_text.py ``_DOC_COUNT_MEMO`` and
-#    ``_BPE_MEMO``, plans/q_similarity.py ``_VEC_COUNT_MEMO``): one
-#    deterministic statistic per corpus (a row count; the BPE trainer's
-#    merge list) that only ever gates PLAN SHAPE — join strategy,
-#    LSH band width, persist crossovers — never results.
+# 2. The scalar-statistics memo ``_BPE_MEMO`` (plans/q_text.py): the BPE
+#    trainer's merge list, one deterministic statistic per corpus that
+#    only ever shapes the PLAN, never results.
+#
+# Row counts need no memo: :func:`footer` reads them from the Parquet
+# footer on the driver, without a Spark job.
 #
 # Never memoized: query results, row data, persisted intermediates, or
 # anything keyed on a query. The DuckDB oracle and the bench recompute
 # everything from the parquet inputs on every invocation;
-# tests/test_stat_memos.py pins that the memos hold only scalars /
-# merge-lists and that their keys carry the file-identity invalidation.
+# tests/test_stat_memos.py pins that the memo holds only merge-lists
+# and that its keys carry the file-identity invalidation.
 # ---------------------------------------------------------------------
 
-# Per-session memo of lazy table DataFrames (guide §5 driver costs +
-# §6 metadata): ``spark.read.parquet`` re-infers the schema on EVERY call —
-# a driver-side footer-read job per table per query execution (~40-90 ms
-# each on this box; join_chain_revenue paid six of them per bench rep,
-# measured in a job-timeline probe). A real 100 TB engine serves
-# schemas from a catalog/metastore, not per-query footer reads — this memo
-# is that catalog. It caches only the LAZY plan (schema + file listing):
-# every action still scans the parquet from disk, so no data or results
-# are reused across runs (bench's clearCache() is about persisted DATA and
-# is unaffected). Keyed on the session (weakly), the file's identity
-# (path, mtime_ns, size — a rewritten fixture invalidates), and the
-# nanosAsLong conf (it changes the inferred schema of `events`).
+
+class Footer(NamedTuple):
+    """What a lake table's Parquet footer states: the schema Spark's own
+    inference would give, and the row count."""
+
+    schema: StructType
+    num_rows: int
+
+
+# Unannotated physical types and the Spark type each reads as.
+_PLAIN_TYPES: dict[str, DataType] = {
+    "INT32": IntegerType(),
+    "INT64": LongType(),
+    "FLOAT": FloatType(),
+    "DOUBLE": DoubleType(),
+}
+
+
+def _leaf_type(col, nanos_as_long: bool, infer_ntz: bool) -> DataType | None:
+    """Spark type of one Parquet leaf column, from its physical and
+    logical type (not the Arrow type, which shows INT96 as a nanosecond
+    timestamp where Spark reads a timestamp); ``None`` if unmapped."""
+    phys = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "None":
+        return _PLAIN_TYPES.get(phys)
+    if kind == "String" and phys == "BYTE_ARRAY":
+        return StringType()
+    if kind == "Timestamp" and phys == "INT64":
+        unit = logical["timeUnit"]
+        if unit == "microseconds":
+            if logical["isAdjustedToUTC"] or not infer_ntz:
+                return TimestampType()
+            return TimestampNTZType()
+        if unit == "nanoseconds" and nanos_as_long:
+            return LongType()
+    return None
+
+
+def _schema_confs(spark: SparkSession) -> tuple[str, str]:
+    """The live session's nanosAsLong and inferTimestampNTZ settings —
+    the two confs that change the schema Spark infers from a footer."""
+    return (
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+    )
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet files behind a table path: the path itself, or the
+    data files of a Spark-written directory (hidden ``_``/``.`` files
+    skipped, as Spark's listing does)."""
+    if not os.path.isdir(path):
+        return [path]
+    files = [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if not f.startswith(("_", "."))
+    ]
+    if not files:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    return files
+
+
+def footer(path: str, spark: SparkSession) -> Footer:
+    """Schema and row count of a lake table, read from its Parquet footer
+    with pyarrow on the driver — no Spark job.
+
+    The schema equals ``spark.read.parquet(path).schema`` for every shape
+    the lakes hold: INT32/INT64/FLOAT/DOUBLE, String byte arrays, lists of
+    those, and INT64 timestamps. The two confs that change what Spark
+    infers are read from the live session:
+    ``spark.sql.legacy.parquet.nanosAsLong`` (TIMESTAMP(NANOS) → bigint)
+    and ``spark.sql.parquet.inferTimestampNTZ.enabled`` (a timestamp not
+    adjusted to UTC → timestamp_ntz). Every field is nullable, as Spark's
+    inference makes it. Any other type raises ``TypeError`` naming the
+    file and the column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = _data_files(path)
+    nanos_as_long, infer_ntz = (
+        v.lower() == "true" for v in _schema_confs(spark)
+    )
+    pf = pq.ParquetFile(files[0])
+    # Leaf columns grouped by top-level field: one leaf at repetition 0
+    # is a primitive, one leaf at repetition 1 under a list is a list of
+    # primitives. The Arrow schema is consulted only for that structure.
+    leaves: dict[str, list] = {}
+    for i in range(len(pf.schema)):
+        col = pf.schema.column(i)
+        leaves.setdefault(col.path.split(".")[0], []).append(col)
+    arrow = pf.schema_arrow
+    fields = []
+    for name, cols in leaves.items():
+        col = cols[0]
+        t = _leaf_type(col, nanos_as_long, infer_ntz) if len(cols) == 1 else None
+        kind = arrow.field(name).type
+        if (
+            t is not None
+            and col.max_repetition_level == 1
+            and pa.types.is_list(kind)
+            and not pa.types.is_nested(kind.value_type)
+        ):
+            t = ArrayType(t)
+        elif col.max_repetition_level != 0 or col.path != name:
+            t = None
+        if t is None:
+            raise TypeError(
+                f"{path}: column {name!r} has Parquet type {col.physical_type}"
+                f" {col.logical_type}, which the engine does not map"
+            )
+        fields.append(StructField(name, t, True))
+    num_rows = pf.metadata.num_rows + sum(
+        pq.read_metadata(f).num_rows for f in files[1:]
+    )
+    return Footer(StructType(fields), num_rows)
+
+
+# Per-session memo of lazy table DataFrames. The schema comes from
+# :func:`footer` with no Spark job, but ``spark.read...parquet`` still
+# lists the file and builds a plan on every call — about 10 ms per
+# reference, 0.09-0.12 s for the ten tables (measured warm, 4 cores), and
+# a join-heavy build references several tables. A real 100 TB engine
+# serves table plans from a catalog/metastore; this memo is that catalog.
+# It caches only the LAZY plan (schema + file listing): every action
+# still scans the parquet from disk, so no data or results are reused
+# across runs (bench's clearCache() is about persisted DATA and is
+# unaffected). Keyed on the session (weakly), the file's identity (path,
+# mtime_ns, size — a rewritten fixture invalidates), and the two confs
+# that change the footer's schema.
 _DF_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -329,13 +465,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return spark.table(BUCKETED_LAYOUT[name][0])
     path = os.path.join(sf_dir, f"{name}.parquet")
     st = os.stat(path)
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     per_session = _DF_CACHE.setdefault(spark, {})
-    key = (path, st.st_mtime_ns, st.st_size, nanos)
+    key = (path, st.st_mtime_ns, st.st_size, _schema_confs(spark))
     cached = per_session.get(key)
     if cached is not None:
         return cached
-    df = spark.read.parquet(path)
+    df = spark.read.schema(footer(path, spark).schema).parquet(path)
     if name == "events":
         # Normalize events.ts to timestamp_ntz regardless of how the lake
         # stored it: TIMESTAMP(NANOS) parquet surfaces as a raw nanosecond
@@ -343,7 +478,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # same ns→us semantics DuckDB applies), while micro-precision
         # parquet arrives as a timestamp already.
         from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
 
         if isinstance(df.schema["ts"].dataType, LongType):
             ts = F.timestamp_micros(F.expr("ts div 1000"))

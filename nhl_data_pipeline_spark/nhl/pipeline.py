@@ -104,6 +104,10 @@ def run_pipeline(
 
     reset_scan_splits(spark)
 
+    # A written model is re-read with the schema it was written with, so
+    # the re-read runs no schema-inference job (Spark still moves
+    # partition columns last and makes every field nullable, as inference
+    # would: tests/test_nhl_pipeline.py pins the equality).
     def emit(name: str, df: DataFrame) -> DataFrame:
         if warehouse_dir and name in ZORDER_MODELS:
             spec = ZORDER_MODELS[name]
@@ -123,7 +127,7 @@ def run_pipeline(
                 curve="hilbert",
                 drop=["_zd_days"],
             )
-            df = spark.read.parquet(path)
+            df = spark.read.schema(df.schema).parquet(path)
         elif warehouse_dir and name in TABLE_MODELS:
             path = os.path.join(warehouse_dir, name)
             writer = df.write.mode("overwrite")
@@ -131,7 +135,7 @@ def run_pipeline(
             if parts:
                 writer = writer.partitionBy(*parts)
             writer.parquet(path)
-            df = spark.read.parquet(path)
+            df = spark.read.schema(df.schema).parquet(path)
         df.createOrReplaceTempView(name)
         return df
 

@@ -457,9 +457,9 @@ def semantic_neardup_pairs_lsh_blocked(
 
     if rows is None:
         # ``n_total``: a caller that already knows the corpus row
-        # count (e.g. from a memoized source-identity count, the
-        # ngram_lm_quality idiom) passes it and the plan builder stays
-        # action-free; otherwise fall back to the column-pruned count job.
+        # count (e.g. from the Parquet footer, catalog.footer) passes it
+        # and the plan builder stays action-free; otherwise fall back to
+        # the column-pruned count job.
         if n_total is None:
             n_total = df.select(id_col).count()
         rows = max(16, math.ceil(math.log2(max(n_total / k, 2))) + 4)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nhl_data_pipeline_spark.catalog import load_table
+from nhl_data_pipeline_spark.catalog import footer, load_table
 from nhl_data_pipeline_spark.operators import dedup as D
 from nhl_data_pipeline_spark.operators.similarity import (
     cosine_allpairs_numpy,
@@ -361,9 +361,6 @@ def _km_pairs_oracle(threshold: float, bound: int | None) -> str:
     """
 
 
-_VEC_COUNT_MEMO: dict[tuple[str, int, int], int] = {}
-
-
 @query(
     "kmeans_semantic_dedup",
     covers="LLM-kmeans,LLM-dedup-embedding-lsh",
@@ -379,22 +376,16 @@ def kmeans_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact within-cluster pairs and equals it at recall 1 (recall is
     audited in tests/test_kmeans.py).
 
-    The corpus row count feeding the adaptive LSH band width is memoized
-    per source identity (path, size, mtime — the ngram_lm_quality idiom)
-    so repeat plan constructions skip the count job; a rewritten
-    lake file invalidates the entry."""
+    The corpus row count feeding the adaptive LSH band width comes from
+    the Parquet footer (catalog.footer), so it costs no count job."""
     import os
 
     from nhl_data_pipeline_spark.operators import kmeans as KM
 
     e = load_table(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = (src, st.st_size, st.st_mtime_ns)
-    if key not in _VEC_COUNT_MEMO:
-        _VEC_COUNT_MEMO[key] = e.select("vec_id").count()
+    n_total = footer(os.path.join(sf_dir, "embeddings.parquet"), spark).num_rows
     return KM.semantic_neardup_pairs_lsh_blocked(
-        e, _KM_SCALE_THRESHOLD, _KM_K, dim=_DIM, n_total=_VEC_COUNT_MEMO[key]
+        e, _KM_SCALE_THRESHOLD, _KM_K, dim=_DIM, n_total=n_total
     )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nhl_data_pipeline_spark.catalog import load_table
+from nhl_data_pipeline_spark.catalog import footer, load_table
 from nhl_data_pipeline_spark.operators import classifier as CL
 from nhl_data_pipeline_spark.operators import cluster as C
 from nhl_data_pipeline_spark.operators import dedup as D
@@ -1016,26 +1016,12 @@ _BPE_MERGE_UNION = "\nUNION ALL\n".join(
 # construct this query).
 _BPE_MEMO: dict[tuple[str, int, int], list[tuple[str, str]]] = {}
 
-# Same identity-keyed memo for the corpus row count feeding the LM
-# model-size join and persist gates (ngram_lm_quality) — one
-# column-pruned count per corpus, not one per plan construction.
-_DOC_COUNT_MEMO: dict[tuple[str, int, int], int] = {}
-
 
 def _corpus_doc_count(spark: SparkSession, sf_dir: str) -> int:
-    """Memoized documents row count, keyed on the source file's identity
-    (path, size, mtime_ns) — the scalar-statistics memo pattern
-    (catalog.py policy note): a rewritten lake invalidates the entry, and
-    the memo only ever feeds plan-shape gates (join strategy, persist
-    crossover, LSH band width), never results."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = (src, st.st_size, st.st_mtime_ns)
-    if key not in _DOC_COUNT_MEMO:
-        _DOC_COUNT_MEMO[key] = load_table(
-            spark, sf_dir, "documents"
-        ).count()
-    return _DOC_COUNT_MEMO[key]
+    """Documents row count from the Parquet footer (catalog.footer): no
+    Spark job, and it only ever feeds plan-shape gates (join strategy,
+    persist crossover), never results."""
+    return footer(os.path.join(sf_dir, "documents.parquet"), spark).num_rows
 
 
 @query(
@@ -1561,8 +1547,8 @@ def ngram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBys), orders of magnitude smaller than the corpus; scoring is two
     hash joins on the gram/context keys — broadcast below the measured
     model-size gate, shuffle_hash above it (operators/lm.py). The corpus
-    row count feeding that gate is memoized per source identity so the
-    plan builder stays action-free after the first construction.
+    row count feeding that gate comes from the Parquet footer, so the
+    plan builder runs no Spark job.
     """
     d = load_table(spark, sf_dir, "documents")
     return LM.ngram_lm_score(

@@ -1,4 +1,4 @@
-"""r12: the per-session lazy-DataFrame memo in catalog.load_table.
+"""The per-session lazy-DataFrame memo in catalog.load_table.
 
 The memo must behave like a metastore schema catalog — identical lazy plan
 served for repeat references — while never caching DATA: an in-place rewrite
@@ -23,7 +23,7 @@ TEST_SF_DIR = "/root/testdata/sf0.001"
 def test_repeat_reference_is_memoized(spark):
     a = load_table(spark, TEST_SF_DIR, "region")
     b = load_table(spark, TEST_SF_DIR, "region")
-    assert a is b  # same lazy plan object — no second schema inference
+    assert a is b  # same lazy plan object — no second listing or plan build
 
 
 def test_distinct_tables_distinct_entries(spark):

@@ -16,7 +16,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.nhl import fixtures
-from nhl_data_pipeline_spark.nhl.pipeline import run_pipeline
+from nhl_data_pipeline_spark.nhl.pipeline import (
+    TABLE_MODELS,
+    ZORDER_MODELS,
+    run_pipeline,
+)
 
 
 @pytest.fixture(scope="session")
@@ -68,6 +72,18 @@ def test_warehouse_layout(warehouse):
         assert parts and all(p.startswith("season=") for p in parts), name
     for name in unpartitioned:
         assert not any(p.is_dir() for p in (wh / name).iterdir()), name
+
+
+def test_written_models_reread_with_inferred_schema(spark, warehouse):
+    """Each written model is re-read with the schema it was written with,
+    not re-inferred by a Spark job. That schema must equal what Spark
+    infers from the files: partition columns last, every field nullable."""
+    wh, models = warehouse
+    names = sorted(TABLE_MODELS) + sorted(ZORDER_MODELS)
+    assert len(names) == 12
+    for name in names:
+        inferred = spark.read.parquet(str(Path(wh) / name)).schema
+        assert models[name].schema == inferred, name
 
 
 def test_latest_snapshot_wins(spark, bronze, models):

@@ -10,7 +10,8 @@ tests pin the resulting policy:
 - jaccard / contamination: no InMemoryRelation at any scale (persist
   removed outright — recompute won at sf0.1, sf1 AND sf10);
 - minhash: the band table persists at every scale, so building its plan
-  reads no corpus statistic and launches no Spark job.
+  reads no corpus statistic and launches no Spark job, even with no
+  table loaded yet (schemas come from Parquet footers).
 
 Value-parity of all touched queries is covered by test_parity.py (rows +
 hash against the DuckDB oracle); these tests pin only the plan policy.
@@ -58,10 +59,12 @@ def test_jaccard_and_contamination_have_no_cache(spark):
 
 
 def test_minhash_plan_build_runs_no_job(spark, monkeypatch):
+    import weakref
+
+    from nhl_data_pipeline_spark import catalog
     from nhl_data_pipeline_spark.plans import q_text
 
-    q_text.dedup_minhash_lsh(spark, TEST_SF_DIR)  # warm the catalog memos
-    monkeypatch.setattr(q_text, "_DOC_COUNT_MEMO", {})
+    monkeypatch.setattr(catalog, "_DF_CACHE", weakref.WeakKeyDictionary())
     sc = spark.sparkContext
     group = f"minhash-plan-build-{uuid.uuid4().hex}"
     sc.setLocalProperty("spark.jobGroup.id", group)
