@@ -334,15 +334,9 @@ def main() -> None:
     # Janino compiles over the timed reps: generated classes the cache
     # did not hold, evicted or new because the code differs per run.
     compiles: dict[str, int] = {}
-    from nhl_data_pipeline_spark.catalog import reset_scan_splits
-
     for name, spec in specs.items():
         runs: list[float] = []
         deltas: list[dict] = []
-        # Execution-order independence:
-        # every query block starts from the default scan-split size, so
-        # an untuned query never inherits the previous query's tuning.
-        reset_scan_splits(spark)
         try:
             for i in range(5):
                 spark.catalog.clearCache()

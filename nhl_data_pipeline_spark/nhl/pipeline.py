@@ -97,13 +97,6 @@ def run_pipeline(
     model is a lazy view, so the run launches no write and the returned
     plans are the same as a serial build's.
     """
-    # Shared-session hygiene: this runner executes 24 models on one
-    # session, so restore the default scan-split size first; a lake
-    # query's tune_scan_splits must not leak into the DAG.
-    from nhl_data_pipeline_spark.catalog import reset_scan_splits
-
-    reset_scan_splits(spark)
-
     # A written model is re-read with the schema it was written with, so
     # the re-read runs no schema-inference job (Spark still moves
     # partition columns last and makes every field nullable, as inference

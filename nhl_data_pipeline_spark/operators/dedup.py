@@ -165,22 +165,11 @@ def jaccard_pairs(sh: DataFrame, width: int | None = None) -> DataFrame:
 
     ``width``: each side is repartitioned on ``s`` at ``width``
     (REPARTITION_BY_NUM satisfies the join's distribution, so
-    EnsureRequirements plants nothing on top and the join executes at
-    ``width``, not at the session's fixed shuffle.partitions). A
-    repartition-once-then-cache variant re-exchanged BOTH sides at the
-    session width: the self-join re-aliases one side's attributes and the
-    cached HashPartitioning no longer matches. The pair aggregate is also
-    pinned at ``width`` (on (doc_a, doc_b), a subset of its grouping keys,
-    so no extra exchange) when ``width`` exceeds spark.sql.shuffle.partitions
-    — the width the unpinned aggregate would run at; at sf100 the
-    session-width aggregate spilled 48 GB and took 1078 of 3163 executor
-    CPU-s, at ``width`` 530 CPU-s with no spill
-    (bench_logs/r11/probe_stage_detail_postfix.out). Comparing against
-    defaultParallelism instead would NARROW it under session.cluster_conf,
-    whose shuffle width is at least 2× the cores. The pinned exchange
-    moves un-combined pair rows, which costs little: a (pair, shingle) row
-    combines only with other shingles of the same pair in one s-partition.
-    ``width=None`` leaves every exchange to the planner.
+    EnsureRequirements plants nothing on top and AQE cannot coalesce the
+    join below ``width``). A repartition-once-then-cache variant
+    re-exchanged BOTH sides at the session width: the self-join
+    re-aliases one side's attributes and the cached HashPartitioning no
+    longer matches. ``width=None`` leaves every exchange to the planner.
 
     The build side is hinted shuffle_hash: it skips the sort-merge sort on
     the shingle key (~40% faster here). Filters are parsed SQL strings:
@@ -194,9 +183,6 @@ def jaccard_pairs(sh: DataFrame, width: int | None = None) -> DataFrame:
     pairs = a.join(b.hint("shuffle_hash"), ["s"]).filter(
         "doc_a < doc_b AND 4 * greatest(n_a, n_b) <= 5 * least(n_a, n_b)"
     )
-    session_width = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if width is not None and width > session_width:
-        pairs = pairs.repartition(width, F.col("doc_a"), F.col("doc_b"))
     common = pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
         F.expr("count(1)").alias("n_common")
     )
@@ -296,28 +282,20 @@ def band_pairs(
     keys: list[str],
     id_col: str,
     names: tuple[str, str],
-    width: int | None = None,
 ) -> DataFrame:
     """Distinct (a, b) id pairs, a < b, of rows that share every column in
     ``keys`` — the banded LSH self-join. ``names`` names the two id
     columns. Each side carries the id (renamed) and ``keys`` in the order
-    they have in ``bands``.
-
-    ``width``: both sides are first repartitioned on ``keys`` at ``width``,
-    so the join executes at that width instead of the session's fixed
-    shuffle.partitions (REPARTITION_BY_NUM on the join keys satisfies the
-    join's distribution; EnsureRequirements plants nothing on top).
-    ``None`` leaves the exchange to the planner (broadcast at fixture
-    scale, session-width exchanges above). Callers persist ``bands``:
-    it feeds both sides."""
+    they have in ``bands``. The exchange is left to the planner
+    (broadcast at fixture scale, session-width exchanges above). Callers
+    persist ``bands``: it feeds both sides."""
     def side(name: str) -> DataFrame:
         cols = [
             F.col(c).alias(name) if c == id_col else F.col(c)
             for c in bands.columns
             if c == id_col or c in keys
         ]
-        out = bands.select(*cols)
-        return out if width is None else out.repartition(width, *keys)
+        return bands.select(*cols)
 
     a, b = names
     return (

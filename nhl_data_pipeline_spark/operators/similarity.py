@@ -15,6 +15,8 @@ numpy-matmul top-k over Arrow batches measured slower at 2K vectors
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -185,23 +187,26 @@ def cosine_allpairs_numpy(
 # ------------------------------------------------- hyperplane LSH buckets
 
 
-def hyperplanes(dim: int, planes: int = 8) -> list[list[float]]:
+@functools.lru_cache(maxsize=None)
+def hyperplanes(dim: int, planes: int = 8) -> tuple[tuple[float, ...], ...]:
     """Deterministic ±1 hyperplane matrix: component i of plane j is the
     parity of md5(f"{j}|{i}"). Generated driver-side and embedded as
-    literals in both engines, so there is no RNG state to reproduce."""
+    literals in both engines, so there is no RNG state to reproduce.
+    Memoized on (dim, planes): a 64 × 512 table is 32,768 md5 digests per
+    build otherwise. Tuples, so no caller can mutate the shared table."""
     import hashlib
 
-    return [
-        [
+    return tuple(
+        tuple(
             1.0 if int(hashlib.md5(f"{j}|{i}".encode()).hexdigest()[:8], 16) % 2 == 0
             else -1.0
             for i in range(dim)
-        ]
+        )
         for j in range(planes)
-    ]
+    )
 
 
-def _plane_lit(plane: list[float]) -> str:
+def _plane_lit(plane: tuple[float, ...]) -> str:
     return "array(" + ", ".join(f"{c:.1f}D" for c in plane) + ")"
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nhl_data_pipeline_spark.catalog import load_table, tune_scan_splits
+from nhl_data_pipeline_spark.catalog import load_table
 from nhl_data_pipeline_spark.functions.scalars import (
     dec,
     dsum_double_sql,
@@ -53,7 +53,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate); a production pipeline whose consumers tolerate float
     reduction-order wobble would use plain double sums and reclaim it.
     """
-    tune_scan_splits(spark, sf_dir, "lineitem")  # whole scan waves
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = "l_extendedprice * (1 - l_discount)"
     # (l_tax + 1), not (1 + l_tax): the Column form's __radd__ emitted the

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nhl_data_pipeline_spark.catalog import load_table, tune_scan_splits
+from nhl_data_pipeline_spark.catalog import load_table
 from nhl_data_pipeline_spark.functions.scalars import (
     dsum_double_sql,
     split_part,
@@ -47,7 +47,6 @@ def broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`fact_player_game_stats.sql:139-140`): dims are tiny, so the join is a
     BroadcastHashJoin — the fact side never shuffles.
     """
-    tune_scan_splits(spark, sf_dir, "lineitem")  # whole scan waves
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     return (
@@ -84,21 +83,8 @@ def composite_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`fact_team_game_stats.sql:158`). Both sides share the (l_orderkey,
     l_suppkey) hash partitioning, so AQE can plan a single shuffle reused by
     the aggregate and the join.
-
-    Scale policy: session width + AQE is the fast path; catalog.fact_shuffle_width
-    engages an explicit whole-wave composite-key repartition (feeding
-    BOTH the aggregate and both join sides — distribution satisfied,
-    zero planted exchanges on top) only once per-task state at session
-    width would break the no-spill budget (see join_chain_revenue for
-    the measured rationale).
     """
-    from nhl_data_pipeline_spark.catalog import fact_shuffle_width
-
-    tune_scan_splits(spark, sf_dir, "lineitem")  # whole scan waves
-    w = fact_shuffle_width(spark, sf_dir, "lineitem")
     li = load_table(spark, sf_dir, "lineitem")
-    if w:
-        li = li.repartition(w, F.col("l_orderkey"), F.col("l_suppkey"))
     grp = li.groupBy("l_orderkey", "l_suppkey").agg(
         # Narrow-decimal sum (see pricing_summary's bound note):
         # per-(order,supp) qty sums are ≤ 7 lines × 50, far inside
@@ -135,47 +121,18 @@ def join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Analog of the player_actuals chain `fact_player_sog_props_v2.sql:83-86`.
     Dim tables broadcast; the customer⋈orders and orders⋈lineitem joins
     shuffle on their natural keys. The region filter prunes before any join.
-
-    Scale policy: the fact-side shuffles stay at session width under AQE — the
-    measured fast path (sf30: 11.0 s plain vs 18.8 s with the first-cut
-    explicit 698-way repartition, whose 4.5 MiB tasks lost more to
-    scheduling and disabled AQE coalescing than they saved; the WORK is
-    sublinear — cpu_exponent 0.91 at sf10→sf30,
-    BENCH_r10_sf30_sweep.json).
-    catalog.fact_shuffle_width returns a width only once per-task
-    compressed input at session width would break the no-spill budget
-    (per-task hash state growing with the lake); then each fact side is
-    repartitioned on its join key at a whole-wave width targeting
-    ~64 MiB/task. REPARTITION_BY_NUM on the join key satisfies the
-    join's required distribution, so EnsureRequirements plants nothing
-    on top. Below the gate (every committed lake through sf30) the plan
-    is byte-identical to the plain declarative form.
     """
-    from nhl_data_pipeline_spark.catalog import bucketed_on, fact_shuffle_width
+    from nhl_data_pipeline_spark.catalog import bucketed_on
 
-    tune_scan_splits(spark, sf_dir, "lineitem")  # whole scan waves
-    w_co = fact_shuffle_width(spark, sf_dir, ("customer", "orders"))
-    w_li = fact_shuffle_width(spark, sf_dir, ("orders", "lineitem"))
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    if w_co:
-        c = c.repartition(w_co, F.col("c_custkey"))
-        o = o.repartition(w_co, F.col("o_custkey"))
-    # Layout-aware width: a lineitem served
-    # from a bucket-by-l_orderkey layout (catalog.BUCKETED_LAYOUT) already
-    # carries the join's distribution, so the explicit repartition would
-    # RE-ADD the exchange the layout removed (the 128-task, 9.7 GB-write,
-    # 21.6 GB-spill stage pinned in
-    # bench_logs/r11/probe_stage_join_chain_sf100.out).
-    if w_li and not bucketed_on("lineitem", "l_orderkey"):
-        li = li.repartition(w_li, F.col("l_orderkey"))
     co = c.join(o, F.col("c_custkey") == F.col("o_custkey"))
     if bucketed_on("lineitem", "l_orderkey"):
-        # Layout-aware JOIN STRATEGY, not just layout-aware width
+        # Layout-aware join strategy
         # (bench_logs/r12/probe_bucketed_join_sf100.out): with a
         # multi-file-bucket lineitem the default sort-merge join re-sorts
         # every bucket locally — 25 GB mem / 9.3 GB disk sorter spill at

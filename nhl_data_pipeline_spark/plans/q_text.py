@@ -421,35 +421,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       SAME distribution: one compact doc-row shuffle replaces a round-robin
       doc shuffle PLUS an exploded-token-row shuffle (plan-verified 2→1
       exchanges);
-    - SIZE-ADAPTIVE width (BENCH_r08_sf10_sweep.json): every count
-      in this plan scales exactly linearly (shingles/candidates/pairs all
-      ×3.33 at 3.33× data, re-verified), yet the benched time read a 1.18
-      normalized exponent — zero spill at sf3 vs ~15 GB spill PER RUN at
-      sf10, because a FIXED 32-partition shuffle makes per-task hash
-      state (SHJ build + partial-agg maps) grow linearly with the lake.
-      The self-join sides are therefore explicitly repartitioned on `s`
-      to a width derived from the source parquet size (driver-side stat,
-      no job, no cache side effects — the lm.py gate lesson; explicit
-      numPartitions so AQE's parallelism-first coalescing cannot fold it
-      back to 32). On a cluster this width would come from catalog size
-      stats / maxPartitionBytes. Post-fix sf10: 16.4 → ~6.4 s, spill
-      eliminated, exponent back under 1;
+    - the documents repartition and the self-join sides run at the
+      session's spark.sql.shuffle.partitions, the engine's one sizing
+      rule (session.cluster_conf); an explicit width, so AQE cannot
+      coalesce the self-join below it;
     - at 100 TB additionally drop ultra-frequent shingles pre-join
       (stop-shingles) and/or gate with the MinHash-LSH candidates — this
       exact form is the verifier stage.
     """
-    # ~512 KiB of compressed documents per partition ≈ the measured
-    # no-spill per-task budget (sf3/17 MB ran clean at 32 partitions;
-    # sf10/57 MB spilled 15 GB at the same width); catalog.shuffle_width_for
-    # derives every fact-side shuffle width from the same one-liner.
-    from nhl_data_pipeline_spark.catalog import (
-        TEXT_BYTES_PER_PARTITION,
-        shuffle_width_for,
-    )
-
-    width = shuffle_width_for(
-        spark, sf_dir, "documents", TEXT_BYTES_PER_PARTITION
-    )
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = load_table(spark, sf_dir, "documents").repartition(
         width, F.col("doc_id")
     )
@@ -505,40 +485,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost tracks true duplicate density. Band probability: jaccard^3 per
     band, 1-(1-j^3)^4 overall — j=0.9 → 98% recall; the exact-jaccard
     query above is the verify stage downstream."""
-    # Size-derived width: at session width the band self-join's per-task
-    # state grows with the lake (sf3→sf10 exponent 0.89 raw / 1.01
-    # normalized, BENCH_r08_sf10_sweep.json). Same 512 KiB/partition text
-    # budget as the jaccard plan: the dominant stage is the identical
-    # shingle explosion feeding the signature aggregate.
-    from nhl_data_pipeline_spark.catalog import (
-        TEXT_BYTES_PER_PARTITION,
-        shuffle_width_for,
-    )
-
-    width = shuffle_width_for(
-        spark, sf_dir, "documents", TEXT_BYTES_PER_PARTITION
-    )
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = load_table(spark, sf_dir, "documents").repartition(
         width, F.col("doc_id")
     )
-    # Same gate as dedup_ngram_jaccard's pair aggregate: pin the band join
-    # at `width` only when that WIDENS it past the session shuffle width
-    # the planner would otherwise use.
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return minhash_band_pairs(d, width=width if width > session_width else None)
+    return minhash_band_pairs(d)
 
 
-def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
+def minhash_band_pairs(d: DataFrame) -> DataFrame:
     """Banded MinHash candidate pairs over any (doc_id, text) frame (the
     registered query's body; bench.py::_dedup_scale_probe reuses it in
     its ``sf0.1_boiler3k`` block to measure candidate precision on a
     boilerplate-heavy corpus, and in its ``sf1_50k`` block for time and
-    recall).
-
-    ``width``: the band self-join's partition count
-    (operators/dedup.py::band_pairs); callers with a known source size
-    pass catalog.shuffle_width_for. Default None leaves the exchange to
-    the planner, which is right for small callers."""
+    recall). The band self-join's exchanges are left to the planner."""
     # ONE band-table construction serves batch pair generation here AND
     # the incremental ledger (operators/dedup.py::neardup_against_ledger) —
     # a parameter drift between the two can no longer desync batch vs
@@ -553,7 +512,7 @@ def minhash_band_pairs(d: DataFrame, width: int | None = None) -> DataFrame:
     # A/B measured persist faster and tighter (bench_logs/r13/minhash_ab_*).
     return D.band_pairs(
         bands.persist(), ["band_idx", "band_key"], "doc_id",
-        ("doc_a", "doc_b"), width,
+        ("doc_a", "doc_b"),
     )
 
 

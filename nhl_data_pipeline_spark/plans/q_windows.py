@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nhl_data_pipeline_spark.catalog import load_table, tune_scan_splits
+from nhl_data_pipeline_spark.catalog import load_table
 from nhl_data_pipeline_spark.functions.scalars import dec
 from nhl_data_pipeline_spark.plans.registry import query
 from nhl_data_pipeline_spark.plans.sqlgen import dsum
@@ -238,31 +238,10 @@ def topk_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, and the customer dim joins broadcast AFTER the per-customer
     aggregate — so no wide row ever shuffles. ~25% faster than the
     join-first form at sf0.1 and the gap widens with lineitem fan-out.
-
-    Scale policy: the per-order aggregate inherits the same
-    spill-gated whole-wave width as join_chain_revenue's fact side
-    (catalog.fact_shuffle_width) — at sf30 the session-width shuffle
-    puts ~145 MB compressed lineitem per task, past the measured spill
-    gate, and topk read wall exponent 1.14 at sf10→sf30 with no width
-    guard while every width-guarded peer stayed ≤1.0.
-    REPARTITION_BY_NUM on l_orderkey satisfies the aggregate's required
-    distribution, so no extra exchange is planted; below the gate the
-    plan is byte-identical to the plain form.
     """
-    from nhl_data_pipeline_spark.catalog import bucketed_on, fact_shuffle_width
-
-    tune_scan_splits(spark, sf_dir, "lineitem")  # whole scan waves
-    w_li = fact_shuffle_width(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # Layout-aware width: bucket-by-l_orderkey
-    # lineitem already satisfies the per-order aggregate's distribution;
-    # repartitioning it would re-plant the exchange whose map-side sorter
-    # spilled 13.7 GB mem / 6.2 GB disk at sf100
-    # (bench_logs/r11/probe_stage_topk_sf100.out).
-    if w_li and not bucketed_on("lineitem", "l_orderkey"):
-        li = li.repartition(w_li, F.col("l_orderkey"))
     # Measure as SQL text: the identical dec() cast, one py4j call.
     per_order = li.groupBy("l_orderkey").agg(
         F.expr(

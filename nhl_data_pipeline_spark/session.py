@@ -201,6 +201,15 @@ def cluster_conf(
     MEASURED, shipped as policy instead of folklore. Returns the confs to
     lay on top of spark-submit's master/memory settings.
 
+    Its shuffle-partition rule is the engine's ONE sizing rule: no plan
+    builder derives a width of its own. Every plan shuffles at the
+    session's ``spark.sql.shuffle.partitions`` (the text plans' explicit
+    repartitions read it too) and AQE coalesces from there; scans use
+    Spark's own split formula. ``get_spark(cpus=n)`` sets the same conf to
+    n for local runs. Evidence: per-query A/B legs at sf1 and sf3 against
+    the per-query width policies this rule replaced
+    (bench_logs/size_policy/).
+
     Rules and their evidence:
 
     - ``spark.sql.shuffle.partitions`` = max(2 × total_cores,
@@ -234,7 +243,7 @@ def cluster_conf(
     default is right; explicit ``F.broadcast`` marks the intent in every
     plan that needs it).
 
-    - **Layout rule (r12, measured)**: lineitem-class facts — any table
+    - **Layout rule**: lineitem-class facts — any table
       that repeatedly joins/aggregates on one key — should be INGESTED
       bucketed by that key (``sources.bucketed.write_bucketed`` with
       ``single_file=True``, count from

@@ -67,9 +67,9 @@ def recommended_buckets(table_bytes: int, total_cores: int) -> int:
       ``ceil(table_bytes / 128 MiB)`` rounded UP to whole waves of the
       cluster cores, so a bucketed scan (which runs one task per bucket
       and cannot split files) keeps every core busy with the same
-      per-task input budget the plain scan policy uses
-      (``catalog.tune_scan_splits``). At sf100/32 cores this yields 128
-      for the 16.5 GB lineitem — the probed configuration where the
+      per-task input cap as Spark's own scan splits
+      (``spark.sql.files.maxPartitionBytes``). At sf100/32 cores this
+      yields 128 for the 16.5 GB lineitem — the probed configuration where the
       layout-aware SHUFFLE_HASH join ran spill-free.
     - **Per-task aggregate state is bounded by the same knob**: group-by
       state per task = distinct keys / buckets. 128 → 256 buckets halved
@@ -77,9 +77,9 @@ def recommended_buckets(table_bytes: int, total_cores: int) -> int:
       pays if the write used ``single_file=True``; multi-file buckets
       fragment into scan_tasks × buckets files and the cold scan goes
       seek-bound (measured: +37% wall at 256 multi-file buckets).
-    - Whole waves, never a bare power of two: a ragged tail wave idles
-      the fixed-size cluster exactly like the scan-split cap did
-      (the rule ``catalog.tune_scan_splits`` follows).
+    - Whole waves, never a bare power of two: a bucketed scan cannot
+      split a bucket, so a ragged tail wave would idle the fixed-size
+      cluster.
     """
     if table_bytes <= 0 or total_cores <= 0:
         raise ValueError("table_bytes and total_cores must be positive")

@@ -174,36 +174,6 @@ def test_layout_aware_plans_results_unchanged(spark, bucketed_layout):
     assert got == want
 
 
-def test_layout_skips_explicit_width_repartition(spark, bucketed_layout, monkeypatch):
-    """Above the spill gate the plans plant REPARTITION_BY_NUM on
-    l_orderkey (catalog.fact_shuffle_width) — but a bucketed lineitem
-    already carries that distribution, so the width guard must SKIP it
-    (planting it would re-add the exchange the layout removed)."""
-    import nhl_data_pipeline_spark.catalog as cat
-    from nhl_data_pipeline_spark.plans.q_windows import (
-        topk_customers_by_revenue,
-    )
-
-    w = 4 * spark.sparkContext.defaultParallelism
-    monkeypatch.setattr(cat, "fact_shuffle_width", lambda *a, **k: w)
-    plan = (
-        topk_customers_by_revenue(spark, TEST_SF_DIR)
-        ._jdf.queryExecution()
-        .toString()
-    )
-    assert "REPARTITION_BY_NUM" not in plan
-
-    # …and without the layout the same forced width DOES plant it
-    # (the behavior that stays correct for plain lake scans).
-    cat.BUCKETED_LAYOUT.clear()
-    plan = (
-        topk_customers_by_revenue(spark, TEST_SF_DIR)
-        ._jdf.queryExecution()
-        .toString()
-    )
-    assert "REPARTITION_BY_NUM" in plan
-
-
 def test_recommended_buckets_rule():
     """Sizing rule: ceil(bytes / 128 MiB) rounded up to whole waves —
     the sf100 probe configuration (16.5 GB, 32 cores → 128) must fall out

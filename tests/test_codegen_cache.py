@@ -9,7 +9,6 @@ working set; a repeated pass then compiles almost nothing.
 
 from __future__ import annotations
 
-from nhl_data_pipeline_spark.catalog import reset_scan_splits
 from nhl_data_pipeline_spark.plans.registry import all_queries
 from nhl_data_pipeline_spark.session import codegen_compiles
 from tests.conftest import TEST_SF_DIR
@@ -21,7 +20,6 @@ def test_repeated_bench_pass_reuses_generated_classes(spark):
     def one_pass() -> int:
         c0 = codegen_compiles(spark)
         for spec in specs:
-            reset_scan_splits(spark)
             spark.catalog.clearCache()
             spec.fn(spark, TEST_SF_DIR).write.format(
                 "noop"

@@ -71,6 +71,23 @@ def test_nanos_timestamp_maps_to_bigint_under_nanos_as_long(spark, confs, tmp_pa
     assert got == spark.read.parquet(path).schema
 
 
+def test_signed_int_annotations_match_spark_inference(spark, tmp_path):
+    """DuckDB's writer (tools/gen_sf1.py's lakes) annotates every integer
+    column with a signed Int(bitWidth) logical type."""
+    import duckdb
+
+    path = str(tmp_path / "ints.parquet")
+    duckdb.sql(
+        "SELECT 1::TINYINT AS i8, 2::SMALLINT AS i16, 3::INTEGER AS i32,"
+        " 4::BIGINT AS i64, [5::INTEGER] AS l32"
+    ).write_parquet(path)
+    got = footer(path, spark).schema
+    assert got.simpleString() == (
+        "struct<i8:tinyint,i16:smallint,i32:int,i64:bigint,l32:array<int>>"
+    )
+    assert got == spark.read.parquet(path).schema
+
+
 @pytest.mark.parametrize(
     "column,kw",
     [

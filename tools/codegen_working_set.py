@@ -10,11 +10,10 @@ work twice each in one fresh JVM and counts compiles per pass with
   the committed bronze fixtures;
 - ``registry``: all registry queries into the noop sink.
 
-Each query starts from ``reset_scan_splits`` and ``clearCache``, as in
-bench.py and the benchmark. With a cache larger than the working set the
-first pass of a set compiles its new classes and the second compiles
-almost none, so the sum of the first passes is the distinct classes of
-the union. After the last pass it reports the driver JVM's Metaspace use
+Each query starts from ``clearCache``, as in bench.py and the
+benchmark. With a cache larger than the working set the first pass of
+a set compiles its new classes and the second compiles almost none, so
+the sum of the first passes is the distinct classes of the union. After the last pass it reports the driver JVM's Metaspace use
 and the peak resident set of this process plus the JVM.
 
 Usage:
@@ -54,7 +53,6 @@ def main() -> None:
     p.add_argument("--sets", default="bench,nhl_daily,registry")
     args = p.parse_args()
 
-    from nhl_data_pipeline_spark.catalog import reset_scan_splits
     from nhl_data_pipeline_spark.cli import BRONZE_TABLES, DEFAULT_BRONZE
     from nhl_data_pipeline_spark.nhl.pipeline import run_pipeline
     from nhl_data_pipeline_spark.nhl.quality_suite import run_reference_suite
@@ -80,7 +78,6 @@ def main() -> None:
     def queries(names):
         def one_pass():
             for name in names:
-                reset_scan_splits(spark)
                 spark.catalog.clearCache()
                 specs[name].fn(spark, args.sf_dir).write.format("noop").mode(
                     "overwrite").save()
